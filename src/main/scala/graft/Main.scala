@@ -78,14 +78,9 @@ object Main {
     val outDir = pos.lift(2).getOrElse("/tmp/graft_out")
     val streamMode = args.contains("--stream")
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .withExtensions(new plans.GraftExtensions)
-      .appName("graft-meter-gen")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Graft.sessionBuilder("graft-meter-gen",
+        sys.env.getOrElse("SPARK_MASTER", "local[32]"),
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

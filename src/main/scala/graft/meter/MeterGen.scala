@@ -3,6 +3,8 @@ package graft.meter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.FloatArraySum.float_array_sum
+
 /** Generator configuration (reference: /root/reference/src/cassaforte_test/core.clj:12-18).
   *
   * The reference emits, per meter ("said" = service account id) and per second,
@@ -17,10 +19,14 @@ final case class GenConfig(
     sampleRate: Int = 15000,     // core.clj:12-14
     sawtoothPeriod: Int = 120)   // core.clj:41
 
-/** Batch generator for the reference's meter data model, expressed as pure
-  * Catalyst expressions (no UDFs) so the whole pipeline stays inside
-  * whole-stage codegen and is embarrassingly parallel: `spark.range` over
-  * meter×tick with zero shuffles (SURVEY §4.3).
+/** Batch generator for the reference's meter data model, expressed as
+  * Catalyst expressions (no UDFs) and embarrassingly parallel: `spark.range`
+  * over meter×tick with zero shuffles (SURVEY §4.3). The joules fold is the
+  * codegen kernel `float_array_sum`, so reduction stays inside whole-stage
+  * codegen. The sawtooth in [[wattsExpr]] is not: it is a `transform`
+  * higher-order function, which is `CodegenFallback`, so it is interpreted
+  * once per sample and keeps the generating projection out of whole-stage
+  * codegen.
   *
   * Scale note: at 100 TB the raw table dominates (~46 KB/row,
   * /root/reference/setup_and_notes.txt:48-53). `transmissions` parallelizes on
@@ -37,11 +43,14 @@ object MeterGen {
       i => (i % cfg.sawtoothPeriod).cast("float"))
 
   /** joules = int(sum(watts) / sampleRate) — float sum then truncation toward
-    * zero (core.clj:43-46). All partial sums are integers < 2^24 so float
-    * addition is exact regardless of order; golden value 59 (SURVEY §5.3). */
+    * zero (core.clj:43-46). The sum is the `float_array_sum` codegen kernel
+    * ([[graft.functions.FloatArraySumExpr]]): a float accumulator added in
+    * index order, bit-identical to the interpreted
+    * `aggregate(watts, 0.0f, (acc, x) -> acc + x)`. On the sawtooth all
+    * partial sums are integers < 2^24, so the golden value is 59
+    * (SURVEY §5.3). */
   def joulesExpr(watts: Column, cfg: GenConfig): Column =
-    (aggregate(watts, lit(0.0f), (acc, x) => acc + x) / lit(cfg.sampleRate.toFloat))
-      .cast("int")
+    (float_array_sum(watts) / lit(cfg.sampleRate.toFloat)).cast("int")
 
   /** Raw transmissions: (said INT, datetime TIMESTAMP, watts ARRAY<FLOAT>).
     * One row per meter per second, no shuffle: row id = tick * numMeters + m. */
@@ -62,8 +71,7 @@ object MeterGen {
     * same memoization the reference applies to its shared per-tick sample
     * buffer (core.clj:37-46,158): the generator is deterministic, so the
     * float sum of one second's sawtooth (exact — all partials < 2^24) is a
-    * config constant (59 for defaults), not a per-row computation. At
-    * generation scale this removes a 15k-element interpreted fold per row. */
+    * config constant (59 for defaults), not a per-row computation. */
   def joulesConst(cfg: GenConfig): Int = {
     var acc = 0.0f
     var i = 0

@@ -44,6 +44,32 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Range"), "expected range source")
   }
 
+  test("reduceToSecond over parquet raw: the joules fold is the codegen " +
+    "kernel inside whole-stage codegen, no interpreted aggregate") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.functions.FloatArraySumExpr
+    val dir = tmpDir("graft_reduce")
+    try {
+      val cfg = GenConfig(numMeters = 2, ticks = 3)
+      MeterGen.transmissions(spark, cfg).write.parquet(s"$dir/raw")
+      val df = MeterGen.reduceToSecond(spark.read.parquet(s"$dir/raw"), cfg)
+      assert(df.collect().forall(_.getInt(2) == 59))
+      val executed = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case other => other
+      }
+      assert(!executed.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayAggregate]))),
+        s"interpreted aggregate fold in the plan:\n$executed")
+      val fused = executed.collect { case w: WholeStageCodegenExec => w }
+        .exists(_.child.exists {
+          case p: ProjectExec => p.projectList.exists(_.exists(_.isInstanceOf[FloatArraySumExpr]))
+          case _ => false
+        })
+      assert(fused, s"joules projection is not inside whole-stage codegen:\n$executed")
+    } finally rmTree(dir)
+  }
+
   test("rollup chain: partial aggregation before the shuffle") {
     val df = SparkEntry.entry(spark)
     val p = plan(df)

@@ -3,11 +3,13 @@
 # driver's round checks end to end —
 #   1. sbt test            (ScalaTest suites, incl. the bench-gate math and
 #                           doc-drift self-checks)
-#   2. graft.Verify        (driver-contract correctness dump at sf0.01)
-#   3. verify_local.py     (DuckDB oracle replay + row/schema compare)
-#   4. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
+#   2. graft.Main demo     (batch write of the five meter tables, then the
+#                           read-back golden chain; non-zero exit on failure)
+#   3. graft.Verify        (driver-contract correctness dump at sf0.01)
+#   4. verify_local.py     (DuckDB oracle replay + row/schema compare)
+#   5. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
 #                           over the committed full-precision bench.json)
-#   5. doc_drift.py        (README/SURVEY query-id sync with the registry)
+#   6. doc_drift.py        (README/SURVEY query-id sync with the registry)
 #
 # Usage: tools/ci.sh [sfDir]         (default /root/testdata/sf0.01)
 # Exits non-zero on the first failing stage.
@@ -16,22 +18,26 @@ cd "$(dirname "$0")/.."
 
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/graft_ci.XXXXXX)"
-trap 'rm -rf "$OUT_DIR"' EXIT
+DEMO_DIR="$(mktemp -d /tmp/graft_demo.XXXXXX)"
+trap 'rm -rf "$OUT_DIR" "$DEMO_DIR"' EXIT
 
-echo "== [1/5] sbt test =="
+echo "== [1/6] sbt test =="
 sbt -batch test
 
-echo "== [2/5] graft.Verify $SF_DIR =="
+echo "== [2/6] graft.Main demo =="
+sbt -batch "runMain graft.Main demo $DEMO_DIR"
+
+echo "== [3/6] graft.Verify $SF_DIR =="
 env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 
-echo "== [3/5] oracle compare =="
+echo "== [4/6] oracle compare =="
 python3 tools/verify_local.py "$OUT_DIR" "$SF_DIR"
 
-echo "== [4/5] bench gate =="
+echo "== [5/6] bench gate =="
 python3 tools/bench_gate.py
 
-echo "== [5/5] doc drift =="
+echo "== [6/6] doc drift =="
 python3 tools/doc_drift.py
 
-echo "CI GREEN: tests + verify + oracle + bench gate + doc sync"
+echo "CI GREEN: tests + demo + verify + oracle + bench gate + doc sync"
