@@ -120,10 +120,8 @@ object Main {
           .withColumn("said_bucket", pmod(col("said"), lit(16))),
         "meter_samples")
       val second = MeterGen.secondTable(spark, cfg)
-      Rollups.all(second).foreach { case (grain, df) =>
-        sink.write(if (grain == "second") df else df.coalesce(1),
-          s"meter_samples_$grain")
-      }
+      Rollups.writeAll(second)((grain, df) =>
+        sink.write(df, s"meter_samples_$grain"))
       println(s"[graft] wrote raw + 4 rollup tables to $outDir")
       if (demoMode) {
         val ok = goldenChain(spark, outDir, numMeters, ticks)

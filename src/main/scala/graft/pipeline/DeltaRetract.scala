@@ -163,14 +163,16 @@ object DeltaRetract {
     * an InheritableThreadLocal, so a thread created here inherits the
     * caller's properties and leg jobs stay cancellable with their
     * parent query, where a reused pool thread carries whatever
-    * properties the thread that lazily created it had.
+    * properties the thread that lazily created it had. Each leg also
+    * tags its own jobs (`SparkContext.addJobTag`), which, unlike a job
+    * group, leaves the inherited group in place.
     *
     * Await contract: all legs are awaited before returning, but the
     * wait is BOUNDED ([[legTimeoutS]], env-tunable) — a leg wedged in a
     * hung job surfaces as a named TimeoutException instead of blocking
-    * a streaming micro-batch forever; the timed-out leg's write may
-    * still be running past the unwind, which is safe because the
-    * thrown error fails the batch and a replay overwrites every face.
+    * a streaming micro-batch forever. Before that error is thrown, every
+    * still-running leg's jobs are cancelled by tag, so no zombie write
+    * races the replay that overwrites every face.
     * On failure the FIRST leg's error (leg order, deterministic) is
     * rethrown with the others attached as suppressed. */
   private[graft] def inParallel(legs: (() => Unit)*): Unit =
@@ -182,26 +184,33 @@ object DeltaRetract {
       legs: (() => Unit)*): Unit =
     if (legs.sizeIs <= 1) legs.foreach(_.apply())
     else {
-      val errs = new Array[Option[Throwable]](legs.size)
+      val sc = SparkSession.getActiveSession
+        .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+      val call = java.util.UUID.randomUUID()
+      val errs = new java.util.concurrent.atomic.AtomicReferenceArray[Throwable](legs.size)
       val ts = legs.zipWithIndex.map { case (l, i) =>
-        errs(i) = None
+        val tag = s"graft-face-leg-$call-$i"
         val t = new Thread(() => {
-          try l() catch { case e: Throwable => errs(i) = Some(e) }
+          try { sc.foreach(_.addJobTag(tag)); l() }
+          catch { case e: Throwable => errs.set(i, e) }
         }, s"graft-face-leg-$i")
         t.setDaemon(true)
         t.start()
-        t
+        (t, tag)
       }
       val deadlineNs = System.nanoTime() + timeoutS * 1000000000L
-      ts.foreach { t =>
+      ts.foreach { case (t, _) =>
         t.join(math.max(1L, (deadlineNs - System.nanoTime()) / 1000000L))
       }
-      val hung = ts.filter(_.isAlive).map(_.getName)
-      val all = errs.flatten.toSeq ++ (if (hung.isEmpty) Nil
+      val hung = ts.filter(_._1.isAlive)
+      hung.foreach { case (_, tag) => sc.foreach(_.cancelJobsWithTag(tag,
+        s"face-write leg still running after ${timeoutS}s")) }
+      val all = (0 until legs.size).flatMap(i => Option(errs.get(i))) ++
+        (if (hung.isEmpty) Nil
         else Seq(new java.util.concurrent.TimeoutException(
           s"face-write legs still running after ${timeoutS}s: " +
-            hung.mkString(", ") + " — failing the batch; replay " +
-            "overwrites every face")))
+            hung.map(_._1.getName).mkString(", ") + " — their jobs are " +
+            "cancelled, failing the batch; replay overwrites every face")))
       all.headOption.foreach { first =>
         all.drop(1).foreach(first.addSuppressed)
         throw first

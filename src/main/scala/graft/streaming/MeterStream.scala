@@ -64,10 +64,11 @@ object MeterStream {
     second.withWatermark("datetime", watermark)
       .dropDuplicatesWithinWatermark("said", "datetime")
 
-  /** foreachBatch sink: per micro-batch, re-derive all grains from the
-    * batch's second-grain rows and write partial rollups into the DDL-named
-    * table layout `meter_samples_<grain>/batch=<id>` — the same roots
-    * MeterStore reads. Each batch OVERWRITES its own deterministic
+  /** foreachBatch sink: per micro-batch, write all grains of the batch's
+    * second-grain rows through [[Rollups.writeAll]] (one shuffle on `said`,
+    * one cached frame, coarser grains as concurrent jobs) into the
+    * DDL-named table layout `meter_samples_<grain>/batch=<id>` — the same
+    * roots MeterStore reads. Each batch OVERWRITES its own deterministic
     * `batch=<id>` partition, so a replayed micro-batch rewrites identical
     * files instead of double-appending — the idempotence the reference's
     * counter adds lack (core.clj:121-153). The partials compose because
@@ -79,16 +80,9 @@ object MeterStream {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val deduped = Rollups.dedupe(batch)
-        deduped.persist()
-        try {
-          deduped.write.mode("overwrite")
-            .parquet(s"$outDir/meter_samples_second/batch=$batchId")
-          Rollups.all(deduped).foreach { case (grain, df) =>
-            if (grain != "second")
-              df.coalesce(1).write.mode("overwrite")
-                .parquet(s"$outDir/meter_samples_$grain/batch=$batchId")
-          }
-        } finally { deduped.unpersist(); () }
+        Rollups.writeAll(batch) { (grain, df) =>
+          df.write.mode("overwrite")
+            .parquet(s"$outDir/meter_samples_$grain/batch=$batchId")
+        }
       }
 }

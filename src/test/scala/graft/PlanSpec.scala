@@ -70,6 +70,35 @@ class PlanSpec extends SparkSpec {
     } finally rmTree(dir)
   }
 
+  test("rollup cascade over a parquet second table: one exchange, " +
+    "hash-partitioned on said alone, serves dedupe and every grain") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.meter.Rollups
+    val dir = tmpDir("graft_cascade")
+    try {
+      val cfg = GenConfig(numMeters = 3, ticks = 7200)
+      MeterGen.secondTable(spark, cfg).write.parquet(s"$dir/second")
+      val df = Rollups.day(Rollups.hour(Rollups.minute(
+        Rollups.dedupe(spark.read.parquet(s"$dir/second")))))
+      assert(df.collect().map(_.getLong(2)).toSeq === Seq.fill(3)(7200L * 59))
+      val helper = new AdaptiveSparkPlanHelper {}
+      val executed = df.queryExecution.executedPlan
+      val exchanges = helper.collect(executed) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, s"cascade shuffles more than once:\n$executed")
+      val keys = exchanges.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect {
+          case a: AttributeReference => a.name
+          case other => other.sql
+        }
+        case other => Seq(other.toString)
+      }
+      assert(keys === Seq("said"), s"exchange is not on said alone:\n$executed")
+    } finally rmTree(dir)
+  }
+
   test("rollup chain: partial aggregation before the shuffle") {
     val df = SparkEntry.entry(spark)
     val p = plan(df)

@@ -1,5 +1,6 @@
 package graft.meter
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -62,5 +63,38 @@ class MeterGoldenSpec extends SparkSpec {
     assert(Rollups.dedupe(doubled).count() === 200)
     val m = Rollups.minute(Rollups.dedupe(doubled))
     assert(m.filter(col("joules") > 60L * 59).count() === 0)
+  }
+
+  test("writeAll: a failing grain propagates, the other grains are " +
+      "written, the cache is released; a rerun overwrites to goldens") {
+    val dir = tmpDir("graft_writeall")
+    val cfg = GenConfig(numMeters = 2, ticks = 7200)
+    val sec = MeterGen.secondTable(spark, cfg)
+    val doubled = sec.union(sec) // dedupe must collapse the replay
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    def write(g: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/$g")
+    val e = intercept[IllegalStateException] {
+      Rollups.writeAll(doubled) { (g, df) =>
+        if (g == "hour") throw new IllegalStateException("hour sink down")
+        write(g, df)
+      }
+    }
+    assert(e.getMessage === "hour sink down")
+    def written(g: String) = new java.io.File(s"$dir/$g/_SUCCESS").exists
+    assert(Seq("second", "minute", "day").forall(written))
+    assert(!written("hour"))
+    assert(cache.isEmpty, "writeAll left its deduped frame cached")
+
+    Rollups.writeAll(doubled)(write)
+    assert(cache.isEmpty)
+    val golden = Map("second" -> 59L, "minute" -> 3540L, "hour" -> 212400L,
+      "day" -> 7200L * 59)
+    golden.foreach { case (g, j) =>
+      val t = spark.read.parquet(s"$dir/$g")
+      assert(t.count() === 2L * 7200 * 59 / j, g)
+      assert(t.filter(col("joules") =!= j).isEmpty, g)
+    }
   }
 }

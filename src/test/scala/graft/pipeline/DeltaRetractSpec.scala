@@ -409,18 +409,29 @@ class DeltaRetractSpec extends SparkSpec {
 
   // round-20 hardening (ADVICE r19): the await is bounded — a wedged
   // leg surfaces as a named TimeoutException instead of blocking the
-  // enclosing micro-batch forever
+  // enclosing micro-batch forever, and a leg's hung Spark job is
+  // cancelled (by its leg's job tag) before that error is thrown
   test("inParallel: a wedged leg times out as a named error; finished " +
       "legs' results stand") {
     val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
     val release = new java.util.concurrent.CountDownLatch(1)
+    val jobError = new java.util.concurrent.LinkedBlockingQueue[Throwable]()
     val e = intercept[java.util.concurrent.TimeoutException] {
-      DeltaRetract.inParallelTimed(1L,
+      DeltaRetract.inParallelTimed(5L,
         () => finished.set(true),
-        () => release.await()) // wedged until released below
+        () => release.await(), // wedged until released below
+        () => // a Spark job that blocks until its task is killed
+          try spark.sparkContext.parallelize(Seq(1), 1).foreach { _ =>
+            val t0 = System.nanoTime()
+            while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+                System.nanoTime() - t0 < 120000000000L) Thread.sleep(20)
+          } catch { case t: Throwable => jobError.put(t) })
     }
-    assert(e.getMessage.contains("still running after 1s"))
+    assert(e.getMessage.contains("still running after 5s"))
     assert(finished.get, "the healthy leg completed inside the bound")
+    val cancelled = jobError.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    assert(cancelled != null, "the hung leg's Spark job was not cancelled")
+    assert(cancelled.getMessage.contains("cancelled"), cancelled.getMessage)
     release.countDown() // unwedge the daemon leg before the suite moves on
   }
 

@@ -2,8 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually.{eventually, timeout}
+import org.scalatest.time.SpanSugar._
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.meter.{GenConfig, MeterGen, Rollups}
@@ -154,7 +159,24 @@ class StreamingSpec extends SparkSpec {
         timestamp_seconds(expr(s"value DIV ${cfg.numMeters}") +
           cfg.startEpochSec).as("datetime"),
         lit(59).as("joules"))
+    // jobs per micro-batch, keyed by the batch id the stream sets on
+    // every job it runs (write legs inherit it); the listener bus is in
+    // order, so seeing a marker job run after the query proves it has
+    // seen every earlier job
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val markerDesc = "graft-streaming-spec-marker"
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs.merge(b, 1, Integer.sum))
+        if (p.exists(_.getProperty("spark.job.description") == markerDesc))
+          marker.set(true)
+      }
+    }
     val q = MeterStream.writeRollups(sec, out, s"$out/_cp").start()
+    spark.sparkContext.addSparkListener(listener)
     try {
       // two micro-batches so grain buckets span batch boundaries — the
       // stored partials must re-compose exactly on read
@@ -163,6 +185,15 @@ class StreamingSpec extends SparkSpec {
       input.addData(150L until (cfg.ticks * cfg.numMeters): _*)
       q.processAllAvailable()
     } finally q.stop()
+    try {
+      spark.sparkContext.setJobDescription(markerDesc)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      eventually(timeout(30.seconds))(assert(marker.get))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // one shuffle on said and one cached frame per batch: six jobs, where
+    // re-shuffling the batch at every grain took twelve
+    assert(jobs.asScala.toMap === Map("0" -> 6, "1" -> 6))
     // round trip through the read API: partials re-aggregate to goldens
     val store = graft.meter.MeterStore(out)
     val minute = store.energyReport(spark, "minute")

@@ -3,13 +3,16 @@
 # driver's round checks end to end —
 #   1. sbt test            (ScalaTest suites, incl. the bench-gate math and
 #                           doc-drift self-checks)
-#   2. graft.Main demo     (batch write of the five meter tables, then the
+#   2. perfbench sbt test  (compiles the meter benchmark against the engine
+#                           sources and runs its GenSpec, so an engine
+#                           signature change that breaks the benchmark fails)
+#   3. graft.Main demo     (batch write of the five meter tables, then the
 #                           read-back golden chain; non-zero exit on failure)
-#   3. graft.Verify        (driver-contract correctness dump at sf0.01)
-#   4. verify_local.py     (DuckDB oracle replay + row/schema compare)
-#   5. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
+#   4. graft.Verify        (driver-contract correctness dump at sf0.01)
+#   5. verify_local.py     (DuckDB oracle replay + row/schema compare)
+#   6. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
 #                           over the committed full-precision bench.json)
-#   6. doc_drift.py        (README/SURVEY query-id sync with the registry)
+#   7. doc_drift.py        (README/SURVEY query-id sync with the registry)
 #
 # Usage: tools/ci.sh [sfDir]         (default /root/testdata/sf0.01)
 # Exits non-zero on the first failing stage.
@@ -21,23 +24,26 @@ OUT_DIR="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 DEMO_DIR="$(mktemp -d /tmp/graft_demo.XXXXXX)"
 trap 'rm -rf "$OUT_DIR" "$DEMO_DIR"' EXIT
 
-echo "== [1/6] sbt test =="
+echo "== [1/7] sbt test =="
 sbt -batch test
 
-echo "== [2/6] graft.Main demo =="
+echo "== [2/7] perfbench sbt test =="
+(cd perfbench && sbt -batch test)
+
+echo "== [3/7] graft.Main demo =="
 sbt -batch "runMain graft.Main demo $DEMO_DIR"
 
-echo "== [3/6] graft.Verify $SF_DIR =="
+echo "== [4/7] graft.Verify $SF_DIR =="
 env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR"
 
-echo "== [4/6] oracle compare =="
+echo "== [5/7] oracle compare =="
 python3 tools/verify_local.py "$OUT_DIR" "$SF_DIR"
 
-echo "== [5/6] bench gate =="
+echo "== [6/7] bench gate =="
 python3 tools/bench_gate.py
 
-echo "== [6/6] doc drift =="
+echo "== [7/7] doc drift =="
 python3 tools/doc_drift.py
 
-echo "CI GREEN: tests + demo + verify + oracle + bench gate + doc sync"
+echo "CI GREEN: tests + perfbench tests + demo + verify + oracle + bench gate + doc sync"
