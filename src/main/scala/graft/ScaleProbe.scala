@@ -846,92 +846,6 @@ object ScaleProbe {
     }
   }
 
-  /** Per-takedown-batch cost of serving-index maintenance: the
-    * round-15 recount chain vs the round-16 O(delta) chain
-    * ([[pipeline.DeltaRetract]]), at a FIXED takedown-batch size while
-    * the archive grows `times`× — the claim under test is that the
-    * delta chain's per-batch cost is flat in archive size where the
-    * recount's archive-wide hash aggregate is not. Both legs pay their
-    * honest production cost: the recount leg derives AND WRITES the
-    * full capped index (what the recount chain persists per batch);
-    * the delta leg runs [[pipeline.DeltaRetract.step]] (writes its
-    * three delta faces). Shuffle-write bytes are printed beside wall
-    * time — the scheduler-noise-free signal: the recount shuffles the
-    * whole sketch through its df aggregate, the delta chain shuffles
-    * only delta-proportional rows (its base-side lookups broadcast the
-    * delta side and scan map-side). Row equality of the two serving
-    * views is asserted in-probe so the cost comparison can never
-    * silently compare different answers. */
-  private def deltaProbe(spark: org.apache.spark.sql.SparkSession,
-      dir: String, times: Int): Unit = {
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          shuffleBytes.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      })
-    // min-of-3 walls: this box's steal bursts (BASELINE.md round-15
-    // notes) swing single-shot walls 2-4x; the min is the honest
-    // steady-state. Shuffle bytes are load-independent — reported from
-    // the last rep.
-    def measured(f: => Unit): (Double, Long) = {
-      var best = Double.MaxValue
-      var bytes = 0L
-      for (_ <- 1 to 3) {
-        Thread.sleep(300) // settle the listener bus before resetting
-        shuffleBytes.set(0L)
-        val t0 = System.nanoTime()
-        f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        Thread.sleep(300) // let trailing stage-completed events land
-        bytes = shuffleBytes.get()
-      }
-      (best, bytes)
-    }
-    val takedown = Tables.load(spark, dir, "documents")
-      .filter(col("doc_id") % 97 === 3).select("doc_id").limit(200)
-      .localCheckpoint(true)
-    for (t <- Seq(1, math.max(2, times / 2), times)) {
-      val art = TmpHygiene.scratchDir("graft_deltaprobe")
-      try {
-        val c = replicatedDocs(spark, dir, t)
-        pipeline.Dedup.shingleDeltaBase(spark, c, "text", "doc_id",
-          s"$art/init", k = 5, maxDf = 100)
-        val sketch = spark.read.parquet(s"$art/init/sketch")
-        val skRows = sketch.count()
-        val (wRecount, bRecount) = measured {
-          pipeline.Dedup
-            .shingleIndexRetract(sketch, takedown, k = 5, maxDf = 100)
-            .write.mode("overwrite").parquet(s"$art/recount_index")
-        }
-        val (wDelta, bDelta) = measured {
-          pipeline.DeltaRetract.step(spark, art, "init", 0L, takedown,
-            Seq("shingle_k5"), 100,
-            rows => rows.join(
-              spark.read.parquet(s"$art/init/sizes"), "id"))
-        }
-        val recount = spark.read.parquet(s"$art/recount_index")
-        val view = pipeline.DeltaRetract.servingView(spark, art, "init", 0L)
-        val nR = recount.count()
-        val nD = view.count()
-        require(nD == nR && view.unionAll(recount)
-            .groupBy("id", "shingle_k5", "n_c")
-            .agg(count(lit(1)).as("n")).filter(col("n") =!= 2)
-            .isEmpty,
-          s"delta view diverged from recount at ${t}x ($nD vs $nR rows)")
-        val tag = s"${t}x"
-        println(f"[probe] delta/$tag%-4s sketch=$skRows idx=$nR " +
-          f"recount=$wRecount%6.2f s ${bRecount / 1e6}%8.1f MB-shuffled  " +
-          f"delta=$wDelta%6.2f s ${bDelta / 1e6}%8.1f MB-shuffled")
-      } finally graft.TmpHygiene.rmTree(art)
-    }
-  }
-
   /** Update-vs-rebuild cost asymmetry for the round-16 UPDATE faces
     * (the d58/d59 re-crawl edit path): a FIXED 200-doc update batch
     * against a growing archive, update = `shingleSketchUpdate` over
@@ -941,7 +855,7 @@ object ScaleProbe {
     * legs persist the resulting sketch face, so the write cost is
     * shared and the measured gap is the COMPUTE asymmetry the face
     * claims: O(|updated docs|) vs O(|corpus|). min-of-3 (steal-burst
-    * hygiene, the delta probe's convention); shuffle-write bytes
+    * hygiene); shuffle-write bytes
     * printed beside walls; row equality asserted in-probe. */
   private def updateProbe(spark: org.apache.spark.sql.SparkSession,
       dir: String, times: Int): Unit = {
@@ -1226,11 +1140,6 @@ object ScaleProbe {
     }
     if (args.headOption.contains("update")) {
       updateProbe(spark, dir, args.lift(1).map(_.toInt).getOrElse(8))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("delta")) {
-      deltaProbe(spark, dir, args.lift(1).map(_.toInt).getOrElse(8))
       spark.stop()
       return
     }

@@ -1196,18 +1196,21 @@ object CurationQueries {
       .orderBy("new_id", "corpus_id")
   }
 
-  // ---- d61: delta-chain COMPACTION (DeltaRetract.compact) — the LSM
-  // fold that keeps the O(delta) retract chain viable forever: after
-  // enough takedown batches the accumulated tombstone/resurrect
-  // history is itself a probe cost, so compaction folds it into a
-  // fresh base (survivor sketch + re-derived stats/index/sizes — the
-  // ONE amortized recount the per-batch algebra saves) and the chain
-  // restarts against the new base. The gate certifies the full cycle:
-  // half the takedowns through delta steps on the original base,
-  // compact, the other half through delta steps on the COMPACTED
-  // base; the final serving view answers the d21 increment probe and
-  // d57's one-shot survivor-archive oracle adjudicates — deltas →
-  // compact → deltas ≡ the one-shot retract of everything. ----
+  // ---- d61: delta-chain COMPACTION under TAKEDOWNS — the LSM fold
+  // that keeps the O(delta) chain viable forever: after enough
+  // batches the accumulated history is itself a probe cost, so
+  // compaction folds it into a fresh base (survivor sketch +
+  // re-derived stats/index/sizes — the ONE amortized recount the
+  // per-batch algebra saves) and the chain restarts against the new
+  // base. Each takedown batch is an update to an EMPTY version on the
+  // one delta chain (DeltaUpdate.step with DeltaUpdate.emptyVersion),
+  // folded by Dedup.shingleUpdateCompact and served by
+  // Dedup.shingleUpdateServing. The gate certifies the full cycle:
+  // half the takedowns as a delta step on the original base, compact,
+  // the other half as a delta step on the COMPACTED base; the final
+  // serving view answers the d21 increment probe and d57's one-shot
+  // survivor-archive oracle adjudicates — deltas → compact → deltas ≡
+  // the one-shot retract of everything. ----
   private def d61(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val isNew = col("doc_id") % 10 === 0
@@ -1217,17 +1220,16 @@ object CurationQueries {
       graft.TmpHygiene.scratchDir("graft_d61"))
     Dedup.shingleDeltaBase(s, d.filter(!isNew), "text", "doc_id",
       s"$out/a/init", k = 5, maxDf = 100)
-    val deco = (baseDir: String) => (rows: DataFrame) =>
-      rows.join(graft.pipeline.DeltaRetract.readFace(s, Seq(s"$baseDir/sizes")), "id")
-    DeltaRetract.step(s, s"$out/a", "init", 0L,
-      takedown.filter(col("doc_id") % 2 === 1), Seq("shingle_k5"),
-      100, deco(s"$out/a/init"))
-    Dedup.shingleDeltaCompact(s, s"$out/a", "init", 0L, s"$out/b/init",
+    DeltaUpdate.step(s, s"$out/a", "init", 0L,
+      takedown.filter(col("doc_id") % 2 === 1),
+      DeltaUpdate.emptyVersion(s, s"$out/a/init"), Seq("shingle_k5"))
+    Dedup.shingleUpdateCompact(s, s"$out/a", "init", 0L, s"$out/b/init",
       k = 5, maxDf = 100)
-    DeltaRetract.step(s, s"$out/b", "init", 0L,
-      takedown.filter(col("doc_id") % 2 === 0), Seq("shingle_k5"),
-      100, deco(s"$out/b/init"))
-    val idx = DeltaRetract.servingView(s, s"$out/b", "init", 0L)
+    DeltaUpdate.step(s, s"$out/b", "init", 0L,
+      takedown.filter(col("doc_id") % 2 === 0),
+      DeltaUpdate.emptyVersion(s, s"$out/b/init"), Seq("shingle_k5"))
+    val idx = Dedup.shingleUpdateServing(s, s"$out/b", "init", 0L,
+      k = 5, maxDf = 100)
     Dedup.incrementalPairsFromIndex(idx, d.filter(isNew),
         "text", "doc_id", k = 5, threshold = 0.6)
       .orderBy("new_id", "corpus_id")

@@ -704,16 +704,16 @@ object Dedup {
       shingleSketchRetract(sketch, newVersions.select(col(idCol)), k),
       newVersions, textCol, idCol, k)
 
-  /** Base-snapshot faces for the shingle family's O(delta) retract
-    * chain ([[DeltaRetract]]): the uncapped sketch, its per-shingle
-    * build counts, the capped serving view (derived through the one
-    * shared [[shingleServingIndex]] tail so the delta chain cannot
-    * drift on cap semantics), plus the family-specific `sizes` face —
-    * (id, n_c), the pre-cap per-doc distinct-shingle count a
-    * resurrected posting must carry back into the serving view (n_c is
-    * intrinsic to the document, so the build-time count stays correct
-    * for survivors forever). One tokenize pass: every derived face
-    * reads the persisted sketch. */
+  /** Base-snapshot faces for the shingle family's O(delta) chain
+    * ([[DeltaUpdate]] — re-crawls and takedowns alike, a takedown being
+    * an update to an empty version): the uncapped sketch, its
+    * per-shingle build counts, the capped serving view (derived through
+    * the one shared [[shingleServingIndex]] tail so the delta chain
+    * cannot drift on cap semantics), plus the family-specific `sizes`
+    * face — (id, n_c), the pre-cap per-doc distinct-shingle count a
+    * serving row carries ([[shingleUpdateServing]] swaps in the
+    * current count for touched docs). One tokenize pass: every derived
+    * face reads the persisted sketch. */
   def shingleDeltaBase(sp: SparkSession, corpus: DataFrame,
       textCol: String, idCol: String, baseDir: String, k: Int = 5,
       maxDf: Int = 100): Unit = {
@@ -730,7 +730,7 @@ object Dedup {
     ()
   }
 
-  /** The shingle family's serving view over an UPDATE delta chain
+  /** The shingle family's serving view over the delta chain
     * ([[DeltaUpdate]]) after batch `upTo` — the O(delta) successor of
     * deriving [[shingleServingIndex]] from a per-batch-rewritten
     * sketch (the s31 gate's serve path). Decoration is the family's
@@ -738,8 +738,8 @@ object Dedup {
     * pre-cap distinct-shingle count, which an update MOVES — so the
     * sizes frame is base sizes for never-updated docs plus counts
     * derived from the updated docs' latest newrows (both delta-sized
-    * or map-side). Base faces from [[shingleDeltaBase]] — the SAME
-    * base serves retract and update chains. */
+    * or map-side; a taken-down doc has no latest rows, so it drops out
+    * of both). Base faces from [[shingleDeltaBase]]. */
   def shingleUpdateServing(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, k: Int = 5,
       maxDf: Int = 100): DataFrame = {
@@ -752,12 +752,12 @@ object Dedup {
       Seq(s"shingle_k$k"), maxDf)(_.join(curSizes, "id"))
   }
 
-  /** Shingle-family COMPACTION of an UPDATE delta chain
-    * ([[DeltaUpdate.compact]]): fold the accumulated update history
+  /** Shingle-family COMPACTION of the delta chain
+    * ([[DeltaUpdate.compact]]): fold the accumulated batch history
     * into a fresh base at `newBaseDir`, including the family's `sizes`
-    * face — an update MOVES n_c, so unlike the retract fold the sizes
-    * cannot anti-join through; they re-derive from the compacted
-    * sketch (one aggregate over rows already being rewritten). The
+    * face — an update MOVES n_c, so the sizes re-derive from the
+    * compacted sketch (one aggregate over rows already being
+    * rewritten; taken-down docs are absent from it). The
     * compacted base ≡ [[shingleDeltaBase]] over the corpus with every
     * doc's latest version (spec-pinned, DeltaUpdateSpec). */
   def shingleUpdateCompact(sp: SparkSession, artDir: String,
@@ -766,29 +766,6 @@ object Dedup {
     DeltaUpdate.compact(sp, artDir, initName, upTo, newBaseDir,
       Seq(s"shingle_k$k"), extraFaces = Seq(
         sk => sk.groupBy(col("id")).agg(count(lit(1)).as("n_c"))
-          .write.mode("overwrite").parquet(s"$newBaseDir/sizes"),
-        _ => DeltaRetract.writeMeta(sp, newBaseDir,
-          Map("k" -> k.toLong, "max_df" -> maxDf.toLong))))(
-      shingleServingIndex(_, k, maxDf))
-    ()
-  }
-
-  /** Shingle-family COMPACTION of a delta retract chain
-    * ([[DeltaRetract.compact]]): fold the accumulated history into a
-    * fresh base at `newBaseDir`, including the family's `sizes` face —
-    * n_c is intrinsic per doc, so its compaction is one tombstone
-    * anti-join over the 16-byte sizes face, not a recount. */
-  def shingleDeltaCompact(sp: SparkSession, artDir: String,
-      initName: String, upTo: Long, newBaseDir: String, k: Int = 5,
-      maxDf: Int = 100): Unit = {
-    // the sizes fold reads only the OLD base's sizes face plus the
-    // tombstones — independent of every new-base face, so it rides
-    // the same concurrent batch
-    DeltaRetract.compact(sp, artDir, initName, upTo, newBaseDir,
-      Seq(s"shingle_k$k"), extraFaces = Seq(
-        _ => graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/sizes"))
-          .join(DeltaRetract.tombstones(sp, artDir, upTo),
-            col("id") === col("rid"), "left_anti")
           .write.mode("overwrite").parquet(s"$newBaseDir/sizes"),
         _ => DeltaRetract.writeMeta(sp, newBaseDir,
           Map("k" -> k.toLong, "max_df" -> maxDf.toLong))))(

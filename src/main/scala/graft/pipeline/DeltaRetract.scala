@@ -3,73 +3,22 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** O(delta) maintenance of a CAPPED serving index under continuous
-  * takedowns — the successor to the per-batch full recount the
-  * streaming retract chain shipped with (VERDICT r15 "what's wrong"
-  * item 1: `shingleServingIndex` / `phashServingIndex` re-aggregate
-  * document frequency over the ENTIRE surviving sketch every
-  * micro-batch, an archive-proportional shuffle per takedown batch).
+/** Shared face I/O and base-snapshot helpers of the O(delta) chain
+  * ([[DeltaUpdate]] — takedowns included, as updates to an empty
+  * version), the recount retract sinks and `Rollups.writeAll`:
   *
-  * The algebra that makes a delta possible: retraction only ever
-  * DECREMENTS a key's count, so
+  *   baseDir/sketch   uncapped (id, key…) postings — written once
+  *   baseDir/stats    (key…, cnt) build counts — written once
+  *   baseDir/index    the capped serving view at build — written once
+  *   baseDir/meta     the family's build parameters ([[writeMeta]])
   *
-  *   - a serving row (its key was under the cap) stays valid until its
-  *     OWN document is tombstoned — no recheck needed;
-  *   - the only rows that ever ENTER the serving view are cap
-  *     resurrections: a key whose count crosses from above `maxCnt` to
-  *     at-or-below it, which happens AT MOST ONCE per key (counts are
-  *     monotone under retraction);
-  *   - whether a key crosses this batch is decidable from its BUILD
-  *     count (persisted once), the accumulated prior decrements
-  *     (delta-sized), and this batch's decrements (computed from the
-  *     takedown docs' own postings).
-  *
-  * So the maintained artifact is the base snapshot plus PER-BATCH
-  * delta faces, and per-batch WRITES are delta-sized:
-  *
-  *   baseDir/sketch      uncapped (id, key…) postings — written once
-  *   baseDir/stats       (key…, cnt) build counts — written once
-  *   baseDir/index       the capped serving view at build — written once
-  *   artDir/<b>/tombs      this batch's takedown ids (rid)
-  *   artDir/<b>/statsdelta (key…, dec) — decrements from the takedown
-  *                         docs' postings, NOT from a sketch recount
-  *   artDir/<b>/resurrect  serving-shaped rows admitted this batch
-  *
-  * and the serving view at batch b is assembled WITHOUT any
-  * archive-wide aggregate:
-  *
-  *   (base index ∪ resurrect/0..b) ⟕̸ tombs/0..b   (id anti-join)
-  *
-  * Per-batch SHUFFLED bytes are delta-proportional: every join against
-  * a base face broadcasts the delta side (takedown ids, candidate
-  * keys), so the base sketch/stats are only ever SCANNED map-side —
-  * and the resurrection scan short-circuits to zero when no key
-  * crosses the cap (the common case; the candidate check is a
-  * delta-sized aggregate, driver-safe). The residual archive-
-  * proportional cost is those map-side scans of 8–16-byte-keyed rows;
-  * at cluster scale both lookups prune to touched files under an
-  * id-/key-bucketed layout, and neither pays the recount's
-  * archive-wide hash aggregate (measured: `ScaleProbe delta`).
-  *
-  * Equivalence contract (spec-pinned, DeltaRetractSpec; gates s27/s28
-  * replay it under the driver oracle): after every batch,
-  * [[servingView]] is row-identical to the recount
-  * (`shingleServingIndex(shingleSketchRetract(…))` and the phash
-  * twin), cap resurrection included. Read-predecessor discipline
-  * (s16/s22): batch b reads only the base faces and batches 0..b-1,
-  * overwrites only its own faces — a replayed batch re-derives
-  * identical output from identical persisted input. */
+  * ([[initBase]] writes them), plus the footer-schema face reads
+  * ([[readFace]], which refuses faces of one kind whose schemas
+  * disagree), footer row counts, the broadcast-size guard, the
+  * batch-dir existence check and the concurrent face-write legs
+  * ([[inParallel]]). */
 object DeltaRetract {
 
-  /** Write the base (build-time) faces: the uncapped sketch, its
-    * per-key build counts, and the capped serving view — the latter
-    * through the FAMILY's own serving function so delta maintenance
-    * cannot drift from the batch faces on cap semantics. The sketch is
-    * persisted first and every derived face computed from the re-read
-    * persisted rows (one upstream materialization, and what the chain
-    * later reads is byte-identical to what the derivations saw).
-    * Returns the re-read sketch so family wrappers can derive extra
-    * faces (the shingle family's `sizes`) without re-tokenizing. */
   /** Persist the family's build parameters (cap values, shingle k, …)
     * as a tiny `meta` face next to the base faces. The base's serving
     * index was derived AT those values; a later consumer folding or
@@ -131,6 +80,15 @@ object DeltaRetract {
     writeMeta(sp, toBaseDir, prior ++ params)
   }
 
+  /** Write the base (build-time) faces: the uncapped sketch, its
+    * per-key build counts, and the capped serving view — the latter
+    * through the FAMILY's own serving function so delta maintenance
+    * cannot drift from the batch faces on cap semantics. The sketch is
+    * persisted first and every derived face computed from the re-read
+    * persisted rows (one upstream materialization, and what the chain
+    * later reads is byte-identical to what the derivations saw).
+    * Returns the re-read sketch so family wrappers can derive extra
+    * faces (the shingle family's `sizes`) without re-tokenizing. */
   def initBase(sp: SparkSession, baseDir: String, sketch: DataFrame,
       keyCols: Seq[String], extraFaces: Seq[DataFrame => Unit] = Nil)(
       serveIndex: DataFrame => DataFrame): DataFrame = {
@@ -263,12 +221,43 @@ object DeltaRetract {
     } finally r.close()
   }
 
-  /** Read engine-written face(s) with the schema taken from the first
-    * path's footer ([[faceSchema]]) — skips the scheduled
-    * footer-inference job `sp.read.parquet` pays per call. */
+  /** Read engine-written face(s) with the schema taken from the
+    * footers ([[facesSchema]]) — skips the scheduled footer-inference
+    * job `sp.read.parquet` pays per call. */
   private[graft] def readFace(sp: SparkSession,
       paths: Seq[String]): DataFrame =
-    sp.read.schema(faceSchema(sp, paths.head)).parquet(paths: _*)
+    sp.read.schema(facesSchema(sp, paths)).parquet(paths: _*)
+
+  /** The one schema of several faces of one kind, checked against
+    * EVERY path's footer: a multi-path read applies one schema to all
+    * paths, so a drifted face (say an empty takedown version shaped
+    * unlike the tokenizer's rows) would read as nulls or fail deep in
+    * a task. Names, order and types must agree; nullability is
+    * ignored (file reads are nullable anyway). */
+  private[graft] def facesSchema(sp: SparkSession,
+      paths: Seq[String]): org.apache.spark.sql.types.StructType = {
+    val first = faceSchema(sp, paths.head)
+    paths.tail.foreach { p =>
+      val s = faceSchema(sp, p)
+      require(nullable(s) == nullable(first),
+        s"face $p has schema ${s.simpleString}, but ${paths.head} has " +
+          s"${first.simpleString} — faces of one kind must agree on " +
+          "column names, order and types")
+    }
+    first
+  }
+
+  private def nullable(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        StructField(f.name, nullable(f.dataType))))
+      case a: ArrayType => ArrayType(nullable(a.elementType))
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
+      case o => o
+    }
+  }
 
   /** A zero-row no-scan frame shaped like the face at `path` —
     * [[emptyLike]] without the footer-inference job of reading the
@@ -308,108 +297,6 @@ object DeltaRetract {
     }.sum
   }
 
-  /** One takedown batch of the delta chain: write this batch's three
-    * delta faces (tombs, statsdelta, resurrect) from the base faces
-    * and batches 0..batchId-1 only. `decorate` maps resurrected SKETCH
-    * rows to serving-index-shaped rows (the shingle family joins its
-    * per-doc `n_c` back on; the phash family's sketch rows already ARE
-    * serving-shaped); the result is column-aligned to the base index
-    * before writing. Idempotent per batch: inputs are persisted faces
-    * of STRICTLY EARLIER batches, outputs overwrite, and each derived
-    * face is materialized ONCE (written, then read back) before being
-    * consumed downstream — a nondeterministic upstream batch cannot
-    * diverge between the write and the joins. */
-  def step(sp: SparkSession, artDir: String, initName: String,
-      batchId: Long, takedownIds: DataFrame, keyCols: Seq[String],
-      maxCnt: Int, decorate: DataFrame => DataFrame,
-      docId: org.apache.spark.sql.Column = col("id")): Unit = {
-    val base = s"$artDir/$initName"
-    // face reads pass the footer schema (faceSchema/readFace) so none
-    // of them schedules the per-call footer-inference job; the index
-    // read for COLUMN NAMES alone needs no read at all
-    val baseSketch = readFace(sp, Seq(s"$base/sketch"))
-    val idxCols = faceSchema(sp, s"$base/index").fieldNames.toSeq
-    val keyCs = keyCols.map(col)
-
-    val priorTombs =
-      if (batchId == 0L)
-        emptyLike(sp, Dedup.normalizeRemovedIds(takedownIds))
-      else readFace(sp,
-        facePaths(sp, artDir, "tombs", 0L until batchId))
-    // drop ids already tombstoned (a re-submitted takedown must not
-    // decrement its postings a second time). Write-then-read-back
-    // (round 19, guide §1.2 job-count cut): the face write is the one
-    // materialization and every downstream consumer reads the
-    // persisted face — identical determinism to the former
-    // localCheckpoint+write pair (a nondeterministic upstream batch
-    // cannot diverge between the write and the joins) at one job per
-    // face instead of two.
-    Dedup.normalizeRemovedIds(takedownIds)
-      .join(priorTombs.select(col("rid").as("prid")),
-        col("rid") === col("prid"), "left_anti")
-      .write.mode("overwrite").parquet(s"$artDir/$batchId/tombs")
-    val rids = readFace(sp, Seq(s"$artDir/$batchId/tombs"))
-
-    // a fully-duplicate (replayed upstream) batch decrements nothing:
-    // write schema-only empty faces without touching either base scan.
-    // The guard reads the just-written face's parquet footers
-    // driver-side — the same number `rids.isEmpty` computed, minus the
-    // scheduled job it cost on every step (round 19, guide §1.2)
-    val ridsN = faceRowCount(sp, s"$artDir/$batchId/tombs")
-    val batchDead = ridsN == 0L
-    // decrements from the takedown docs' OWN postings — an id-keyed
-    // lookup into the base sketch (broadcast delta side while it is
-    // provably small; prunes to touched files under an id-bucketed
-    // layout), never a recount
-    (if (batchDead)
-      emptyLike(sp, baseSketch.groupBy(keyCs: _*)
-        .agg(count(lit(1)).as("dec")))
-    else baseSketch.join(broadcastIfSmall(rids, ridsN),
-        docId === col("rid"))
-      .groupBy(keyCs: _*).agg(count(lit(1)).as("dec")))
-      .write.mode("overwrite").parquet(s"$artDir/$batchId/statsdelta")
-    val dec = readFace(sp, Seq(s"$artDir/$batchId/statsdelta"))
-
-    val priorDec =
-      if (batchId == 0L)
-        emptyLike(sp, dec.withColumnRenamed("dec", "pdec"))
-      else readFace(sp,
-          facePaths(sp, artDir, "statsdelta", 0L until batchId))
-        .groupBy(keyCs: _*).agg(sum("dec").as("pdec"))
-
-    // cap-crossing keys: above the cap BEFORE this batch (build count
-    // minus prior decrements), at-or-below it after — checked only for
-    // keys this batch actually decremented
-    // the candidate cardinality is OBSERVED during the checkpoint job
-    // (round 20, ObservedProbe) — the short-circuit decision previously
-    // paid a second isEmpty job per step on every non-dead batch
-    val candidates =
-      if (batchDead) None
-      else Some(graft.ObservedProbe.checkpointWithCount(
-        dec
-          .join(readFace(sp, Seq(s"$base/stats")), keyCols)
-          .join(priorDec, keyCols, "left")
-          .na.fill(0L, Seq("pdec"))
-          .filter(col("cnt") - col("pdec") > maxCnt &&
-            col("cnt") - col("pdec") - col("dec") <= maxCnt)
-          .select(keyCs: _*),
-        count(lit(1)))(_.count()))
-    val resurrect = candidates match {
-      case Some((cand, candN)) if candN > 0L =>
-        val allTombs = priorTombs.unionAll(rids)
-        decorate(baseSketch.join(broadcastIfSmall(cand, candN), keyCols))
-          .join(allTombs, docId === col("rid"), "left_anti")
-          .select(idxCols.map(col): _*)
-      case _ =>
-        // schema-only: no scan hides behind a limit(0) over the index
-        emptyFace(sp, s"$base/index")
-    }
-    resurrect.write.mode("overwrite")
-      .parquet(s"$artDir/$batchId/resurrect")
-    candidates.foreach(_._1.unpersist(blocking = false))
-    ()
-  }
-
   /** Broadcast-size guard for the chain delta joins (VERDICT r19 item
     * 6): every base-face lookup broadcasts the DELTA side, which is
     * correct while takedown/update batches are delta-sized — but an
@@ -433,108 +320,10 @@ object DeltaRetract {
 
   /** A zero-row DataFrame with `of`'s schema that plans NO scan —
     * `df.limit(0)` still carries the source in its plan and a write of
-    * it can launch the whole scan job just to emit nothing. (Shared
-    * with [[DeltaUpdate]], the signed-delta twin.) */
+    * it can launch the whole scan job just to emit nothing. */
   private[pipeline] def emptyLike(sp: SparkSession, of: DataFrame): DataFrame =
     sp.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       of.schema)
-
-  /** The serving view after batch `upTo` — base index plus every
-    * admitted resurrection, minus every tombstoned document. No
-    * aggregate anywhere: one union and one id anti-join against the
-    * (delta-sized) accumulated tombstones. Row-identical to the
-    * from-scratch recount over the surviving sketch (the spec-pinned
-    * equivalence). */
-  def servingView(sp: SparkSession, artDir: String, initName: String,
-      upTo: Long,
-      docId: org.apache.spark.sql.Column = col("id")): DataFrame = {
-    val idx = readFace(sp, Seq(s"$artDir/$initName/index"))
-    val res = readFace(sp,
-      facePaths(sp, artDir, "resurrect", 0L to upTo))
-    // no broadcast hint: per-batch tombs are tiny but the ACCUMULATED
-    // history is unbounded over a chain's lifetime — let AQE promote
-    // the anti-join to broadcast while it fits instead of forcing it
-    idx.unionByName(res.select(idx.columns.map(col): _*))
-      .join(tombstones(sp, artDir, upTo), docId === col("rid"),
-        "left_anti")
-  }
-
-  /** COMPACTION of a delta chain into a fresh base snapshot — the LSM
-    * fold: every probe of [[servingView]] pays a union over the
-    * accumulated resurrect faces and an anti-join over the accumulated
-    * tombstones, so after enough takedown batches the history itself
-    * becomes the cost. Compaction rewrites the three base faces over
-    * the SURVIVORS (sketch ∖ tombstones; stats and serving index
-    * re-derived through [[initBase]] — the ONE amortized
-    * archive-proportional recount the delta algebra saves per batch),
-    * and the chain restarts from batch 0 against the new base dir
-    * (a FRESH artifact dir + checkpoint, per the refuse-stale-chain
-    * lifetime contract). By construction the compacted base equals the
-    * family's deltaBase over the surviving corpus — the same
-    * derivations run on the same survivor rows — and the d61 gate
-    * certifies the full cycle: deltas → compact → more deltas ≡ the
-    * one-shot recount over all takedowns. Family faces beyond the
-    * generic three (shingle `sizes`, video `counts`) compact in the
-    * family wrappers ([[Dedup.shingleDeltaCompact]],
-    * [[Multimodal.videoDeltaCompact]]) — both are per-doc-intrinsic,
-    * so their compaction is one tombstone anti-join, no recount; the
-    * phash and winnow chains have no extra face and compact through
-    * this generic fold directly (spec-certified cycles in
-    * DeltaRetractSpec; the video two-face cycle is gate d62). */
-  def compact(sp: SparkSession, artDir: String, initName: String,
-      upTo: Long, newBaseDir: String, keyCols: Seq[String],
-      docId: org.apache.spark.sql.Column = col("id"),
-      extraFaces: Seq[DataFrame => Unit] = Nil)(
-      serveIndex: DataFrame => DataFrame): DataFrame = {
-    val sketch = readFace(sp, Seq(s"$artDir/$initName/sketch"))
-    val surv = sketch.join(tombstones(sp, artDir, upTo),
-      docId === col("rid"), "left_anti")
-    initBase(sp, newBaseDir, surv, keyCols, extraFaces)(serveIndex)
-  }
-
-  /** One batch of an AUTO-COMPACTED retract chain — the retract twin
-    * of [[DeltaUpdate.autoStep]] (same generation addressing, same
-    * idempotence argument: the mapping is a pure function of the
-    * checkpoint's batchId, the threshold batch folds the SEALED
-    * predecessor generation into this one's base through the family
-    * compact before stepping as local batch 0, and a replay re-derives
-    * the identical base from the same persisted faces). Bounds the
-    * serving view's accumulated-history cost at `compactEvery` faces
-    * by mechanism. Callers build the initial base at
-    * `DeltaUpdate.genDir(artDir, 0)/initName`. */
-  def autoStep(sp: SparkSession, artDir: String, initName: String,
-      batchId: Long, takedownIds: DataFrame, keyCols: Seq[String],
-      maxCnt: Int, compactEvery: Int,
-      decorate: DataFrame => DataFrame,
-      docId: org.apache.spark.sql.Column = col("id"))(
-      compactFn: (String, Long, String) => Unit): Unit = {
-    require(compactEvery >= 1,
-      s"autoStep: compactEvery must be >= 1, got $compactEvery")
-    val g = batchId / compactEvery
-    val l = batchId % compactEvery
-    if (l == 0L && g > 0L)
-      compactFn(DeltaUpdate.genDir(artDir, g - 1),
-        (compactEvery - 1).toLong,
-        s"${DeltaUpdate.genDir(artDir, g)}/$initName")
-    step(sp, DeltaUpdate.genDir(artDir, g), initName, l, takedownIds,
-      keyCols, maxCnt, decorate, docId)
-  }
-
-  /** [[servingView]] of an auto-compacted retract chain at GLOBAL
-    * batch `upTo`. */
-  def autoServingView(sp: SparkSession, artDir: String,
-      initName: String, upTo: Long, compactEvery: Int,
-      docId: org.apache.spark.sql.Column = col("id")): DataFrame =
-    servingView(sp, DeltaUpdate.genDir(artDir, upTo / compactEvery),
-      initName, upTo % compactEvery, docId)
-
-  /** The accumulated tombstones through batch `upTo` — exposed for
-    * family faces the generic view does not assemble (the video
-    * family's per-doc scene counts are maintained as base counts ∖
-    * tombstones at view time, the same algebra as the index face). */
-  def tombstones(sp: SparkSession, artDir: String,
-      upTo: Long): DataFrame =
-    readFace(sp, facePaths(sp, artDir, "tombs", 0L to upTo))
 
   /** The per-batch face paths for a contiguous id range,
     * existence-checked UP FRONT through the same Hadoop FileSystem

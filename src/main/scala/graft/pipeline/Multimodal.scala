@@ -352,13 +352,14 @@ object Multimodal {
     sketch.join(rem, col("id") === col("rid"), "left_anti")
   }
 
-  /** Base-snapshot faces for the hash family's O(delta) retract chain
-    * ([[graft.pipeline.DeltaRetract]]): uncapped chunk sketch,
-    * per-(chunk, chunk_val) build bucket counts, and the capped serving
-    * view — derived through the one shared [[phashServingIndex]] tail.
-    * No extra face: a chunk row already carries everything the serving
-    * index needs (id, both hash words, chunk, chunk_val), so a
-    * resurrected row is serving-shaped as-is. Serves image AND audio
+  /** Base-snapshot faces for the hash family's O(delta) chain
+    * ([[graft.pipeline.DeltaUpdate]] — re-encodes and takedowns alike,
+    * a takedown being an update to an empty version): uncapped chunk
+    * sketch, per-(chunk, chunk_val) build bucket counts, and the capped
+    * serving view — derived through the one shared [[phashServingIndex]]
+    * tail. No extra face: a chunk row already carries everything the
+    * serving index needs (id, both hash words, chunk, chunk_val), so a
+    * re-admitted row is serving-shaped as-is. Serves image AND audio
     * (both emit the two-word PHashRow face). */
   def phashDeltaBase(sp: SparkSession, hashes: DataFrame,
       baseDir: String, maxBucket: Int = 100): Unit = {
@@ -615,15 +616,16 @@ object Multimodal {
       kf.groupBy("doc_id").agg(count(lit(1)).as("n_scenes")))
   }
 
-  /** Base-snapshot faces for the video family's O(delta) retract chain
-    * ([[graft.pipeline.DeltaRetract]]): the uncapped packed-keyframe
-    * chunk sketch with its bucket build counts and capped serving view
-    * (the generic three faces), plus the family-specific `counts` face
-    * — (doc_id, n_scenes), the coverage denominators a probe's
-    * half-coverage rollup reads. Counts are intrinsic per video (the
-    * n_c algebra), so delta maintenance of that face is pure view
-    * assembly: base counts ∖ tombstones, no per-batch write at all
-    * ([[videoDeltaServing]]). */
+  /** Base-snapshot faces for the video family's O(delta) chain
+    * ([[graft.pipeline.DeltaUpdate]] — re-edits and takedowns alike, a
+    * takedown being an update to an empty version): the uncapped
+    * packed-keyframe chunk sketch with its bucket build counts and
+    * capped serving view (the generic three faces), plus the
+    * family-specific `counts` face — (doc_id, n_scenes), the coverage
+    * denominators a probe's half-coverage rollup reads.
+    * [[videoUpdateServing]] serves base counts for untouched videos
+    * and re-derives the touched ones' from their latest chunk rows (a
+    * taken-down video has none, so it drops out). */
   def videoDeltaBase(sp: SparkSession, keyframes: DataFrame,
       baseDir: String, maxBucket: Int = 100): Unit = {
     val kf = keyframes.localCheckpoint(false)
@@ -642,20 +644,6 @@ object Multimodal {
     } finally { kf.unpersist(blocking = false); () }
   }
 
-  /** The video family's serving [[VideoIndex]] after delta batch
-    * `upTo`: the generic capped-chunk view (tombstone matching keys on
-    * the PACKED id's document half, `id div 65536`) paired with the
-    * survivor scene counts. */
-  def videoDeltaServing(sp: SparkSession, artDir: String,
-      initName: String, upTo: Long): VideoIndex = {
-    val tombs = DeltaRetract.tombstones(sp, artDir, upTo)
-    VideoIndex(
-      DeltaRetract.servingView(sp, artDir, initName, upTo,
-        docId = expr("id div 65536")),
-      graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/counts"))
-        .join(tombs, col("doc_id") === col("rid"), "left_anti"))
-  }
-
   /** The uncapped PACKED chunk rows of a keyframe table — the video
     * family's `newRows` face for the [[DeltaUpdate]] chain (the same
     * rows [[videoKeyframeSketch]] puts in its chunks face, without
@@ -665,16 +653,16 @@ object Multimodal {
   def videoChunkRows(keyframes: DataFrame): DataFrame =
     phashChunks(packKids(keyframes))
 
-  /** The video family's serving [[VideoIndex]] over an UPDATE delta
-    * chain ([[DeltaUpdate]]) after batch `upTo`: the generic capped-
+  /** The video family's serving [[VideoIndex]] over the delta chain
+    * ([[DeltaUpdate]]) after batch `upTo`: the generic capped-
     * chunk view (tombstone/update matching on the PACKED id's document
     * half) paired with the CURRENT scene counts — base counts for
-    * never-updated videos plus counts derived from the updated videos'
+    * never-touched videos plus counts derived from the touched videos'
     * latest chunk rows (a re-edit moves the coverage denominators with
     * the postings; one distinct packed id = one scene, so the count is
-    * a delta-sized aggregate, no per-batch counts face needed). Base
-    * faces from [[videoDeltaBase]] — the same base serves retract and
-    * update chains. */
+    * a delta-sized aggregate, no per-batch counts face needed; a
+    * taken-down video has no latest rows and drops out of both faces).
+    * Base faces from [[videoDeltaBase]]. */
   def videoUpdateServing(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, maxBucket: Int = 100): VideoIndex = {
     val docHalf = expr("id div 65536")
@@ -690,13 +678,13 @@ object Multimodal {
       curCounts)
   }
 
-  /** Video-family COMPACTION of an UPDATE delta chain
+  /** Video-family COMPACTION of the delta chain
     * ([[DeltaUpdate.compact]]): fold the chunk faces over the
-    * current-corpus rows (base minus updated docs plus latest
+    * current-corpus rows (base minus touched docs plus latest
     * versions), then re-derive the `counts` face from the compacted
-    * sketch — a re-edit MOVES scene counts, so unlike the retract fold
-    * they cannot anti-join through (one distinct-packed-id aggregate
-    * over rows already being rewritten). Compacted base ≡
+    * sketch — a re-edit MOVES scene counts (one distinct-packed-id
+    * aggregate over rows already being rewritten; taken-down videos
+    * are absent from it). Compacted base ≡
     * [[videoDeltaBase]] over the corpus with every video's latest cut
     * (spec-pinned, DeltaUpdateSpec). */
   def videoUpdateCompact(sp: SparkSession, artDir: String,
@@ -707,32 +695,6 @@ object Multimodal {
       Seq("chunk", "chunk_val"), docHalf, extraFaces = Seq(
         sk => sk.select(docHalf.as("doc_id"), col("id")).distinct()
           .groupBy("doc_id").agg(count(lit(1)).as("n_scenes"))
-          .write.mode("overwrite").parquet(s"$newBaseDir/counts"),
-        _ => DeltaRetract.writeMeta(sp, newBaseDir,
-          Map("max_bucket" -> maxBucket.toLong))))(
-      phashServingIndex(_, maxBucket))
-    ()
-  }
-
-  /** Video-family COMPACTION of a delta retract chain
-    * ([[DeltaRetract.compact]]) — the two-face twin of
-    * `Dedup.shingleDeltaCompact` (ADVICE r16: the generic compact
-    * covers only the three generic faces, and a video chain restarted
-    * on a counts-less base fails its first [[videoDeltaServing]]
-    * read): fold the chunk faces generically (tombstones key on the
-    * packed id's document half), then compact the `counts` face —
-    * scene counts are intrinsic per video (the n_c algebra), so their
-    * compaction is one tombstone anti-join, no recount. */
-  def videoDeltaCompact(sp: SparkSession, artDir: String,
-      initName: String, upTo: Long, newBaseDir: String,
-      maxBucket: Int = 100): Unit = {
-    // the counts fold reads only the OLD base's counts face plus the
-    // tombstones — independent of every new-base face
-    DeltaRetract.compact(sp, artDir, initName, upTo, newBaseDir,
-      Seq("chunk", "chunk_val"), expr("id div 65536"), extraFaces = Seq(
-        _ => graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/counts"))
-          .join(DeltaRetract.tombstones(sp, artDir, upTo),
-            col("doc_id") === col("rid"), "left_anti")
           .write.mode("overwrite").parquet(s"$newBaseDir/counts"),
         _ => DeltaRetract.writeMeta(sp, newBaseDir,
           Map("max_bucket" -> maxBucket.toLong))))(

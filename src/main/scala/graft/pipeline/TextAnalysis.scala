@@ -383,10 +383,11 @@ object TextAnalysis {
     winnowSketchRetract(sketch, newVersions.select(col(idCol)))
       .unionByName(winnowSketch(newVersions, textCol, idCol, k, w))
 
-  /** Base-snapshot faces for the winnow family's O(delta) retract
-    * chain ([[DeltaRetract]]) — the fingerprint twin of
+  /** Base-snapshot faces for the winnow family's O(delta) chain
+    * ([[DeltaUpdate]] — re-crawls and takedowns alike, a takedown being
+    * an update to an empty version) — the fingerprint twin of
     * `Dedup.shingleDeltaBase`, without a sizes face (a winnow serving
-    * row is just (id, fp), so a resurrected sketch row is
+    * row is just (id, fp), so a re-admitted sketch row is
     * serving-shaped as-is). Serving face derived through the one
     * shared [[winnowServingIndex]] cap tail. */
   def winnowDeltaBase(sp: SparkSession, corpus: DataFrame,

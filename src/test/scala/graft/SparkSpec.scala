@@ -35,14 +35,10 @@ object SparkSpec {
   def liveTmpDirs: Set[String] = graft.TmpHygiene.registered
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
+    // the engine's front-door builder, so specs run the session
+    // configuration Verify and Bench run
+    val s = Graft.sessionBuilder("graft-test", "local[4]", 4)
       .config("spark.sql.warehouse.dir", tmpDir("graft_wh"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1,23 +1,46 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
-/** The O(delta) retract chain's equivalence contract: after every
-  * takedown batch, [[DeltaRetract.servingView]] is row-identical to
+/** Takedowns on the one O(delta) chain ([[DeltaUpdate]]): a takedown
+  * batch is an update to an EMPTY version ([[DeltaUpdate.emptyVersion]]),
+  * and after every batch the family serving view is row-identical to
   * the full recount over the surviving sketch
-  * ([[Dedup.shingleIndexRetract]] / [[Multimodal.phashIndexRetract]] —
-  * the round-15 implementation, which stays on as the oracle), cap
-  * resurrection included. The recount shuffles the whole sketch per
+  * ([[Dedup.shingleIndexRetract]] / [[Multimodal.phashIndexRetract]] /
+  * … — the round-15 implementation, which stays on as the oracle), cap
+  * re-admission included. The recount shuffles the whole sketch per
   * batch; the delta chain writes only delta faces — same rows, by
-  * construction here, not by luck. */
+  * construction here, not by luck. Also pins the shared face helpers
+  * ([[DeltaRetract.inParallel]], `faceRowCount`, `broadcastIfSmall`). */
 class DeltaRetractSpec extends SparkSpec {
 
   private def shingleRows(d: DataFrame) = d.collect()
     .map(r => (r.getAs[Long]("id"), r.getAs[Long]("shingle_k5"),
       r.getAs[Long]("n_c"))).toSet
+
+  private def chunkRows(d: DataFrame) = d.collect()
+    .map(r => (r.getAs[Long]("id"), r.getAs[Int]("chunk"),
+      r.getAs[Long]("chunk_val"))).toSet
+
+  private def fpRows(d: DataFrame) = d.collect()
+    .map(r => (r.getAs[Long]("id"), r.getAs[Long]("fp"))).toSet
+
+  private def countRows(d: DataFrame) = d.collect()
+    .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_scenes")))
+    .toSet
+
+  private val docHalf = org.apache.spark.sql.functions.expr("id div 65536")
+
+  /** One takedown batch `b` of the chain at `dir` (base `dir/init`). */
+  private def takedown(dir: String, b: Long, ids: Seq[Long],
+      keyCols: Seq[String], docId: Column = col("id")): Unit = {
+    import spark.implicits._
+    DeltaUpdate.step(spark, dir, "init", b, ids.toDF("doc_id"),
+      DeltaUpdate.emptyVersion(spark, s"$dir/init"), keyCols, docId)
+  }
 
   test("shingle delta chain: serving view ≡ recount after every batch " +
       "(cap resurrection, retract-of-resurrected, duplicate takedown)") {
@@ -36,38 +59,36 @@ class DeltaRetractSpec extends SparkSpec {
     assert(spark.read.parquet(s"$art/init/index")
         .filter(col("id").isin(1L, 2L, 3L, 4L)).count() === 0,
       "precondition: the quad's shared shingles must be capped out (df 4)")
+    val sizes = spark.read.parquet(s"$art/init/sizes")
+      .as[(Long, Long)].collect().toMap
 
-    // batch 0: retract an unrelated doc — no cap crossing (the empty-
-    // candidates short-circuit), view drops only its own rows
+    // batch 0: retract an unrelated doc — no cap crossing (the
+    // no-readmit skip), view drops only its own rows
     // batch 1: retract carrier 4 — df 4→3, still over the cap
-    // batch 2: retract carrier 3 AND re-submit 8 (already tombstoned;
-    //          must not decrement twice) — df 3→2 RESURRECTS the
-    //          survivors' postings
-    // batch 3: retract carrier 1 — a RESURRECTED doc leaves the view
+    // batch 2: retract carrier 3 AND re-submit 8 (already taken down;
+    //          its current version is empty, so it must not decrement
+    //          twice) — df 3→2 RE-ADMITS the survivors' postings
+    // batch 3: retract carrier 1 — a re-admitted doc leaves the view
     //          (and df 2→1 must not re-admit anything twice)
     val batches = Seq(Seq(8L), Seq(4L), Seq(3L, 8L), Seq(1L))
     var removed = Seq.empty[Long]
     batches.zipWithIndex.foreach { case (b, i) =>
-      DeltaRetract.step(spark, art, "init", i.toLong,
-        b.toDF("doc_id"), Seq("shingle_k5"), maxDf,
-        rows => rows.join(spark.read.parquet(s"$art/init/sizes"), "id"))
+      takedown(art, i.toLong, b, Seq("shingle_k5"))
       removed = removed ++ b
-      val got = shingleRows(
-        DeltaRetract.servingView(spark, art, "init", i.toLong))
+      val got = shingleRows(Dedup.shingleUpdateServing(spark, art, "init",
+        i.toLong, k = 5, maxDf = maxDf))
       val want = shingleRows(Dedup.shingleIndexRetract(sketch,
         removed.toDF("doc_id"), k = 5, maxDf = maxDf))
       assert(got === want, s"batch $i diverged from the recount")
-      if (i == 2) assert(got.exists(_._1 == 1L),
-        "batch 2 must RESURRECT the now-under-cap survivors")
+      if (i == 2) {
+        assert(got.exists(_._1 == 1L),
+          "batch 2 must RESURRECT the now-under-cap survivors")
+        // re-admitted rows carry the doc's intrinsic pre-cap n_c
+        got.foreach { case (id, _, n) => assert(n === sizes(id)) }
+      }
       if (i == 3) assert(!got.exists(_._1 == 1L),
         "a resurrected doc retracted later must leave the view")
     }
-    // resurrected rows carry the doc's intrinsic pre-cap n_c
-    val nc = spark.read.parquet(s"$art/2/resurrect")
-      .select("id", "n_c").distinct().as[(Long, Long)].collect().toMap
-    val sizes = spark.read.parquet(s"$art/init/sizes")
-      .as[(Long, Long)].collect().toMap
-    nc.foreach { case (id, n) => assert(n === sizes(id)) }
   }
 
   test("shingle delta chain: a replayed batch overwrites its own faces " +
@@ -81,15 +102,20 @@ class DeltaRetractSpec extends SparkSpec {
     Dedup.shingleDeltaBase(spark, docs, "text", "doc_id",
       s"$art/init", k = 5, maxDf = 2)
     def run(b: Long, ids: Seq[Long]): Set[(Long, Long, Long)] = {
-      DeltaRetract.step(spark, art, "init", b, ids.toDF("doc_id"),
-        Seq("shingle_k5"), 2,
-        rows => rows.join(spark.read.parquet(s"$art/init/sizes"), "id"))
-      shingleRows(DeltaRetract.servingView(spark, art, "init", b))
+      takedown(art, b, ids, Seq("shingle_k5"))
+      shingleRows(Dedup.shingleUpdateServing(spark, art, "init", b,
+        k = 5, maxDf = 2))
     }
     run(0L, Seq(9L))
     val first = run(1L, Seq(3L)) // df 3→2: resurrection batch
+    val faces = Seq("updids", "newrows", "statsdelta").map(f =>
+      spark.read.parquet(s"$art/1/$f").collect().map(_.toString).sorted
+        .toSeq)
     val replay = run(1L, Seq(3L)) // crash-before-checkpoint replay
     assert(first === replay)
+    assert(Seq("updids", "newrows", "statsdelta").map(f =>
+      spark.read.parquet(s"$art/1/$f").collect().map(_.toString).sorted
+        .toSeq) === faces, "the replay must rewrite identical faces")
   }
 
   test("winnow delta chain: serving view ≡ recount incl. df-cap " +
@@ -110,17 +136,15 @@ class DeltaRetractSpec extends SparkSpec {
     assert(spark.read.parquet(s"$art/init/index")
         .filter(col("id").isin(1L, 2L, 3L)).count() === 0,
       "precondition: the triplet's shared fingerprints must be capped out")
-    def rows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("fp"))).toSet
     // batch 0: retract carrier 3 — df 3→2 resurrects the survivors
     val batches = Seq(Seq(3L), Seq(9L))
     var removed = Seq.empty[Long]
     batches.zipWithIndex.foreach { case (b, i) =>
-      DeltaRetract.step(spark, art, "init", i.toLong, b.toDF("doc_id"),
-        Seq("fp"), maxDf, identity)
+      takedown(art, i.toLong, b, Seq("fp"))
       removed = removed ++ b
-      val got = rows(DeltaRetract.servingView(spark, art, "init", i.toLong))
-      val want = rows(TextAnalysis.winnowIndexRetract(sketch,
+      val got = fpRows(DeltaUpdate.servingView(spark, art, "init",
+        i.toLong, Seq("fp"), maxDf)(identity))
+      val want = fpRows(TextAnalysis.winnowIndexRetract(sketch,
         removed.toDF("doc_id"), maxDf))
       assert(got === want, s"batch $i diverged from the recount")
       if (i == 0) assert(got.exists(_._1 == 1L),
@@ -147,22 +171,15 @@ class DeltaRetractSpec extends SparkSpec {
     val persisted = Multimodal.VideoIndex(
       spark.read.parquet(s"$art/init/sketch"),
       spark.read.parquet(s"$art/init/counts"))
-    def chunkRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("chunk"),
-        r.getAs[Long]("chunk_val"))).toSet
-    def countRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_scenes")))
-      .toSet
     // batch 0: two carriers — bucket n 4→2 resurrects the survivors;
     // batch 1: one more carrier
     val batches = Seq(Seq(1L, 2L), Seq(3L))
     var removed = Seq.empty[Long]
     batches.zipWithIndex.foreach { case (b, i) =>
-      DeltaRetract.step(spark, art, "init", i.toLong, b.toDF("doc_id"),
-        Seq("chunk", "chunk_val"), maxBucket, identity,
-        docId = org.apache.spark.sql.functions.expr("id div 65536"))
+      takedown(art, i.toLong, b, Seq("chunk", "chunk_val"), docHalf)
       removed = removed ++ b
-      val got = Multimodal.videoDeltaServing(spark, art, "init", i.toLong)
+      val got = Multimodal.videoUpdateServing(spark, art, "init",
+        i.toLong, maxBucket)
       val want = Multimodal.videoIndexRetract(persisted,
         removed.toDF("doc_id"), maxBucket)
       assert(chunkRows(got.chunks) === chunkRows(want.chunks),
@@ -185,13 +202,10 @@ class DeltaRetractSpec extends SparkSpec {
     val art = tmpDir("graft_deltacompact")
     Dedup.shingleDeltaBase(spark, docs, "text", "doc_id",
       s"$art/a/init", k = 5, maxDf = maxDf)
-    def deco(baseDir: String): DataFrame => DataFrame =
-      rows => rows.join(spark.read.parquet(s"$baseDir/sizes"), "id")
     // chain a: retract carrier 4 (df 4→3, still capped)
-    DeltaRetract.step(spark, art + "/a", "init", 0L, Seq(4L).toDF("doc_id"),
-      Seq("shingle_k5"), maxDf, deco(s"$art/a/init"))
+    takedown(s"$art/a", 0L, Seq(4L), Seq("shingle_k5"))
     // fold into base b — must equal the family base over the survivors
-    Dedup.shingleDeltaCompact(spark, s"$art/a", "init", 0L,
+    Dedup.shingleUpdateCompact(spark, s"$art/a", "init", 0L,
       s"$art/b/init", k = 5, maxDf = maxDf)
     Dedup.shingleDeltaBase(spark, docs.filter(col("doc_id") =!= 4L),
       "text", "doc_id", s"$art/ref/init", k = 5, maxDf = maxDf)
@@ -205,10 +219,9 @@ class DeltaRetractSpec extends SparkSpec {
     }
     // the restarted chain: retract carrier 3 on the COMPACTED base —
     // df 3→2 must RESURRECT through the new base's stats
-    DeltaRetract.step(spark, s"$art/b", "init", 0L, Seq(3L).toDF("doc_id"),
-      Seq("shingle_k5"), maxDf, deco(s"$art/b/init"))
-    val got = shingleRows(
-      DeltaRetract.servingView(spark, s"$art/b", "init", 0L))
+    takedown(s"$art/b", 0L, Seq(3L), Seq("shingle_k5"))
+    val got = shingleRows(Dedup.shingleUpdateServing(spark, s"$art/b",
+      "init", 0L, k = 5, maxDf = maxDf))
     val want = shingleRows(Dedup.shingleIndexRetract(
       spark.read.parquet(s"$art/a/init/sketch"),
       Seq(4L, 3L).toDF("doc_id"), k = 5, maxDf = maxDf))
@@ -236,18 +249,14 @@ class DeltaRetractSpec extends SparkSpec {
     val hashes = Multimodal.dHash(media).localCheckpoint(true)
     val maxBucket = 2
     val art = tmpDir("graft_deltacompactph")
+    val chunkKey = Seq("chunk", "chunk_val")
     Multimodal.phashDeltaBase(spark, hashes, s"$art/a/init", maxBucket)
-    def chunkRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("chunk"),
-        r.getAs[Long]("chunk_val"))).toSet
-    DeltaRetract.step(spark, s"$art/a", "init", 0L, Seq(4L).toDF("doc_id"),
-      Seq("chunk", "chunk_val"), maxBucket, identity)
-    DeltaRetract.compact(spark, s"$art/a", "init", 0L, s"$art/b/init",
-      Seq("chunk", "chunk_val"))(Multimodal.phashServingIndex(_, maxBucket))
-    DeltaRetract.step(spark, s"$art/b", "init", 0L, Seq(3L).toDF("doc_id"),
-      Seq("chunk", "chunk_val"), maxBucket, identity)
-    val gotPh = chunkRows(
-      DeltaRetract.servingView(spark, s"$art/b", "init", 0L))
+    takedown(s"$art/a", 0L, Seq(4L), chunkKey)
+    DeltaUpdate.compact(spark, s"$art/a", "init", 0L, s"$art/b/init",
+      chunkKey)(Multimodal.phashServingIndex(_, maxBucket))
+    takedown(s"$art/b", 0L, Seq(3L), chunkKey)
+    val gotPh = chunkRows(DeltaUpdate.servingView(spark, s"$art/b",
+      "init", 0L, chunkKey, maxBucket)(identity))
     val wantPh = chunkRows(Multimodal.phashIndexRetract(
       spark.read.parquet(s"$art/a/init/sketch"),
       Seq(4L, 3L).toDF("doc_id"), maxBucket))
@@ -269,16 +278,12 @@ class DeltaRetractSpec extends SparkSpec {
     val wart = tmpDir("graft_deltacompactwn")
     TextAnalysis.winnowDeltaBase(spark, wdocs, "text", "doc_id",
       s"$wart/a/init", k = 5, w = 4, maxDf = maxDf)
-    def fpRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("fp"))).toSet
-    DeltaRetract.step(spark, s"$wart/a", "init", 0L, Seq(4L).toDF("doc_id"),
-      Seq("fp"), maxDf, identity)
-    DeltaRetract.compact(spark, s"$wart/a", "init", 0L, s"$wart/b/init",
+    takedown(s"$wart/a", 0L, Seq(4L), Seq("fp"))
+    DeltaUpdate.compact(spark, s"$wart/a", "init", 0L, s"$wart/b/init",
       Seq("fp"))(TextAnalysis.winnowServingIndex(_, maxDf))
-    DeltaRetract.step(spark, s"$wart/b", "init", 0L, Seq(3L).toDF("doc_id"),
-      Seq("fp"), maxDf, identity)
-    val gotWn = fpRows(
-      DeltaRetract.servingView(spark, s"$wart/b", "init", 0L))
+    takedown(s"$wart/b", 0L, Seq(3L), Seq("fp"))
+    val gotWn = fpRows(DeltaUpdate.servingView(spark, s"$wart/b", "init",
+      0L, Seq("fp"), maxDf)(identity))
     val wantWn = fpRows(TextAnalysis.winnowIndexRetract(
       spark.read.parquet(s"$wart/a/init/sketch"),
       Seq(4L, 3L).toDF("doc_id"), maxDf))
@@ -288,7 +293,7 @@ class DeltaRetractSpec extends SparkSpec {
       "the post-compaction step must resurrect through the new base")
   }
 
-  test("video delta chain: videoDeltaCompact carries the counts face " +
+  test("video delta chain: videoUpdateCompact carries the counts face " +
       "into the new base (ADVICE r16 — a counts-less base fails the " +
       "restarted chain's first serving read)") {
     import spark.implicits._
@@ -304,26 +309,19 @@ class DeltaRetractSpec extends SparkSpec {
       cutPm = 8L).toDF().localCheckpoint(true)
     val maxBucket = 2
     val art = tmpDir("graft_deltacompactvid")
-    val docHalf = org.apache.spark.sql.functions.expr("id div 65536")
+    val chunkKey = Seq("chunk", "chunk_val")
     Multimodal.videoDeltaBase(spark, kf, s"$art/a/init", maxBucket)
-    DeltaRetract.step(spark, s"$art/a", "init", 0L, Seq(4L).toDF("doc_id"),
-      Seq("chunk", "chunk_val"), maxBucket, identity, docHalf)
-    Multimodal.videoDeltaCompact(spark, s"$art/a", "init", 0L,
+    takedown(s"$art/a", 0L, Seq(4L), chunkKey, docHalf)
+    Multimodal.videoUpdateCompact(spark, s"$art/a", "init", 0L,
       s"$art/b/init", maxBucket)
-    DeltaRetract.step(spark, s"$art/b", "init", 0L, Seq(3L).toDF("doc_id"),
-      Seq("chunk", "chunk_val"), maxBucket, identity, docHalf)
-    val got = Multimodal.videoDeltaServing(spark, s"$art/b", "init", 0L)
+    takedown(s"$art/b", 0L, Seq(3L), chunkKey, docHalf)
+    val got = Multimodal.videoUpdateServing(spark, s"$art/b", "init", 0L,
+      maxBucket)
     val want = Multimodal.videoIndexRetract(
       Multimodal.VideoIndex(
         spark.read.parquet(s"$art/a/init/sketch"),
         spark.read.parquet(s"$art/a/init/counts")),
       Seq(4L, 3L).toDF("doc_id"), maxBucket)
-    def chunkRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("chunk"),
-        r.getAs[Long]("chunk_val"))).toSet
-    def countRows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_scenes")))
-      .toSet
     assert(chunkRows(got.chunks) === chunkRows(want.chunks),
       "video compact cycle diverged on the chunk face")
     assert(countRows(got.counts) === countRows(want.counts),
@@ -349,19 +347,16 @@ class DeltaRetractSpec extends SparkSpec {
     assert(spark.read.parquet(s"$art/init/index")
         .filter(col("id").isin(1L, 2L, 3L, 4L)).count() === 0,
       "precondition: the quad's buckets must be capped out (n 4)")
-    def rows(d: DataFrame) = d.collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Int]("chunk"),
-        r.getAs[Long]("chunk_val"))).toSet
     // batch 0: two carriers at once — n 4→2 crosses in ONE batch
     // batch 1: another carrier — no second resurrection, view shrinks
     val batches = Seq(Seq(1L, 2L), Seq(3L))
     var removed = Seq.empty[Long]
     batches.zipWithIndex.foreach { case (b, i) =>
-      DeltaRetract.step(spark, art, "init", i.toLong, b.toDF("doc_id"),
-        Seq("chunk", "chunk_val"), maxBucket, identity)
+      takedown(art, i.toLong, b, Seq("chunk", "chunk_val"))
       removed = removed ++ b
-      val got = rows(DeltaRetract.servingView(spark, art, "init", i.toLong))
-      val want = rows(Multimodal.phashIndexRetract(sketch,
+      val got = chunkRows(DeltaUpdate.servingView(spark, art, "init",
+        i.toLong, Seq("chunk", "chunk_val"), maxBucket)(identity))
+      val want = chunkRows(Multimodal.phashIndexRetract(sketch,
         removed.toDF("doc_id"), maxBucket))
       assert(got === want, s"batch $i diverged from the recount")
     }

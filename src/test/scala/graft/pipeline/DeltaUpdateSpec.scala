@@ -362,21 +362,25 @@ class DeltaUpdateSpec extends SparkSpec {
     val rart = tmpDir("graft_autoret")
     Dedup.shingleDeltaBase(spark, rdocs, "text", "doc_id",
       s"${DeltaUpdate.genDir(rart, 0L)}/init", k = 5, maxDf = 100)
+    // a takedown is an update to an EMPTY version on the same chain,
+    // folded by the same family compact
     def rstep(bid: Long, doc: Long): Unit =
-      DeltaRetract.autoStep(spark, rart, "init", bid,
-        Seq(doc).toDF("doc_id"), Seq("shingle_k5"), 100, every,
-        rows => rows.join(spark.read.parquet(
-          s"${DeltaUpdate.genDir(rart, bid / every)}/init/sizes"), "id"))(
+      DeltaUpdate.autoStep(spark, rart, "init", bid,
+        Seq(doc).toDF("doc_id"),
+        DeltaUpdate.emptyVersion(spark,
+          s"${DeltaUpdate.genDir(rart, 0L)}/init"),
+        Seq("shingle_k5"), every)(
         (gd: String, upTo: Long, nb: String) =>
-          Dedup.shingleDeltaCompact(spark, gd, "init", upTo, nb,
+          Dedup.shingleUpdateCompact(spark, gd, "init", upTo, nb,
             k = 5, maxDf = 100))
     var alive = Map(1L -> texts(0), 2L -> texts(1), 3L -> texts(2),
       4L -> texts(3), 9L -> texts(4))
     Seq((0L, 1L), (1L, 2L), (2L, 3L)).foreach { case (bid, doc) =>
       rstep(bid, doc)
       alive = alive - doc
-      val got = shingleRows(DeltaRetract.autoServingView(spark, rart,
-        "init", bid, every))
+      val got = shingleRows(Dedup.shingleUpdateServing(spark,
+        DeltaUpdate.genDir(rart, bid / every), "init", bid % every, k = 5,
+        maxDf = 100))
       assert(got === recount(alive.toSeq),
         s"auto retract chain diverged at global batch $bid")
     }
@@ -433,5 +437,65 @@ class DeltaUpdateSpec extends SparkSpec {
           "an emptied video must leave no chunk postings")
       }
     }
+  }
+
+  test("face reads check every path's footer schema: a drifted newrows " +
+      "face fails loudly naming its path; a mixed takedown/update chain " +
+      "(empty and tokenizer-written faces) passes") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six"),
+      (9L, "first wholly unrelated content words here"))
+      .toDF("doc_id", "text")
+    def sketchOf(rows: Seq[(Long, String)]) = Dedup.hashedShingleSketch(
+      rows.toDF("doc_id", "text"), "text", "doc_id", k = 5)
+    def recount(corpus: Seq[(Long, String)]) = shingleRows(
+      Dedup.shingleServingIndex(sketchOf(corpus), k = 5, maxDf = 100))
+
+    // mixed chain: re-crawl, takedown (empty version), re-crawl — the
+    // newrows faces are tokenizer-written, empty, tokenizer-written
+    val art = tmpDir("graft_facedrift_ok")
+    Dedup.shingleDeltaBase(spark, docs, "text", "doc_id", s"$art/init",
+      k = 5, maxDf = 100)
+    val upd = (1L, "uno dos tres quatro cinco seis")
+    DeltaUpdate.step(spark, art, "init", 0L, Seq(1L).toDF("doc_id"),
+      sketchOf(Seq(upd)), Seq("shingle_k5"))
+    DeltaUpdate.step(spark, art, "init", 1L, Seq(2L).toDF("doc_id"),
+      DeltaUpdate.emptyVersion(spark, s"$art/init"), Seq("shingle_k5"))
+    val back = (2L, "one two three four five six seven")
+    DeltaUpdate.step(spark, art, "init", 2L, Seq(2L).toDF("doc_id"),
+      sketchOf(Seq(back)), Seq("shingle_k5"))
+    assert(shingleRows(Dedup.shingleUpdateServing(spark, art, "init", 2L,
+        k = 5, maxDf = 100)) ===
+      recount(Seq(upd, back, (9L, "first wholly unrelated content words here"))),
+      "the mixed chain diverged from the recount")
+
+    // drifted chain: batch 1's newrows face carries the key as DOUBLE —
+    // the next step's prior-version read and the serving view must
+    // both refuse, naming the drifted face
+    val bad = tmpDir("graft_facedrift_bad")
+    Dedup.shingleDeltaBase(spark, docs, "text", "doc_id", s"$bad/init",
+      k = 5, maxDf = 100)
+    DeltaUpdate.step(spark, bad, "init", 0L, Seq(1L).toDF("doc_id"),
+      sketchOf(Seq(upd)), Seq("shingle_k5"))
+    DeltaUpdate.step(spark, bad, "init", 1L, Seq(2L).toDF("doc_id"),
+      sketchOf(Seq(back)).select(col("id"),
+        col("shingle_k5").cast("double").as("shingle_k5")),
+      Seq("shingle_k5"))
+    val drifted = s"$bad/1/newrows"
+    val e1 = intercept[IllegalArgumentException] {
+      DeltaUpdate.step(spark, bad, "init", 2L, Seq(1L).toDF("doc_id"),
+        sketchOf(Seq(upd)), Seq("shingle_k5"))
+    }
+    assert(e1.getMessage.contains(drifted), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      DeltaRetract.readFace(spark, Seq(s"$bad/0/newrows", drifted))
+    }
+    assert(e2.getMessage.contains(drifted), e2.getMessage)
+    // nullability alone is not drift: the empty version's footer says
+    // what the base sketch's says, the tokenizer's may differ
+    DeltaRetract.readFace(spark, Seq(s"$art/0/newrows", s"$art/1/newrows",
+      s"$art/2/newrows")).collect()
   }
 }
