@@ -33,6 +33,19 @@ import org.apache.spark.sql.SparkSession
   *    covers the 192-query surface with the same ×2-plus margin —
   *    entries are soft-referenced class objects, so oversizing costs
   *    only reclaimable heap).
+  *  - a fork-free local filesystem ([[sources.ForkFreeRawLocalFileSystem]])
+  *    for the `file` scheme, through both Hadoop APIs. Without libhadoop
+  *    the stock `RawLocalFileSystem` spawns a `chmod` process for every
+  *    file and directory it creates and a `readlink` for every path a
+  *    `FileContext` rename checks: dozens of forks per meter micro-batch,
+  *    twenty of them serial on the stream thread inside the offsets and
+  *    commits log writes, and hundreds per backfill. The engine class does
+  *    both calls with `java.nio.file` and keeps the stock code for the
+  *    sticky bit, special mode bits, non-POSIX file stores and real
+  *    symlinks; a cluster with libhadoop keeps its native `chmod`. Files
+  *    and `.crc` checksums are unchanged. Registered here, so every
+  *    session the engine builds (Main, Bench, Verify, the specs, the
+  *    benchmark) gets it; no option turns it off.
   */
 object Graft {
   def sessionBuilder(appName: String = "graft",
@@ -49,6 +62,10 @@ object Graft {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "16384")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.ForkFreeLocalFs].getName)
       // Shuffle/broadcast/spill scratch on the fastest writable local
       // volume (round 19, guide §2.1/§6): every Exchange writes its map
       // output to spark.local.dir, and on this box the default

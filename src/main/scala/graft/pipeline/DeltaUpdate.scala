@@ -203,16 +203,21 @@ object DeltaUpdate {
     * at all. Pinned footprint: two delta-sized frames per probe,
     * released by the caller's session sweep (the Verify/Bench
     * contract) — a long-running serving process issuing unbounded
-    * probes should unpersist between probes the same way. */
+    * probes should unpersist between probes the same way.
+    *
+    * A family whose decoration also reads the updated-doc set (the
+    * shingle sizes, the video scene counts) passes the checkpoint it
+    * took with [[touchedDocs]] as `touched`, so one probe derives the
+    * set once; without it the view takes its own. */
   def servingView(sp: SparkSession, artDir: String, initName: String,
       upTo: Long, keyCols: Seq[String], maxCnt: Int,
-      docId: Column = col("id"))(
+      docId: Column = col("id"), touched: Option[DataFrame] = None)(
       decorate: DataFrame => DataFrame): DataFrame = {
     val base = s"$artDir/$initName"
     val idx = DeltaRetract.readFace(sp, Seq(s"$base/index"))
     val idxCols = idx.columns.toSeq
     val keyCs = keyCols.map(col)
-    val updDocs = updatedDocs(sp, artDir, upTo).localCheckpoint(true)
+    val updDocs = touched.getOrElse(touchedDocs(sp, artDir, upTo))
     val (cur, readmitN) = graft.ObservedProbe.checkpointWithCount(
       currentCounts(sp, artDir, initName, upTo, keyCols),
       count(when(col("cnt") > maxCnt && col("curCnt") <= maxCnt,
@@ -361,6 +366,13 @@ object DeltaUpdate {
     DeltaRetract.readFace(sp,
         DeltaRetract.facePaths(sp, artDir, "updids", 0L to upTo))
       .distinct()
+
+  /** [[updatedDocs]] materialized once (an eager localCheckpoint): the
+    * delta-sized set a serving probe's legs and its family decoration
+    * share ([[servingView]]'s `touched`). */
+  def touchedDocs(sp: SparkSession, artDir: String,
+      upTo: Long): DataFrame =
+    updatedDocs(sp, artDir, upTo).localCheckpoint(true)
 
   /** The updated docs' CURRENT sketch rows: each doc's newrows face
     * from its LATEST update batch (a doc updated twice serves its

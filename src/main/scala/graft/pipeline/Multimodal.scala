@@ -666,7 +666,7 @@ object Multimodal {
   def videoUpdateServing(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, maxBucket: Int = 100): VideoIndex = {
     val docHalf = expr("id div 65536")
-    val updDocs = DeltaUpdate.updatedDocs(sp, artDir, upTo)
+    val updDocs = DeltaUpdate.touchedDocs(sp, artDir, upTo)
     val curCounts = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/counts"))
       .join(updDocs, col("doc_id") === col("rid"), "left_anti")
       .unionByName(DeltaUpdate.latestRows(sp, artDir, upTo, docHalf)
@@ -674,7 +674,8 @@ object Multimodal {
         .groupBy("doc_id").agg(count(lit(1)).as("n_scenes")))
     VideoIndex(
       DeltaUpdate.servingView(sp, artDir, initName, upTo,
-        Seq("chunk", "chunk_val"), maxBucket, docHalf)(identity),
+        Seq("chunk", "chunk_val"), maxBucket, docHalf, Some(updDocs))(
+        identity),
       curCounts)
   }
 
