@@ -1,9 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{col, size, sum}
 
-import graft.meter.{GenConfig, MeterGen, Rollups, SaidSeed}
+import graft.meter.{GenConfig, MeterGen, MeterStore, Rollups, SaidSeed}
 import graft.sources.ParquetSink
 import graft.streaming.MeterStream
 
@@ -26,9 +26,21 @@ import graft.streaming.MeterStream
   */
 object Main {
 
+  /** The batch program: append `cfg`'s transmissions to `outDir` through
+    * [[MeterStore.writeRaw]] and their joules grains through [[Rollups.writeAll]]. */
+  def writeBatch(spark: SparkSession, cfg: GenConfig, outDir: String): Unit = {
+    val raw = MeterGen.transmissions(spark, cfg)
+    MeterStore.writeRaw(raw, outDir)
+    val sink = new ParquetSink(outDir)
+    Rollups.writeAll(MeterGen.reduceToSecond(raw, cfg))((grain, df) =>
+      sink.write(df, s"meter_samples_$grain"))
+  }
+
   /** Read the five tables back and print/check the golden chain. Returns
-    * false if any invariant fails (total ≠ ticks×59 per meter at any
-    * grain, or raw arrays malformed). */
+    * false if any invariant fails (total ≠ ticks×59 per meter at any grain
+    * or in the kernel's fold of the raw arrays read back, or raw arrays
+    * malformed): the write side folds a plan constant, so only this read-back
+    * fold runs `float_array_sum` over stored arrays. */
   def goldenChain(spark: SparkSession, outDir: String,
       numMeters: Int, ticks: Long): Boolean = {
     def back(t: String) = spark.read.parquet(s"$outDir/$t")
@@ -38,8 +50,10 @@ object Main {
       .filter(col("n") =!= 15000).isEmpty
     val expected = ticks * 59L // core.clj:37-46
     println(f"%n[demo] ${"table"}%-22s rows    meters  total_joules  expect")
-    val grainOk = Seq("second", "minute", "hour", "day").map { g =>
-      val t = back(s"meter_samples_$g")
+    val tables = ("raw fold" -> MeterGen.reduceToSecond(raw)) +:
+      Seq("second", "minute", "hour", "day").map(g =>
+        s"meter_samples_$g" -> back(s"meter_samples_$g"))
+    val grainOk = tables.map { case (name, t) =>
       val per = t.groupBy("said")
         .agg(sum(col("joules")).as("j")).orderBy("said")
         .collect()
@@ -47,7 +61,7 @@ object Main {
           r.getAs[Number]("j").longValue())
       val total = per.map(_._2).sum
       val ok = per.length == numMeters && per.forall(_._2 == expected)
-      println(f"[demo] meter_samples_$g%-9s ${t.count()}%7d  ${per.length}%6d  " +
+      println(f"[demo] $name%-22s ${t.count()}%7d  ${per.length}%6d  " +
         f"$total%12d  ${expected * numMeters}%6d  ${if (ok) "OK" else "FAIL"}")
       ok
     }
@@ -112,19 +126,7 @@ object Main {
           if (fs.exists(p)) fs.delete(p, true)
         }
       }
-      val sink = new ParquetSink(outDir,
-        Map("meter_samples" -> Seq("dt", "said_bucket")))
-      val raw = MeterGen.transmissions(spark, cfg)
-      sink.write(
-        raw.withColumn("dt", to_date(col("datetime")))
-          .withColumn("said_bucket", pmod(col("said"), lit(16))),
-        "meter_samples")
-      // fold the arrays just written, not the driver constant, so the
-      // demo's golden chain certifies the fold (the append-mode raw dir
-      // may hold earlier runs' rows, so it is not re-read)
-      val second = MeterGen.reduceToSecond(raw, cfg)
-      Rollups.writeAll(second)((grain, df) =>
-        sink.write(df, s"meter_samples_$grain"))
+      writeBatch(spark, cfg, outDir)
       println(s"[graft] wrote raw + 4 rollup tables to $outDir")
       if (demoMode) {
         val ok = goldenChain(spark, outDir, numMeters, ticks)

@@ -30,7 +30,8 @@ object ObservedProbe {
     * (listener bus starved or torn down mid-shutdown) the probe falls
     * back to `fallback` over the already-checkpointed frame: one extra
     * cheap job in a path that previously ALWAYS paid it, identical
-    * semantics. */
+    * semantics. So does a null metric. Each fallback steps
+    * [[fallbackCount]]; the first in a JVM logs one WARN line. */
   def checkpointWithCount(df: DataFrame, metric: Column)(
       fallback: DataFrame => Long): (DataFrame, Long) = {
     val obs = new Observation()
@@ -44,8 +45,17 @@ object ObservedProbe {
       }
     val n = row.flatMap(r => Option(r.getAs[Any]("m"))) match {
       case Some(x: Number) => x.longValue()
-      case _ => fallback(cp)
+      case _ =>
+        if (fallbacks.getAndIncrement() == 0)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn("observed metric " +
+            "missing; recomputing it with an extra job (logged once per JVM)")
+        fallback(cp)
     }
     (cp, n)
   }
+
+  private val fallbacks = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Times [[checkpointWithCount]] fell back to the extra job in this JVM. */
+  def fallbackCount: Long = fallbacks.get()
 }

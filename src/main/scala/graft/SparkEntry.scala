@@ -25,9 +25,7 @@ object SparkEntry {
     * joules, roll up to the minute grain (core.clj:87-153). Driver
     * smoke-checks rows > 0. */
   def entry(spark: SparkSession): DataFrame = {
-    val cfg = GenConfig(numMeters = 2, ticks = 60)
-    val raw = MeterGen.transmissions(spark, cfg)
-    Rollups.minute(MeterGen.reduceToSecond(raw, cfg))
+    Rollups.minute(MeterGen.secondTable(spark, GenConfig(numMeters = 2, ticks = 60)))
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

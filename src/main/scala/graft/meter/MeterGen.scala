@@ -1,7 +1,10 @@
 package graft.meter
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, UnsafeArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 import graft.functions.FloatArraySum.float_array_sum
 
@@ -21,26 +24,28 @@ final case class GenConfig(
 
 /** Batch generator for the reference's meter data model, expressed as
   * Catalyst expressions (no UDFs) and embarrassingly parallel: `spark.range`
-  * over meter×tick with zero shuffles (SURVEY §4.3). The joules fold is the
-  * codegen kernel `float_array_sum`, so reduction stays inside whole-stage
-  * codegen. The sawtooth in [[wattsExpr]] is not: it is a `transform`
-  * higher-order function, which is `CodegenFallback`, so it is interpreted
-  * once per sample and keeps the generating projection out of whole-stage
-  * codegen.
+  * over meter×tick with zero shuffles (SURVEY §4.3). The sample buffer is
+  * built once per plan, as the reference builds each tick's buffer once
+  * and hands it to every meter (core.clj:155-161): [[wattsExpr]] is one
+  * array literal. The joules fold is the codegen kernel `float_array_sum`;
+  * over generated rows Catalyst folds it to a constant, over stored arrays
+  * it runs inside whole-stage codegen.
   *
   * Scale note: at 100 TB the raw table dominates (~46 KB/row,
   * /root/reference/setup_and_notes.txt:48-53). `transmissions` parallelizes on
-  * the range source; callers writing raw data should partition output by
-  * `date(datetime)` and a said-bucket (see Rollups.writeRaw).
+  * the range source; raw output is laid out by `date(datetime)` and a
+  * said-bucket (see MeterStore.writeRaw).
   */
 object MeterGen {
 
   /** watts[i] = float(i mod period) for i in [0, sampleRate) — the memoized
-    * sawtooth of core.clj:37-41. Same array for every transmission. */
-  def wattsExpr(cfg: GenConfig): Column =
-    transform(
-      sequence(lit(0), lit(cfg.sampleRate - 1)),
-      i => (i % cfg.sawtoothPeriod).cast("float"))
+    * sawtooth of core.clj:37-41 as one `UnsafeArrayData` literal typed like
+    * `Schemas.meterSamples`: it constant-folds and prints as one token. */
+  def wattsExpr(cfg: GenConfig): Column = {
+    val buf = Array.tabulate(cfg.sampleRate)(i => (i % cfg.sawtoothPeriod).toFloat)
+    bridge.column(Literal(UnsafeArrayData.fromPrimitiveArray(buf),
+      ArrayType(FloatType, containsNull = true)))
+  }
 
   /** joules = int(sum(watts) / sampleRate) — float sum then truncation toward
     * zero (core.clj:43-46). The sum is the `float_array_sum` codegen kernel
@@ -52,47 +57,30 @@ object MeterGen {
   def joulesExpr(watts: Column, cfg: GenConfig): Column =
     (float_array_sum(watts) / lit(cfg.sampleRate.toFloat)).cast("int")
 
-  /** Raw transmissions: (said INT, datetime TIMESTAMP, watts ARRAY<FLOAT>).
-    * One row per meter per second, no shuffle: row id = tick * numMeters + m. */
+  /** Transmissions (said INT, datetime TIMESTAMP, watts ARRAY<FLOAT>) of the
+    * row indices (tick * numMeters + m) in column `index`: the key
+    * projection of both the range and the rate source. */
+  def fromRowIndex(rows: DataFrame, index: String, cfg: GenConfig): DataFrame =
+    rows.select(
+      (col(index) % cfg.numMeters + cfg.startSaid).cast("int").as("said"),
+      timestamp_seconds(
+        expr(s"$index DIV ${cfg.numMeters}") + cfg.startEpochSec).as("datetime"),
+      wattsExpr(cfg).as("watts"))
+
+  /** Raw transmissions: one row per meter per second, no shuffle. */
   def transmissions(spark: SparkSession, cfg: GenConfig): DataFrame = {
     val rows = cfg.ticks * cfg.numMeters
     // Parallelism: one task per ~250k rows, at least the default parallelism.
     val slices = math.max(spark.sparkContext.defaultParallelism,
       math.min(rows / 250000L + 1, 4096L).toInt)
-    spark.range(0, rows, 1, slices)
-      .select(
-        (col("id") % cfg.numMeters + cfg.startSaid).cast("int").as("said"),
-        timestamp_seconds(
-          expr(s"id DIV ${cfg.numMeters}") + cfg.startEpochSec).as("datetime"))
-      .withColumn("watts", wattsExpr(cfg))
+    fromRowIndex(spark.range(0, rows, 1, slices).toDF(), "id", cfg)
   }
 
-  /** The per-transmission joules value, computed once driver-side — the
-    * same memoization the reference applies to its shared per-tick sample
-    * buffer (core.clj:37-46,158): the generator is deterministic, so the
-    * float sum of one second's sawtooth (exact — all partials < 2^24) is a
-    * config constant (59 for defaults), not a per-row computation. */
-  def joulesConst(cfg: GenConfig): Int = {
-    var acc = 0.0f
-    var i = 0
-    while (i < cfg.sampleRate) { acc += (i % cfg.sawtoothPeriod).toFloat; i += 1 }
-    (acc / cfg.sampleRate).toInt
-  }
-
-  /** Per-second energy table (said, datetime, joules INT) — the
-    * meter_samples_second derivation (core.clj:111-120). joules is the
-    * folded [[joulesConst]]; no per-row array work at all. */
-  def secondTable(spark: SparkSession, cfg: GenConfig): DataFrame = {
-    val rows = cfg.ticks * cfg.numMeters
-    val slices = math.max(spark.sparkContext.defaultParallelism,
-      math.min(rows / 500000L + 1, 4096L).toInt)
-    spark.range(0, rows, 1, slices)
-      .select(
-        (col("id") % cfg.numMeters + cfg.startSaid).cast("int").as("said"),
-        timestamp_seconds(
-          expr(s"id DIV ${cfg.numMeters}") + cfg.startEpochSec).as("datetime"))
-      .withColumn("joules", lit(joulesConst(cfg)))
-  }
+  /** Per-second energy table (said, datetime, joules INT) of the generated
+    * transmissions (core.clj:111-120); optimized, `Range → Project [said,
+    * datetime, 59 AS joules]`. */
+  def secondTable(spark: SparkSession, cfg: GenConfig): DataFrame =
+    reduceToSecond(transmissions(spark, cfg), cfg)
 
   /** Reduce a raw transmissions frame to the per-second table (the write-time
     * reduction of core.clj:93: arrays are reduced to joules BEFORE any

@@ -25,11 +25,11 @@ final case class MeterStore(baseDir: String) {
     spark.read.parquet(s"$baseDir/meter_samples")
 
   /** Q1: all raw values for meters in a time range — prunes on the
-    * dt/said_bucket layout written by Main/Rollups.writeRaw. */
+    * dt/said_bucket layout written by [[MeterStore.writeRaw]]. */
   def rawRange(spark: SparkSession, saids: Seq[Int],
-      from: String, to: String, saidBuckets: Int = 16): DataFrame =
+      from: String, to: String): DataFrame =
     raw(spark).filter(
-      col("said_bucket").isin(saids.map(_ % saidBuckets): _*) &&
+      col("said_bucket").isin(saids.map(Math.floorMod(_, MeterStore.SaidBuckets)): _*) &&
         col("said").isin(saids: _*) &&
         col("dt") >= to_date(lit(from)) && col("dt") <= to_date(lit(to)) &&
         col("datetime") >= lit(from) && col("datetime") < lit(to))
@@ -48,4 +48,19 @@ final case class MeterStore(baseDir: String) {
         date_trunc(grain, col("datetime")).as("datetime"))
       .agg(sum(col("joules")).cast("long").as("joules"))
   }
+}
+
+object MeterStore {
+
+  /** Said buckets of the raw table's layout. */
+  val SaidBuckets = 16
+
+  /** Append `raw` to `baseDir/meter_samples` in the layout Q1 reads
+    * (setup_and_notes.txt:46): partitioned by date, so time predicates
+    * prune, then by said bucket; zstd, as arrays dominate bytes. */
+  def writeRaw(raw: DataFrame, baseDir: String): Unit =
+    new graft.sources.ParquetSink(baseDir, Map("meter_samples" -> Seq("dt", "said_bucket")))
+      .write(raw.withColumn("dt", to_date(col("datetime")))
+        .withColumn("said_bucket", pmod(col("said"), lit(SaidBuckets))),
+        "meter_samples")
 }

@@ -59,22 +59,4 @@ object Rollups {
         .map(g => () => write(g, grains(g).coalesce(1))): _*)
     } finally { deduped.unpersist(); () }
   }
-
-  /** Raw-table writer layout for Q1-style reads ("all raw values for a meter
-    * in a time period", setup_and_notes.txt:46): partition by date so time
-    * predicates prune partitions, bucket-like said subdirs via `said % n`.
-    * zstd because the 15k-float arrays dominate bytes (SURVEY §4.3). */
-  def writeRaw(raw: DataFrame, path: String, saidBuckets: Int = 16): Unit =
-    raw
-      .withColumn("dt", to_date(col("datetime")))
-      .withColumn("said_bucket", pmod(col("said"), lit(saidBuckets)))
-      .write
-      .partitionBy("dt", "said_bucket")
-      .option("compression", "zstd")
-      .mode("overwrite")
-      .parquet(path)
-
-  /** Rollup tables are tiny (1 row/meter/bucket) — coalesce before write. */
-  def writeRollup(rollup: DataFrame, path: String): Unit =
-    rollup.coalesce(1).write.mode("overwrite").parquet(path)
 }

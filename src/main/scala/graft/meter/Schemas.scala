@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * per-second joules stays 32-bit exactly as the DDL declares — SURVEY
   * §7.4 overflow note). The PRIMARY KEY (said, datetime) becomes the
   * dedup/rollup grouping key (Rollups.dedupe) and the write layout's
-  * partition+sort order (Rollups.writeRaw, Bucketing).
+  * partition+sort order (MeterStore.writeRaw, Bucketing).
   */
 object Schemas {
 

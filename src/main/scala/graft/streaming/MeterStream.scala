@@ -20,24 +20,21 @@ import graft.meter.{GenConfig, MeterGen, Rollups}
   */
 object MeterStream {
 
-  /** Rate-source transmissions: `ticksPerSecond` rows/s/meter. Each rate row
-    * (timestamp, value) maps to (said, datetime, watts) exactly like the
-    * batch generator — same expressions, same golden values. */
+  /** Rate-source transmissions: `rowsPerSecond` rows/s/meter. Each rate
+    * row's `value` is a row index, mapped to (said, datetime, watts) by the
+    * batch generator's own [[MeterGen.fromRowIndex]]. */
   def rateTransmissions(spark: SparkSession, cfg: GenConfig,
       rowsPerSecond: Int = 1000): DataFrame =
-    spark.readStream.format("rate")
-      .option("rowsPerSecond", rowsPerSecond.toLong * cfg.numMeters)
-      .load()
-      .select(
-        (col("value") % cfg.numMeters + cfg.startSaid).cast("int").as("said"),
-        timestamp_seconds(
-          expr(s"value DIV ${cfg.numMeters}") + cfg.startEpochSec).as("datetime"))
-      .withColumn("watts", MeterGen.wattsExpr(cfg))
+    MeterGen.fromRowIndex(
+      spark.readStream.format("rate")
+        .option("rowsPerSecond", rowsPerSecond.toLong * cfg.numMeters)
+        .load(),
+      "value", cfg)
 
-  /** Per-second reduction on a stream — stateless projection. */
+  /** Per-second reduction on a stream: [[MeterGen.reduceToSecond]], a
+    * stateless projection. */
   def toSecond(stream: DataFrame, cfg: GenConfig = GenConfig()): DataFrame =
-    stream.select(col("said"), col("datetime"),
-      MeterGen.joulesExpr(col("watts"), cfg).as("joules"))
+    MeterGen.reduceToSecond(stream, cfg)
 
   /** Streaming rollup at `grain` with a watermark: tumbling event-time
     * window + grouped sum. Late rows beyond the watermark are dropped — the

@@ -7,24 +7,45 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the hand-written query-id enumerations honest (VERDICT r9
   * item 5): `tools/doc_drift.py` extracts the registry from the
   * `QueryDef` registrations, expands README/SURVEY id ranges, and fails
-  * on a registry id README never mentions or an id either doc mentions
-  * that the registry doesn't have. */
+  * on a registry id README never mentions, an id either doc mentions
+  * that the registry doesn't have, or a backticked `Object.member` in
+  * README that names no member in `src/main`. */
 class DocDriftSpec extends AnyFunSuite {
 
-  test("README/SURVEY query-id lists match the QueryDef registry") {
+  /** Exit code and output of `tools/doc_drift.py` over `root`. */
+  private def docDrift(root: String = "."): (Int, String) = {
     assume(Files.exists(Paths.get("tools/doc_drift.py")), "no tools/doc_drift.py")
     assume(
       try {
         new ProcessBuilder("python3", "--version").start().waitFor() == 0
       } catch { case _: java.io.IOException => false },
       "python3 not available")
-    val pb = new ProcessBuilder("python3", "tools/doc_drift.py")
+    val pb = new ProcessBuilder("python3", "tools/doc_drift.py", root)
     pb.redirectErrorStream(true)
     val p = pb.start()
     val out = new String(p.getInputStream.readAllBytes())
-    val rc = p.waitFor()
+    (p.waitFor(), out)
+  }
+
+  test("README/SURVEY query-id lists match the QueryDef registry") {
+    val (rc, out) = docDrift()
     info(out)
     assert(rc === 0, s"doc drift detected:\n$out")
+  }
+
+  test("doc_drift.py fails on a README member reference src/main lacks") {
+    val root = Files.createTempDirectory("graft_docdrift")
+    try {
+      Files.writeString(root.resolve("README.md"),
+        Files.readString(Paths.get("README.md")) +
+          "\nLayout: `Rollups.writeRawPhantom`.\n")
+      Files.copy(Paths.get("SURVEY.md"), root.resolve("SURVEY.md"))
+      Files.createSymbolicLink(root.resolve("src"), Paths.get("src").toAbsolutePath)
+      val (rc, out) = docDrift(root.toString)
+      assert(rc === 1, out)
+      assert(out.contains("references members not in src/main") &&
+        out.contains("Rollups.writeRawPhantom"), out)
+    } finally graft.TmpHygiene.rmTree(root.toString)
   }
 
   test("SURVEY.md count claim matches the compiled registry (r13 item 3)") {

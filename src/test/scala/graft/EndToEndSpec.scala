@@ -2,16 +2,15 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.meter.{GenConfig, MeterGen, Rollups, SaidSeed}
-import graft.sources.ParquetSink
+import graft.meter.{GenConfig, SaidSeed}
 
 /** Whole-program parity with the reference's `-main` loop
   * (core.clj:87-153,163-176): generator → per-second derivation → rollup
   * chain → 5-table sink → READ BACK FROM DISK → golden energy chain.
   * MeterGoldenSpec pins the in-memory math and SinkAdapterSpec the sink
-  * layout; this spec is the missing composition — the exact batch block
-  * of Main.scala run as one unit, asserted on what lands on disk, the
-  * way a user of the reference would consume the five Cassandra tables.
+  * layout; this spec is the missing composition — `Main.writeBatch`, the
+  * batch program `Main` runs, asserted on what lands on disk, the way a
+  * user of the reference would consume the five Cassandra tables.
   */
 class EndToEndSpec extends SparkSpec {
 
@@ -24,19 +23,7 @@ class EndToEndSpec extends SparkSpec {
     val startSaid = SaidSeed.saidSeed("graft-e2e-host")
     val cfg = GenConfig(numMeters = 2, startSaid = startSaid, ticks = 60)
 
-    // === Main.scala batch block, verbatim shape ===
-    val sink = new ParquetSink(out,
-      Map("meter_samples" -> Seq("dt", "said_bucket")))
-    val raw = MeterGen.transmissions(spark, cfg)
-    sink.write(
-      raw.withColumn("dt", to_date(col("datetime")))
-        .withColumn("said_bucket", pmod(col("said"), lit(16))),
-      "meter_samples")
-    val second = MeterGen.secondTable(spark, cfg)
-    Rollups.all(second).foreach { case (grain, df) =>
-      sink.write(if (grain == "second") df else df.coalesce(1),
-        s"meter_samples_$grain")
-    }
+    Main.writeBatch(spark, cfg, out)
 
     // === read back from disk ===
     def back(t: String) = spark.read.parquet(s"$out/$t")

@@ -46,4 +46,14 @@ class ObservedProbeSpec extends SparkSpec {
     assert(agg.length === 5 && agg.forall(_.getLong(1) === 10L))
     cp.unpersist(blocking = false)
   }
+
+  test("checkpointWithCount: a null metric falls back to the extra job " +
+      "and steps the fallback counter") {
+    val before = ObservedProbe.fallbackCount
+    val (cp, n) = ObservedProbe.checkpointWithCount(
+      spark.range(0, 10).toDF("id"), max(lit(null).cast("long")))(_.count())
+    assert(n === 10L, "the fallback's value is returned")
+    assert(ObservedProbe.fallbackCount === before + 1)
+    cp.unpersist(blocking = false)
+  }
 }

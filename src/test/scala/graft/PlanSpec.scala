@@ -44,6 +44,44 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Range"), "expected range source")
   }
 
+  test("reduceToSecond over generated transmissions: joules is a plan " +
+    "literal and no watts column survives optimization") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val cfg = GenConfig(numMeters = 2, ticks = 7200)
+    val opt = MeterGen.reduceToSecond(MeterGen.transmissions(spark, cfg), cfg)
+      .queryExecution.optimizedPlan
+    val joules = opt.collect { case p: Project => p.projectList }.flatten
+      .filter(_.name == "joules")
+    assert(joules.nonEmpty && joules.forall {
+      case Alias(Literal(59, _), _) => true
+      case _ => false
+    }, s"joules is not the literal 59:\n$opt")
+    assert(!opt.exists(p => (p.output ++ p.references).exists(_.name == "watts")),
+      s"the optimized plan reads watts:\n$opt")
+  }
+
+  test("transmissions: no CodegenFallback expression in the executed plan") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    val executed = MeterGen.transmissions(spark, GenConfig(numMeters = 2, ticks = 3))
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case other => other
+      }
+    assert(!executed.exists(_.expressions.exists(_.exists(_.isInstanceOf[CodegenFallback]))),
+      s"interpreted expression in the generator:\n$executed")
+  }
+
+  test("a raw write's plan prints the sample buffer as one literal") {
+    import org.apache.spark.sql.functions.{col, to_date}
+    // the raw layout adds only dt/said_bucket to the generator's projection
+    val plan = MeterGen.transmissions(spark, GenConfig(numMeters = 2, ticks = 3))
+      .withColumn("dt", to_date(col("datetime")))
+      .queryExecution.optimizedPlan.toString
+    assert(plan.length < 2000,
+      s"raw write plan is ${plan.length} chars:\n${plan.take(1000)}")
+  }
+
   test("reduceToSecond over parquet raw: the joules fold is the codegen " +
     "kernel inside whole-stage codegen, no interpreted aggregate") {
     import org.apache.spark.sql.catalyst.expressions.ArrayAggregate

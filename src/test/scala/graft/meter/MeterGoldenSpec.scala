@@ -26,6 +26,16 @@ class MeterGoldenSpec extends SparkSpec {
     assert(row(0).getInt(3) === 59)
   }
 
+  test("sample buffer: float(i mod period) bit for bit, also when " +
+      "sampleRate is not a multiple of the period") {
+    for (cfg <- Seq(GenConfig(), GenConfig(sampleRate = 1000, sawtoothPeriod = 7))) {
+      val got = spark.range(1).select(MeterGen.wattsExpr(cfg)).head().getSeq[Float](0)
+      val want = (0 until cfg.sampleRate).map(i => (i % cfg.sawtoothPeriod).toFloat)
+      assert(got.map(java.lang.Float.floatToRawIntBits) ===
+        want.map(java.lang.Float.floatToRawIntBits), cfg)
+    }
+  }
+
   test("rollup chain reproduces golden totals per meter") {
     val cfg = GenConfig(numMeters = 2, ticks = 86400) // one full day
     val sec = MeterGen.secondTable(spark, cfg)

@@ -3,6 +3,7 @@ package graft.meter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.ParquetSink
 
 /** Read-side API over the written store layout: Q1 raw-range extraction must
   * prune partitions (the 100 TB property — a said+time query reads only its
@@ -10,33 +11,34 @@ import graft.SparkSpec
   * rollups, re-aggregating exactly for coarser-than-stored grains. */
 class MeterStoreSpec extends SparkSpec {
 
-  // 4 meters × 2 days spanning a midnight boundary, starting 2023-12-31 12:00.
-  // The per-second frame is built directly with the golden 59 J/s (the
-  // generator's own arithmetic is covered by m1/m2 and MeterGenSpec) so the
-  // fixture write stays fast at 691k rows.
-  private val cfg = GenConfig(numMeters = 4, ticks = 172800,
+  // 18 meters × 2 days spanning a midnight boundary, starting 2023-12-31
+  // 12:00. With 16 said buckets saids 1 and 17 share bucket 1, so a raw
+  // range over said 1 must filter on said, not only on its partition. The
+  // per-second table stands in for the raw one in the raw layout (the layout
+  // columns are what the pruning test reads), so the fixture write stays
+  // fast at 3.1M rows.
+  private val cfg = GenConfig(numMeters = 18, ticks = 172800,
     startEpochSec = 1704024000L)
 
   private lazy val store: MeterStore = {
     val dir = tmpDir("graft_store")
-    val sec = spark.range(0, cfg.ticks * cfg.numMeters)
-      .select((col("id") % cfg.numMeters).cast("int").as("said"),
-        timestamp_seconds(expr(s"id DIV ${cfg.numMeters}") +
-          cfg.startEpochSec).as("datetime"),
-        lit(59).as("joules"))
-    Rollups.writeRaw(sec, s"$dir/meter_samples", saidBuckets = 2)
-    Rollups.all(sec).foreach { case (g, df) =>
-      Rollups.writeRollup(df, s"$dir/meter_samples_$g")
-    }
+    val sec = MeterGen.secondTable(spark, cfg)
+    MeterStore.writeRaw(sec, dir)
+    val sink = new ParquetSink(dir)
+    Rollups.writeAll(sec)((g, df) => sink.write(df, s"meter_samples_$g"))
     MeterStore(dir)
   }
 
   test("rawRange prunes to the matching dt/said_bucket partitions") {
     val q = store.rawRange(spark, saids = Seq(1),
-      from = "2024-01-01 00:00:00", to = "2024-01-01 06:00:00",
-      saidBuckets = 2)
+      from = "2024-01-01 00:00:00", to = "2024-01-01 06:00:00")
     assert(q.count() == 6 * 3600)
-    // partition pruning: of 2 dt × 2 bucket dirs the scan must touch only
+    // the surviving partition also holds said 17: the count above needs
+    // rawRange's said predicate, not the partition filter alone
+    assert(store.raw(spark).filter(col("dt") === "2024-01-01" &&
+      col("said_bucket") === 1 && col("datetime") < "2024-01-01 06:00:00")
+      .count() == 2 * 6 * 3600)
+    // partition pruning: of 3 dt × 16 bucket dirs the scan must touch only
     // dt=2024-01-01/said_bucket=1
     val scanned = q.queryExecution.executedPlan.collectLeaves()
       .flatMap(_.toString.split("\n"))
@@ -61,7 +63,7 @@ class MeterStoreSpec extends SparkSpec {
   test("energyReport at month grain re-aggregates the day table exactly") {
     val month = store.energyReport(spark, "month")
     val rows = month.orderBy("said", "datetime").collect()
-    // range spans Dec 2023 (12 h) and Jan 2024 (36 h) for each of 4 meters
+    // range spans Dec 2023 (12 h) and Jan 2024 (36 h) for each meter
     assert(rows.length == cfg.numMeters * 2)
     val dec = rows.filter(_.getTimestamp(1).toString.startsWith("2023-12"))
     assert(dec.forall(_.getLong(2) == 12L * 3600 * 59))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.meter.{GenConfig, MeterGen, Rollups}
+import graft.meter.{GenConfig, MeterGen, MeterStore}
 
 /** Storage-layout behavior: partition pruning on the raw meter table
   * (the Q1 read pattern, setup_and_notes.txt:46) and shuffle-free
@@ -25,12 +25,13 @@ class LayoutSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val cfg = GenConfig(numMeters = 4, ticks = 172800) // 2 days × 4 meters
     // write the second table through the raw layout (skip 15k arrays for
     // test speed; layout columns are what matters)
-    Rollups.writeRaw(MeterGen.secondTable(spark, cfg), dir, saidBuckets = 4)
+    MeterStore.writeRaw(MeterGen.secondTable(spark, cfg), dir)
 
-    val back = spark.read.parquet(dir)
+    val back = spark.read.parquet(s"$dir/meter_samples")
     val q = back.filter(
       to_date(col("datetime")) === "2024-01-02" &&
-        col("said_bucket") === pmod(lit(1), lit(4)) && col("said") === 1)
+        col("said_bucket") === pmod(lit(1), lit(MeterStore.SaidBuckets)) &&
+        col("said") === 1)
     q.collect()
     val p = q.queryExecution.executedPlan.toString
     assert(p.contains("PartitionFilters:"), p)

@@ -11,12 +11,11 @@ import org.apache.hadoop.fs.{AbstractFileSystem, FileStatus, FileSystem,
   LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.meter.{GenConfig, MeterGen, Rollups}
+import graft.meter.{GenConfig, MeterGen}
 import graft.streaming.MeterStream
 
 /** The engine's local filesystem ([[ForkFreeRawLocalFileSystem]]):
@@ -70,24 +69,13 @@ class LocalFsSpec extends SparkSpec {
     val out = tmpDir("graft_localfs")
     val cfg = GenConfig(numMeters = 2, ticks = 10)
     val cmds = processesStartedBy {
-      val sink = new ParquetSink(out,
-        Map("meter_samples" -> Seq("dt", "said_bucket")))
-      sink.write(MeterGen.transmissions(spark, cfg)
-        .withColumn("dt", to_date(col("datetime")))
-        .withColumn("said_bucket", pmod(col("said"), lit(16))),
-        "meter_samples")
-      Rollups.writeAll(MeterGen.secondTable(spark, cfg)) { (g, df) =>
-        sink.write(df, s"meter_samples_$g")
-      }
+      graft.Main.writeBatch(spark, cfg, out)
 
       import spark.implicits._
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Long]
-      val sec = input.toDF()
-        .select((col("value") % 2).cast("int").as("said"),
-          timestamp_seconds(expr("value DIV 2") + cfg.startEpochSec)
-            .as("datetime"),
-          lit(59).as("joules"))
+      val sec = MeterStream.toSecond(
+        MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
       val q = MeterStream.writeRollups(sec, s"$out/stream", s"$out/_cp")
         .start()
       try {

@@ -25,12 +25,8 @@ class StreamingSpec extends SparkSpec {
 
     val input = MemoryStream[Long]
     input.addData(0L until (cfg.ticks * cfg.numMeters): _*)
-    val secStream = input.toDF()
-      .select(
-        (col("value") % cfg.numMeters).cast("int").as("said"),
-        timestamp_seconds(expr(s"value DIV ${cfg.numMeters}") +
-          cfg.startEpochSec).as("datetime"))
-      .withColumn("joules", MeterGen.joulesExpr(MeterGen.wattsExpr(cfg), cfg))
+    val secStream = MeterStream.toSecond(
+      MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
 
     val rolled = MeterStream.rollupStream(secStream, "minute")
     val q = rolled.writeStream
@@ -154,11 +150,8 @@ class StreamingSpec extends SparkSpec {
     val out = tmpDir("graft_fb")
     val cfg = GenConfig(numMeters = 2, ticks = 120)
     val input = MemoryStream[Long]
-    val sec = input.toDF()
-      .select((col("value") % cfg.numMeters).cast("int").as("said"),
-        timestamp_seconds(expr(s"value DIV ${cfg.numMeters}") +
-          cfg.startEpochSec).as("datetime"),
-        lit(59).as("joules"))
+    val sec = MeterStream.toSecond(
+      MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
     // jobs per micro-batch, keyed by the batch id the stream sets on
     // every job it runs (write legs inherit it); the listener bus is in
     // order, so seeing a marker job run after the query proves it has

@@ -16,7 +16,8 @@
 #   5. verify_local.py     (DuckDB oracle replay + row/schema compare)
 #   6. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
 #                           over the committed full-precision bench.json)
-#   7. doc_drift.py        (README/SURVEY query-id sync with the registry)
+#   7. doc_drift.py        (README/SURVEY query-id sync with the registry;
+#                           README `Object.member` references resolve)
 #
 # Usage: tools/ci.sh [sfDir]         (default /root/testdata/sf0.01)
 # Exits non-zero on the first failing stage.

@@ -10,9 +10,13 @@ lists WILL drift from the actual registry. This script extracts
     and en-dash `s2–s13` ranges,
 
 and fails (exit 1) when:
-  1. a registry id is never mentioned in README.md (coverage gap), or
+  1. a registry id is never mentioned in README.md (coverage gap),
   2. README.md or SURVEY.md mentions an id that is not in the registry
-     (phantom id -- a typo or a renamed/removed query).
+     (phantom id -- a typo or a renamed/removed query), or
+  3. a backticked `Object.member` in README.md names no `def`/`val`/`var`
+     `member` in a src/main/scala file that declares `object`/`class`/
+     `trait` `Object` (phantom reference -- a renamed or deleted member).
+     `NAME.md`-style file names are not references.
 
 SURVEY.md is phantom-checked only: it is the design blueprint, and its
 §2 tables cite ids as evidence -- citing a nonexistent id is drift, but
@@ -54,6 +58,23 @@ def doc_ids(path: Path) -> set:
     return ids
 
 
+REF_RE = re.compile(r"`([A-Z][A-Za-z0-9]*)\.([a-z][A-Za-z0-9_]*)`")
+FILE_EXTS = {"md", "scala", "py", "json", "jsonl", "sh", "sbt", "txt"}
+
+
+def phantom_refs(root: Path, path: Path) -> list:
+    """`Object.member` references in `path` that no src/main file declares."""
+    refs = {r for r in REF_RE.findall(path.read_text()) if r[1] not in FILE_EXTS}
+    sources = [f.read_text() for f in (root / "src" / "main" / "scala").rglob("*.scala")]
+    out = []
+    for obj, member in sorted(refs):
+        decl = re.compile(rf"\b(?:object|class|trait)\s+{obj}\b")
+        defn = re.compile(rf"\b(?:def|val|var)\s+{member}\b")
+        if not any(decl.search(t) and defn.search(t) for t in sources):
+            out.append(f"{obj}.{member}")
+    return out
+
+
 COUNT_CLAIM_RE = re.compile(r"\*\*(\d+) registered queries, (\d+) with DuckDB oracles")
 
 
@@ -87,13 +108,17 @@ def main() -> int:
         if phantoms:
             failures.append(f"{name} mentions ids not in the registry: {', '.join(phantoms)}")
 
+    refs = phantom_refs(root, root / "README.md")
+    if refs:
+        failures.append(f"README.md references members not in src/main: {', '.join(refs)}")
+
     if failures:
         print("doc drift: FAILED")
         for f in failures:
             print("  " + f)
         return 1
     print(f"doc drift: ok ({len(reg)} registry ids; README mentions all; "
-          f"no phantoms in README/SURVEY)")
+          f"no phantoms in README/SURVEY; README member references resolve)")
     return 0
 
 
