@@ -24,6 +24,51 @@ package graft
   *     and its time is reported as -1, never as a normal-looking number.
   */
 object Bench {
+
+  /** The REAL-Structured-Streaming gate rows (s7+): each runs actual
+    * micro-batches with checkpointed state, whose per-batch incremental
+    * planning sets a ~0.9 s/batch floor that is certification cost, not
+    * engine throughput. The artifact reports their subtotal
+    * (`stream_overhead_s`) so the headline decomposes into engine cost
+    * vs stream-certification cost — and so nobody "optimizes" certified
+    * semantics to win bench seconds. s1–s6 are light single-drain
+    * streams that existed in the round-4 baseline mix and stay inside
+    * the batch mean. Membership is BY RULE, not a hand list — the
+    * round-13 hand list silently omitted s19–s21. */
+  private val streamCertMinId = 7
+  private val StreamCertRe = "^s(\\d+)_.*".r
+
+  private[graft] def isStreamCert(name: String): Boolean = name match {
+    case StreamCertRe(id) => id.toInt >= streamCertMinId
+    case _                => false
+  }
+
+  /** FROZEN membership of the gated stream-certification subtotal:
+    * s7–s22, the 16 micro-batch rows of the round-14 registry, frozen
+    * at the round-14 driver artifact (BASELINE.md round-15
+    * re-derivation). s23+ land OUTSIDE it — this bound never moves,
+    * exactly as core192's membership never moves. */
+  private val stream16MaxId = 22
+
+  private[graft] def isStream16(name: String): Boolean = name match {
+    case StreamCertRe(id) =>
+      id.toInt >= streamCertMinId && id.toInt <= stream16MaxId
+    case _ => false
+  }
+
+  /** FROZEN membership of the round-15 stream-certification subtotal:
+    * s7–s24, the 18 micro-batch rows of the round-15 registry, frozen
+    * at the round-15 driver artifact (BASELINE.md "stream18 freeze").
+    * Nested over stream16 exactly as core153 nests core82; s25+ land
+    * OUTSIDE it. */
+  private val stream18MaxId = 24
+
+  private[graft] def isStream18(name: String): Boolean = name match {
+    case StreamCertRe(id) =>
+      id.toInt >= streamCertMinId && id.toInt <= stream18MaxId
+    case _ => false
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -328,15 +373,6 @@ object Bench {
       "q7_window_running", "q8_setops", "q9_rollup", "s1_event_deltas",
       "s2_tumbling_hour", "s3_sliding_2h1h", "s4_session_window",
       "s5_interval_join", "s6_gap_detect")
-    // The REAL-Structured-Streaming gate rows (s7+): each runs actual
-    // micro-batches with checkpointed state, whose per-batch incremental
-    // planning sets a ~0.9 s/batch floor that is certification cost, not
-    // engine throughput. The artifact reports their subtotal so the
-    // headline decomposes into engine cost vs stream-certification cost
-    // — and so nobody "optimizes" certified semantics to win bench
-    // seconds. Membership is BY RULE (BenchGate.isStreamCert: s-id ≥ 7),
-    // not a hand list — the round-13 hand list silently omitted s19–s21.
-    val streamRows: String => Boolean = BenchGate.isStreamCert
     // GATED-membership rows: every query that contributes to a frozen
     // gated subtotal (batch187 ∪ core82..core192 ∪ stream16/18 — the
     // coreNN sets nest, and batch187 covers their batch members, but
@@ -352,7 +388,7 @@ object Bench {
     // artifact's gated subtotals stay complete.
     val gatedRow: String => Boolean = n =>
       batch187(n) || core82(n) || core192(n) ||
-        BenchGate.isStream16(n) || BenchGate.isStream18(n)
+        isStream16(n) || isStream18(n)
     // Rep-1 SOFT BUDGET (round 18, same derivation): once rep 1 has
     // run longer than this, remaining UNGATED rows are recorded as
     // skipped instead of run — on a box slow enough to threaten the
@@ -537,7 +573,7 @@ object Bench {
       // rows' neighborhoods still vary per rep via the seeded shuffle).
       val order =
         if (rep <= streamReps) fullOrder
-        else fullOrder.filterNot(q => streamRows(q._1))
+        else fullOrder.filterNot(q => isStreamCert(q._1))
       order.zipWithIndex.foreach { case ((name, fn), idx) =>
         // mid-rep deadline abort, reps >= 2 only (see the deadline
         // comment above — rep-2/3 samples are optional extras)
@@ -646,7 +682,7 @@ object Bench {
       val times = samples(name)
       val best = if (times.isEmpty) -1.0 else times.min
       val spread = if (times.isEmpty) -1.0 else times.max - times.min
-      val expReps = if (streamRows(name)) streamReps else reps
+      val expReps = if (isStreamCert(name)) streamReps else reps
       System.err.println(
         f"[bench] $name%-24s min $best%8.2f s  spread $spread%6.2f s  (${times.size}/$expReps ok)")
       (name, best, spread)
@@ -707,20 +743,20 @@ object Bench {
       .map(_._2).filter(_ >= 0)
     val batch187Total = batch187Times.sum
     val batch187N = batch187Times.size
-    val streamCert = results.filter(r => streamRows(r._1))
+    val streamCert = results.filter(r => isStreamCert(r._1))
       .map(_._2).filter(_ >= 0)
     val streamOverhead = streamCert.sum
     val streamN = streamCert.size
     // The GATED stream signal: frozen-membership subtotal (s7–s22, the
     // 16 round-14 rows — BASELINE.md "Stream-cert gate re-derivation").
     // s23+ rows stay in stream_overhead_s but outside this freeze.
-    val stream16 = results.filter(r => BenchGate.isStream16(r._1))
+    val stream16 = results.filter(r => isStream16(r._1))
       .map(_._2).filter(_ >= 0)
     val stream16Total = stream16.sum
     val stream16N = stream16.size
     // The round-15 freeze nesting it (s7–s24 — BASELINE.md "stream18
     // freeze"); s25+ rows stay in stream_overhead_s but outside both.
-    val stream18 = results.filter(r => BenchGate.isStream18(r._1))
+    val stream18 = results.filter(r => isStream18(r._1))
       .map(_._2).filter(_ >= 0)
     val stream18Total = stream18.sum
     val stream18N = stream18.size
@@ -772,60 +808,6 @@ object Bench {
       Graft.jsonString(sfDir)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), full + "\n")
     System.err.println(s"[bench] full-precision artifact: bench.json (${full.length} chars)")
-    // Gate-drift early warning (VERDICT r8 item 7, redone per r13 item
-    // 2). All thresholds come from BASELINE.md's bench-gate anchor —
-    // the warn text quotes the SAME max_ratio the machine gate
-    // (tools/bench_gate.py / BenchGateSpec) enforces, fires at 90% of
-    // it (i.e. BEFORE tripping), and covers every gated signal: the
-    // batch mean, the stream-cert mean, and ALL frozen subsets.
-    // Warn-only by design: the bench must still emit its artifact on a
-    // slow box, so this never throws. Only meaningful at sf0.1.
-    if (sfDir.endsWith("sf0.1")) {
-      // Warn-only contract: a missing or unreadable BASELINE.md must
-      // degrade to "warns skipped", never crash the bench after the
-      // artifact is written (parseAnchor itself is total — a malformed
-      // anchor already returns None). The three failure shapes are
-      // told apart (ADVICE r14): file ABSENT (a clean checkout),
-      // file UNREADABLE (a real I/O problem to investigate), and
-      // anchor absent/malformed inside a readable file.
-      val mdRead: Either[String, String] =
-        try Right(java.nio.file.Files.readString(
-          java.nio.file.Paths.get("BASELINE.md")))
-        catch {
-          case _: java.nio.file.NoSuchFileException =>
-            Left("no BASELINE.md found")
-          case scala.util.control.NonFatal(_) =>
-            Left("BASELINE.md unreadable")
-        }
-      mdRead match {
-        case Right(md) => BenchGate.parseAnchor(md) match {
-          case Some(a) =>
-            val valid = results.collect { case (n, t, _) if t >= 0 => n -> t }.toMap
-            val subsets = Seq(
-              ("core82", core82Total, core82N, 82),
-              ("core153", core153Total, core153N, 153),
-              ("core158", core158Total, core158N, 158),
-              ("core167", core167Total, core167N, 167),
-              ("core192", core192Total, core192N, 192),
-              ("batch187", batch187Total, batch187N, 187),
-              ("stream16", stream16Total, stream16N, 16),
-              ("stream18", stream18Total, stream18N, 18))
-            BenchGate.warnings(valid, total, subsets, a)
-              .foreach(System.err.println)
-          case None =>
-            // distinguish absent from malformed: an operator who typo'd
-            // the anchor must not be told it does not exist
-            val why =
-              if (md.contains("bench-gate:"))
-                "bench-gate anchor present but UNPARSEABLE"
-              else "no bench-gate anchor"
-            System.err.println(
-              s"[bench][gate-warn] $why in BASELINE.md — warns skipped")
-        }
-        case Left(why) =>
-          System.err.println(s"[bench][gate-warn] $why — warns skipped")
-      }
-    }
     val errField = if (errors.isEmpty) "" else s""","errors":$errJson"""
     val skipField =
       if (skippedFinal.isEmpty) "" else s""","n_skipped":${skippedFinal.size}"""

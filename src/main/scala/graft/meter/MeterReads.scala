@@ -3,6 +3,8 @@ package graft.meter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.RollupRouting
+
 /** Read-side API for the meter store (the reference's stated use cases,
   * setup_and_notes.txt:46): raw extraction for analysis, and aggregated
   * consumption reports routed to the coarsest adequate rollup.
@@ -16,8 +18,6 @@ import org.apache.spark.sql.functions._
   * with counters, core.clj:121-153).
   */
 final case class MeterStore(baseDir: String) {
-  private val grains = Seq("second", "minute", "hour", "day")
-
   def table(spark: SparkSession, grain: String): DataFrame =
     spark.read.parquet(s"$baseDir/meter_samples_$grain")
 
@@ -40,10 +40,15 @@ final case class MeterStore(baseDir: String) {
     * already unique) and REQUIRED on stream-written ones, where
     * MeterStream.writeRollups stores per-micro-batch partials — summing
     * them here is exactly the composition the reference delegated to
-    * Cassandra counter adds (core.clj:121-153). */
+    * Cassandra counter adds (core.clj:121-153). `grain` is a
+    * `date_trunc` unit; one no stored table answers (a misspelling, or
+    * a sub-second unit) throws `IllegalArgumentException`. */
   def energyReport(spark: SparkSession, grain: String): DataFrame = {
-    val stored = if (grains.contains(grain)) grain else "day"
-    val base = table(spark, stored)
+    val level = RollupRouting.queryLevel.getOrElse(
+      grain.toLowerCase(java.util.Locale.ROOT),
+      throw new IllegalArgumentException(
+        s"energyReport: no stored table answers grain '$grain'"))
+    val base = table(spark, RollupRouting.storedGrains(level))
     base.groupBy(col("said"),
         date_trunc(grain, col("datetime")).as("datetime"))
       .agg(sum(col("joules")).cast("long").as("joules"))

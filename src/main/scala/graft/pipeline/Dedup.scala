@@ -744,13 +744,13 @@ object Dedup {
       initName: String, upTo: Long, k: Int = 5,
       maxDf: Int = 100): DataFrame = {
     val updDocs = DeltaUpdate.touchedDocs(sp, artDir, upTo)
+    val latest = DeltaUpdate.latestRows(sp, artDir, upTo)
     val curSizes = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/sizes"))
       .join(updDocs, col("id") === col("rid"), "left_anti")
-      .unionByName(DeltaUpdate.latestRows(sp, artDir, upTo)
-        .groupBy(col("id")).agg(count(lit(1)).as("n_c")))
+      .unionByName(latest.groupBy(col("id")).agg(count(lit(1)).as("n_c")))
     DeltaUpdate.servingView(sp, artDir, initName, upTo,
-      Seq(s"shingle_k$k"), maxDf, touched = Some(updDocs))(
-      _.join(curSizes, "id"))
+      Seq(s"shingle_k$k"), maxDf, touched = Some(updDocs),
+      latest = Some(latest))(_.join(curSizes, "id"))
   }
 
   /** Shingle-family COMPACTION of the delta chain

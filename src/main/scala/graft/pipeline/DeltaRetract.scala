@@ -126,7 +126,7 @@ object DeltaRetract {
     * group, leaves the inherited group in place.
     *
     * Await contract: all legs are awaited before returning, but the
-    * wait is BOUNDED ([[legTimeoutS]], env-tunable) — a leg wedged in a
+    * wait is BOUNDED ([[legTimeoutS]]) — a leg wedged in a
     * hung job surfaces as a named TimeoutException instead of blocking
     * a streaming micro-batch forever. Before that error is thrown, every
     * still-running leg's jobs are cancelled by tag, so no zombie write
@@ -177,12 +177,8 @@ object DeltaRetract {
 
   /** Bounded await for [[inParallel]] legs — generous (a leg is one
     * delta-sized face write; minutes mean a wedged job, not a slow
-    * one), sized to sit inside any external harness budget, and
-    * env-tunable for cluster runs where a face write can legitimately
-    * take longer. */
-  private[graft] val legTimeoutS: Long =
-    sys.env.get("SPARK_GRAFT_LEG_TIMEOUT_S").map(_.toLong)
-      .getOrElse(600L).max(1L)
+    * one), sized to sit inside any external harness budget. */
+  private[graft] val legTimeoutS: Long = 600L
 
   /** Schema of an ENGINE-WRITTEN parquet face, read DRIVER-SIDE from
     * one part file's footer — no Spark job. `sp.read.parquet(path)`
@@ -310,9 +306,7 @@ object DeltaRetract {
     * threshold is rows, not bytes, because the delta faces are
     * narrow (an 8-byte id, or a ≤16-byte key tuple): 4M rows is tens
     * of MB framed — two orders of magnitude inside the caps. */
-  private[pipeline] val maxBroadcastRows: Long =
-    sys.env.get("SPARK_GRAFT_MAX_BCAST_ROWS").map(_.toLong)
-      .getOrElse(4000000L)
+  private[pipeline] val maxBroadcastRows: Long = 4000000L
 
   private[pipeline] def broadcastIfSmall(df: DataFrame,
       rows: Long): DataFrame =

@@ -205,13 +205,15 @@ object DeltaUpdate {
     * contract) — a long-running serving process issuing unbounded
     * probes should unpersist between probes the same way.
     *
-    * A family whose decoration also reads the updated-doc set (the
-    * shingle sizes, the video scene counts) passes the checkpoint it
-    * took with [[touchedDocs]] as `touched`, so one probe derives the
-    * set once; without it the view takes its own. */
+    * A family whose decoration also reads the updated-doc set and the
+    * updated docs' latest rows (the shingle sizes, the video scene
+    * counts) passes the checkpoint it took with [[touchedDocs]] as
+    * `touched` and its [[latestRows]] frame as `latest`, so one probe
+    * derives each once; without them the view takes its own. */
   def servingView(sp: SparkSession, artDir: String, initName: String,
       upTo: Long, keyCols: Seq[String], maxCnt: Int,
-      docId: Column = col("id"), touched: Option[DataFrame] = None)(
+      docId: Column = col("id"), touched: Option[DataFrame] = None,
+      latest: Option[DataFrame] = None)(
       decorate: DataFrame => DataFrame): DataFrame = {
     val base = s"$artDir/$initName"
     val idx = DeltaRetract.readFace(sp, Seq(s"$base/index"))
@@ -245,7 +247,7 @@ object DeltaUpdate {
       else DeltaRetract.readFace(sp, Seq(s"$base/sketch"))
         .join(broadcast(readmit), keyCols)
         .join(updDocs, docId === col("rid"), "left_anti")
-    val c = latestRows(sp, artDir, upTo, docId)
+    val c = latest.getOrElse(latestRows(sp, artDir, upTo, docId))
       .join(overNow, keyCols, "left_anti")
     a.unionByName(
       decorate(b.unionByName(c)).select(idxCols.map(col): _*))

@@ -667,15 +667,14 @@ object Multimodal {
       initName: String, upTo: Long, maxBucket: Int = 100): VideoIndex = {
     val docHalf = expr("id div 65536")
     val updDocs = DeltaUpdate.touchedDocs(sp, artDir, upTo)
+    val latest = DeltaUpdate.latestRows(sp, artDir, upTo, docHalf)
     val curCounts = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/counts"))
       .join(updDocs, col("doc_id") === col("rid"), "left_anti")
-      .unionByName(DeltaUpdate.latestRows(sp, artDir, upTo, docHalf)
-        .select(docHalf.as("doc_id"), col("id")).distinct()
-        .groupBy("doc_id").agg(count(lit(1)).as("n_scenes")))
+      .unionByName(sceneCounts(latest))
     VideoIndex(
       DeltaUpdate.servingView(sp, artDir, initName, upTo,
-        Seq("chunk", "chunk_val"), maxBucket, docHalf, Some(updDocs))(
-        identity),
+        Seq("chunk", "chunk_val"), maxBucket, docHalf, Some(updDocs),
+        Some(latest))(identity),
       curCounts)
   }
 
@@ -694,14 +693,19 @@ object Multimodal {
     val docHalf = expr("id div 65536")
     DeltaUpdate.compact(sp, artDir, initName, upTo, newBaseDir,
       Seq("chunk", "chunk_val"), docHalf, extraFaces = Seq(
-        sk => sk.select(docHalf.as("doc_id"), col("id")).distinct()
-          .groupBy("doc_id").agg(count(lit(1)).as("n_scenes"))
+        sk => sceneCounts(sk)
           .write.mode("overwrite").parquet(s"$newBaseDir/counts"),
         _ => DeltaRetract.writeMeta(sp, newBaseDir,
           Map("max_bucket" -> maxBucket.toLong))))(
       phashServingIndex(_, maxBucket))
     ()
   }
+
+  /** (doc_id, n_scenes) of packed chunk rows: one distinct packed id
+    * is one scene. */
+  private def sceneCounts(chunkRows: DataFrame): DataFrame =
+    chunkRows.groupBy(expr("id div 65536").as("doc_id"))
+      .agg(countDistinct(col("id")).as("n_scenes"))
 
   /** RETRACTION face of the video-index artifact — the multimodal
     * sibling of `winnowIndexRetract` (same algebra, video grain):

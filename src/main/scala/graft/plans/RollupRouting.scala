@@ -31,13 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object RollupRouting {
 
-  /** Stored grain → position in the fine-to-coarse chain. */
-  private[plans] val storedLevel = Map("second" -> 0, "minute" -> 1, "hour" -> 2, "day" -> 3)
+  /** Stored grains, fine to coarse; a grain's index is its level. */
+  private[graft] val storedGrains = Vector("second", "minute", "hour", "day")
 
-  /** Query grain → coarsest stored level that answers it exactly.
-    * week/month/quarter/year truncation boundaries are day-aligned. */
-  private[plans] val queryLevel = Map(
-    "second" -> 0, "minute" -> 1, "hour" -> 2, "day" -> 3,
+  /** Stored grain → position in the fine-to-coarse chain. */
+  private[plans] val storedLevel = storedGrains.zipWithIndex.toMap
+
+  /** Query grain (a lower-cased `date_trunc` unit) → coarsest stored
+    * level that answers it exactly. week/month/quarter/year truncation
+    * boundaries are day-aligned. millisecond/microsecond are absent: no
+    * stored table answers a grain finer than a second. */
+  private[graft] val queryLevel = Map(
+    "second" -> 0, "minute" -> 1, "hour" -> 2, "day" -> 3, "dd" -> 3,
     "week" -> 3, "month" -> 3, "mon" -> 3, "mm" -> 3,
     "quarter" -> 3, "year" -> 3, "yyyy" -> 3, "yy" -> 3)
 

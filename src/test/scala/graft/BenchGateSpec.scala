@@ -5,21 +5,22 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The 2× gate-math check (VERDICT r8 item 7 / r9 item 3), in `sbt test`:
-  * `tools/bench_gate.py` reads the COMMITTED full-precision bench
-  * artifact (`git show HEAD:bench.json` — round 18, VERDICT r17 item 2:
-  * the r17 driver left its killed partial artifact in the WORKING TREE
-  * and the two committed-artifact tests were the suite's only reds;
-  * the suite certifies gate SEMANTICS, never the box's last hour) and
-  * BASELINE.md's machine-readable authoritative row (the `bench-gate`
-  * HTML comment), and fails at >1.8× — per-query mean vs the round-4
-  * driver baseline, and the frozen-subset totals (core82, core153) vs
-  * their freeze values. The second test proves the gate actually trips
-  * by poisoning the measured values 10×. Cancels (not passes) when the
-  * committed artifact or python3 is absent, so a clean checkout
-  * without a bench run stays green honestly. */
+  * `tools/bench_gate.py`, the one implementation of the gate, reads the
+  * COMMITTED full-precision bench artifact (`git show HEAD:bench.json` —
+  * round 18, VERDICT r17 item 2: the r17 driver left its killed partial
+  * artifact in the WORKING TREE and the two committed-artifact tests were
+  * the suite's only reds; the suite certifies gate SEMANTICS, never the
+  * box's last hour) and BASELINE.md's machine-readable authoritative row
+  * (the `bench-gate` HTML comment), and fails when a frozen subtotal
+  * exceeds `max_ratio` (1.8) × its freeze. The second test proves the
+  * gate actually trips by poisoning the measured values 10×; the rest run
+  * the gate over small synthetic artifacts and anchors written under
+  * `target/gate-fixtures/`, and check `Bench`'s stream-membership rules.
+  * Cancels (not passes) when the committed artifact or python3 is absent,
+  * so a clean checkout without a bench run stays green honestly. */
 class BenchGateSpec extends AnyFunSuite {
 
-  private def run(args: String*): Int = {
+  private def gate(args: String*): (Int, String) = {
     val cmd = Seq("python3", "tools/bench_gate.py") ++ args
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
@@ -27,8 +28,12 @@ class BenchGateSpec extends AnyFunSuite {
     val out = new String(p.getInputStream.readAllBytes())
     val rc = p.waitFor()
     info(s"bench_gate ${args.mkString(" ")} -> rc=$rc\n$out")
-    rc
+    (rc, out)
   }
+
+  private def run(args: String*): Int = gate(args: _*)._1
+
+  private val fixtureDir = Paths.get("target", "gate-fixtures")
 
   /** The COMMITTED content of a repo file (`git show HEAD:path`),
     * extracted to `target/gate-fixtures/` so the python gate can read
@@ -41,9 +46,8 @@ class BenchGateSpec extends AnyFunSuite {
       val out = p.getInputStream.readAllBytes()
       if (p.waitFor() != 0 || out.isEmpty) None
       else {
-        val dir = Paths.get("target", "gate-fixtures")
-        Files.createDirectories(dir)
-        val f = dir.resolve(path.replace('/', '_'))
+        Files.createDirectories(fixtureDir)
+        val f = fixtureDir.resolve(path.replace('/', '_'))
         Files.write(f, out)
         Some(f)
       }
@@ -52,14 +56,17 @@ class BenchGateSpec extends AnyFunSuite {
   private lazy val committedBench = committedFile("bench.json")
   private lazy val committedMd = committedFile("BASELINE.md")
 
-  private def preconditions(): Unit = {
-    assume(committedBench.isDefined, "no committed bench.json artifact")
-    assume(committedMd.isDefined, "no committed BASELINE.md")
+  private def pythonPresent(): Unit =
     assume(
       try {
         new ProcessBuilder("python3", "--version").start().waitFor() == 0
       } catch { case _: java.io.IOException => false },
       "python3 not available")
+
+  private def preconditions(): Unit = {
+    assume(committedBench.isDefined, "no committed bench.json artifact")
+    assume(committedMd.isDefined, "no committed BASELINE.md")
+    pythonPresent()
   }
 
   test("bench gate passes on the committed artifact") {
@@ -76,149 +83,141 @@ class BenchGateSpec extends AnyFunSuite {
       "poisoned values did not trip the gate — the check is vacuous")
   }
 
-  // ---- BenchGate (the Scala warn twin of the python gate) ----------
+  // ---- the gate over synthetic artifacts ----------------------------
 
-  private val anchor = Map(
-    "baseline_per_query_s" -> 0.5, "stream_cert_per_row_s" -> 2.0,
-    "core82_freeze_s" -> 40.0, "max_ratio" -> 1.8)
+  /** Every gated subtotal with its frozen member count. */
+  private val subsets = Seq("batch187" -> 187, "stream16" -> 16,
+    "stream18" -> 18, "core82" -> 82, "core153" -> 153, "core158" -> 158,
+    "core167" -> 167, "core192" -> 192)
 
-  test("BenchGate warn fires on a poisoned artifact, quoting max_ratio") {
-    // batch mean = (20 - 8) / 4 = 3.0 s vs 0.5 baseline → 6.0x: TRIPPING.
-    val qs = Map("q1_a" -> 1.0, "q2_b" -> 1.0, "d1_c" -> 5.0, "e1_d" -> 5.0,
-      "s7_e" -> 5.0, "s19_f" -> 3.0)
-    val warns = BenchGate.warnings(qs, 20.0, Nil, anchor)
-    assert(warns.exists(w => w.contains("batch mean") && w.contains("TRIPPING")),
-      s"no tripping batch-mean warn in: $warns")
-    assert(warns.forall(_.contains("1.8x")),
-      s"warn text must quote max_ratio from the anchor: $warns")
+  /** Every freeze at 1.0 s, so a subtotal's value is its ratio. */
+  private def anchor(maxRatio: String = "1.8",
+      drop: String = ""): String =
+    (Seq("baseline_per_query_s=1.0", "stream_cert_per_row_s=1.0") ++
+      subsets.map(s => s"${s._1}_freeze_s=1.0") :+ s"max_ratio=$maxRatio")
+      .filterNot(_.startsWith(s"$drop="))
+      .mkString("<!-- bench-gate: ", " ", " -->")
+
+  /** A complete artifact with every subtotal at 1.0 s (JSON values). */
+  private val green: Map[String, String] = Map(
+    "value" -> "2.0", "queries" -> """{"q1_a":1.0,"s7_b":1.0}""",
+    "stream_overhead_s" -> "1.0", "stream_n" -> "1") ++
+    subsets.flatMap { case (s, n) =>
+      Seq(s"${s}_total" -> "1.0", s"${s}_n" -> n.toString) }
+
+  /** Gate a synthetic artifact/anchor pair written under
+    * `target/gate-fixtures/`. */
+  private def gateFixture(artifact: Map[String, String],
+      md: String = anchor()): (Int, String) = {
+    pythonPresent()
+    Files.createDirectories(fixtureDir)
+    val b = fixtureDir.resolve("fixture_bench.json")
+    val m = fixtureDir.resolve("fixture_BASELINE.md")
+    Files.writeString(b,
+      artifact.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+    Files.writeString(m, md)
+    gate(b.toString, m.toString)
+  }
+
+  /** The gate's verdict line for subtotal `name`. */
+  private def line(out: String, name: String): String =
+    out.linesIterator.find(_.split(" +").lift(1).contains(s"${name}_total"))
+      .getOrElse(fail(s"no ${name}_total line in:\n$out"))
+
+  test("BenchGate FAILs a tripping signal, quoting max_ratio") {
+    val (rc, out) = gateFixture(green + ("core82_total" -> "2.0"))
+    assert(rc === 1, out)
+    assert(line(out, "core82").startsWith("FAIL") &&
+      line(out, "core82").contains("= 1.8x baseline"), out)
+    // the ratio comes from the anchor: at 2.5x the same 2.0 s passes
+    val (rc25, out25) =
+      gateFixture(green + ("core82_total" -> "2.0"), anchor("2.5"))
+    assert(rc25 === 0 && line(out25, "core82").startsWith("ok"), out25)
   }
 
   test("BenchGate warns BEFORE the gate trips (90% of max_ratio)") {
-    // batch mean = 0.85 s vs 0.5 → 1.70x: over 0.9*1.8=1.62, under 1.8.
-    val qs = Map("q1_a" -> 0.85, "q2_b" -> 0.85)
-    val warns = BenchGate.warnings(qs, 1.7, Nil, anchor)
-    assert(warns.exists(w => w.contains("batch mean") && !w.contains("TRIPPING")),
-      s"expected a pre-trip warn: $warns")
+    // 1.71 s = 0.95 x the 1.8 s limit: warn, exit code unchanged
+    val (rc, out) = gateFixture(green + ("stream16_total" -> "1.71"))
+    assert(rc === 0, out)
+    assert(line(out, "stream16").startsWith("warn"), out)
+    // 1.53 s = 0.85 x the limit: still ok
+    val (_, out85) = gateFixture(green + ("stream16_total" -> "1.53"))
+    assert(line(out85, "stream16").startsWith("ok"), out85)
   }
 
   test("BenchGate covers the stream16 freeze and every frozen subset") {
-    // stream16 subtotal poisoned to 30 vs its 10 freeze → 3.0x
-    // TRIPPING; core82 poisoned to 80 vs 40 freeze → 2.0x TRIPPING; a
-    // partial subset (n != expected) must stay silent, not mis-warn.
-    // (The all-rows stream-cert MEAN is informational only since the
-    // round-15 re-derivation — it must NOT warn.)
-    val qs = Map("q1_a" -> 0.1, "s7_e" -> 6.0, "s21_f" -> 2.0)
-    val a16 = anchor + ("stream16_freeze_s" -> 10.0)
-    val subsets = Seq(("core82", 80.0, 82, 82), ("core153", 999.0, 150, 153),
-      ("stream16", 30.0, 16, 16))
-    val warns = BenchGate.warnings(qs, 8.1, subsets, a16)
-    assert(warns.exists(w => w.contains("stream16_total") && w.contains("TRIPPING")))
-    assert(warns.exists(w => w.contains("core82_total") && w.contains("TRIPPING")))
-    assert(!warns.exists(_.contains("core153")), s"partial subset mis-warned: $warns")
-    assert(!warns.exists(_.contains("stream-cert mean")),
-      s"mix-sensitive stream mean must not warn since round 15: $warns")
+    subsets.foreach { case (s, n) =>
+      val (rc, out) = gateFixture(green + (s"${s}_total" -> "3.0"))
+      assert(rc === 1 && line(out, s).startsWith("FAIL"), out)
+      // a short subtotal (a member errored) is not comparable: FAIL
+      val (rcShort, outShort) =
+        gateFixture(green + (s"${s}_n" -> (n - 1).toString))
+      assert(rcShort === 1 && outShort.contains(s"FAIL ${s}_n"), outShort)
+    }
+    val (rc, out) = gateFixture(green - "stream16_n")
+    assert(rc === 1 && out.contains("FAIL stream16_n"), out)
   }
 
   test("BenchGate stream16 membership is frozen at s7..s22") {
-    assert(BenchGate.isStream16("s7_stream_incr_dedup"))
-    assert(BenchGate.isStream16("s22_stream_retract"))
-    assert(!BenchGate.isStream16("s6_gap_detect"))
-    assert(!BenchGate.isStream16("s23_stream_phash_retract"),
+    assert(Bench.isStream16("s7_stream_incr_dedup"))
+    assert(Bench.isStream16("s22_stream_retract"))
+    assert(!Bench.isStream16("s6_gap_detect"))
+    assert(!Bench.isStream16("s23_stream_phash_retract"),
       "post-freeze streaming rows must land OUTSIDE the frozen subtotal")
-    assert(!BenchGate.isStream16("q55_triangle_census"))
+    assert(!Bench.isStream16("q55_triangle_census"))
+    assert(Bench.isStream18("s24_stream_winnow_retract"))
+    assert(!Bench.isStream18("s25_stream_video_retract"))
   }
 
-  test("BenchGate batch187 freeze: a complete batch187 subset retires " +
-      "the mix-sensitive batch mean; a partial one keeps it gated " +
-      "(round-17 re-derivation after the r16 DNF)") {
-    val a187 = anchor + ("batch187_freeze_s" -> 10.0)
-    // batch mean would be 3.0x (TRIPPING) — but the frozen subtotal is
-    // green, and with a COMPLETE batch187 subset present the mean must
-    // be informational, so nothing warns.
-    val qs = Map("q1_a" -> 1.5, "q2_b" -> 1.5)
-    val complete = Seq(("batch187", 3.0, 187, 187))
-    assert(BenchGate.warnings(qs, 3.0, complete, a187).isEmpty,
-      "a green frozen batch subtotal must retire the mix-sensitive mean")
-    // the frozen subtotal itself still trips when red
-    val red = Seq(("batch187", 30.0, 187, 187))
-    assert(BenchGate.warnings(qs, 3.0, red, a187)
-        .exists(w => w.contains("batch187_total") && w.contains("TRIPPING")))
-    // a PARTIAL subset (a member errored) is not comparable — the mean
-    // stays gated, exactly the core82_n rule
-    val partial = Seq(("batch187", 3.0, 180, 187))
-    assert(BenchGate.warnings(qs, 3.0, partial, a187)
-        .exists(w => w.contains("batch mean") && w.contains("TRIPPING")),
-      "a partial batch187 subset must fall back to the gated mean")
-    // and an anchor without the freeze key keeps the historical rule
-    assert(BenchGate.warnings(qs, 3.0, complete, anchor)
-        .exists(w => w.contains("batch mean") && w.contains("TRIPPING")))
+  test("BenchGate batch187: batch mean informational, partial FAILs") {
+    // batch and stream-cert means at 30x their rows are informational:
+    // the frozen subtotals are what the gate checks
+    val (rc, out) = gateFixture(green ++ Seq("value" -> "60.0",
+      "stream_overhead_s" -> "30.0"))
+    assert(rc === 0 && out.contains("info batch mean") &&
+      out.contains("info stream-cert mean"), out)
+    val (rcRed, outRed) = gateFixture(green + ("batch187_total" -> "30.0"))
+    assert(rcRed === 1 && line(outRed, "batch187").startsWith("FAIL"), outRed)
+    val (rcPart, outPart) = gateFixture(green + ("batch187_n" -> "180"))
+    assert(rcPart === 1 && outPart.contains("FAIL batch187_n"), outPart)
   }
 
   test("BenchGate is quiet when everything has headroom") {
-    val qs = Map("q1_a" -> 0.4, "s7_e" -> 1.5)
-    assert(BenchGate.warnings(qs, 1.9, Seq(("core82", 30.0, 82, 82)), anchor).isEmpty)
+    val (rc, out) = gateFixture(green)
+    assert(rc === 0, out)
+    assert(subsets.forall { case (s, _) => line(out, s).startsWith("ok") },
+      out)
+    assert(!out.contains("warn") && !out.contains("FAIL"), out)
   }
 
   test("BenchGate stream-cert membership is by rule: s7+ yes, s1-s6/q/d no") {
-    assert(BenchGate.isStreamCert("s7_stream_incr_dedup"))
-    assert(BenchGate.isStreamCert("s19_crash_recovery"))
-    assert(BenchGate.isStreamCert("s21_stream_video_dedup"))
-    assert(!BenchGate.isStreamCert("s1_event_deltas"))
-    assert(!BenchGate.isStreamCert("s6_gap_detect"))
-    assert(!BenchGate.isStreamCert("q55_triangle_census"))
-    assert(!BenchGate.isStreamCert("d7_minhash_lsh"))
+    assert(Bench.isStreamCert("s7_stream_incr_dedup"))
+    assert(Bench.isStreamCert("s19_crash_recovery"))
+    assert(Bench.isStreamCert("s21_stream_video_dedup"))
+    assert(!Bench.isStreamCert("s1_event_deltas"))
+    assert(!Bench.isStreamCert("s6_gap_detect"))
+    assert(!Bench.isStreamCert("q55_triangle_census"))
+    assert(!Bench.isStreamCert("d7_minhash_lsh"))
   }
 
-  test("BenchGate.parseAnchor reads BASELINE.md's authoritative row") {
+  test("BenchGate reads BASELINE.md's authoritative row") {
     preconditions()
-    val md = Files.readString(committedMd.get)
-    val a = BenchGate.parseAnchor(md).getOrElse(fail("no bench-gate anchor"))
-    // The Scala warn and the python gate must read the SAME numbers.
-    assert(a.contains("baseline_per_query_s") && a.contains("stream_cert_per_row_s")
-      && a.contains("max_ratio") && a.contains("core192_freeze_s"))
-    assert(a("max_ratio") === 1.8)
+    // every gated freeze is in the committed anchor, at max_ratio 1.8
+    val (rc, out) = gateFixture(green, Files.readString(committedMd.get))
+    assert(rc === 0, out)
+    assert(subsets.forall { case (s, _) =>
+      line(out, s).startsWith("ok") && line(out, s).contains("= 1.8x") }, out)
   }
 
-  test("BenchGate.parseAnchor is total: a malformed anchor degrades to " +
-    "None (the warn path's never-throws contract), never an exception") {
-    // stray token without '='
-    assert(BenchGate.parseAnchor(
-      "<!-- bench-gate: max_ratio=1.8 stray -->").isEmpty)
-    // non-numeric value
-    assert(BenchGate.parseAnchor(
-      "<!-- bench-gate: max_ratio=1.8x -->").isEmpty)
-    // absent anchor
-    assert(BenchGate.parseAnchor("no anchor here").isEmpty)
-    // a well-formed anchor still parses
-    assert(BenchGate.parseAnchor(
-      "<!-- bench-gate: a=1 b=2.5 -->").contains(Map("a" -> 1.0, "b" -> 2.5)))
-  }
-
-  test("BenchGate agrees with the python gate on the committed artifact") {
-    preconditions()
-    // Parse bench.json minimally (flat JSON, numeric fields + queries map).
-    val txt = Files.readString(committedBench.get)
-    val qre = """"queries":\{(.*?)\}""".r
-    val qs = qre.findFirstMatchIn(txt).map(_.group(1)).getOrElse(fail("no queries"))
-      .split(",").map { kv =>
-        val Array(k, v) = kv.split(":", 2)
-        k.replaceAll("\"", "") -> v.toDouble
-      }.filter(_._2 >= 0).toMap
-    def num(field: String): Double =
-      (s""""$field":([-0-9.eE]+)""".r).findFirstMatchIn(txt)
-        .map(_.group(1).toDouble).getOrElse(fail(s"no $field"))
-    val md = Files.readString(committedMd.get)
-    val a = BenchGate.parseAnchor(md).getOrElse(fail("no anchor"))
-    val subsets = Seq(82, 153, 158, 167, 192).flatMap { n =>
-      try Seq((s"core$n", num(s"core${n}_total"), num(s"core${n}_n").toInt, n))
-      catch { case _: org.scalatest.exceptions.TestFailedException => Nil }
-    } ++ {
-      try Seq(("stream16", num("stream16_total"), num("stream16_n").toInt, 16))
-      catch { case _: org.scalatest.exceptions.TestFailedException => Nil }
+  test("BenchGate FAILs on a malformed or incomplete anchor") {
+    Seq(
+      "<!-- bench-gate: max_ratio=1.8 stray -->",
+      "<!-- bench-gate: max_ratio=1.8x -->",
+      "no anchor here",
+      anchor(drop = "stream16_freeze_s")).foreach { md =>
+      val (rc, out) = gateFixture(green, md)
+      assert(rc === 1 && out.startsWith("FAIL") &&
+        !out.contains("Traceback"), out)
     }
-    val warns = BenchGate.warnings(qs, num("value"), subsets, a)
-    // The python gate passes on the committed artifact (first test above),
-    // so the Scala twin must see no TRIPPING signal either.
-    assert(!warns.exists(_.contains("TRIPPING")), s"scala/python gate disagree: $warns")
   }
 }

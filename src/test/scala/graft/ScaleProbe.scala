@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Dev scale probe (not part of the engine surface): ANN paths at 10× the
-  * sf0.1 corpus — replicates the embeddings table with id offsets to 50k
-  * vectors and times brute-force vs LSH vs IVF top-k for the same 20
-  * queries. `runMain graft.ScaleProbe dedup [times]` instead probes the
-  * composed near-dup pipeline (d15) at times× the documents table.
-  * Results recorded in BASELINE.md. */
+/** Dev scale probe (not part of the engine surface; test scope, run with
+  * `sbt "Test/runMain graft.ScaleProbe [mode] [args]"`): ANN paths at 10×
+  * the sf0.1 corpus — replicates the embeddings table with id offsets to
+  * 50k vectors and times brute-force vs LSH vs IVF top-k for the same 20
+  * queries. Mode `dedup [times]` instead probes the composed near-dup
+  * pipeline (d15) at times× the documents table. Results recorded in
+  * BASELINE.md. */
 object ScaleProbe {
 
   /** Documents replicated `times`× with per-replica DISJOINT vocabularies

@@ -60,6 +60,17 @@ class MeterStoreSpec extends SparkSpec {
       cfg.numMeters.toLong * cfg.ticks * 59)
   }
 
+  test("energyReport takes any date_trunc alias it can answer and rejects the rest") {
+    val day = store.energyReport(spark, "day").collect().toSet
+    assert(store.energyReport(spark, "dd").collect().toSet == day)
+    assert(store.energyReport(spark, "DAY").collect().toSet == day)
+    // date_trunc returns NULL for an unknown unit and accepts sub-second
+    // ones no stored table answers: both must fail, not return rows
+    Seq("fortnight", "millisecond").foreach { g =>
+      intercept[IllegalArgumentException](store.energyReport(spark, g))
+    }
+  }
+
   test("energyReport at month grain re-aggregates the day table exactly") {
     val month = store.energyReport(spark, "month")
     val rows = month.orderBy("said", "datetime").collect()

@@ -1,43 +1,33 @@
 #!/usr/bin/env python3
 """Machine check for the 2x bench criterion (dev tool, not part of the
-engine). Reads the full-precision bench artifact (bench.json) and the
-authoritative baseline row embedded in BASELINE.md's `bench-gate` HTML
-comment, and FAILS (exit 1) when any gated signal exceeds
-max_ratio * its baseline.
+engine), and the only implementation of the gate math. Reads the
+full-precision bench artifact (bench.json) and the authoritative
+baseline row embedded in BASELINE.md's `bench-gate` HTML comment, and
+FAILS (exit 1) when any gated signal exceeds max_ratio * its baseline.
 
-Gated signals (round-14 derivation -- reasoning in BASELINE.md's
-"Per-query gate derivation" section):
+Gated signals are the frozen-membership subtotals `graft.Bench` writes
+into the artifact, each with its member count `<name>_n` (reasoning in
+BASELINE.md's "Per-query gate derivation", "Stream-cert gate
+re-derivation", "stream18 freeze" and "batch187 freeze" sections):
 
-  - BATCH signal: the frozen-membership `batch187_total` subtotal (the
-    187 batch rows of the round-15 driver artifact, the last complete
-    one) vs `batch187_freeze_s`, when the artifact carries the field --
-    round-17 re-derivation after the round-16 DNF; the all-rows batch
-    MEAN is informational then. Historical artifacts without the field
-    keep the mean gated: (total - stream_cert_total) / (n - n_stream)
-    vs `baseline_per_query_s` (the round-4 driver row, whose 78-query
-    mix contained ZERO micro-batch certification rows -- so excluding
-    them from the mean is the apples-to-apples comparison; the
-    light s1-s6 rows existed in the round-4 mix and stay INSIDE the
-    batch mean on both sides).
-  - STREAM16 subtotal: the FROZEN-membership stream-certification
-    population (queries named `s<K>_*`, 7 <= K <= 22 -- the 16
-    micro-batch rows of the round-14 registry) vs `stream16_freeze_s`
-    (the round-14 driver artifact's own subtotal). Frozen membership,
-    like the coreNN subsets: s23+ rows land outside it (round-15
-    re-derivation in BASELINE.md -- the old all-rows per-row MEAN
-    moved for mix reasons whenever a heavy certification row
-    registered, so it is now informational only). Gated only when the
-    artifact carries `stream16_total` (newer than round 14) and
-    `stream16_n == 16`; the per-row mean over ALL s7+ rows is still
-    printed against `stream_cert_per_row_s` when that anchor exists.
-  - every frozen-subset total present in both artifact and anchor
-    (core82, core153, core158, core167, core192) vs its freeze value.
-    (A partial subset -- core82_n != 82 etc. -- is a failure in itself:
-    the subtotal is not comparable.)
+  - batch187: the 187 batch rows of the round-15 driver artifact;
+  - stream16 / stream18: the micro-batch stream-certification rows
+    s7..s22 / s7..s24;
+  - core82, core153, core158, core167, core192: the registry freezes.
 
-The OVERALL per-query mean (the driver's own 2x-criterion headline) is
-printed as an informational line so drift stays visible, but is not a
-failure by itself: it mixes two populations with different floors.
+Each is checked against `<name>_freeze_s` in the anchor. Bench decides
+which rows belong to which subtotal; this gate only reads the fields. A
+missing or short subtotal (`<name>_n` != its frozen size, e.g. a member
+errored) FAILs: the subtotal is not comparable.
+
+A signal above 0.9 * max_ratio of its baseline prints `warn` (early
+warning before the gate trips) and leaves the exit code unchanged.
+
+The overall per-query mean (the driver's own 2x-criterion headline),
+the batch mean and the stream-certification mean (`stream_overhead_s`
+over `stream_n`, every s<K> row with K >= 7) are printed as
+informational lines so drift stays visible, but fail nothing: each
+mixes populations with different floors.
 
 Usage:
     python3 tools/bench_gate.py [bench.json] [BASELINE.md]
@@ -52,21 +42,29 @@ import re
 import sys
 from pathlib import Path
 
-STREAM_CERT_RE = re.compile(r"^s(\d+)_")
-STREAM_CERT_MIN_ID = 7  # s1-s6 are light drains, inside the batch mean
+GATED = (("batch187", 187), ("stream16", 16), ("stream18", 18),
+         ("core82", 82), ("core153", 153), ("core158", 158),
+         ("core167", 167), ("core192", 192))
+WARN_FRAC = 0.9
+ANCHOR_KEYS = ("max_ratio", "baseline_per_query_s", "stream_cert_per_row_s",
+               *(f"{name}_freeze_s" for name, _ in GATED))
 
 
 def parse_baseline(md_path: Path) -> dict:
     m = re.search(r"<!--\s*bench-gate:\s*(.*?)\s*-->", md_path.read_text())
     if not m:
         sys.exit(f"FAIL: no 'bench-gate' anchor comment in {md_path}")
-    fields = dict(kv.split("=", 1) for kv in m.group(1).split())
-    return {k: float(v) for k, v in fields.items()}
-
-
-def is_stream_cert(name: str) -> bool:
-    m = STREAM_CERT_RE.match(name)
-    return bool(m) and int(m.group(1)) >= STREAM_CERT_MIN_ID
+    try:
+        base = {k: float(v) for k, v in
+                (kv.split("=", 1) for kv in m.group(1).split())}
+    except ValueError:
+        sys.exit(f"FAIL: malformed 'bench-gate' anchor in {md_path}: "
+                 f"{m.group(1)!r}")
+    missing = [k for k in ANCHOR_KEYS if k not in base]
+    if missing:
+        sys.exit(f"FAIL: 'bench-gate' anchor in {md_path} lacks "
+                 f"{', '.join(missing)}")
+    return base
 
 
 def main() -> int:
@@ -85,150 +83,54 @@ def main() -> int:
         print(f"FAIL: bench.json records query errors: {bench['errors']}")
         return 1
 
-    failures = []
-
-    def check(name: str, measured: float, limit: float) -> None:
-        measured *= poison
-        ok = measured <= limit
-        print(f"{'ok  ' if ok else 'FAIL'} {name:<18} {measured:8.3f} s  "
-              f"(limit {limit:.3f} = {ratio}x baseline)")
-        if not ok:
-            failures.append(name)
-
-    # Rows SKIPPED by the rep-1 soft budget (round 18: ungated rows shed
-    # past SPARK_GRAFT_REP1_BUDGET_S) report -1 without an error entry --
-    # they are absent samples, not failures, and must not corrupt the
-    # derived sums. A skipped GATED row is impossible by construction
-    # (gated rows are never skipped); if one ever goes missing anyway,
-    # the batch187/coreNN _n checks fail loudly, and (round 19, ADVICE
-    # r18) a short stream16/stream18 population in a post-freeze
-    # artifact now fails too instead of taking the pre-freeze info path.
+    # Rows SKIPPED by the rep-1 soft budget (ungated rows shed past
+    # SPARK_GRAFT_REP1_BUDGET_S) report -1 without an error entry: they
+    # are absent samples, not failures. Gated rows are never skipped; if
+    # one goes missing anyway, its subtotal's _n check below fails.
     if bench.get("skipped"):
         print(f"info {len(bench['skipped'])} ungated rows skipped by the "
               f"rep-1 soft budget: {', '.join(bench['skipped'])}")
-    queries = {k: v for k, v in bench["queries"].items() if v >= 0}
-    n = len(queries)
-    stream_cert = {k: v for k, v in queries.items() if is_stream_cert(k)}
-    stream_total = sum(stream_cert.values())
-    n_stream = len(stream_cert)
-    batch_total = bench["value"] - stream_total
-    n_batch = n - n_stream
-    if n_batch <= 0:
+    missing = [k for k in ("stream_overhead_s", "stream_n") if k not in bench]
+    if missing:
+        print(f"FAIL: bench.json lacks {', '.join(missing)}")
+        return 1
+    n = sum(1 for v in bench["queries"].values() if v >= 0)
+    n_stream = bench["stream_n"]
+    if n - n_stream <= 0:
         print("FAIL: no batch queries in artifact")
         return 1
 
-    # Informational only: the driver's own headline metric. Mixes the
-    # certification floor with engine throughput, so it drifts upward as
-    # streaming coverage grows -- visible here, gated via the decomposition.
-    print(f"info overall mean      {poison * bench['value'] / n:8.3f} s  "
-          f"({poison * bench['value'] / n / base['baseline_per_query_s']:.2f}x "
-          f"the {base['baseline_per_query_s']} driver row; driver criterion 2x)")
+    def info(name: str, mean: float, key: str, note: str) -> None:
+        mean *= poison
+        print(f"info {name:<17} {mean:8.3f} s  ({mean / base[key]:.2f}x "
+              f"the {base[key]} {note})")
 
-    # Round-17 re-derivation (BASELINE.md "batch187 freeze", after the
-    # round-16 bench DNF): the gated batch signal is the FROZEN-membership
-    # subtotal over the round-15 driver artifact's 187 batch rows when the
-    # artifact carries it -- new batch certification rows land OUTSIDE the
-    # freeze and can no longer move a gated signal for mix reasons (the
-    # rule that retired the stream-cert mean in round 15). The all-rows
-    # batch mean becomes informational then; historical artifacts without
-    # the field keep the mean gated (they were cut under that rule).
-    if "batch187_total" in bench and "batch187_freeze_s" in base:
-        if bench.get("batch187_n") != 187:
-            print(f"FAIL batch187_n = {bench.get('batch187_n')} != 187 -- "
-                  "subtotal not comparable")
-            failures.append("batch187_n")
-        else:
-            check("batch187_total", bench["batch187_total"],
-                  ratio * base["batch187_freeze_s"])
-        print(f"info batch mean        {poison * batch_total / n_batch:8.3f} s  "
-              f"({poison * batch_total / n_batch / base['baseline_per_query_s']:.2f}x "
-              f"the {base['baseline_per_query_s']} round-4 row; mix-sensitive, "
-              "not gated -- batch187_total is)")
-    else:
-        check("batch mean", batch_total / n_batch,
-              ratio * base["baseline_per_query_s"])
-    # Informational only since round 15 (BASELINE.md "Stream-cert gate
-    # re-derivation"): the all-rows per-row mean moves for MIX reasons
-    # whenever a streaming row registers. Guarded: a historical
-    # BASELINE.md may predate the anchor key (ADVICE r14).
-    if n_stream > 0 and "stream_cert_per_row_s" in base:
-        mean = poison * stream_total / n_stream
-        print(f"info stream-cert mean  {mean:8.3f} s  "
-              f"({mean / base['stream_cert_per_row_s']:.2f}x the "
-              f"{base['stream_cert_per_row_s']} round-13 row; "
-              f"mix-sensitive, not gated -- stream16_total is)")
-    # The gated stream signal: frozen-membership subtotal (s7..s22),
-    # DERIVED from the queries map by rule so artifacts predating the
-    # stream16_total field stay gated too (review r15: requiring the
-    # field silently un-gated every older artifact's stream signal). A
-    # population smaller than the frozen 16 (e.g. round-13's s7..s21)
-    # predates the freeze membership and is reported, not failed.
-    if "stream16_freeze_s" in base:
-        s16 = {k: v for k, v in stream_cert.items()
-               if int(STREAM_CERT_RE.match(k).group(1)) <= 22}
-        if len(s16) == 16:
-            check("stream16_total", sum(s16.values()),
-                  ratio * base["stream16_freeze_s"])
-            if "stream16_total" in bench and \
-                    abs(bench["stream16_total"] - sum(s16.values())) > 1e-6:
-                print(f"FAIL stream16_total field {bench['stream16_total']} "
-                      f"!= derived {sum(s16.values())}")
-                failures.append("stream16_total_field")
-        elif "stream16_total" in bench or "skipped" in bench:
-            # Post-freeze artifact (it carries the subtotal field or the
-            # round-18 skipped array) with a short stream population: a
-            # frozen member went missing -- erroring or vanishing from
-            # the registry. Info-skipping here would silently UN-GATE
-            # the stream signal exactly when it regressed (ADVICE r18);
-            # only genuinely pre-freeze artifacts take the info path.
-            print(f"FAIL stream16 population has {len(s16)} of 16 frozen "
-                  "members in a post-freeze artifact -- a frozen member "
-                  "is missing")
-            failures.append("stream16_membership")
-        else:
-            print(f"info stream16 population has {len(s16)} of 16 frozen "
-                  "members -- predates the freeze membership; skipped")
-    # The round-15 freeze nesting it: s7..s24, the 18 rows of the
-    # round-15 registry, frozen at the round-15 driver artifact
-    # (BASELINE.md "stream18 freeze"). Derived by rule like stream16 so
-    # the round-15 artifact (which predates the stream18_total field)
-    # is still gated; s25+ rows land outside.
-    if "stream18_freeze_s" in base:
-        s18 = {k: v for k, v in stream_cert.items()
-               if int(STREAM_CERT_RE.match(k).group(1)) <= 24}
-        if len(s18) == 18:
-            check("stream18_total", sum(s18.values()),
-                  ratio * base["stream18_freeze_s"])
-            if "stream18_total" in bench and \
-                    abs(bench["stream18_total"] - sum(s18.values())) > 1e-6:
-                print(f"FAIL stream18_total field {bench['stream18_total']} "
-                      f"!= derived {sum(s18.values())}")
-                failures.append("stream18_total_field")
-        elif "stream18_total" in bench or "skipped" in bench:
-            # Same post-freeze rule as stream16 above (ADVICE r18).
-            print(f"FAIL stream18 population has {len(s18)} of 18 frozen "
-                  "members in a post-freeze artifact -- a frozen member "
-                  "is missing")
-            failures.append("stream18_membership")
-        else:
-            print(f"info stream18 population has {len(s18)} of 18 frozen "
-                  "members -- predates the freeze membership; skipped")
+    info("overall mean", bench["value"] / n, "baseline_per_query_s",
+         "driver row; driver criterion 2x")
+    info("batch mean", (bench["value"] - bench["stream_overhead_s"])
+         / (n - n_stream), "baseline_per_query_s",
+         "round-4 row; mix-sensitive, not gated -- batch187_total is")
+    if n_stream > 0:
+        info("stream-cert mean", bench["stream_overhead_s"] / n_stream,
+             "stream_cert_per_row_s",
+             "round-13 row; mix-sensitive, not gated -- stream16_total is")
 
-    if bench.get("core82_n") != 82:
-        print(f"FAIL core82_n = {bench.get('core82_n')} != 82 -- subtotal not comparable")
-        failures.append("core82_n")
-    else:
-        check("core82_total", bench["core82_total"], ratio * base["core82_freeze_s"])
-
-    for core_n in (153, 158, 167, 192):
-        total_k, n_k, freeze_k = (f"core{core_n}_total", f"core{core_n}_n",
-                                  f"core{core_n}_freeze_s")
-        if total_k in bench and freeze_k in base:
-            if bench.get(n_k) != core_n:
-                print(f"FAIL {n_k} = {bench.get(n_k)} != {core_n} -- subtotal not comparable")
-                failures.append(n_k)
-            else:
-                check(total_k, bench[total_k], ratio * base[freeze_k])
+    failures = []
+    for name, size in GATED:
+        total_k, n_k = f"{name}_total", f"{name}_n"
+        if bench.get(n_k) != size or total_k not in bench:
+            print(f"FAIL {n_k} = {bench.get(n_k)} != {size} -- subtotal "
+                  "missing or not comparable")
+            failures.append(n_k)
+            continue
+        measured = poison * bench[total_k]
+        limit = ratio * base[f"{name}_freeze_s"]
+        label = ("FAIL" if measured > limit
+                 else "warn" if measured > WARN_FRAC * limit else "ok  ")
+        print(f"{label} {total_k:<18} {measured:8.3f} s  "
+              f"(limit {limit:.3f} = {ratio}x baseline)")
+        if label == "FAIL":
+            failures.append(total_k)
 
     if failures:
         print(f"\nbench gate: FAILED ({', '.join(failures)})")

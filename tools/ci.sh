@@ -15,7 +15,10 @@
 #   4. graft.Verify        (driver-contract correctness dump at sf0.01)
 #   5. verify_local.py     (DuckDB oracle replay + row/schema compare)
 #   6. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
-#                           over the committed full-precision bench.json)
+#                           over the committed full-precision bench.json;
+#                           the one gate implementation: fails a frozen
+#                           subtotal over 1.8x or short of its members,
+#                           prints `warn` above 90% of the limit)
 #   7. doc_drift.py        (README/SURVEY query-id sync with the registry;
 #                           README `Object.member` references resolve)
 #
