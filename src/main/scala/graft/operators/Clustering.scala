@@ -25,12 +25,6 @@ object Clustering {
     df.repartition(partCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
 
-  /** Partition-local sort only (no repartition): orders rows inside
-    * whatever partitioning the upstream already established — zero
-    * shuffle. */
-  def localSort(df: DataFrame, sortCols: Seq[Column]): DataFrame =
-    df.sortWithinPartitions(sortCols: _*)
-
   /** Z-order (Morton) interleaving of k non-negative dimension values,
     * `bits` bits each: bit i of dimension j lands at position i·k + j.
     * Sorting by this single key clusters rows that are close in EVERY

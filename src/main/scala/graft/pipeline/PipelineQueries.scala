@@ -1223,18 +1223,13 @@ object PipelineQueries {
   // re-assignment, probes, rounded-cosine top-k. nlist = 8, nprobe = 3,
   // k = 5 over the 64-dim embeddings. ----
   private def e13(s: SparkSession, dir: String): DataFrame = {
-    val nlist = 8
-    val centRows = emb(s, dir)
-      .select(col("vec_id").as("id"),
-        col("embedding").cast("array<double>").as("v"))
-      .orderBy(sha2(col("id").cast("string"), 256), col("id"))
-      .limit(nlist).collect()
-    val labels = centRows.map(_.getLong(0))
-    val init = centRows.map(_.getSeq[Double](1).toArray)
+    val init = Similarity.Centroids.sample(emb(s, dir).select(
+      col("vec_id").as("nn_id"),
+      col("embedding").cast("array<double>").as("nn_vec")), 8)
     val refined = Similarity.kmeansRefineExact(emb(s, dir), "vec_id",
-      "embedding", init, labels, iters = 1)
+      "embedding", init.vecs, init.labels, iters = 1)
     Similarity.ivfTopKWith(emb(s, dir), "vec_id", "embedding", _ < 20,
-      k = 5, refined, labels.toSeq, nprobe = 3)
+      k = 5, refined, init.ids.toSeq, nprobe = 3)
       .orderBy("q_id", "rank")
   }
 
@@ -2841,10 +2836,7 @@ object PipelineQueries {
         k = 5, nlist = 16, degree = 6, beam = 8, hops = 2)
       .orderBy("q_id", "rank")
 
-  private val e21Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
+  private val e21Oracle =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
       |samp AS (
       |  SELECT vec_id AS cid, v AS cv FROM e
@@ -2861,12 +2853,12 @@ object PipelineQueries {
       |  SELECT node, nbr FROM (
       |    SELECT x.vec_id AS node, y.vec_id AS nbr,
       |      ROW_NUMBER() OVER (PARTITION BY x.vec_id ORDER BY
-      |        ${cos("x.v", "y.v")} DESC, y.vec_id) AS rn
+      |        ${sqlCos("x.v", "y.v")} DESC, y.vec_id) AS rn
       |    FROM cells x JOIN cells y ON x.cell = y.cell AND x.vec_id <> y.vec_id)
       |  WHERE rn <= 6),
       |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
       |s0 AS (
-      |  SELECT q.q_id, s.cid AS nn_id, ${cos("q.qv", "s.cv")} AS sim
+      |  SELECT q.q_id, s.cid AS nn_id, ${sqlCos("q.qv", "s.cv")} AS sim
       |  FROM q CROSS JOIN samp s),
       |f0 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -2875,7 +2867,7 @@ object PipelineQueries {
       |c1 AS (SELECT q_id, nn_id FROM f0
       |  UNION SELECT f0.q_id, a.nbr FROM f0 JOIN adj a ON a.node = f0.nn_id),
       |s1 AS (
-      |  SELECT c1.q_id, c1.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c1.q_id, c1.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c1 JOIN q USING (q_id) JOIN e t ON t.vec_id = c1.nn_id),
       |f1 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -2884,7 +2876,7 @@ object PipelineQueries {
       |c2 AS (SELECT q_id, nn_id FROM f1
       |  UNION SELECT f1.q_id, a.nbr FROM f1 JOIN adj a ON a.node = f1.nn_id),
       |s2 AS (
-      |  SELECT c2.q_id, c2.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c2.q_id, c2.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c2 JOIN q USING (q_id) JOIN e t ON t.vec_id = c2.nn_id),
       |rk AS (
       |  SELECT q_id, nn_id, sim,
@@ -2892,7 +2884,6 @@ object PipelineQueries {
       |  FROM s2 WHERE q_id <> nn_id)
       |SELECT q_id, CAST(rank AS INT) AS rank, nn_id, sim
       |FROM rk WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-  }
 
   // ---- e22: NN-descent graph refinement (Similarity.nnDescentAdj) —
   // the production build path for e21's index, now LINEAR end to end:
@@ -2915,6 +2906,12 @@ object PipelineQueries {
       .filter(col("node") < 25)
       .orderBy("node", "rank")
 
+  /** DuckDB twin of the engine's 6-dp ranked cosine
+    * (`round(cosineFast(a, b), 6)`), shared by every ANN oracle. */
+  private def sqlCos(a: String, b: String): String =
+    s"""ROUND(list_dot_product($a, $b) /
+       |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
+
   /** The shared adjacency-build CTE chain (through `adj1`, the
     * one-round NN-descent graph) — e22 certifies it directly; e23
     * serves the e21 walk over it; e27 re-enters it with the seed
@@ -2925,10 +2922,10 @@ object PipelineQueries {
     * discipline the engine's retract face keeps; e34 instead swaps
     * `corpusSrc` so the WHOLE quantizer trains on a survivor relation
     * injected through `preCtes` — the migrate face's re-train). */
-  private def nndAdjCtes(cos: (String, String) => String,
-      extraCtes: String = "", seedOrigin: String = "cells2",
-      scoreSrc: String = "e", preCtes: String = "",
-      corpusSrc: String = "e", nlistSql: String = "16"): String =
+  private def nndAdjCtes(extraCtes: String = "",
+      seedOrigin: String = "cells2", scoreSrc: String = "e",
+      preCtes: String = "", corpusSrc: String = "e",
+      nlistSql: String = "16"): String =
     s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),$preCtes
       |samp AS (
       |  SELECT vec_id AS cid, v AS cv FROM $corpusSrc
@@ -2953,9 +2950,9 @@ object PipelineQueries {
       |  FROM $seedOrigin x JOIN reps r ON x.cell = r.cell AND x.vec_id <> r.rep_id),
       |adj0 AS (
       |  SELECT node, nbr, nsim FROM (
-      |    SELECT node, nbr, ${cos("xv", "yv")} AS nsim,
+      |    SELECT node, nbr, ${sqlCos("xv", "yv")} AS nsim,
       |      ROW_NUMBER() OVER (PARTITION BY node ORDER BY
-      |        ${cos("xv", "yv")} DESC, nbr) AS rn
+      |        ${sqlCos("xv", "yv")} DESC, nbr) AS rn
       |    FROM seedp)
       |  WHERE rn <= 6),
       |rev AS (
@@ -2972,7 +2969,7 @@ object PipelineQueries {
       |  SELECT a.node, b.nbr FROM und a JOIN und b ON a.nbr = b.node
       |  WHERE a.node <> b.nbr),
       |scored AS (
-      |  SELECT c.node, c.nbr, ${cos("x.v", "y.v")} AS nsim
+      |  SELECT c.node, c.nbr, ${sqlCos("x.v", "y.v")} AS nsim
       |  FROM cand c JOIN $scoreSrc x ON x.vec_id = c.node
       |  JOIN $scoreSrc y ON y.vec_id = c.nbr),
       |adj1 AS (
@@ -2983,15 +2980,11 @@ object PipelineQueries {
   /** The full one-round build oracle (shared: e22 certifies the batch
     * build; s16 certifies that the incrementally-maintained streaming
     * artifact EQUALS it — the frozen-quantizer induction). */
-  private[graft] def nndBuildOracle(restrictNode: Int): String = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-    s"""WITH ${nndAdjCtes(cos)}
+  private[graft] def nndBuildOracle(restrictNode: Int): String =
+    s"""WITH ${nndAdjCtes()}
       |SELECT node, CAST(rank AS INT) AS rank, nbr, nsim
       |FROM adj1 WHERE rank <= 6 AND node < $restrictNode
       |ORDER BY node, rank""".stripMargin
-  }
 
   private val e22Oracle = nndBuildOracle(restrictNode = 25)
 
@@ -3014,7 +3007,7 @@ object PipelineQueries {
     val removable = e.filter(col("vec_id") % 9 === 4).select("vec_id")
       .join(idx.quant.reps.select(col("rep_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
-      .filter(!col("vec_id").isInCollection(idx.quant.centIds.toSeq))
+      .filter(!col("vec_id").isInCollection(idx.quant.centroids.ids.toSeq))
     Similarity.retractNndIndex(idx, e, "vec_id", "embedding", removable)
       .refined
       .filter(col("node") < 25)
@@ -3022,9 +3015,6 @@ object PipelineQueries {
   }
 
   private val e27Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
     val retractCtes =
       """
         |rem AS (
@@ -3035,7 +3025,7 @@ object PipelineQueries {
         |surv2 AS (
         |  SELECT * FROM cells2
         |  WHERE vec_id NOT IN (SELECT vec_id FROM rem)),""".stripMargin
-    s"""WITH ${nndAdjCtes(cos, retractCtes, seedOrigin = "surv2")}
+    s"""WITH ${nndAdjCtes(retractCtes, seedOrigin = "surv2")}
       |SELECT node, CAST(rank AS INT) AS rank, nbr, nsim
       |FROM adj1 WHERE rank <= 6 AND node < 25
       |ORDER BY node, rank""".stripMargin
@@ -3060,7 +3050,7 @@ object PipelineQueries {
     val e = emb(s, dir)
     val idx = Similarity.buildNndIndex(e, "vec_id", "embedding")
     val anchorIds = idx.quant.reps.select(col("rep_id")).collect()
-      .map(_.getLong(0)).toSet ++ idx.quant.centIds
+      .map(_.getLong(0)).toSet ++ idx.quant.centroids.ids
     val isUpd = (c: org.apache.spark.sql.Column) =>
       c % 9 === 4 && !c.isInCollection(anchorIds.toSeq)
     val updated = e.select(col("vec_id"),
@@ -3074,9 +3064,6 @@ object PipelineQueries {
   }
 
   private val e32Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
     val updCtes =
       """
         |e2 AS (
@@ -3094,7 +3081,7 @@ object PipelineQueries {
         |      s.cid DESC) AS rn
         |  FROM e2 CROSS JOIN samp s),
         |cells2u AS (SELECT vec_id, v, cid AS cell FROM assign2 WHERE rn <= 2),""".stripMargin
-    s"""WITH ${nndAdjCtes(cos, updCtes, seedOrigin = "cells2u",
+    s"""WITH ${nndAdjCtes(updCtes, seedOrigin = "cells2u",
         scoreSrc = "e2")}
       |SELECT node, CAST(rank AS INT) AS rank, nbr, nsim
       |FROM adj1 WHERE rank <= 6 AND node < 25
@@ -3339,7 +3326,7 @@ object PipelineQueries {
     val e = emb(s, dir).localCheckpoint(false)
     val idx = Similarity.buildNndIndex(e, "vec_id", "embedding")
     val anchorIds = idx.quant.reps.select(col("rep_id")).collect()
-      .map(_.getLong(0)).toSet ++ idx.quant.centIds
+      .map(_.getLong(0)).toSet ++ idx.quant.centroids.ids
     val removed = e.filter(col("vec_id") >= 20 &&
         col("vec_id") % 3 =!= 0 &&
         !col("vec_id").isInCollection(anchorIds.toSeq))
@@ -3366,9 +3353,6 @@ object PipelineQueries {
   }
 
   private val e33Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
     val retractCtes =
       """
         |rem AS (
@@ -3379,21 +3363,21 @@ object PipelineQueries {
         |surv2 AS (
         |  SELECT * FROM cells2
         |  WHERE vec_id NOT IN (SELECT vec_id FROM rem)),""".stripMargin
-    s"""WITH ${nndAdjCtes(cos, retractCtes, seedOrigin = "surv2")},
+    s"""WITH ${nndAdjCtes(retractCtes, seedOrigin = "surv2")},
       |sv AS (SELECT vec_id, v FROM e
       |  WHERE vec_id NOT IN (SELECT vec_id FROM rem)),
-      |${nndRecallTail(cos)}""".stripMargin
+      |${nndRecallTail}""".stripMargin
   }
 
   /** The serve-vs-exact recall tail shared by the e33/e34 instruments:
     * the e23 two-hop beam walk (entries = `samp`, adjacency = `adj1`)
     * against brute-force top-5, both over the survivor relation `sv`,
     * reduced to e18's hits / integer recall-percent arithmetic. */
-  private def nndRecallTail(cos: (String, String) => String): String =
+  private def nndRecallTail: String =
     s"""adj AS (SELECT node, nbr FROM adj1 WHERE rank <= 6),
       |q AS (SELECT vec_id AS q_id, v AS qv FROM sv WHERE vec_id < 20),
       |s0 AS (
-      |  SELECT q.q_id, s.cid AS nn_id, ${cos("q.qv", "s.cv")} AS sim
+      |  SELECT q.q_id, s.cid AS nn_id, ${sqlCos("q.qv", "s.cv")} AS sim
       |  FROM q CROSS JOIN samp s),
       |f0 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3402,7 +3386,7 @@ object PipelineQueries {
       |c1 AS (SELECT q_id, nn_id FROM f0
       |  UNION SELECT f0.q_id, a.nbr FROM f0 JOIN adj a ON a.node = f0.nn_id),
       |s1 AS (
-      |  SELECT c1.q_id, c1.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c1.q_id, c1.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c1 JOIN q USING (q_id) JOIN sv t ON t.vec_id = c1.nn_id),
       |f1 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3411,14 +3395,14 @@ object PipelineQueries {
       |c2 AS (SELECT q_id, nn_id FROM f1
       |  UNION SELECT f1.q_id, a.nbr FROM f1 JOIN adj a ON a.node = f1.nn_id),
       |s2 AS (
-      |  SELECT c2.q_id, c2.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c2.q_id, c2.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c2 JOIN q USING (q_id) JOIN sv t ON t.vec_id = c2.nn_id),
       |ap AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
       |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, nn_id) AS rn
       |    FROM s2 WHERE q_id <> nn_id) WHERE rn <= 5),
       |exs AS (
-      |  SELECT q.q_id, t.vec_id AS nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT q.q_id, t.vec_id AS nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM q JOIN sv t ON q.q_id <> t.vec_id),
       |ex AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3483,9 +3467,6 @@ object PipelineQueries {
   }
 
   private val e34Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
     val survPre =
       """
         |rem AS (
@@ -3493,9 +3474,9 @@ object PipelineQueries {
         |surv AS (
         |  SELECT vec_id, v FROM e
         |  WHERE vec_id NOT IN (SELECT vec_id FROM rem)),""".stripMargin
-    s"""WITH ${nndAdjCtes(cos, preCtes = survPre, corpusSrc = "surv")},
+    s"""WITH ${nndAdjCtes(preCtes = survPre, corpusSrc = "surv")},
       |sv AS (SELECT vec_id, v FROM surv),
-      |${nndRecallTail(cos)}""".stripMargin
+      |${nndRecallTail}""".stripMargin
   }
 
   // ---- e35: graph-ANN recall at CORPUS-SCALED geometry — the
@@ -3546,15 +3527,11 @@ object PipelineQueries {
       .orderBy("q_id")
   }
 
-  private val e35Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-    s"""WITH ${nndAdjCtes(cos, nlistSql =
+  private val e35Oracle =
+    s"""WITH ${nndAdjCtes(nlistSql =
         "(SELECT CAST(LEAST(64, round(sqrt(COUNT(*)), 0)) AS BIGINT) FROM e)")},
       |sv AS (SELECT vec_id, v FROM e),
-      |${nndRecallTail(cos)}""".stripMargin
-  }
+      |${nndRecallTail}""".stripMargin
 
   // ---- e31: IVF-PQ index MIGRATION (Similarity.migrateIvfPqIndex) —
   // the re-train/refresh face behind e30's drift instrument (VERDICT
@@ -3608,15 +3585,12 @@ object PipelineQueries {
       .orderBy("q_id", "rank")
   }
 
-  private val e23Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-    s"""WITH ${nndAdjCtes(cos)},
+  private val e23Oracle =
+    s"""WITH ${nndAdjCtes()},
       |adj AS (SELECT node, nbr FROM adj1 WHERE rank <= 6),
       |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
       |s0 AS (
-      |  SELECT q.q_id, s.cid AS nn_id, ${cos("q.qv", "s.cv")} AS sim
+      |  SELECT q.q_id, s.cid AS nn_id, ${sqlCos("q.qv", "s.cv")} AS sim
       |  FROM q CROSS JOIN samp s),
       |f0 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3625,7 +3599,7 @@ object PipelineQueries {
       |c1 AS (SELECT q_id, nn_id FROM f0
       |  UNION SELECT f0.q_id, a.nbr FROM f0 JOIN adj a ON a.node = f0.nn_id),
       |s1 AS (
-      |  SELECT c1.q_id, c1.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c1.q_id, c1.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c1 JOIN q USING (q_id) JOIN e t ON t.vec_id = c1.nn_id),
       |f1 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3634,7 +3608,7 @@ object PipelineQueries {
       |c2 AS (SELECT q_id, nn_id FROM f1
       |  UNION SELECT f1.q_id, a.nbr FROM f1 JOIN adj a ON a.node = f1.nn_id),
       |s2 AS (
-      |  SELECT c2.q_id, c2.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c2.q_id, c2.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c2 JOIN q USING (q_id) JOIN e t ON t.vec_id = c2.nn_id),
       |rk AS (
       |  SELECT q_id, nn_id, sim,
@@ -3642,7 +3616,6 @@ object PipelineQueries {
       |  FROM s2 WHERE q_id <> nn_id)
       |SELECT q_id, CAST(rank AS INT) AS rank, nn_id, sim
       |FROM rk WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-  }
 
   // ---- e26: recall-after-append — the index-QUALITY face of the
   // append lifecycle. e23/s16 certify that serve-over-appended-index
@@ -3690,15 +3663,12 @@ object PipelineQueries {
       .orderBy("q_id")
   }
 
-  private val e26Oracle = {
-    def cos(a: String, b: String): String =
-      s"""ROUND(list_dot_product($a, $b) /
-         |      (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)""".stripMargin
-    s"""WITH ${nndAdjCtes(cos)},
+  private val e26Oracle =
+    s"""WITH ${nndAdjCtes()},
       |adj AS (SELECT node, nbr FROM adj1 WHERE rank <= 6),
       |q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 20),
       |s0 AS (
-      |  SELECT q.q_id, s.cid AS nn_id, ${cos("q.qv", "s.cv")} AS sim
+      |  SELECT q.q_id, s.cid AS nn_id, ${sqlCos("q.qv", "s.cv")} AS sim
       |  FROM q CROSS JOIN samp s),
       |f0 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3707,7 +3677,7 @@ object PipelineQueries {
       |c1 AS (SELECT q_id, nn_id FROM f0
       |  UNION SELECT f0.q_id, a.nbr FROM f0 JOIN adj a ON a.node = f0.nn_id),
       |s1 AS (
-      |  SELECT c1.q_id, c1.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c1.q_id, c1.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c1 JOIN q USING (q_id) JOIN e t ON t.vec_id = c1.nn_id),
       |f1 AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3716,14 +3686,14 @@ object PipelineQueries {
       |c2 AS (SELECT q_id, nn_id FROM f1
       |  UNION SELECT f1.q_id, a.nbr FROM f1 JOIN adj a ON a.node = f1.nn_id),
       |s2 AS (
-      |  SELECT c2.q_id, c2.nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT c2.q_id, c2.nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM c2 JOIN q USING (q_id) JOIN e t ON t.vec_id = c2.nn_id),
       |ap AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
       |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, nn_id) AS rn
       |    FROM s2 WHERE q_id <> nn_id) WHERE rn <= 5),
       |exs AS (
-      |  SELECT q.q_id, t.vec_id AS nn_id, ${cos("q.qv", "t.v")} AS sim
+      |  SELECT q.q_id, t.vec_id AS nn_id, ${sqlCos("q.qv", "t.v")} AS sim
       |  FROM q JOIN e t ON q.q_id <> t.vec_id),
       |ex AS (SELECT q_id, nn_id FROM (
       |    SELECT q_id, nn_id,
@@ -3738,7 +3708,6 @@ object PipelineQueries {
       |  CAST(COALESCE(h.hits, 0) * 100 / b.k AS BIGINT) AS recall_pct
       |FROM b LEFT JOIN h ON h.q_id = b.q_id
       |ORDER BY b.q_id""".stripMargin
-  }
 
   def all: Seq[QueryDef] = Seq(
     QueryDef("e26_append_recall", e26, Some(e26Oracle)),

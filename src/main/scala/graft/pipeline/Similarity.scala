@@ -1,8 +1,10 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
+  IntegerType, StructField, StructType}
 
 /** Similarity search over an embedding column (ARRAY<FLOAT>).
   *
@@ -152,7 +154,7 @@ object Similarity {
     * for anisotropic embeddings — and the scan never leaves integers.
     *
     * 100 TB shape: training is one narrow (i, x) aggregation to `dim`
-    * rows collected on the driver (the literalCells bounded-collect
+    * rows collected on the driver (the [[Centroids]] bounded-collect
     * contract) and baked into the encode projection as plan literals;
     * the code scan is the only full pass (dim bytes of payload per row
     * semantically — the in-plan array<long> form trades that for
@@ -239,30 +241,152 @@ object Similarity {
     }.reduce(_ + _)
   }
 
+  /** The coarse quantizer of the IVF family: `nlist` centroid vectors,
+    * each labelled by the id of the corpus vector it was sampled from.
+    * Every IVF, IVF-PQ, graph and NN-descent operator in this file routes
+    * through it, under one contract:
+    *
+    *   - sample ([[Centroids.sample]]): the first `n` corpus rows by
+    *     (sha256(id), id). One cheap pass that the oracles replay in
+    *     DuckDB (sha256 ≡ sha2/256, the same lowercase-hex order).
+    *   - cell ([[cellOf]]): argmax over the centroids of the 9-dp
+    *     rounded cosine, ties to the LARGER label — struct `greatest`
+    *     over (s, c), the oracles' ORDER BY s DESC, c DESC. Labels are
+    *     ids, not sample positions: with position labels the two
+    *     orderings diverge whenever two sampled centroids tie (e.g.
+    *     duplicate vectors).
+    *   - probes ([[topCells]]): the same (s, c) structs sorted
+    *     descending, the first `n`.
+    *   - nlist ≤ 64 routes through the centroids as plan literals
+    *     (oracle-replayable, generated code O(nlist)); above, through the
+    *     fixed-size [[graft.functions.IvfCellsExpr]] kernel over
+    *     [[labels]] — same ordering on UNROUNDED scores, so
+    *     recall-equivalent rather than bit-matched, integral ids only.
+    *
+    * Routing is plain SQL expressions, no UDF, so it fuses into the
+    * scan's generated code. */
+  private[graft] final case class Centroids(ids: Array[Any],
+      vecs: Array[Array[Double]]) {
+    def nlist: Int = vecs.length
+
+    /** Routes through literal centroids rather than the kernel. */
+    def literal: Boolean = nlist <= 64
+
+    /** Kernel cell labels. Integral ids only: a DOUBLE id would
+      * truncate through `longValue()` and merge distinct centroids. */
+    lazy val labels: Array[Long] = ids.map {
+      case n: java.lang.Long => n.longValue()
+      case n: java.lang.Integer => n.longValue()
+      case n: java.lang.Short => n.longValue()
+      case n: java.lang.Byte => n.longValue()
+      case other => throw new IllegalArgumentException(
+        s"kernel cell labels need integral ids, got ${other.getClass}")
+    }
+
+    private def vecLit(i: Int): Column = array(vecs(i).map(lit): _*)
+
+    private def scores(v: Column): Seq[Column] = (0 until nlist).map(i =>
+      struct(round(cosineFast(v, vecLit(i)), 9).as("s"),
+        lit(ids(i)).as("c")))
+
+    /** The cell label of `v`. */
+    def cellOf(v: Column): Column = greatest(scores(v): _*).getField("c")
+
+    /** Every (s, c) cell score of `v`, best first. */
+    def ranked(v: Column): Column =
+      sort_array(array(scores(v): _*), asc = false)
+
+    /** The `n` best (s, c) cell scores of `v` — a query's probe list. */
+    def topCells(v: Column, n: Int): Column = slice(ranked(v), 1, n)
+
+    /** The `n` best cell labels of `v`, literal or kernel-routed. */
+    def topLabels(v: Column, n: Int): Column =
+      if (literal) transform(topCells(v, n), _.getField("c"))
+      else graft.functions.IvfCells.ivf_cells(v, vecs, labels, n)
+
+    /** `v` minus the centroid of `cell`, as one cell-dispatched
+      * subtraction chain (nlist literal branches). */
+    def residual(v: Column, cell: Column): Column =
+      (0 until nlist).foldLeft(lit(null).cast("array<double>")) {
+        case (acc, i) => when(cell === lit(ids(i)),
+          zip_with(v, vecLit(i), (x, c) => x - c)).otherwise(acc)
+      }
+
+    /** Listed rows of `corpus` (nn_id, nn_vec, extras…) with their
+      * literal `cell`, and the probe rows (q_id, q_vec, cell, extras…)
+      * of its `queryPred` rows, one per probed cell. Both are
+      * shuffle-free projections of the corpus scan. EXTRA corpus
+      * columns (e.g. [[filteredIvfTopK]]'s nn_label) ride the listed
+      * side unchanged AND the probe side with the nn_ prefix swapped for
+      * q_ — no second corpus pass to re-acquire them. */
+    def cells(corpus: DataFrame, queryPred: Column => Column,
+        nprobe: Int): (DataFrame, DataFrame) = {
+      val extras = corpus.columns.filterNot(Set("nn_id", "nn_vec")).toSeq
+      val l = corpus.withColumn("cell", cellOf(col("nn_vec")))
+      val p = l.filter(queryPred(col("nn_id")))
+        .select(Seq(col("nn_id").as("q_id"), col("nn_vec").as("q_vec"),
+          explode(topCells(col("nn_vec"), nprobe)).as("pc")) ++
+          extras.map(c => col(c).as("q_" + c.stripPrefix("nn_"))): _*)
+        .select(Seq(col("q_id"), col("q_vec"), col("pc.c").as("cell")) ++
+          extras.map(c => col("q_" + c.stripPrefix("nn_"))): _*)
+      (l, p)
+    }
+
+    /** Persist as the `(ord, cent_id, vec)` centroid face: one parquet
+      * file of nlist rows, `cent_id` typed `idType`. */
+    def write(spark: SparkSession, idType: DataType, path: String): Unit = {
+      val rows = new java.util.ArrayList[Row]()
+      ids.zipWithIndex.foreach { case (cid, i) =>
+        rows.add(Row(i, cid, vecs(i).toSeq))
+      }
+      spark.createDataFrame(rows, StructType(Seq(
+          StructField("ord", IntegerType, nullable = false),
+          StructField("cent_id", idType, nullable = false),
+          StructField("vec", ArrayType(DoubleType, containsNull = false),
+            nullable = false))))
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }
+  }
+
+  private[graft] object Centroids {
+    /** The first `n` rows of `corpus` (nn_id, nn_vec, …) by
+      * (sha256(id), id). sha2 rather than xxhash64 so the oracles can
+      * replay the selection; one scalar hash per row at index-build
+      * time, so the crypto-vs-xx cost difference is irrelevant. */
+    def sample(corpus: DataFrame, n: Int): Centroids = {
+      val rows = corpus
+        .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
+        .limit(n).collect()
+      Centroids(rows.map(_.get(0)), rows.map(_.getSeq[Double](1).toArray))
+    }
+
+    /** Restore a [[Centroids.write]] face. */
+    def read(spark: SparkSession, path: String): Centroids = {
+      val rows = DeltaRetract.readFace(spark, Seq(path)).orderBy("ord")
+        .collect()
+      Centroids(rows.map(_.get(1)), rows.map(_.getSeq[Double](2).toArray))
+    }
+  }
+
   /** IVF (inverted-file) ANN top-k: a coarse quantizer of `nlist` centroids
     * partitions the corpus into cells (inverted lists); each query scores
     * only the lists of its `nprobe` nearest centroids — scan fraction
     * ≈ nprobe/nlist instead of 1.
     *
-    * The quantizer here is a deterministic hash-ordered sample of corpus
-    * vectors (one cheap pass; k-means refinement would reuse exactly this
-    * assignment plumbing with updated centroid literals). Two assignment
-    * strategies, both shuffle-free projections with no executor-side model
-    * state:
+    * The quantizer is the [[Centroids]] sample (k-means refinement with
+    * `refineIters` > 0 moves the vectors, keeps the labels). Assignment
+    * is a shuffle-free projection with no executor-side model state, on
+    * either of [[Centroids]]' two routes:
     *
-    *   - nlist ≤ 64: centroids as plan literals, cell = struct-greatest
-    *     over nlist codegen'd cosines. Oracle-replayable (e5 embeds the
-    *     same construction in SQL) but the generated code grows O(nlist).
+    *   - nlist ≤ 64: centroids as plan literals. Oracle-replayable (e5
+    *     embeds the same construction in SQL).
     *   - nlist > 64: the fused [[graft.functions.IvfCellsExpr]] kernel —
     *     centroid matrix + norms + labels ride as reference objects, the
     *     generated loop nest is fixed-size, per-row cost is exactly
     *     nlist dot products. This is the 100 TB path: nlist scales to ~√n
     *     so the broadcastable probe side stays tiny while each inverted
     *     list stays executor-sized, and assignment cost per row is flat
-    *     in codegen size. (Same argmax ordering — score desc, larger
-    *     label on ties — but unrounded scores, so it is recall-equivalent
-    *     rather than bit-matched to the literal path; requires integral
-    *     ids for the label array.)
+    *     in codegen size.
     */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
       queryPred: Column => Column, k: Int, nlist: Int = 16,
@@ -270,45 +394,22 @@ object Similarity {
       superProbe: Int = 0): DataFrame = {
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"))
-    // index build: deterministic sample — order by a hash of the id, first
-    // nlist. sha2 (not xxhash64) so the e5 oracle can replay the selection
-    // in DuckDB (sha256 ≡ sha2/256, identical lowercase-hex ordering); one
-    // scalar hash per row at index-build time, so the crypto-vs-xx cost
-    // difference is irrelevant even at 100 TB.
-    val centRows = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    // Cells are labeled by the centroid's VEC_ID (not its sample-order
-    // index): score ties then break toward the larger id on both the
-    // Spark side (struct greatest / sort_array desc) and the oracle
-    // (ORDER BY s DESC, cid DESC) — with index labels the two orderings
-    // diverge whenever two sampled centroids tie (e.g. duplicate vectors).
-    val centIds = centRows.map(_.get(0))
-    lazy val centLabels: Array[Long] = centIds.map {
-      case n: java.lang.Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"ivfTopK kernel/refine path needs integral ids, got ${other.getClass}")
-    }
-    val cents: Array[Array[Double]] = {
-      val init = centRows.map(_.getSeq[Double](1).toArray)
-      if (refineIters > 0) kmeansRefine(corpus, "nn_vec", init,
-        centLabels, refineIters)
-      else init
-    }
-    val (listed, probes) = if (nlist <= 64) {
-      // literal-centroid path: oracle-replayable, O(nlist) codegen.
-      literalCells(corpus, queryPred, cents, centIds.toSeq, nprobe)
+    val sampled = Centroids.sample(corpus, nlist)
+    val c =
+      if (refineIters > 0) sampled.copy(vecs = kmeansRefine(corpus,
+        "nn_vec", sampled.vecs, sampled.labels, refineIters))
+      else sampled
+    val (listed, probes) = if (c.literal) {
+      c.cells(corpus, queryPred, nprobe)
     } else {
-      // fused-kernel path: fixed-size codegen regardless of nlist.
       // superProbe > 0 switches to the TWO-LEVEL kernel (Ivf2CellsExpr):
       // per-row arithmetic drops from nlist·d to ~(1+superProbe)·√nlist·d
       // — the configuration for nlist ≫ 10³ where even the flat kernel's
       // per-row dot products dominate.
-      import graft.functions.IvfCells.ivf_cells
       import graft.functions.Ivf2Cells.ivf2_cells
       def cellsOf(v: Column, np: Int): Column =
-        if (superProbe > 0) ivf2_cells(v, cents, centLabels, superProbe, np)
-        else ivf_cells(v, cents, centLabels, np)
+        if (superProbe > 0) ivf2_cells(v, c.vecs, c.labels, superProbe, np)
+        else c.topLabels(v, np)
       val l = corpus.withColumn("cell",
         element_at(cellsOf(col("nn_vec"), 1), 1))
       val p = corpus.filter(queryPred(col("nn_id")))
@@ -319,45 +420,11 @@ object Similarity {
     probedTopK(listed, probes, k)
   }
 
-  /** Literal-centroid cell assignment + query probes — the
-    * oracle-replayable routing shared by [[ivfTopK]]'s nlist ≤ 64 branch
-    * and [[ivfTopKWith]]: cell = argmax of round-9 cosine over the
-    * centroid literals (struct-greatest; ties break toward the larger
-    * label, matching the oracle's ORDER BY s DESC, c DESC), probes =
-    * each query's top-`nprobe` cells by the same ordering. Both outputs
-    * are shuffle-free projections of the corpus scan. Any EXTRA corpus
-    * columns (e.g. [[filteredIvfTopK]]'s nn_label) ride the listed side
-    * unchanged AND the probe side with the nn_ prefix swapped for q_ —
-    * no second corpus pass to re-acquire them. */
-  private def literalCells(corpus: DataFrame, queryPred: Column => Column,
-      cents: Array[Array[Double]], centIds: Seq[Any],
-      nprobe: Int): (DataFrame, DataFrame) = {
-    val nlist = cents.length
-    def centLit(i: Int): Column = array(cents(i).map(lit): _*)
-    def cellScores(v: Column): Column = array((0 until nlist).map(i =>
-      struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-        lit(centIds(i)).as("c"))): _*)
-    val extras = corpus.columns.filterNot(Set("nn_id", "nn_vec")).toSeq
-    val l = corpus.withColumn("cell",
-      greatest((0 until nlist).map(i =>
-        struct(round(cosineFast(col("nn_vec"), centLit(i)), 9).as("s"),
-          lit(centIds(i)).as("c"))): _*).getField("c"))
-    val p = l.filter(queryPred(col("nn_id")))
-      .select(Seq(col("nn_id").as("q_id"), col("nn_vec").as("q_vec"),
-        explode(slice(sort_array(cellScores(col("nn_vec")), asc = false),
-          1, nprobe)).as("pc")) ++
-        extras.map(c => col(c).as("q_" + c.stripPrefix("nn_"))): _*)
-      .select(Seq(col("q_id"), col("q_vec"), col("pc.c").as("cell")) ++
-        extras.map(c => col("q_" + c.stripPrefix("nn_"))): _*)
-    (l, p)
-  }
-
   /** Cluster-balanced subsample — the embedding-space diversity cap the
     * curation stacks run between dedup and mixing (DataComp's cluster
     * sampling; the balancing half of SemDeDup): assign every vector to
-    * its nearest of `nlist` centroids (EXACTLY the e5 literal-path
-    * quantizer — sha-ordered deterministic sample, argmax 9-dp cosine,
-    * larger centroid id on ties), then keep at most `cap` members per
+    * its literal [[Centroids]] cell (the e5 quantizer), then keep at
+    * most `cap` members per
     * cell, chosen by the sha256(id) order the exact samplers already
     * use ([[Sampling]]) so the within-cell choice is unbiased w.r.t.
     * insertion order and replayable in SQL. Returns one row per vector:
@@ -377,13 +444,8 @@ object Similarity {
     require(cap >= 1, s"cap must be positive, got $cap")
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"))
-    val centRows = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    val cents = centRows.map(_.getSeq[Double](1).toArray)
-    val (listed, _) =
-      literalCells(corpus, _ => lit(false), cents,
-        centRows.map(_.get(0)).toSeq, nprobe = 1)
+    val listed = corpus.withColumn("cell",
+      Centroids.sample(corpus, nlist).cellOf(col("nn_vec")))
     val byCell = Window.partitionBy(col("cell"))
     val ord = byCell.orderBy(sha2(col("id").cast("string"), 256),
       col("id"))
@@ -433,8 +495,8 @@ object Similarity {
     * never bites; spec-asserted).
     *
     * Routing, quantizer, and ordering are EXACTLY e5's literal path
-    * (sha-ordered centroid sample, 9-dp argmax assignment, 6-dp ranked
-    * cosine, [[aggTopK]] bounded buffers), so the e25 oracle replays
+    * (literal [[Centroids]] routing, 6-dp ranked cosine, [[aggTopK]]
+    * bounded buffers), so the e25 oracle replays
     * the whole construction plus the filter. 100 TB shape: identical
     * to [[ivfTopK]] — the label adds one narrow column to the listed
     * scan and one equi-condition to the join; selective labels can
@@ -448,15 +510,10 @@ object Similarity {
       s"nlist=$nlist > 64: literal-centroid routing only (kernel routing: ivfTopK)")
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"), col(labelCol).as("nn_label"))
-    val centRows = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    val centIds = centRows.map(_.get(0))
-    val cents: Array[Array[Double]] = centRows.map(_.getSeq[Double](1).toArray)
-    // literalCells carries nn_label through BOTH sides: the listed scan
-    // unchanged, the probe side as q_label — no second corpus pass
-    val (listed, probes) = literalCells(corpus, queryPred,
-      cents, centIds.toSeq, nprobe)
+    // nn_label rides BOTH sides: the listed scan unchanged, the probe
+    // side as q_label — no second corpus pass
+    val (listed, probes) =
+      Centroids.sample(corpus, nlist).cells(corpus, queryPred, nprobe)
     aggTopK(
       broadcast(probes)
         .join(listed.repartition(col("cell")), Seq("cell"))
@@ -469,10 +526,10 @@ object Similarity {
 
   /** IVF top-k against INJECTED centroids — the refined-quantizer face:
     * [[kmeansRefine]]/[[kmeansRefineExact]] produce centroids, this
-    * routes and ranks against them with exactly the e5 literal-path
-    * semantics. Labels keep whatever identity the caller assigned
-    * (typically the seed vector's id), so a refined quantizer's cells
-    * remain comparable to the unrefined ones. */
+    * routes and ranks against them through literal [[Centroids]] (the
+    * e5 semantics, at any nlist). Labels keep whatever identity the
+    * caller assigned (typically the seed vector's id), so a refined
+    * quantizer's cells remain comparable to the unrefined ones. */
   def ivfTopKWith(emb: DataFrame, idCol: String, vecCol: String,
       queryPred: Column => Column, k: Int, cents: Array[Array[Double]],
       centIds: Seq[Any], nprobe: Int = 4): DataFrame = {
@@ -480,22 +537,21 @@ object Similarity {
       s"centroids (${cents.length}) and labels (${centIds.length}) must align")
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"))
-    val (listed, probes) = literalCells(corpus, queryPred, cents, centIds,
-      nprobe)
+    val (listed, probes) = Centroids(centIds.toArray, cents)
+      .cells(corpus, queryPred, nprobe)
     probedTopK(listed, probes, k)
   }
 
   /** Product-quantization ANN top-k (asymmetric distance, the PQ half of
     * the IVF-PQ pairing that is THE standard 100 TB ANN layout): the
     * embedding is split into `m` sub-vectors; each subspace gets a
-    * `ksub`-entry codebook (deterministic sha-ordered corpus sample,
-    * sliced — the same replayable construction as [[ivfTopK]]'s coarse
-    * quantizer); a corpus vector is stored as `m` small codes
-    * (m·log2(ksub) bits ≈ 4 bytes here vs 256 for the raw doubles — the
-    * 64× compression is what lets a 100 TB corpus's index live in
-    * executor memory). Queries keep their exact vector and score corpus
-    * rows by asymmetric distance: L2² between the query and the
-    * RECONSTRUCTION of each corpus row from the codebook.
+    * `ksub`-entry codebook (the [[Centroids.sample]] of [[ivfTopK]]'s
+    * coarse quantizer, sliced per subspace); a corpus vector is stored
+    * as `m` small codes (m·log2(ksub) bits ≈ 4 bytes here vs 256 for the
+    * raw doubles — the 64× compression is what lets a 100 TB corpus's
+    * index live in executor memory). Queries keep their exact vector
+    * and score corpus rows by asymmetric distance: L2² between the
+    * query and the RECONSTRUCTION of each corpus row from the codebook.
     *
     * Numeric contract: the distance folds (query − reconstruction)²
     * over the full dimension in array order — one deterministic
@@ -518,14 +574,12 @@ object Similarity {
     val dim = probeDim(emb, vecCol)
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val sub = dim / m
-    val cbRows = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(ksub).collect()
-    require(cbRows.length == ksub,
+    val cbVecs = Centroids.sample(corpus, ksub).vecs
+    require(cbVecs.length == ksub,
       s"corpus smaller than ksub=$ksub — nothing to quantize against")
     // cb(j)(c) = subspace-j slice of the c-th sampled vector
     val cb: Array[Array[Array[Double]]] = Array.tabulate(m, ksub)((j, c) =>
-      cbRows(c).getSeq[Double](1).slice(j * sub, (j + 1) * sub).toArray)
+      cbVecs(c).slice(j * sub, (j + 1) * sub))
     // fused kernels (graft.functions.PqAdcExpr/PqEncodeExpr): fixed-size
     // codegen loop nests with the codebook as one reference object —
     // bit-identical to the HOF forms below (spec-asserted), ~an order of
@@ -582,15 +636,8 @@ object Similarity {
     * codebook for the per-query LUT). `listed` carries the fix-2
     * evaluation boundary (repartitioned by cell — also its production
     * clustering). */
-  final case class IvfPqIndex(listed: DataFrame, centIds: Array[Any],
-      cents: Array[Array[Double]], cb: Array[Array[Array[Double]]],
-      dim: Int, nlist: Int) {
-    def centLit(i: Int): Column = array(cents(i).map(lit): _*)
-    /** (rounded cosine, cell-label) struct array for routing a query. */
-    def cellScores(v: Column): Column = array((0 until nlist).map(i =>
-      struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-        lit(centIds(i)).as("c"))): _*)
-  }
+  final case class IvfPqIndex(listed: DataFrame, centroids: Centroids,
+      cb: Array[Array[Array[Double]]], dim: Int)
 
   def buildIvfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 16): IvfPqIndex = {
@@ -605,27 +652,20 @@ object Similarity {
     // are the coarse centroids (full vectors, cosine routing), rows
     // 0..ksub-1 sliced per subspace are the PQ codebook — identical to
     // pqTopK's, so e8 and e9 share codes bit-for-bit.
-    val sample = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(math.max(nlist, ksub)).collect()
-    require(sample.length >= math.max(nlist, ksub),
+    val sample = Centroids.sample(corpus, math.max(nlist, ksub))
+    require(sample.nlist >= math.max(nlist, ksub),
       s"corpus smaller than max(nlist=$nlist, ksub=$ksub)")
-    val centIds = sample.take(nlist).map(_.get(0))
-    val cents = sample.take(nlist).map(_.getSeq[Double](1).toArray)
+    val cents = Centroids(sample.ids.take(nlist), sample.vecs.take(nlist))
     val cb: Array[Array[Array[Double]]] = Array.tabulate(m, ksub)((j, c) =>
-      sample(c).getSeq[Double](1).slice(j * sub, (j + 1) * sub).toArray)
-    val idx = IvfPqIndex(null, centIds, cents, cb, dim, nlist)
+      sample.vecs(c).slice(j * sub, (j + 1) * sub))
     import graft.functions.PqAdc.pq_encode
     // the stored index: routing cell + codes, vectors dropped;
     // repartition = fix-2 per-row-evaluation boundary + cell clustering
-    val listed = corpus.withColumn("cell",
-        greatest((0 until nlist).map(i =>
-          struct(round(cosineFast(col("nn_vec"), idx.centLit(i)), 9).as("s"),
-            lit(centIds(i)).as("c"))): _*).getField("c"))
+    val listed = corpus.withColumn("cell", cents.cellOf(col("nn_vec")))
       .select(col("cell"), col("nn_id"),
         pq_encode(col("nn_vec"), cb, dim).as("codes"))
       .repartition(col("cell"))
-    idx.copy(listed = listed)
+    IvfPqIndex(listed, cents, cb, dim)
   }
 
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
@@ -653,8 +693,7 @@ object Similarity {
     val probes = corpus.filter(queryPred(col("nn_id")))
       .select(col("nn_id").as("q_id"),
         pq_lut(col("nn_vec"), index.cb, index.dim).as("q_lut"),
-        explode(slice(sort_array(index.cellScores(col("nn_vec")),
-          asc = false), 1, nprobe)).as("pc"))
+        explode(index.centroids.topCells(col("nn_vec"), nprobe)).as("pc"))
       .select(col("q_id"), col("q_lut"), col("pc.c").as("cell"))
     val listed = index.listed
     val cb = index.cb
@@ -686,28 +725,13 @@ object Similarity {
   def saveIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
     val spark = index.listed.sparkSession
     import spark.implicits._
-    val idType = index.listed.schema("nn_id").dataType
-    val centRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    index.centIds.zipWithIndex.foreach { case (cid, i) =>
-      centRows.add(org.apache.spark.sql.Row(i, cid, index.cents(i).toSeq))
-    }
     // three independent faces (disjoint subdirs; the two small ones
     // are driver-local rows) — concurrent jobs per guide §2.6
     graft.pipeline.DeltaRetract.inParallel(
       () => index.listed.write.mode("overwrite")
         .partitionBy("cell").parquet(s"$path/listed"),
-      () => spark.createDataFrame(centRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ord",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("cent_id", idType,
-              nullable = false),
-            org.apache.spark.sql.types.StructField("vec",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType,
-                containsNull = false),
-              nullable = false))))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids"),
+      () => index.centroids.write(spark,
+        index.listed.schema("nn_id").dataType, s"$path/centroids"),
       () => index.cb.zipWithIndex.flatMap { case (codes, j) =>
           codes.zipWithIndex.map { case (sv, c) => (j, c, sv.toSeq) }
         }.toSeq.toDF("j", "c", "subvec")
@@ -720,10 +744,7 @@ object Similarity {
     * shape, loaded in a fresh session. */
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfPqIndex = {
-    val centRows = graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/centroids"))
-      .orderBy("ord").collect()
-    val centIds: Array[Any] = centRows.map(_.get(1))
-    val cents = centRows.map(_.getSeq[Double](2).toArray)
+    val cents = Centroids.read(spark, s"$path/centroids")
     val cbRows = graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/codebook")).collect()
     val m = cbRows.map(_.getInt(0)).max + 1
     val ksub = cbRows.map(_.getInt(1)).max + 1
@@ -740,8 +761,7 @@ object Similarity {
       .select(col("cell").cast(raw.schema("nn_id").dataType).as("cell"),
         col("nn_id"), col("codes"))
       .repartition(col("cell"))
-    IvfPqIndex(listed, centIds, cents, cb,
-      dim = cents.head.length, nlist = cents.length)
+    IvfPqIndex(listed, cents, cb, dim = cents.vecs.head.length)
   }
 
   /** RETRACTION face of the IVF-PQ index artifact — the delete twin of
@@ -793,8 +813,8 @@ object Similarity {
     val newRows = emb
       .select(col(idCol).as("nn_id"), asDouble(col(vecCol)).as("nn_vec"))
       .select(
-        element_at(sort_array(index.cellScores(col("nn_vec")),
-          asc = false), 1).getField("c").as("cell"),
+        element_at(index.centroids.ranked(col("nn_vec")), 1).getField("c")
+          .as("cell"),
         col("nn_id"),
         pq_encode(col("nn_vec"), index.cb, index.dim).as("codes"))
     // re-clustered by cell so the appended index keeps the build's
@@ -823,7 +843,7 @@ object Similarity {
       idCol: String, vecCol: String, removedIds: DataFrame): IvfPqIndex = {
     val rem = Dedup.normalizeRemovedIds(removedIds)
     val surv = emb.join(rem, emb(idCol) === rem("rid"), "left_anti")
-    buildIvfPqIndex(surv, idCol, vecCol, index.nlist,
+    buildIvfPqIndex(surv, idCol, vecCol, index.centroids.nlist,
       m = index.cb.length, ksub = index.cb.head.length)
   }
 
@@ -871,41 +891,22 @@ object Similarity {
     val dim = probeDim(emb, vecCol)
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val sub = dim / m
-    val sample = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    require(sample.length >= nlist, s"corpus smaller than nlist=$nlist")
-    val centIds = sample.map(_.get(0))
-    val cents = sample.map(_.getSeq[Double](1).toArray)
-    def centLit(i: Int): Column = array(cents(i).map(lit): _*)
-    def cellScores(v: Column): Column = array((0 until nlist).map(i =>
-      struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-        lit(centIds(i)).as("c"))): _*)
-    def cellOf(v: Column): Column =
-      greatest((0 until nlist).map(i =>
-        struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-          lit(centIds(i)).as("c"))): _*).getField("c")
-    // residual of a vector against ITS cell's centroid, as one
-    // cell-dispatched subtraction chain (nlist literal branches)
-    def residual(v: Column, cell: Column): Column =
-      (0 until nlist).foldLeft(lit(null).cast("array<double>")) {
-        case (acc, i) => when(cell === lit(centIds(i)),
-          zip_with(v, centLit(i), (x, c) => x - c)).otherwise(acc)
-      }
-    val withRes = corpus.withColumn("cell", cellOf(col("nn_vec")))
-      .withColumn("res", residual(col("nn_vec"), col("cell")))
+    val cents = Centroids.sample(corpus, nlist)
+    require(cents.nlist >= nlist, s"corpus smaller than nlist=$nlist")
+    // residual of a vector against ITS cell's centroid
+    val withRes = corpus.withColumn("cell", cents.cellOf(col("nn_vec")))
+      .withColumn("res", cents.residual(col("nn_vec"), col("cell")))
     // residual codebook: the sha-ordered deterministic sample OFFSET past
     // the centroid rows (a centroid's own residual is ~zero — sampling
     // the same first-nlist rows would degenerate the codebook), taken
     // from the residual table computed in-plan (collect reads, it does
     // not re-derive — so SQL replays it identically)
-    val cbRows = withRes
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist + ksub).select("res").collect().drop(nlist)
-    require(cbRows.length == ksub,
+    val cbVecs = Centroids.sample(withRes.select(col("nn_id"), col("res")),
+      nlist + ksub).vecs.drop(nlist)
+    require(cbVecs.length == ksub,
       s"corpus smaller than nlist=$nlist + ksub=$ksub")
     val cb: Array[Array[Array[Double]]] = Array.tabulate(m, ksub)((j, c) =>
-      cbRows(c).getSeq[Double](0).slice(j * sub, (j + 1) * sub).toArray)
+      cbVecs(c).slice(j * sub, (j + 1) * sub))
     import graft.functions.PqAdc.{pq_encode, pq_lut, pq_lut_adc}
     val listed = withRes.select(col("cell"), col("nn_id"),
       pq_encode(col("res"), cb, dim).as("codes"))
@@ -916,11 +917,10 @@ object Similarity {
     // pays m array reads instead of dim FMAs
     val probes = corpus.filter(queryPred(col("nn_id")))
       .select(col("nn_id").as("q_id"), col("nn_vec").as("q_vec"),
-        explode(slice(sort_array(cellScores(col("nn_vec")), asc = false),
-          1, nprobe)).as("pc"))
+        explode(cents.topCells(col("nn_vec"), nprobe)).as("pc"))
       .select(col("q_id"), col("q_vec"), col("pc.c").as("cell"))
       .withColumn("q_lut",
-        pq_lut(residual(col("q_vec"), col("cell")), cb, dim))
+        pq_lut(cents.residual(col("q_vec"), col("cell")), cb, dim))
       .select(col("q_id"), col("cell"), col("q_lut"))
     // listed.repartition(cell): explicit per-row-evaluation boundary
     // (probedTopK's note). The residual path was incidentally protected
@@ -1091,7 +1091,7 @@ object Similarity {
     * ladder.
     *
     * Build (the expensive half, write-once): vectors are assigned to
-    * the e5 literal-centroid cells, and each node keeps its `degree`
+    * their literal [[Centroids]] cells, and each node keeps its `degree`
     * nearest IN-CELL neighbours by rounded cosine. Per-cell all-pairs
     * is the Σ k_b² shape with the cell grain as the knob (the q60
     * lesson): nlist scales with corpus so cells stay executor-sized;
@@ -1100,8 +1100,8 @@ object Similarity {
     * themselves — one per cell, so the walk can enter any region
     * without cross-cell long-range links.
     *
-    * Determinism (gate contract): cells round to 9 dp with the e5 tie
-    * rule; every similarity rounds to 6 dp with nn_id ties; frontier
+    * Determinism (gate contract): cells follow the [[Centroids]]
+    * contract; every similarity rounds to 6 dp with nn_id ties; frontier
     * candidate sets are DISTINCT (q_id, nn_id) unions, so both engines
     * rank identical sets. Self may ride the frontier (its
     * neighbourhood IS the answer set — that is the greedy walk working)
@@ -1118,19 +1118,11 @@ object Similarity {
       s"unrolled greedy search wants 1..4 hops, got $hops")
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"))
-    val sample = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    require(sample.length == nlist, s"corpus smaller than nlist=$nlist")
-    val centIds = sample.map(_.get(0))
-    val cents = sample.map(_.getSeq[Double](1).toArray)
-    def centLit(i: Int): Column = array(cents(i).map(lit): _*)
-    def cellOf(v: Column): Column = greatest((0 until nlist).map(i =>
-      struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-        lit(centIds(i)).as("c"))): _*).getField("c")
+    val cents = Centroids.sample(corpus, nlist)
+    require(cents.nlist == nlist, s"corpus smaller than nlist=$nlist")
     // the graph: per-row-evaluated cell projection (fix-2 boundary),
     // in-cell pairs, top-`degree` per node
-    val listed = corpus.withColumn("cell", cellOf(col("nn_vec")))
+    val listed = corpus.withColumn("cell", cents.cellOf(col("nn_vec")))
       .repartition(col("cell"))
     val adj = aggTopK(
       listed.as("x").join(listed.as("y"),
@@ -1141,7 +1133,8 @@ object Similarity {
       degree, "nsim", asc = false)
       .select(col("q_id").as("node"), col("nn_id").as("nbr"))
     beamWalk(corpus, adj,
-      corpus.filter(col("nn_id").isInCollection(centIds)).select(col("nn_id")),
+      corpus.filter(col("nn_id").isInCollection(cents.ids))
+        .select(col("nn_id")),
       queryPred, k, beam, hops)
   }
 
@@ -1254,8 +1247,8 @@ object Similarity {
     * SUPERSET of round r's edges and every node's kept-edge quality is
     * elementwise non-decreasing — refinement cannot hurt.
     *
-    * Determinism: the e5/e21 cell/tie contract (9-dp rounded routing
-    * scores) for the assignment, sha-string rep election, 6-dp rounded
+    * Determinism: the [[Centroids]] routing contract for the
+    * assignment, sha-string rep election, 6-dp rounded
     * cosines with nbr-id ties throughout; candidate duplicates (same
     * pair via both shared cells, via forward+reverse, or via several
     * wedges) collapse in the top-k buffer, matching the oracle's
@@ -1267,55 +1260,22 @@ object Similarity {
       nndQuantizer(emb, idCol, vecCol, nlist, reps), degree, rounds)
 
   /** The frozen build artifacts of the NN-descent family — the graph
-    * twin of [[IvfPqIndex]]'s quantizer half: the sha-sampled coarse
-    * centroids (top-2 cell routing) plus the per-cell elected
+    * twin of [[IvfPqIndex]]'s quantizer half: the [[Centroids]] (top-2
+    * cell routing, literal or kernel) plus the per-cell elected
     * representative table `(cell, rep_id, rep_vec)` the seed scores
     * against. Training it ONCE and passing it explicitly
     * ([[nnDescentAdjWith]]) is what makes incremental maintenance
     * well-defined: with the quantizer frozen, every node's SEED edges
     * are independent of every other node, so appending vectors cannot
     * silently re-seed the archive ([[nnDescentAppend]]'s contract). */
-  final case class NndQuantizer(centIds: Array[Any],
-      cents: Array[Array[Double]], reps: DataFrame) {
-    def nlist: Int = cents.length
-    /** Top-2 cell labels for a vector, best first — literal-centroid
-      * expression for nlist ≤ 64 (oracle-replayable: 9-dp rounded
-      * cosines, larger cell id on ties), the fixed-size
-      * [[graft.functions.IvfCellsExpr]] codegen kernel beyond (the
-      * production configuration where nlist scales with the corpus —
-      * same two-path contract as `ivfTopKWith`; kernel path needs
-      * integral ids and is spec-certified, not oracle-replayed). */
-    private[Similarity] def assignTop2(v: Column): Column =
-      if (nlist <= 64) {
-        def centLit(i: Int): Column = array(cents(i).map(lit): _*)
-        transform(
-          slice(sort_array(array((0 until nlist).map(i =>
-            struct(round(cosineFast(v, centLit(i)), 9).as("s"),
-              lit(centIds(i)).as("c"))): _*), asc = false), 1, 2),
-          p => p.getField("c"))
-      } else {
-        val labels: Array[Long] = centIds.map {
-          // integral types only — a Double/Float id would silently
-          // TRUNCATE through longValue() and collide distinct centroids
-          case n: java.lang.Long => n.longValue()
-          case n: java.lang.Integer => n.longValue()
-          case n: java.lang.Short => n.longValue()
-          case n: java.lang.Byte => n.longValue()
-          case other => throw new IllegalArgumentException(
-            s"nnd kernel path needs integral ids, got ${other.getClass}")
-        }
-        graft.functions.IvfCells.ivf_cells(v, cents, labels, 2)
-      }
-  }
+  final case class NndQuantizer(centroids: Centroids, reps: DataFrame)
 
-  /** Train an [[NndQuantizer]] from a corpus: sha-ordered centroid
-    * sample, top-2 multi-assignment, per-cell election of the first
-    * `reps` members by (sha2(id), id) — via the bounded-buffer
-    * aggregate, no per-cell sort. nlist ≤ 64 routes cells through the
-    * literal-centroid expression (oracle-replayable); larger nlist —
-    * the 100 TB configuration, cells sized to executors by GROWING
-    * nlist with the corpus — routes through the fixed-size codegen
-    * kernel. */
+  /** Train an [[NndQuantizer]] from a corpus: [[Centroids]] sample,
+    * top-2 multi-assignment, per-cell election of the first `reps`
+    * members by (sha2(id), id) — via the bounded-buffer aggregate, no
+    * per-cell sort. Larger nlist — the 100 TB configuration, cells
+    * sized to executors by GROWING nlist with the corpus — routes
+    * through the fixed-size codegen kernel. */
   def nndQuantizer(emb: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, reps: Int = 8): NndQuantizer = {
     require(nlist >= 1 && nlist <= 65536, s"nlist=$nlist outside 1..65536")
@@ -1330,16 +1290,11 @@ object Similarity {
       s"nlist=$nlist × reps=$reps > 2^20 rep-election buffer entries")
     val corpus = emb.select(col(idCol).as("nn_id"),
       asDouble(col(vecCol)).as("nn_vec"))
-    val sample = corpus
-      .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-      .limit(nlist).collect()
-    require(sample.length == nlist, s"corpus smaller than nlist=$nlist")
-    val centIds: Array[Any] = sample.map(_.get(0))
-    val cents = sample.map(_.getSeq[Double](1).toArray)
-    val q = NndQuantizer(centIds, cents, null)
+    val cents = Centroids.sample(corpus, nlist)
+    require(cents.nlist == nlist, s"corpus smaller than nlist=$nlist")
     val assigned = corpus
       .select(col("nn_id"), col("nn_vec"),
-        explode(q.assignTop2(col("nn_vec"))).as("cell"))
+        explode(cents.topLabels(col("nn_vec"), 2)).as("cell"))
     val cellReps = assigned
       .groupBy(col("cell"))
       .agg(graft.functions.TopK.topk_gen(
@@ -1354,7 +1309,7 @@ object Similarity {
     // append's delta seed) reads 512 rows instead of re-running the
     // election; measured: the un-materialized lineage was ~the whole
     // append floor (34 s of 34 s at 100k archive)
-    q.copy(reps = cellReps.localCheckpoint(false))
+    NndQuantizer(cents, cellReps.localCheckpoint(false))
   }
 
   /** [[nnDescentAdj]] with an explicitly-supplied (frozen) quantizer —
@@ -1380,7 +1335,7 @@ object Similarity {
     // nothing below fans this projection out)
     val assigned = corpus
       .select(col("nn_id"), col("nn_vec"),
-        explode(quant.assignTop2(col("nn_vec"))).as("cell"))
+        explode(quant.centroids.topLabels(col("nn_vec"), 2)).as("cell"))
     aggTopK(
       assigned.join(broadcast(quant.reps), Seq("cell"))
         .filter(col("nn_id") =!= col("rep_id"))
@@ -1477,12 +1432,6 @@ object Similarity {
   def saveNndIndex(index: NndIndex, path: String): Unit = {
     val spark = index.refined.sparkSession
     import spark.implicits._
-    val idType = index.quant.reps.schema("rep_id").dataType
-    val centRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    index.quant.centIds.zipWithIndex.foreach { case (cid, i) =>
-      centRows.add(org.apache.spark.sql.Row(i, cid,
-        index.quant.cents(i).toSeq))
-    }
     // the five faces are independent (disjoint subdirs; refined/seed
     // consume only the index's already-materialized or deterministic
     // lineage, exactly as they did written sequentially) — concurrent
@@ -1496,19 +1445,8 @@ object Similarity {
         .parquet(s"$path/reps"),
       () => Seq(index.degree).toDF("degree")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/meta"),
-      () => spark.createDataFrame(centRows,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ord",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("cent_id", idType,
-              nullable = false),
-            org.apache.spark.sql.types.StructField("vec",
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.DoubleType,
-                containsNull = false),
-              nullable = false))))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/centroids"))
+      () => index.quant.centroids.write(spark,
+        index.quant.reps.schema("rep_id").dataType, s"$path/centroids"))
   }
 
   /** Restore a [[saveNndIndex]] artifact; serving and appending from
@@ -1516,10 +1454,7 @@ object Similarity {
     * (spec-asserted in a fresh session). */
   def loadNndIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): NndIndex = {
-    val centRows = graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/centroids"))
-      .orderBy("ord").collect()
-    val quant = NndQuantizer(centRows.map(_.get(1)),
-      centRows.map(_.getSeq[Double](2).toArray),
+    val quant = NndQuantizer(Centroids.read(spark, s"$path/centroids"),
       graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/reps")))
     NndIndex(quant, graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/seed")),
       graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/refined")),
@@ -1637,7 +1572,7 @@ object Similarity {
       .limit(1).count() > 0
 
   private def centHitNorm(index: NndIndex, rem: DataFrame): Boolean =
-    rem.filter(col("rid").isInCollection(index.quant.centIds.toSeq))
+    rem.filter(col("rid").isInCollection(index.quant.centroids.ids.toSeq))
       .limit(1).count() > 0
 
   /** [[retractNndIndex]] body under an already-normalized,
@@ -1709,7 +1644,7 @@ object Similarity {
     val rem = Dedup.normalizeRemovedIds(removedIds)
     val surv = emb.join(rem, emb(idCol) === rem("rid"), "left_anti")
     buildNndIndexWith(surv, idCol, vecCol,
-      nndQuantizer(surv, idCol, vecCol, index.quant.nlist, reps),
+      nndQuantizer(surv, idCol, vecCol, index.quant.centroids.nlist, reps),
       index.degree)
   }
 
@@ -1739,7 +1674,7 @@ object Similarity {
       index: NndIndex, queryPred: Column => Column, k: Int,
       beam: Int, hops: Int): DataFrame = {
     val entryIds = emb
-      .filter(col(idCol).isInCollection(index.quant.centIds.toSeq))
+      .filter(col(idCol).isInCollection(index.quant.centroids.ids.toSeq))
       .select(col(idCol))
     graphServeTopK(emb, idCol, vecCol, index.refined, entryIds,
       queryPred, k, beam, hops)
@@ -1931,9 +1866,8 @@ object Similarity {
     * [[kmeansRefine]] (assign → per-cell mean → empty cells keep their
     * centroid) made bit-reproducible and oracle-replayable:
     *
-    *   - assignment uses the LITERAL-centroid construction (round-9
-    *     cosine, ties toward the larger label) — exactly the e5/e13
-    *     oracle's ORDER BY s DESC, c DESC;
+    *   - assignment is the literal [[Centroids]] cell (labels as ids) —
+    *     exactly the e5/e13 oracle's ORDER BY s DESC, c DESC;
     *   - the per-cell mean folds vectors in ascending-id order
     *     (array_sort(collect_list(struct(id, v))) then a sequential
     *     aggregate per dimension — the d28 fold pattern, ≡ DuckDB
@@ -1955,12 +1889,8 @@ object Similarity {
       asDouble(col(vecCol)).as("v"))
     var cents = centroids
     for (_ <- 0 until iters) {
-      val nlist = cents.length
-      def centLit(i: Int): Column = array(cents(i).map(lit): _*)
       val assigned = corpus.withColumn("cell",
-        greatest((0 until nlist).map(i =>
-          struct(round(cosineFast(col("v"), centLit(i)), 9).as("s"),
-            lit(labels(i)).as("c"))): _*).getField("c"))
+        Centroids(labels.map(l => l: Any), cents).cellOf(col("v")))
       val refined = assigned.groupBy(col("cell"))
         .agg(count(lit(1)).as("n"),
           array_sort(collect_list(struct(col("id"), col("v")))).as("sv"))

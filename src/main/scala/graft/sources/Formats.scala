@@ -43,14 +43,6 @@ object Formats {
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(path)
 
-  /** JSONL flavor of [[readParquetStream]] — same contract, text input. */
-  def readJsonlStream(spark: SparkSession, path: String,
-      schema: StructType, maxFilesPerTrigger: Int = 1000): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .json(path)
-
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.option("header", header.toString).mode("overwrite").csv(path)
 

@@ -4,7 +4,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Completion/failure observability (SURVEY §2a R11/R12).
@@ -15,9 +14,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * In Spark a batch action IS the barrier — the job doesn't return until
   * every task (hence every row of every sink write) has completed, and
   * task failures retry then propagate. What remains worth replicating is
-  * the *observability*: these listeners log per-query success/failure and
-  * per-microbatch progress the way the reference's handlers logged per
-  * transmission.
+  * the *observability*: this listener logs per-query success/failure the
+  * way the reference's handlers logged per transmission.
   */
 object Listeners {
 
@@ -39,30 +37,9 @@ object Listeners {
     }
   }
 
-  /** Streaming progress logger — the 1 Hz loop's per-tick print
-    * (core.clj:74-77) becomes per-microbatch progress. */
-  final class TickListener extends StreamingQueryListener {
-    val batches = new AtomicLong(0)
-    override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      batches.incrementAndGet()
-      ()
-    }
-    override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-  }
-
   def installAck(spark: SparkSession): AckListener = {
     val l = new AckListener
     spark.listenerManager.register(l)
-    l
-  }
-
-  def installTick(spark: SparkSession): TickListener = {
-    val l = new TickListener
-    spark.streams.addListener(l)
     l
   }
 }

@@ -695,8 +695,7 @@ object StreamQueries {
     val probes = input.toDF().toDF("q_id", "q_vec")
       .select(col("q_id"),
         pq_lut(col("q_vec"), index.cb, index.dim).as("q_lut"),
-        explode(slice(sort_array(index.cellScores(col("q_vec")),
-          asc = false), 1, 4)).as("pc"))
+        explode(index.centroids.topCells(col("q_vec"), 4)).as("pc"))
       .select(col("q_id"), col("q_lut"), col("pc.c").as("cell"))
     val ranked = probes.join(index.listed, Seq("cell"))
       .filter(col("q_id") =!= col("nn_id"))
@@ -796,8 +795,8 @@ object StreamQueries {
     val input = MemoryStream[(Long, Seq[Double])]
     val enc = input.toDF().toDF("vec_id", "v")
       .select(
-        element_at(sort_array(index.cellScores(col("v")), asc = false), 1)
-          .getField("c").as("cell"),
+        element_at(index.centroids.ranked(col("v")), 1).getField("c")
+          .as("cell"),
         col("vec_id"),
         array_join(pq_encode(col("v"), index.cb, index.dim)
           .cast("array<string>"), "-").as("codes_str"))

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * item 5): `tools/doc_drift.py` extracts the registry from the
   * `QueryDef` registrations, expands README/SURVEY id ranges, and fails
   * on a registry id README never mentions, an id either doc mentions
-  * that the registry doesn't have, or a backticked `Object.member` in
-  * README that names no member in `src/main`. */
+  * that the registry doesn't have, a backticked `Object.member` in
+  * README that names no member in `src/main`, or a scaladoc link in
+  * `src/main` that names no declaration there. */
 class DocDriftSpec extends AnyFunSuite {
 
   /** Exit code and output of `tools/doc_drift.py` over `root`. */
@@ -45,6 +46,33 @@ class DocDriftSpec extends AnyFunSuite {
       assert(rc === 1, out)
       assert(out.contains("references members not in src/main") &&
         out.contains("Rollups.writeRawPhantom"), out)
+    } finally graft.TmpHygiene.rmTree(root.toString)
+  }
+
+  test("doc_drift.py fails on a dangling scaladoc link in src/main") {
+    val root = Files.createTempDirectory("graft_doclinks")
+    try {
+      Files.copy(Paths.get("README.md"), root.resolve("README.md"))
+      Files.copy(Paths.get("SURVEY.md"), root.resolve("SURVEY.md"))
+      val src = Paths.get("src/main/scala")
+      val walk = Files.walk(src)
+      try walk.forEach { f =>
+        val to = root.resolve("src/main/scala")
+          .resolve(src.relativize(f).toString)
+        if (Files.isDirectory(f)) Files.createDirectories(to)
+        else Files.copy(f, to)
+      } finally walk.close()
+      Files.writeString(root.resolve("src/main/scala/graft/Phantom.scala"),
+        "package graft\n/** Routes like [[Similarity.literalCells]], " +
+          "[[assignTop2]], [[Rollups.cellOf]] and [[Similarity.cellOf]]. " +
+          "*/\nobject Phantom\n")
+      val (rc, out) = docDrift(root.toString)
+      assert(rc === 1, out)
+      assert(out.contains("dangling scaladoc links"), out)
+      Seq("[[Similarity.literalCells]]", "[[assignTop2]]",
+        "[[Rollups.cellOf]]").foreach(l => assert(out.contains(l), out))
+      // a member of the named owner resolves
+      assert(!out.contains("[[Similarity.cellOf]]"), out)
     } finally graft.TmpHygiene.rmTree(root.toString)
   }
 

@@ -735,7 +735,7 @@ object ScaleProbe {
       .select("vec_id")
       .join(idx.quant.reps.select(col("rep_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
-      .filter(!col("vec_id").isInCollection(idx.quant.centIds.toSeq))
+      .filter(!col("vec_id").isInCollection(idx.quant.centroids.ids.toSeq))
       .localCheckpoint(true)
     println(s"[probe] retract/nnd takedown=${removable.count()}")
     val t1 = System.nanoTime()
@@ -831,10 +831,7 @@ object ScaleProbe {
           .select(col("vec_id").as("nn_id"),
             col("embedding").cast("array<double>").as("nn_vec"))
         val bRows = surv.withColumn("cell",
-            greatest((0 until idx.nlist).map(i =>
-              struct(round(pipeline.Similarity.cosineFast(col("nn_vec"),
-                idx.centLit(i)), 9).as("s"),
-                lit(idx.centIds(i)).as("c"))): _*).getField("c"))
+            idx.centroids.cellOf(col("nn_vec")))
           .select(col("cell"), col("nn_id"),
             graft.functions.PqAdc.pq_encode(col("nn_vec"), idx.cb,
               idx.dim).as("codes"))

@@ -209,31 +209,21 @@ object Scratch {
         .localCheckpoint(true)
       val (nlist, nprobe, m, ksub, dim) = (16, 4, 8, 16, 64)
       val sub = dim / m
-      val sample = corpus
-        .orderBy(sha2(col("nn_id").cast("string"), 256), col("nn_id"))
-        .limit(math.max(nlist, ksub)).collect()
-      val centIds = sample.take(nlist).map(_.get(0))
-      val cents = sample.take(nlist).map(_.getSeq[Double](1).toArray)
+      val sample = pipeline.Similarity.Centroids.sample(corpus,
+        math.max(nlist, ksub))
+      val cents = pipeline.Similarity.Centroids(sample.ids.take(nlist),
+        sample.vecs.take(nlist))
       val cb = Array.tabulate(m, ksub)((j, c) =>
-        sample(c).getSeq[Double](1).slice(j * sub, (j + 1) * sub).toArray)
-      def centLit(i: Int) = array(cents(i).map(lit): _*)
-      def cos(v: org.apache.spark.sql.Column, i: Int) =
-        round(functions.CosineSim.cosine_sim(v, centLit(i)), 9)
+        sample.vecs(c).slice(j * sub, (j + 1) * sub))
       import functions.PqAdc.{pq_adc, pq_encode, pq_lut, pq_lut_adc}
-      val listed = corpus.withColumn("cell",
-          greatest((0 until nlist).map(i =>
-            struct(cos(col("nn_vec"), i).as("s"),
-              lit(centIds(i)).as("c"))): _*).getField("c"))
+      val listed = corpus.withColumn("cell", cents.cellOf(col("nn_vec")))
         .select(col("cell"), col("nn_id"),
           pq_encode(col("nn_vec"), cb, dim).as("codes"),
           col("nn_vec"))
         .localCheckpoint(true)   // index build EXCLUDED from all timings
       val probes = corpus.filter(col("nn_id") < nq)
         .select(col("nn_id").as("q_id"), col("nn_vec").as("q_vec"),
-          explode(slice(sort_array(array((0 until nlist).map(i =>
-            struct(cos(col("nn_vec"), i).as("s"),
-              lit(centIds(i)).as("c"))): _*), asc = false),
-            1, nprobe)).as("pc"))
+          explode(cents.topCells(col("nn_vec"), nprobe)).as("pc"))
         .select(col("q_id"), col("q_vec"),
           pq_lut(col("q_vec"), cb, dim).as("q_lut"),
           col("pc.c").as("cell"))

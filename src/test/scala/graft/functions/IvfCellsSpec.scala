@@ -57,6 +57,22 @@ class IvfCellsSpec extends SparkSpec {
     assert(got == Seq(9L, 3L))
   }
 
+  test("literal router ties break toward the larger label too") {
+    // the same rule on the literal path: two SAMPLED centroids with
+    // identical vectors — cellOf picks the larger id, topCells lists it
+    // first
+    import spark.implicits._
+    val corpus = Seq((3L, cents(0).toSeq), (9L, cents(0).toSeq),
+      (1L, cents(1).toSeq)).toDF("nn_id", "nn_vec")
+    val c = graft.pipeline.Similarity.Centroids.sample(corpus, 3)
+    assert(c.ids.toSet == Set(1L, 3L, 9L))
+    val got = Seq(cents(0).toSeq).toDF("v").select(
+        c.cellOf(col("v")),
+        transform(c.topCells(col("v"), 2), _.getField("c")))
+      .as[(Long, Seq[Long])].head()
+    assert(got == ((9L, Seq(9L, 3L))))
+  }
+
   test("nprobe > nlist returns all cells, best first") {
     val v = Seq.fill(dim)(rnd.nextDouble())
     val got = viaDf(Seq(v), 99).head

@@ -381,10 +381,12 @@ class PipelineSpec extends SparkSpec {
       // quantizer artifacts round-trip exactly
       val fresh = spark.newSession()
       val loaded = Similarity.loadIvfPqIndex(fresh, dir)
-      assert(loaded.centIds.toSeq === idx.centIds.toSeq)
-      assert(loaded.cents.flatten.toSeq === idx.cents.flatten.toSeq)
+      assert(loaded.centroids.ids.toSeq === idx.centroids.ids.toSeq)
+      assert(loaded.centroids.vecs.flatten.toSeq ===
+        idx.centroids.vecs.flatten.toSeq)
       assert(loaded.cb.flatten.flatten.toSeq === idx.cb.flatten.flatten.toSeq)
-      assert(loaded.dim === idx.dim && loaded.nlist === idx.nlist)
+      assert(loaded.dim === idx.dim &&
+        loaded.centroids.nlist === idx.centroids.nlist)
       // serving from the loaded artifact in the fresh session is
       // row-identical to e9's build-and-query gate path
       val gate = Similarity.ivfPqTopK(emb, "vec_id", "embedding", _ < 20, k = 5)
@@ -415,7 +417,7 @@ class PipelineSpec extends SparkSpec {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toString).sorted.toSeq
       // estimator survives: quantizer + codebook untouched by design
-      assert(ret.centIds.toSeq === idx.centIds.toSeq)
+      assert(ret.centroids.ids.toSeq === idx.centroids.ids.toSeq)
       assert(ret.cb.flatten.flatten.toSeq === idx.cb.flatten.flatten.toSeq)
       // retract ≡ rebuild (frozen quantizer): the anti-joined stored
       // codes equal the SURVIVORS re-encoded from raw vectors through
@@ -424,11 +426,7 @@ class PipelineSpec extends SparkSpec {
       val surv = emb.join(removed, Seq("vec_id"), "left_anti")
         .select(col("vec_id").as("nn_id"),
           col("embedding").cast("array<double>").as("nn_vec"))
-      val reenc = surv.withColumn("cell",
-          greatest((0 until idx.nlist).map(i =>
-            struct(round(Similarity.cosineFast(col("nn_vec"),
-              idx.centLit(i)), 9).as("s"),
-              lit(idx.centIds(i)).as("c"))): _*).getField("c"))
+      val reenc = surv.withColumn("cell", idx.centroids.cellOf(col("nn_vec")))
         .select(col("cell"), col("nn_id"),
           pq_encode(col("nn_vec"), idx.cb, idx.dim).as("codes"))
       assert(rows(ret.listed) === rows(reenc))
@@ -462,7 +460,7 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     // estimator survives: a re-crawl must not silently re-train
-    assert(upd.centIds.toSeq === idx.centIds.toSeq)
+    assert(upd.centroids.ids.toSeq === idx.centroids.ids.toSeq)
     assert(upd.cb.flatten.flatten.toSeq === idx.cb.flatten.flatten.toSeq)
     // update ≡ the UPDATED corpus freshly routed + encoded under the
     // frozen quantizer (kept archive rows' stored codes included —
@@ -500,14 +498,15 @@ class PipelineSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     // migrate ≡ fresh-build-over-survivors on EVERY face
-    assert(mig.centIds.toSeq === fresh.centIds.toSeq)
-    assert(mig.cents.flatten.toSeq === fresh.cents.flatten.toSeq)
+    assert(mig.centroids.ids.toSeq === fresh.centroids.ids.toSeq)
+    assert(mig.centroids.vecs.flatten.toSeq ===
+      fresh.centroids.vecs.flatten.toSeq)
     assert(mig.cb.flatten.flatten.toSeq === fresh.cb.flatten.flatten.toSeq)
     assert(rows(mig.listed) === rows(fresh.listed))
     // the re-train is load-bearing at a 2/3 takedown: the survivor
     // sample diverges from the frozen quantizer's (this is the drift
     // e30's recall row instruments and migration repairs)
-    assert(mig.centIds.toSeq !== idx.centIds.toSeq,
+    assert(mig.centroids.ids.toSeq !== idx.centroids.ids.toSeq,
       "a 2/3 takedown left the quantizer sample unchanged — the " +
         "fixture no longer exercises the re-train")
     // serve-after-migrate: a retracted id is never returned
@@ -579,7 +578,7 @@ class PipelineSpec extends SparkSpec {
     val removable = emb.filter(col("vec_id") % 9 === 4).select("vec_id")
       .join(idx.quant.reps.select(col("rep_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
-      .filter(!col("vec_id").isInCollection(idx.quant.centIds.toSeq))
+      .filter(!col("vec_id").isInCollection(idx.quant.centroids.ids.toSeq))
       .localCheckpoint(true)
     assert(removable.count() > 0, "fixture must yield a non-empty takedown")
     val surv = emb.join(removable, Seq("vec_id"), "left_anti")
@@ -613,7 +612,7 @@ class PipelineSpec extends SparkSpec {
         Seq(repId).toDF("vec_id"))
     }
     assert(eRep.getMessage.contains("REPRESENTATIVE"))
-    val centId = idx.quant.centIds.head.asInstanceOf[Long]
+    val centId = idx.quant.centroids.ids.head.asInstanceOf[Long]
     val eCent = intercept[IllegalArgumentException] {
       Similarity.retractNndIndex(idx, emb, "vec_id", "embedding",
         Seq(centId).toDF("vec_id"))
@@ -646,7 +645,7 @@ class PipelineSpec extends SparkSpec {
     assert(rows(migrated.refined) === rows(fresh.refined))
     // the re-trained quantizer no longer anchors on the retracted rep
     assert(migrated.quant.reps.filter(col("rep_id") === repId).count() === 0)
-    assert(!migrated.quant.centIds.contains(repId))
+    assert(!migrated.quant.centroids.ids.contains(repId))
     // the takedown is honored: serve never returns a retracted id
     val removedSet = takedown.collect().map(_.getLong(0)).toSet
     val served = Similarity.graphServeTopK(surv, "vec_id", "embedding",
@@ -660,12 +659,12 @@ class PipelineSpec extends SparkSpec {
     val plain = emb.filter(col("vec_id") % 9 === 4).select("vec_id")
       .join(idx.quant.reps.select(col("rep_id").as("vec_id")),
         Seq("vec_id"), "left_anti")
-      .filter(!col("vec_id").isInCollection(idx.quant.centIds.toSeq))
+      .filter(!col("vec_id").isInCollection(idx.quant.centroids.ids.toSeq))
       .localCheckpoint(true)
     assert(!Similarity.hitsNndAnchor(idx, plain))
     val routed = Similarity.retractOrMigrateNndIndex(idx, emb,
       "vec_id", "embedding", plain)
-    assert(routed.quant.centIds.toSeq === idx.quant.centIds.toSeq,
+    assert(routed.quant.centroids.ids.toSeq === idx.quant.centroids.ids.toSeq,
       "fast path must keep the frozen quantizer")
     val fast = Similarity.retractNndIndex(idx, emb, "vec_id", "embedding",
       plain)
@@ -681,8 +680,9 @@ class PipelineSpec extends SparkSpec {
       Similarity.saveNndIndex(idx, dir)
       val fresh = spark.newSession()
       val loaded = Similarity.loadNndIndex(fresh, dir)
-      assert(loaded.quant.centIds.toSeq === idx.quant.centIds.toSeq)
-      assert(loaded.quant.cents.flatten.toSeq === idx.quant.cents.flatten.toSeq)
+      assert(loaded.quant.centroids.ids.toSeq === idx.quant.centroids.ids.toSeq)
+      assert(loaded.quant.centroids.vecs.flatten.toSeq ===
+        idx.quant.centroids.vecs.flatten.toSeq)
       // serving from the loaded artifact in a fresh session matches the
       // in-session build (both walk the same persisted adjacency)
       val archF = Tables.load(fresh, sf(), "embeddings")
@@ -764,7 +764,7 @@ class PipelineSpec extends SparkSpec {
     // (nlist grows with the corpus; literal centroids stop at 64)
     val quant = Similarity.nndQuantizer(emb, "vec_id", "embedding",
       nlist = 128, reps = 4)
-    assert(quant.nlist === 128)
+    assert(quant.centroids.nlist === 128)
     val adj0 = Similarity.nnDescentAdjWith(emb, "vec_id", "embedding",
       quant, rounds = 0)
     val adj1 = Similarity.nnDescentAdjWith(emb, "vec_id", "embedding",
@@ -1044,12 +1044,11 @@ class PipelineSpec extends SparkSpec {
     val corpus = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     // initial quantizer exactly as ivfTopK builds it
-    val centRows = corpus
-      .orderBy(sha2(col("vec_id").cast("string"), 256), col("vec_id"))
-      .limit(16).collect()
-    val labels = centRows.map(_.getLong(0))
-    val init = centRows.map(_.getSeq[Double](1).toArray)
-    val refined = Similarity.kmeansRefine(corpus, "v", init, labels, iters = 2)
+    val sampled =
+      Similarity.Centroids.sample(corpus.toDF("nn_id", "nn_vec"), 16)
+    val init = sampled.vecs
+    val refined = Similarity.kmeansRefine(corpus, "v", init, sampled.labels,
+      iters = 2)
     // objective: mean best-centroid cosine, computed with independent math
     val vecs = corpus.collect().map(_.getSeq[Double](1).toArray)
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -1067,6 +1066,22 @@ class PipelineSpec extends SparkSpec {
     val r = Similarity.ivfTopK(emb, "vec_id", "embedding", _ < 20, 5,
       nlist = 16, nprobe = 4, refineIters = 1)
     assert(r.count() === 100)
+  }
+
+  test("ivfTopK refine rejects non-integral ids instead of merging cells") {
+    // DOUBLE ids x.25/x.75 and every row a centroid: truncated to longs,
+    // each pair of centroids would share one label and kmeansRefine
+    // would average the two cells into one
+    val emb = Tables.load(spark, sf(), "embeddings")
+      .filter(col("vec_id") < 8)
+      .select(((col("vec_id") / 2).cast("long") +
+        when(col("vec_id") % 2 === 0, 0.25).otherwise(0.75)).as("id"),
+        col("embedding"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(emb, "id", "embedding", _ < 1.0, k = 2,
+        nlist = 8, nprobe = 2, refineIters = 1)
+    }
+    assert(e.getMessage.contains("java.lang.Double"), e.getMessage)
   }
 
   test("groupSafeSplit: near-dup groups never straddle a split boundary") {
@@ -1102,11 +1117,8 @@ class PipelineSpec extends SparkSpec {
     val emb = Tables.load(spark, sf(), "embeddings")
     val corpus = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
-    val centRows = corpus
-      .orderBy(sha2(col("vec_id").cast("string"), 256), col("vec_id"))
-      .limit(8).collect()
-    val labels = centRows.map(_.getLong(0))
-    val init = centRows.map(_.getSeq[Double](1).toArray)
+    val sampled = Similarity.Centroids.sample(corpus.toDF("nn_id", "nn_vec"), 8)
+    val (labels, init) = (sampled.labels, sampled.vecs)
     // production face: kernel assignment, free-order partial sums
     val prod = Similarity.kmeansRefine(corpus, "v", init, labels, iters = 1)
     // certification face: literal round-9 assignment, ascending-id fold,

@@ -124,7 +124,7 @@ class UpdateFacesSpec extends SparkSpec {
     val e = graft.Tables.load(spark, sf(), "embeddings")
     val idx = Similarity.buildNndIndex(e, "vec_id", "embedding")
     val anchorIds = idx.quant.reps.select(col("rep_id")).collect()
-      .map(_.getLong(0)).toSet ++ idx.quant.centIds
+      .map(_.getLong(0)).toSet ++ idx.quant.centroids.ids
     val isUpd = (c: org.apache.spark.sql.Column) =>
       c % 9 === 4 && !c.isInCollection(anchorIds.toSeq)
     val updated = e.select(col("vec_id"),

@@ -20,7 +20,8 @@
 #                           subtotal over 1.8x or short of its members,
 #                           prints `warn` above 90% of the limit)
 #   7. doc_drift.py        (README/SURVEY query-id sync with the registry;
-#                           README `Object.member` references resolve)
+#                           README `Object.member` references and
+#                           src/main scaladoc links resolve)
 #
 # Usage: tools/ci.sh [sfDir]         (default /root/testdata/sf0.01)
 # Exits non-zero on the first failing stage.

@@ -17,6 +17,11 @@ and fails (exit 1) when:
      `member` in a src/main/scala file that declares `object`/`class`/
      `trait` `Object` (phantom reference -- a renamed or deleted member).
      `NAME.md`-style file names are not references.
+  4. a scaladoc link `[[name]]` / `[[a.b.Name]]` in src/main/scala names
+     no `def`/`val`/`class`/`object`/`trait`/`type` in src/main/scala
+     (dangling link -- a renamed or deleted member). A dotted link whose
+     owner segment is capitalized must resolve in a file that declares
+     that owner.
 
 SURVEY.md is phantom-checked only: it is the design blueprint, and its
 §2 tables cite ids as evidence -- citing a nonexistent id is drift, but
@@ -75,6 +80,31 @@ def phantom_refs(root: Path, path: Path) -> list:
     return out
 
 
+LINK_RE = re.compile(r"\[\[([^\]]+)\]\]")
+
+
+def dangling_links(root: Path) -> list:
+    """`file: [[link]]` for every scaladoc link in src/main/scala that
+    names no declaration there."""
+    files = sorted((root / "src" / "main" / "scala").rglob("*.scala"))
+    sources = [f.read_text() for f in files]
+    out = []
+    for f, text in zip(files, sources):
+        # a link may wrap across scaladoc lines (`[[Sampling\n * .shaBucket]]`)
+        links = {re.sub(r"\s*\n\s*\*?\s*", "", l) for l in LINK_RE.findall(text)}
+        for link in sorted(links):
+            parts = link.split(".")
+            defn = re.compile(rf"\b(?:def|val|class|object|trait|type)\s+{re.escape(parts[-1])}\b")
+            if len(parts) > 1 and parts[-2][:1].isupper():
+                owner = re.compile(rf"\b(?:object|class|trait)\s+{re.escape(parts[-2])}\b")
+                ok = any(owner.search(s) and defn.search(s) for s in sources)
+            else:
+                ok = any(defn.search(s) for s in sources)
+            if not ok:
+                out.append(f"{f.relative_to(root)}: [[{link}]]")
+    return out
+
+
 COUNT_CLAIM_RE = re.compile(r"\*\*(\d+) registered queries, (\d+) with DuckDB oracles")
 
 
@@ -112,13 +142,18 @@ def main() -> int:
     if refs:
         failures.append(f"README.md references members not in src/main: {', '.join(refs)}")
 
+    links = dangling_links(root)
+    if links:
+        failures.append(f"dangling scaladoc links: {', '.join(links)}")
+
     if failures:
         print("doc drift: FAILED")
         for f in failures:
             print("  " + f)
         return 1
     print(f"doc drift: ok ({len(reg)} registry ids; README mentions all; "
-          f"no phantoms in README/SURVEY; README member references resolve)")
+          f"no phantoms in README/SURVEY; README member references and "
+          f"scaladoc links resolve)")
     return 0
 
 
