@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, size, sum}
 
-import graft.meter.{GenConfig, MeterGen, MeterStore, Rollups, SaidSeed}
+import graft.meter.{GenConfig, MeterGen, MeterStore, Rollups, SaidSeed, Schemas}
+import graft.plans.RollupRouting
 import graft.sources.ParquetSink
 import graft.streaming.MeterStream
 
@@ -32,7 +33,7 @@ object Main {
     val raw = MeterGen.transmissions(spark, cfg)
     MeterStore.writeRaw(raw, outDir)
     val sink = new ParquetSink(outDir)
-    Rollups.writeAll(MeterGen.reduceToSecond(raw, cfg))((grain, df) =>
+    Rollups.writeAll(MeterGen.reduceToSecond(raw))((grain, df) =>
       sink.write(df, s"meter_samples_$grain"))
   }
 
@@ -43,16 +44,16 @@ object Main {
     * fold runs `float_array_sum` over stored arrays. */
   def goldenChain(spark: SparkSession, outDir: String,
       numMeters: Int, ticks: Long): Boolean = {
-    def back(t: String) = spark.read.parquet(s"$outDir/$t")
-    val raw = back("meter_samples")
+    val store = MeterStore(outDir)
+    val raw = store.raw(spark)
     val rawCount = raw.count()
     val arrayOk = raw.select(size(col("watts")).as("n"))
       .filter(col("n") =!= 15000).isEmpty
     val expected = ticks * 59L // core.clj:37-46
     println(f"%n[demo] ${"table"}%-22s rows    meters  total_joules  expect")
     val tables = ("raw fold" -> MeterGen.reduceToSecond(raw)) +:
-      Seq("second", "minute", "hour", "day").map(g =>
-        s"meter_samples_$g" -> back(s"meter_samples_$g"))
+      RollupRouting.storedGrains.map(g =>
+        s"meter_samples_$g" -> store.table(spark, g))
     val grainOk = tables.map { case (name, t) =>
       val per = t.groupBy("said")
         .agg(sum(col("joules")).as("j")).orderBy("said")
@@ -108,9 +109,9 @@ object Main {
       ticks = ticks)
 
     if (streamMode) {
-      val raw = MeterStream.rateTransmissions(spark, cfg, rowsPerSecond = 1)
+      val raw = MeterStream.rateTransmissions(spark, cfg)
       val q = MeterStream.writeRollups(
-        MeterStream.toSecond(raw, cfg), outDir, s"$outDir/_checkpoint")
+        MeterGen.reduceToSecond(raw), outDir, s"$outDir/_checkpoint")
         .start()
       q.awaitTermination(ticks * 1000 + 10000)
       q.stop()
@@ -119,8 +120,7 @@ object Main {
         // the sink appends (streaming-friendly); a demo re-run must not
         // double the tables, so clear exactly the five dirs it owns
         val hconf = spark.sparkContext.hadoopConfiguration
-        ("meter_samples" +: Seq("second", "minute", "hour", "day")
-          .map(g => s"meter_samples_$g")).foreach { t =>
+        Schemas.all.keys.foreach { t =>
           val p = new org.apache.hadoop.fs.Path(s"$outDir/$t")
           val fs = p.getFileSystem(hconf)
           if (fs.exists(p)) fs.delete(p, true)

@@ -11,16 +11,15 @@ import graft.functions.FloatArraySum.float_array_sum
 /** Generator configuration (reference: /root/reference/src/cassaforte_test/core.clj:12-18).
   *
   * The reference emits, per meter ("said" = service account id) and per second,
-  * one transmission of `sampleRate` instantaneous watt samples following a
-  * deterministic sawtooth `i -> i mod sawtoothPeriod` (core.clj:37-41).
+  * one transmission of [[MeterGen.SampleRate]] instantaneous watt samples
+  * following the fixed sawtooth `i -> i mod` [[MeterGen.SawtoothPeriod]]
+  * (core.clj:37-41); only the fleet and the time range vary.
   */
 final case class GenConfig(
     numMeters: Int = 2,          // core.clj:16-18
     startSaid: Int = 0,          // seeded via SaidSeed.saidSeed(hostId) in the CLI path (core.clj:27-35)
     startEpochSec: Long = 1704067200L, // 2024-01-01T00:00:00Z
-    ticks: Long = 60L,           // one transmission per second per meter (core.clj:173-176)
-    sampleRate: Int = 15000,     // core.clj:12-14
-    sawtoothPeriod: Int = 120)   // core.clj:41
+    ticks: Long = 60L)           // one transmission per second per meter (core.clj:173-176)
 
 /** Batch generator for the reference's meter data model, expressed as
   * Catalyst expressions (no UDFs) and embarrassingly parallel: `spark.range`
@@ -38,24 +37,31 @@ final case class GenConfig(
   */
 object MeterGen {
 
-  /** watts[i] = float(i mod period) for i in [0, sampleRate) — the memoized
-    * sawtooth of core.clj:37-41 as one `UnsafeArrayData` literal typed like
-    * `Schemas.meterSamples`: it constant-folds and prints as one token. */
-  def wattsExpr(cfg: GenConfig): Column = {
-    val buf = Array.tabulate(cfg.sampleRate)(i => (i % cfg.sawtoothPeriod).toFloat)
+  /** Samples per transmission: the 15 kHz `SAMPLE_RATE` (core.clj:12-14). */
+  val SampleRate = 15000
+
+  /** Period of the watt sawtooth 0..119 (core.clj:41). */
+  val SawtoothPeriod = 120
+
+  /** watts[i] = float(i mod SawtoothPeriod) for i in [0, SampleRate) — the
+    * memoized sawtooth of core.clj:37-41 as one `UnsafeArrayData` literal
+    * typed like `Schemas.meterSamples`: it constant-folds and prints as one
+    * token. */
+  def wattsExpr: Column = {
+    val buf = Array.tabulate(SampleRate)(i => (i % SawtoothPeriod).toFloat)
     bridge.column(Literal(UnsafeArrayData.fromPrimitiveArray(buf),
       ArrayType(FloatType, containsNull = true)))
   }
 
-  /** joules = int(sum(watts) / sampleRate) — float sum then truncation toward
+  /** joules = int(sum(watts) / SampleRate) — float sum then truncation toward
     * zero (core.clj:43-46). The sum is the `float_array_sum` codegen kernel
     * ([[graft.functions.FloatArraySumExpr]]): a float accumulator added in
     * index order, bit-identical to the interpreted
     * `aggregate(watts, 0.0f, (acc, x) -> acc + x)`. On the sawtooth all
     * partial sums are integers < 2^24, so the golden value is 59
     * (SURVEY §5.3). */
-  def joulesExpr(watts: Column, cfg: GenConfig): Column =
-    (float_array_sum(watts) / lit(cfg.sampleRate.toFloat)).cast("int")
+  def joulesExpr(watts: Column): Column =
+    (float_array_sum(watts) / lit(SampleRate.toFloat)).cast("int")
 
   /** Transmissions (said INT, datetime TIMESTAMP, watts ARRAY<FLOAT>) of the
     * row indices (tick * numMeters + m) in column `index`: the key
@@ -65,7 +71,7 @@ object MeterGen {
       (col(index) % cfg.numMeters + cfg.startSaid).cast("int").as("said"),
       timestamp_seconds(
         expr(s"$index DIV ${cfg.numMeters}") + cfg.startEpochSec).as("datetime"),
-      wattsExpr(cfg).as("watts"))
+      wattsExpr.as("watts"))
 
   /** Raw transmissions: one row per meter per second, no shuffle. */
   def transmissions(spark: SparkSession, cfg: GenConfig): DataFrame = {
@@ -80,12 +86,12 @@ object MeterGen {
     * transmissions (core.clj:111-120); optimized, `Range → Project [said,
     * datetime, 59 AS joules]`. */
   def secondTable(spark: SparkSession, cfg: GenConfig): DataFrame =
-    reduceToSecond(transmissions(spark, cfg), cfg)
+    reduceToSecond(transmissions(spark, cfg))
 
   /** Reduce a raw transmissions frame to the per-second table (the write-time
     * reduction of core.clj:93: arrays are reduced to joules BEFORE any
     * stateful/shuffling op so wide rows never cross the wire). */
-  def reduceToSecond(raw: DataFrame, cfg: GenConfig = GenConfig()): DataFrame =
+  def reduceToSecond(raw: DataFrame): DataFrame =
     raw.select(col("said"), col("datetime"),
-      joulesExpr(col("watts"), cfg).as("joules"))
+      joulesExpr(col("watts")).as("joules"))
 }

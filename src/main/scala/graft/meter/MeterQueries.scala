@@ -38,8 +38,8 @@ object MeterQueries {
         col("said"), col("datetime"),
         size(col("watts")).as("n_samples"),
         element_at(col("watts"), 1).as("w_first"),
-        element_at(col("watts"), m1Cfg.sampleRate).as("w_last"),
-        MeterGen.joulesExpr(col("watts"), m1Cfg).as("joules"))
+        element_at(col("watts"), MeterGen.SampleRate).as("w_last"),
+        MeterGen.joulesExpr(col("watts")).as("joules"))
       .orderBy("said", "datetime")
 
   private val m1Oracle =

@@ -289,8 +289,11 @@ object Similarity {
       struct(round(cosineFast(v, vecLit(i)), 9).as("s"),
         lit(ids(i)).as("c")))
 
-    /** The cell label of `v`. */
-    def cellOf(v: Column): Column = greatest(scores(v): _*).getField("c")
+    /** The cell label of `v`. One centroid is every row's cell; Spark's
+      * `greatest` needs at least two arguments. */
+    def cellOf(v: Column): Column =
+      if (nlist == 1) lit(ids(0))
+      else greatest(scores(v): _*).getField("c")
 
     /** Every (s, c) cell score of `v`, best first. */
     def ranked(v: Column): Column =

@@ -73,9 +73,6 @@ object CqlBind {
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
   }
 
-  /** Lowercase hex of a value's protocol-v4 bytes (null → null). The
-    * hex intermediate is what makes the encoders pure builtin
-    * composition; [[encode]] folds it to real bytes with one unhex. */
   /** hex() widens every integral to 64-bit, so a negative value
     * arrives sign-extended to 16 chars. Take the LOW `w` chars FIRST
     * (right), THEN zero-pad short positives — the other order is wrong:
@@ -85,6 +82,9 @@ object CqlBind {
   private def fixedHex(c: Column, w: Int): Column =
     lower(lpad(right(hex(c), lit(w)), w, "0"))
 
+  /** Lowercase hex of a value's protocol-v4 bytes (null → null). The
+    * hex intermediate is what makes the encoders pure builtin
+    * composition. */
   def hexOf(c: Column, dt: DataType): Column = dt match {
     case IntegerType => fixedHex(c, 8)
     case LongType => fixedHex(c, 16)
@@ -106,9 +106,6 @@ object CqlBind {
     case other => throw new IllegalArgumentException(
       s"no CQL encoding for Spark type ${other.sql}")
   }
-
-  /** Raw protocol-v4 value bytes (BINARY column; null stays null). */
-  def encode(c: Column, dt: DataType): Column = unhex(hexOf(c, dt))
 
   /** EXECUTE-message bound form, hex: [int length][bytes], length -1
     * (`ffffffff`) for NULL — the exact per-value frame a driver writes. */

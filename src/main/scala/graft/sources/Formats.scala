@@ -31,18 +31,6 @@ object Formats {
       .option("mode", "PERMISSIVE")
       .json(path)
 
-  /** File-watch streaming source: new files dropped into `path` become
-    * micro-batches (SURVEY §2b file stream source). Schema is required —
-    * streaming reads never infer. `maxFilesPerTrigger` bounds batch size so
-    * a backlogged directory (a day of missed files at 100 TB rates) drains
-    * as many right-sized batches instead of one giant one. */
-  def readParquetStream(spark: SparkSession, path: String,
-      schema: StructType, maxFilesPerTrigger: Int = 1000): DataFrame =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(path)
-
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.option("header", header.toString).mode("overwrite").csv(path)
 

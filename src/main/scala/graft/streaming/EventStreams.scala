@@ -2,12 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-stream operators over the `events` fixture shape: tumbling /
-  * sliding / session windows and arbitrary-state gap detection. Batch and
+  * sliding / session windows, interval joins, and two arbitrary-state
+  * operators — gap detection and forward fill — each one
+  * `flatMapGroupsWithState` holding one small value per key. Batch and
   * streaming share the same expressions, so batch runs serve as the oracle
   * for the streaming path (asserted in StreamingSpec).
   */
@@ -75,46 +77,6 @@ object EventStreams {
           last.foreach(state.update)
           gaps.result().iterator
       }
-  }
-
-  /** Same gap detection on `transformWithState` — Spark 4's arbitrary-state
-    * processor API (typed per-key state handles, RocksDB-backed, timers).
-    * State is one epoch-millis ValueState per user; at scale that is the
-    * smallest possible state row, and TTL could bound it further for
-    * abandoned keys (kept NONE here to match detectGaps semantics exactly).
-    */
-  final class GapProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Ping, Gap] {
-    @transient private var lastSeen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      lastSeen = getHandle.getValueState[Long]("lastSeen",
-        Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(uid: Long, rows: Iterator[Ping],
-        timerValues: TimerValues): Iterator[Gap] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var last = if (lastSeen.exists()) Some(lastSeen.get()) else None
-      val gaps = Seq.newBuilder[Gap]
-      sorted.foreach { p =>
-        last.foreach { prev =>
-          val silent = p.ts.getTime - prev
-          if (silent > gapMs) gaps += Gap(uid, new Timestamp(prev), silent)
-        }
-        last = Some(p.ts.getTime)
-      }
-      last.foreach(lastSeen.update)
-      gaps.result().iterator
-    }
-  }
-
-  /** detectGaps re-expressed on the transformWithState API. Requires the
-    * RocksDB state store provider (the only provider the operator supports). */
-  def detectGapsTws(pings: Dataset[Ping], gapMs: Long): Dataset[Gap] = {
-    import pings.sparkSession.implicits._
-    pings.groupByKey(_.user_id)
-      .transformWithState(new GapProcessor(gapMs),
-        TimeMode.None(), OutputMode.Append())
   }
 
   case class HourObs(user_id: Long, hour_ms: Long, v: Long)

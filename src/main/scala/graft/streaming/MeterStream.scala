@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.Row
 
 import graft.meter.{GenConfig, MeterGen, Rollups}
@@ -13,53 +12,30 @@ import graft.meter.{GenConfig, MeterGen, Rollups}
   * micro-batch; Cassandra counter increments become idempotent re-aggregation
   * inside foreachBatch (SURVEY §7.3).
   *
-  * Scale/state design: arrays are reduced to joules BEFORE any stateful op
-  * (mirroring core.clj:93), so per-(said, window) state is a few bytes —
-  * watermark state for a 1M-meter fleet at minute grain is ~tens of MB per
-  * executor, not GBs of sample arrays.
+  * The stream keeps no state between micro-batches: arrays are reduced to
+  * joules before the sink (mirroring core.clj:93), and each batch writes
+  * its own partial of every grain. A late row lands in the partial of the
+  * batch that carries it and is summed with the others on read, so no row
+  * is dropped for arriving late — as Cassandra counters accept any late
+  * increment.
   */
 object MeterStream {
 
-  /** Rate-source transmissions: `rowsPerSecond` rows/s/meter. Each rate
-    * row's `value` is a row index, mapped to (said, datetime, watts) by the
-    * batch generator's own [[MeterGen.fromRowIndex]]. */
-  def rateTransmissions(spark: SparkSession, cfg: GenConfig,
-      rowsPerSecond: Int = 1000): DataFrame =
+  /** Rate-source transmissions: one row per meter per second, the
+    * reference's 1 Hz cadence (core.clj:173-176). Each rate row's `value`
+    * is a row index, mapped to (said, datetime, watts) by the batch
+    * generator's own [[MeterGen.fromRowIndex]]. */
+  def rateTransmissions(spark: SparkSession, cfg: GenConfig): DataFrame =
     MeterGen.fromRowIndex(
       spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond.toLong * cfg.numMeters)
+        .option("rowsPerSecond", cfg.numMeters.toLong)
         .load(),
       "value", cfg)
 
   /** Per-second reduction on a stream: [[MeterGen.reduceToSecond]], a
-    * stateless projection. */
-  def toSecond(stream: DataFrame, cfg: GenConfig = GenConfig()): DataFrame =
-    MeterGen.reduceToSecond(stream, cfg)
-
-  /** Streaming rollup at `grain` with a watermark: tumbling event-time
-    * window + grouped sum. Late rows beyond the watermark are dropped — the
-    * documented divergence from Cassandra counters (which accept arbitrarily
-    * late increments); batch re-aggregation restores them (SURVEY §7.3). */
-  def rollupStream(second: DataFrame, grain: String,
-      watermark: String = "2 minutes"): DataFrame = {
-    val windowDur = grain match {
-      case "minute" => "1 minute"
-      case "hour" => "1 hour"
-      case "day" => "1 day"
-    }
-    second
-      .withWatermark("datetime", watermark)
-      .groupBy(col("said"), window(col("datetime"), windowDur))
-      .agg(sum(col("joules").cast("long")).as("joules"))
-      .select(col("said"), col("window.start").as("datetime"), col("joules"))
-  }
-
-  /** Stream-side dedup restoring the upsert/LWW idempotence of the
-    * Cassandra data model (setup_and_notes.txt:20) that counters lack. */
-  def dedupWithinWatermark(second: DataFrame,
-      watermark: String = "2 minutes"): DataFrame =
-    second.withWatermark("datetime", watermark)
-      .dropDuplicatesWithinWatermark("said", "datetime")
+    * stateless projection. Kept as the streaming entry point because the
+    * benchmark's `meter_stream` workload calls it. */
+  def toSecond(stream: DataFrame): DataFrame = MeterGen.reduceToSecond(stream)
 
   /** foreachBatch sink: per micro-batch, write all grains of the batch's
     * second-grain rows through [[Rollups.writeAll]] (one shuffle on `said`,

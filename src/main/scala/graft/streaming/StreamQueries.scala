@@ -123,9 +123,9 @@ object StreamQueries {
       |ORDER BY c.user_id, click_id, view_id""".stripMargin
 
   // ---- s6: gap detection — "meter silent for more than N" over event
-  // time, the batch-replayable form of EventStreams.detectGaps /
-  // detectGapsTws (the streaming twins are equivalence-asserted against
-  // this exact shape in StreamingSpec). Mirrors the reference's 1 Hz
+  // time, the batch-replayable form of EventStreams.detectGaps (the
+  // stateful operator is equivalence-asserted against this exact shape
+  // in StreamingSpec). Mirrors the reference's 1 Hz
   // cadence contract (core.clj:173-176): a healthy source emits
   // continuously, so any lag(ts) delta above the threshold is an outage
   // row (who, last_seen, how long). Threshold 30 min matches the s1/s4

@@ -49,7 +49,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
     import org.apache.spark.sql.catalyst.plans.logical.Project
     val cfg = GenConfig(numMeters = 2, ticks = 7200)
-    val opt = MeterGen.reduceToSecond(MeterGen.transmissions(spark, cfg), cfg)
+    val opt = MeterGen.reduceToSecond(MeterGen.transmissions(spark, cfg))
       .queryExecution.optimizedPlan
     val joules = opt.collect { case p: Project => p.projectList }.flatten
       .filter(_.name == "joules")
@@ -91,7 +91,7 @@ class PlanSpec extends SparkSpec {
     try {
       val cfg = GenConfig(numMeters = 2, ticks = 3)
       MeterGen.transmissions(spark, cfg).write.parquet(s"$dir/raw")
-      val df = MeterGen.reduceToSecond(spark.read.parquet(s"$dir/raw"), cfg)
+      val df = MeterGen.reduceToSecond(spark.read.parquet(s"$dir/raw"))
       assert(df.collect().forall(_.getInt(2) == 59))
       val executed = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan

@@ -143,7 +143,7 @@ class FloatArraySumSpec extends SparkSpec {
     val cfg = GenConfig(numMeters = 1, ticks = 1)
     val r = MeterGen.transmissions(spark, cfg)
       .select(FloatArraySum.float_array_sum(col("watts")),
-        MeterGen.joulesExpr(col("watts"), cfg))
+        MeterGen.joulesExpr(col("watts")))
       .head()
     assert(r.getFloat(0) === 892500.0f) // core.clj:43-46
     assert(r.getInt(1) === 59)

@@ -17,7 +17,7 @@ class MeterGoldenSpec extends SparkSpec {
       .select(size(col("watts")).as("n"),
         element_at(col("watts"), 1).as("first"),
         element_at(col("watts"), 121).as("wrap"),
-        MeterGen.joulesExpr(col("watts"), cfg).as("j"))
+        MeterGen.joulesExpr(col("watts")).as("j"))
       .distinct().collect()
     assert(row.length === 1) // every transmission identical (core.clj:158)
     assert(row(0).getInt(0) === 15000)
@@ -26,14 +26,11 @@ class MeterGoldenSpec extends SparkSpec {
     assert(row(0).getInt(3) === 59)
   }
 
-  test("sample buffer: float(i mod period) bit for bit, also when " +
-      "sampleRate is not a multiple of the period") {
-    for (cfg <- Seq(GenConfig(), GenConfig(sampleRate = 1000, sawtoothPeriod = 7))) {
-      val got = spark.range(1).select(MeterGen.wattsExpr(cfg)).head().getSeq[Float](0)
-      val want = (0 until cfg.sampleRate).map(i => (i % cfg.sawtoothPeriod).toFloat)
-      assert(got.map(java.lang.Float.floatToRawIntBits) ===
-        want.map(java.lang.Float.floatToRawIntBits), cfg)
-    }
+  test("sample buffer: float(i mod 120) bit for bit over 15000 samples") {
+    val got = spark.range(1).select(MeterGen.wattsExpr).head().getSeq[Float](0)
+    val want = (0 until 15000).map(i => (i % 120).toFloat) // core.clj:12-14, 37-41
+    assert(got.map(java.lang.Float.floatToRawIntBits) ===
+      want.map(java.lang.Float.floatToRawIntBits))
   }
 
   test("rollup chain reproduces golden totals per meter") {

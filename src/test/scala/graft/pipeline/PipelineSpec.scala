@@ -964,6 +964,22 @@ class PipelineSpec extends SparkSpec {
     assert(ivf.groupBy(_._1).forall(_._2.size == 5))
   }
 
+  test("one centroid: ivfTopK is brute force, clusterBalancedSample one cell") {
+    val emb = Tables.load(spark, sf(), "embeddings")
+    // nlist = 1 lists every vector in the one cell, so probing it scores
+    // exactly the pairs brute force scores
+    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", _ < 20, 5)
+      .select("q_id", "nn_id", "sim")
+    val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", _ < 20, 5,
+      nlist = 1, nprobe = 1).select("q_id", "nn_id", "sim")
+    assert(ivf.count() === 20 * 5)
+    assert(ivf.exceptAll(bf).isEmpty && bf.exceptAll(ivf).isEmpty)
+    val cb = Similarity.clusterBalancedSample(emb, "vec_id", "embedding",
+      nlist = 1, cap = 7)
+    assert(cb.select("cell").distinct().count() === 1)
+    assert(cb.agg(sum("kept")).head().getLong(0) === 7L)
+  }
+
   test("ivf kernel path (nlist > 64): assignment matches reference, decent recall") {
     val emb = Tables.load(spark, sf(), "embeddings")
     // nlist=100 > 64 routes through the fused IvfCellsExpr kernel; probe a

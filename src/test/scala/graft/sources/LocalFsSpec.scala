@@ -75,7 +75,7 @@ class LocalFsSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Long]
       val sec = MeterStream.toSecond(
-        MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
+        MeterGen.fromRowIndex(input.toDF(), "value", cfg))
       val q = MeterStream.writeRollups(sec, s"$out/stream", s"$out/_cp")
         .start()
       try {

@@ -11,38 +11,35 @@ import org.scalatest.time.SpanSugar._
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.meter.{GenConfig, MeterGen, Rollups}
+import graft.meter.{GenConfig, MeterGen, MeterStore, Rollups}
 
 /** Streaming correctness: the streamed rollup pipeline must produce exactly
   * the batch rollup on the same input (SURVEY §5.2 point 5), and the
   * arbitrary-state gap detector must fire on the planted gaps. */
 class StreamingSpec extends SparkSpec {
 
-  test("stream minute rollup == batch minute rollup on same ticks") {
+  /** Feed `batches` of `cfg`'s row indices, one micro-batch each, through
+    * toSecond → writeRollups into `out`, and return its store. */
+  private def streamRollups(cfg: GenConfig, out: String,
+      batches: Seq[Long]*): MeterStore = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val cfg = GenConfig(numMeters = 2, ticks = 300)
-
     val input = MemoryStream[Long]
-    input.addData(0L until (cfg.ticks * cfg.numMeters): _*)
-    val secStream = MeterStream.toSecond(
-      MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
+    val q = MeterStream.writeRollups(MeterStream.toSecond(
+      MeterGen.fromRowIndex(input.toDF(), "value", cfg)), out, s"$out/_cp")
+      .start()
+    try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    MeterStore(out)
+  }
 
-    val rolled = MeterStream.rollupStream(secStream, "minute")
-    val q = rolled.writeStream
-      .format("memory").queryName("mins")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // append mode emits only below-watermark windows; advance the
-      // watermark with one late-but-future tick batch
-      input.addData((cfg.ticks * cfg.numMeters) until
-        (cfg.ticks * cfg.numMeters + 2 * 600): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    val streamed = spark.table("mins")
-      .filter(col("datetime") < timestamp_seconds(lit(cfg.startEpochSec + 300)))
+  test("stream minute rollup == batch minute rollup on same ticks") {
+    val cfg = GenConfig(numMeters = 2, ticks = 300)
+    // the cut falls inside minute 2, so two batches' partials of that
+    // minute must sum on read
+    val store = streamRollups(cfg, tmpDir("graft_minute"),
+      0L until 250L, 250L until cfg.ticks * cfg.numMeters)
+    val streamed = store.energyReport(spark, "minute")
     val batch = Rollups.minute(MeterGen.secondTable(spark, cfg))
     assert(streamed.count() === 10) // 5 full minutes × 2 meters
     assert(streamed.exceptAll(batch).count() === 0)
@@ -109,41 +106,6 @@ class StreamingSpec extends SparkSpec {
       "stateful and declarative gap detection diverged")
   }
 
-  test("transformWithState gap detection matches flatMapGroupsWithState") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState supports only the RocksDB state store provider
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[EventStreams.Ping]
-      def ping(u: Long, sec: Long) =
-        EventStreams.Ping(u, new Timestamp(1704067200000L + sec * 1000))
-      input.addData(ping(1, 0), ping(1, 10), ping(1, 400), // gap 390 s
-        ping(2, 0), ping(2, 5)) // no gap
-      val gaps = EventStreams.detectGapsTws(input.toDS(), gapMs = 300000)
-      val q = gaps.writeStream.format("memory").queryName("gaps_tws")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        input.addData(ping(2, 1000)) // state survives across batches
-        q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("gaps_tws").as[EventStreams.Gap].collect()
-        .sortBy(g => (g.user_id, g.last_seen.getTime))
-      assert(got.length === 2)
-      assert(got(0).user_id === 1 && got(0).silent_ms === 390000)
-      assert(got(1).user_id === 2 && got(1).silent_ms === 995000)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
-  }
-
   test("foreachBatch rollup sink: idempotent multi-grain write, golden totals") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -151,7 +113,7 @@ class StreamingSpec extends SparkSpec {
     val cfg = GenConfig(numMeters = 2, ticks = 120)
     val input = MemoryStream[Long]
     val sec = MeterStream.toSecond(
-      MeterGen.fromRowIndex(input.toDF(), "value", cfg), cfg)
+      MeterGen.fromRowIndex(input.toDF(), "value", cfg))
     // jobs per micro-batch, keyed by the batch id the stream sets on
     // every job it runs (write legs inherit it); the listener bus is in
     // order, so seeing a marker job run after the query proves it has
@@ -188,7 +150,7 @@ class StreamingSpec extends SparkSpec {
     // re-shuffling the batch at every grain took twelve
     assert(jobs.asScala.toMap === Map("0" -> 6, "1" -> 6))
     // round trip through the read API: partials re-aggregate to goldens
-    val store = graft.meter.MeterStore(out)
+    val store = MeterStore(out)
     val minute = store.energyReport(spark, "minute")
     assert(minute.count() === 4) // 2 meters × 2 minutes
     assert(minute.collect().forall(_.getAs[Long]("joules") === 3540L))
@@ -200,20 +162,39 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file stream source: parquet directory drives the same rollup") {
-    import spark.implicits._
     val dir = tmpDir("graft_fs")
+    val out = tmpDir("graft_fs_out")
     val cfg = GenConfig(numMeters = 2, ticks = 60)
     val batchSec = MeterGen.secondTable(spark, cfg)
     batchSec.write.mode("overwrite").parquet(dir)
-    val stream = graft.sources.Formats.readParquetStream(
-      spark, dir, batchSec.schema)
-    val rolled = MeterStream.rollupStream(stream, "minute")
-    val q = rolled.writeStream.format("memory").queryName("fsmins")
-      .outputMode("complete").start()
+    val q = MeterStream.writeRollups(
+      spark.readStream.schema(batchSec.schema).parquet(dir), out, s"$out/_cp")
+      .start()
     try q.processAllAvailable() finally q.stop()
-    val got = spark.table("fsmins")
+    val got = MeterStore(out).energyReport(spark, "minute")
     assert(got.count() === 2) // 1 minute × 2 meters
     assert(got.collect().forall(_.getAs[Long]("joules") === 3540L))
+  }
+
+  test("writeRollups replaces a torn batch dir on replay") {
+    val cfg = GenConfig(numMeters = 2, ticks = 120)
+    val out = tmpDir("graft_torn")
+    // what a crashed, uncommitted attempt at micro-batch 1 leaves behind:
+    // every grain's batch=1 dir holds wrong rows (a third meter, 1000 J/s)
+    val torn = MeterGen.secondTable(spark, cfg.copy(numMeters = 3))
+      .withColumn("joules", lit(1000))
+    Rollups.all(torn).foreach { case (g, df) =>
+      df.write.parquet(s"$out/meter_samples_$g/batch=1")
+    }
+    val store = streamRollups(cfg, out,
+      0L until 150L, 150L until cfg.ticks * cfg.numMeters)
+    // golden rows per grain: 2 meters × 120 s of 59 J
+    for ((g, rows, joules) <- Seq(("second", 240, 59L), ("minute", 4, 3540L),
+        ("hour", 2, 7080L), ("day", 2, 7080L))) {
+      val got = store.energyReport(spark, g).collect()
+      assert(got.length === rows, g)
+      assert(got.forall(_.getAs[Long]("joules") === joules), g)
+    }
   }
 
   test("stream-stream interval join == batch interval join on same events") {
@@ -337,22 +318,13 @@ class StreamingSpec extends SparkSpec {
     } finally StateStores.rocksDb.keys.foreach(spark.conf.unset)
   }
 
-  test("dropDuplicatesWithinWatermark dedups the stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+  test("writeRollups dedups a micro-batch that carries every second twice") {
     val cfg = GenConfig(numMeters = 1, ticks = 60)
-    val input = MemoryStream[Long]
-    val ids = 0L until 60L
-    input.addData(ids ++ ids: _*) // every second twice
-    val sec = input.toDF()
-      .select(lit(0).as("said"),
-        timestamp_seconds(col("value") + cfg.startEpochSec).as("datetime"),
-        lit(59).as("joules"))
-    val deduped = MeterStream.dedupWithinWatermark(sec)
-    val q = deduped.writeStream.format("memory").queryName("dedup")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.table("dedup").count() === 60)
+    val ids = 0L until cfg.ticks
+    val store = streamRollups(cfg, tmpDir("graft_dedup"), ids ++ ids)
+    assert(store.table(spark, "second").count() === 60)
+    val minute = store.energyReport(spark, "minute").collect()
+    assert(minute.length === 1 && minute(0).getAs[Long]("joules") === 3540L)
   }
 
   test("streaming forward fill == batch gapFillHourly, state carried " +
