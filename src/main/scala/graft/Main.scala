@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, size, sum}
+import org.apache.spark.sql.streaming.Trigger
 
-import graft.meter.{GenConfig, MeterGen, MeterStore, Rollups, SaidSeed, Schemas}
+import graft.meter.{GenConfig, MeterGen, MeterStore, SaidSeed}
 import graft.plans.RollupRouting
-import graft.sources.ParquetSink
 import graft.streaming.MeterStream
 
 /** CLI entry point mirroring the reference's `-main` (core.clj:163-176):
@@ -15,9 +15,11 @@ import graft.streaming.MeterStream
   *
   * Batch mode generates a closed time range in one job (the deterministic
   * replacement for the drifting 1 Hz sleep loop); `--stream` drives the
-  * same derivation from a rate source. The starting said is seeded from
-  * the host name via said_seed — "different SAIDs on different hosts,
-  * always the same SAID on the same host" (core.clj:28-30).
+  * same derivation from a rate source. Both write all five tables through
+  * [[MeterStore.writeSlice]], so a re-run replaces its slices. The
+  * starting said is seeded from the host name via said_seed — "different
+  * SAIDs on different hosts, always the same SAID on the same host"
+  * (core.clj:28-30).
   *
   * `demo` is the prove-it-in-30-seconds entry point: it runs the batch
   * program, then READS THE FIVE TABLES BACK FROM DISK and prints the
@@ -27,14 +29,27 @@ import graft.streaming.MeterStream
   */
 object Main {
 
-  /** The batch program: append `cfg`'s transmissions to `outDir` through
-    * [[MeterStore.writeRaw]] and their joules grains through [[Rollups.writeAll]]. */
-  def writeBatch(spark: SparkSession, cfg: GenConfig, outDir: String): Unit = {
-    val raw = MeterGen.transmissions(spark, cfg)
-    MeterStore.writeRaw(raw, outDir)
-    val sink = new ParquetSink(outDir)
-    Rollups.writeAll(MeterGen.reduceToSecond(raw))((grain, df) =>
-      sink.write(df, s"meter_samples_$grain"))
+  /** The batch program: `cfg`'s transmissions, written to `outDir` as the
+    * slice named by their first second. */
+  def writeBatch(spark: SparkSession, cfg: GenConfig, outDir: String): Unit =
+    MeterStore.writeSlice(MeterGen.transmissions(spark, cfg), outDir, cfg.startEpochSec)
+
+  /** The live program: micro-batch k of [[MeterStream.rateTransmissions]]
+    * is written to `outDir` as slice k, once a second, until batch
+    * `ticks - 1` has committed. A re-run resumes from the checkpoint, and
+    * a batch past the last tick writes nothing. */
+  def writeStream(spark: SparkSession, cfg: GenConfig, outDir: String): Unit = {
+    val q = MeterStream.rateTransmissions(spark, cfg).writeStream
+      .trigger(Trigger.ProcessingTime("1 second"))
+      .option("checkpointLocation", s"$outDir/_checkpoint")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        if (id < cfg.ticks) MeterStore.writeSlice(batch, outDir, id)
+      }
+      .start()
+    try {
+      while (Option(q.lastProgress).forall(_.batchId < cfg.ticks - 1) &&
+          !q.awaitTermination(50)) ()
+    } finally q.stop()
   }
 
   /** Read the five tables back and print/check the golden chain. Returns
@@ -53,7 +68,7 @@ object Main {
     println(f"%n[demo] ${"table"}%-22s rows    meters  total_joules  expect")
     val tables = ("raw fold" -> MeterGen.reduceToSecond(raw)) +:
       RollupRouting.storedGrains.map(g =>
-        s"meter_samples_$g" -> store.table(spark, g))
+        MeterStore.grainTable(g) -> store.table(spark, g))
     val grainOk = tables.map { case (name, t) =>
       val per = t.groupBy("said")
         .agg(sum(col("joules")).as("j")).orderBy("said")
@@ -67,7 +82,7 @@ object Main {
       ok
     }
     val rawOk = rawCount == numMeters * ticks && arrayOk
-    println(f"[demo] meter_samples (raw)   $rawCount%7d rows, 15000-sample arrays " +
+    println(f"[demo] ${MeterStore.RawTable} (raw)   $rawCount%7d rows, 15000-sample arrays " +
       s"${if (rawOk) "OK" else "FAIL"}")
     println(s"[demo] golden chain: ${ticks}x59 J/meter at every grain: " +
       s"${if (grainOk.forall(identity) && rawOk) "ALL OK" else "FAILED"}")
@@ -108,33 +123,11 @@ object Main {
     val cfg = GenConfig(numMeters = numMeters, startSaid = startSaid,
       ticks = ticks)
 
-    if (streamMode) {
-      val raw = MeterStream.rateTransmissions(spark, cfg)
-      val q = MeterStream.writeRollups(
-        MeterGen.reduceToSecond(raw), outDir, s"$outDir/_checkpoint")
-        .start()
-      q.awaitTermination(ticks * 1000 + 10000)
-      q.stop()
-    } else {
-      if (demoMode) {
-        // the sink appends (streaming-friendly); a demo re-run must not
-        // double the tables, so clear exactly the five dirs it owns
-        val hconf = spark.sparkContext.hadoopConfiguration
-        Schemas.all.keys.foreach { t =>
-          val p = new org.apache.hadoop.fs.Path(s"$outDir/$t")
-          val fs = p.getFileSystem(hconf)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-      }
-      writeBatch(spark, cfg, outDir)
-      println(s"[graft] wrote raw + 4 rollup tables to $outDir")
-      if (demoMode) {
-        val ok = goldenChain(spark, outDir, numMeters, ticks)
-        spark.stop()
-        if (!ok) sys.exit(1)
-        return
-      }
-    }
+    if (streamMode) writeStream(spark, cfg, outDir)
+    else writeBatch(spark, cfg, outDir)
+    println(s"[graft] wrote raw + 4 rollup tables to $outDir")
+    val ok = !demoMode || goldenChain(spark, outDir, numMeters, ticks)
     spark.stop()
+    if (!ok) sys.exit(1)
   }
 }

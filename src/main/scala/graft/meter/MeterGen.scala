@@ -33,7 +33,7 @@ final case class GenConfig(
   * Scale note: at 100 TB the raw table dominates (~46 KB/row,
   * /root/reference/setup_and_notes.txt:48-53). `transmissions` parallelizes on
   * the range source; raw output is laid out by `date(datetime)` and a
-  * said-bucket (see MeterStore.writeRaw).
+  * said-bucket (see MeterStore.writeSlice).
   */
 object MeterGen {
 

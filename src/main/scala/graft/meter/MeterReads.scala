@@ -1,6 +1,6 @@
 package graft.meter
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.RollupRouting
@@ -19,13 +19,13 @@ import graft.plans.RollupRouting
   */
 final case class MeterStore(baseDir: String) {
   def table(spark: SparkSession, grain: String): DataFrame =
-    spark.read.parquet(s"$baseDir/meter_samples_$grain")
+    spark.read.parquet(s"$baseDir/${MeterStore.grainTable(grain)}")
 
   def raw(spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$baseDir/meter_samples")
+    spark.read.parquet(s"$baseDir/${MeterStore.RawTable}")
 
   /** Q1: all raw values for meters in a time range — prunes on the
-    * dt/said_bucket layout written by [[MeterStore.writeRaw]]. */
+    * dt/said_bucket layout [[MeterStore.writeSlice]] writes in every slice. */
   def rawRange(spark: SparkSession, saids: Seq[Int],
       from: String, to: String): DataFrame =
     raw(spark).filter(
@@ -36,11 +36,9 @@ final case class MeterStore(baseDir: String) {
 
   /** Q2: consumption report at `grain`, routed to the coarsest stored
     * rollup that can answer it exactly, then re-aggregated on the grain
-    * key. The re-aggregation is idempotent on batch-written tables (keys
-    * already unique) and REQUIRED on stream-written ones, where
-    * MeterStream.writeRollups stores per-micro-batch partials — summing
-    * them here is exactly the composition the reference delegated to
-    * Cassandra counter adds (core.clj:121-153). `grain` is a
+    * key: it sums the partials of every slice ([[MeterStore.writeSlice]])
+    * in the store, the composition the reference delegated to Cassandra
+    * counter adds (core.clj:121-153). `grain` is a
     * `date_trunc` unit; one no stored table answers (a misspelling, or
     * a sub-second unit) throws `IllegalArgumentException`. */
   def energyReport(spark: SparkSession, grain: String): DataFrame = {
@@ -60,12 +58,30 @@ object MeterStore {
   /** Said buckets of the raw table's layout. */
   val SaidBuckets = 16
 
-  /** Append `raw` to `baseDir/meter_samples` in the layout Q1 reads
-    * (setup_and_notes.txt:46): partitioned by date, so time predicates
-    * prune, then by said bucket; zstd, as arrays dominate bytes. */
-  def writeRaw(raw: DataFrame, baseDir: String): Unit =
-    new graft.sources.ParquetSink(baseDir, Map("meter_samples" -> Seq("dt", "said_bucket")))
-      .write(raw.withColumn("dt", to_date(col("datetime")))
-        .withColumn("said_bucket", pmod(col("said"), lit(SaidBuckets))),
-        "meter_samples")
+  /** The store's table names, those of the reference DDL
+    * (setup_and_notes.txt:16-44): the raw transmissions, and the joules
+    * table of each grain. */
+  val RawTable = "meter_samples"
+  def grainTable(grain: String): String = s"${RawTable}_$grain"
+
+  /** Write the transmissions `raw` as slice `slice` of all five tables,
+    * each an overwrite of `<table>/batch=<slice>`, so a re-run of the slice
+    * (a repeated backfill range, a replayed micro-batch, a retry after a
+    * crash between two writes) replaces it. Raw is laid out for Q1
+    * (setup_and_notes.txt:46): by date, so time predicates prune, then by
+    * said bucket. */
+  def writeSlice(raw: DataFrame, baseDir: String, slice: Long): Unit = {
+    raw.withColumn("dt", to_date(col("datetime")))
+      .withColumn("said_bucket", pmod(col("said"), lit(SaidBuckets)))
+      .write.mode("overwrite").partitionBy("dt", "said_bucket")
+      .parquet(s"$baseDir/$RawTable/batch=$slice")
+    writeGrains(MeterGen.reduceToSecond(raw), baseDir, slice)
+  }
+
+  /** Write the per-second rows `second` as slice `slice` of the four
+    * joules tables, through [[Rollups.writeAll]]. */
+  def writeGrains(second: DataFrame, baseDir: String, slice: Long): Unit =
+    Rollups.writeAll(second) { (grain, df) =>
+      df.write.mode("overwrite").parquet(s"$baseDir/${grainTable(grain)}/batch=$slice")
+    }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * per-second joules stays 32-bit exactly as the DDL declares — SURVEY
   * §7.4 overflow note). The PRIMARY KEY (said, datetime) becomes the
   * dedup/rollup grouping key (Rollups.dedupe) and the write layout's
-  * partition+sort order (MeterStore.writeRaw, Bucketing).
+  * partition+sort order (MeterStore.writeSlice, Bucketing).
   */
 object Schemas {
 
@@ -30,11 +30,4 @@ object Schemas {
   /** meter_samples_minute / _hour / _day: counter tables → 64-bit sums. */
   val meterSamplesRollup: StructType =
     meterTable(StructField("joules", LongType, nullable = true))
-
-  val all: Map[String, StructType] = Map(
-    "meter_samples" -> meterSamples,
-    "meter_samples_second" -> meterSamplesSecond,
-    "meter_samples_minute" -> meterSamplesRollup,
-    "meter_samples_hour" -> meterSamplesRollup,
-    "meter_samples_day" -> meterSamplesRollup)
 }

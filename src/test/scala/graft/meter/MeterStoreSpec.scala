@@ -3,7 +3,6 @@ package graft.meter
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.ParquetSink
 
 /** Read-side API over the written store layout: Q1 raw-range extraction must
   * prune partitions (the 100 TB property — a said+time query reads only its
@@ -14,18 +13,17 @@ class MeterStoreSpec extends SparkSpec {
   // 18 meters × 2 days spanning a midnight boundary, starting 2023-12-31
   // 12:00. With 16 said buckets saids 1 and 17 share bucket 1, so a raw
   // range over said 1 must filter on said, not only on its partition. The
-  // per-second table stands in for the raw one in the raw layout (the layout
-  // columns are what the pruning test reads), so the fixture write stays
-  // fast at 3.1M rows.
+  // raw stand-in holds one sample per array, the second's 59 J × 15000 (the
+  // layout columns are what the pruning test reads), so the fixture write
+  // stays fast at 3.1M rows.
   private val cfg = GenConfig(numMeters = 18, ticks = 172800,
     startEpochSec = 1704024000L)
 
   private lazy val store: MeterStore = {
     val dir = tmpDir("graft_store")
-    val sec = MeterGen.secondTable(spark, cfg)
-    MeterStore.writeRaw(sec, dir)
-    val sink = new ParquetSink(dir)
-    Rollups.writeAll(sec)((g, df) => sink.write(df, s"meter_samples_$g"))
+    val raw = MeterGen.secondTable(spark, cfg).select(col("said"),
+      col("datetime"), array(lit(59f * MeterGen.SampleRate)).as("watts"))
+    MeterStore.writeSlice(raw, dir, cfg.startEpochSec)
     MeterStore(dir)
   }
 

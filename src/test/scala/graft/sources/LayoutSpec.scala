@@ -23,11 +23,13 @@ class LayoutSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("raw table layout prunes partitions for meter/time-range reads") {
     val dir = tmpDir("graft_raw")
     val cfg = GenConfig(numMeters = 4, ticks = 172800) // 2 days × 4 meters
-    // write the second table through the raw layout (skip 15k arrays for
-    // test speed; layout columns are what matters)
-    MeterStore.writeRaw(MeterGen.secondTable(spark, cfg), dir)
+    // write through the one writer with one-sample arrays carrying the
+    // second's 59 J (skip 15k arrays for test speed; layout columns are
+    // what matters)
+    MeterStore.writeSlice(MeterGen.secondTable(spark, cfg).select(col("said"),
+      col("datetime"), array(lit(59f * MeterGen.SampleRate)).as("watts")), dir, 0)
 
-    val back = spark.read.parquet(s"$dir/meter_samples")
+    val back = spark.read.parquet(s"$dir/${MeterStore.RawTable}")
     val q = back.filter(
       to_date(col("datetime")) === "2024-01-02" &&
         col("said_bucket") === pmod(lit(1), lit(MeterStore.SaidBuckets)) &&

@@ -46,6 +46,22 @@ class StreamingSpec extends SparkSpec {
     assert(batch.exceptAll(streamed).count() === 0)
   }
 
+  test("a backfill and a stream share one store") {
+    val cfg = GenConfig(numMeters = 2, ticks = 120)
+    val out = tmpDir("graft_backfill_stream")
+    // seconds [0, 60) by the batch program, [60, 120) by two micro-batches
+    graft.Main.writeBatch(spark, cfg.copy(ticks = 60), out)
+    val store = streamRollups(cfg, out, 120L until 180L, 180L until 240L)
+    for ((g, rows) <- Seq(("second", 240), ("minute", 4), ("hour", 2),
+        ("day", 2))) {
+      val report = store.energyReport(spark, g)
+      assert(report.count() === rows, g)
+      val perMeter = report.groupBy("said").agg(sum("joules")).collect()
+        .map(_.getLong(1)).toSeq
+      assert(perMeter === Seq(120L * 59, 120L * 59), g)
+    }
+  }
+
   test("flatMapGroupsWithState gap detection fires on planted gaps") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -6,12 +6,17 @@
 #   2. perfbench sbt test  (compiles the meter benchmark against the engine
 #                           sources and runs its GenSpec, so an engine
 #                           signature change that breaks the benchmark fails)
-#   3. graft.Main demo     (batch write of the five meter tables, then the
-#                           read-back golden chain; non-zero exit on failure;
-#                           run under a JFR recording, and the stage fails if
-#                           the demo JVM started any chmod or readlink process:
-#                           a Hadoop conf built outside Graft.sessionBuilder
-#                           would bring the stock forking local FS back)
+#   3. graft.Main          (the demo twice into one dir: batch write of the
+#                           five meter tables as one slice, then the read-back
+#                           golden chain, which must still hold after the
+#                           re-run replaced the slice; non-zero exit on
+#                           failure. Then the live program, `2 3 <dir>
+#                           --stream`, three 1 s micro-batches of all five
+#                           tables. Each JVM runs under a JFR recording, and
+#                           the stage fails if it started any chmod or
+#                           readlink process: a Hadoop conf built outside
+#                           Graft.sessionBuilder would bring the stock
+#                           forking local FS back)
 #   4. graft.Verify        (driver-contract correctness dump at sf0.01)
 #   5. verify_local.py     (DuckDB oracle replay + row/schema compare)
 #   6. bench_gate.py       (2x criterion against BASELINE.md's frozen row,
@@ -31,8 +36,9 @@ cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.01}"
 OUT_DIR="$(mktemp -d /tmp/graft_ci.XXXXXX)"
 DEMO_DIR="$(mktemp -d /tmp/graft_demo.XXXXXX)"
+STREAM_DIR="$(mktemp -d /tmp/graft_stream.XXXXXX)"
 JFR_DIR="$(mktemp -d /tmp/graft_jfr.XXXXXX)"
-trap 'rm -rf "$OUT_DIR" "$DEMO_DIR" "$JFR_DIR"' EXIT
+trap 'rm -rf "$OUT_DIR" "$DEMO_DIR" "$STREAM_DIR" "$JFR_DIR"' EXIT
 
 echo "== [1/7] sbt test =="
 sbt -batch test
@@ -40,19 +46,28 @@ sbt -batch test
 echo "== [2/7] perfbench sbt test =="
 (cd perfbench && sbt -batch test)
 
-echo "== [3/7] graft.Main demo =="
-DEMO_JFR="$JFR_DIR/demo.jfr"
-sbt -batch \
-  "set Compile / run / javaOptions += \"-XX:StartFlightRecording=filename=$DEMO_JFR,dumponexit=true\"" \
-  "runMain graft.Main demo $DEMO_DIR"
-DEMO_PROCS="$(jfr print --events jdk.ProcessStart "$DEMO_JFR")"
-DEMO_FORKS="$(grep -E 'command = "([^" ]*/)?(chmod|readlink) ' <<<"$DEMO_PROCS" || true)"
-if [ -n "$DEMO_FORKS" ]; then
-  echo "demo JVM started $(wc -l <<<"$DEMO_FORKS") chmod/readlink processes:"
-  head -5 <<<"$DEMO_FORKS"
-  exit 1
-fi
-echo "demo JVM started no chmod/readlink process"
+echo "== [3/7] graft.Main demo x2 + --stream =="
+# run_main NAME ARGS...: runMain graft.Main ARGS under a JFR recording, and
+# fail if that JVM started a chmod or readlink process
+run_main() {
+  local name="$1" jfr="$JFR_DIR/$1.jfr"
+  shift
+  sbt -batch \
+    "set Compile / run / javaOptions += \"-XX:StartFlightRecording=filename=$jfr,dumponexit=true\"" \
+    "runMain graft.Main $*"
+  local procs forks
+  procs="$(jfr print --events jdk.ProcessStart "$jfr")"
+  forks="$(grep -E 'command = "([^" ]*/)?(chmod|readlink) ' <<<"$procs" || true)"
+  if [ -n "$forks" ]; then
+    echo "$name JVM started $(wc -l <<<"$forks") chmod/readlink processes:"
+    head -5 <<<"$forks"
+    exit 1
+  fi
+  echo "$name JVM started no chmod/readlink process"
+}
+run_main demo demo "$DEMO_DIR"
+run_main demo-rerun demo "$DEMO_DIR"
+run_main stream 2 3 "$STREAM_DIR" --stream
 
 echo "== [4/7] graft.Verify $SF_DIR =="
 env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
