@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.Formats
+
 /** Benchmark entry point (driver contract: prints ONE JSON line).
   *
   * Measurement discipline (r2 lesson — a noisy bench can't adjudicate a
@@ -135,7 +137,7 @@ object Bench {
           "id % 101 AS k", "sha2(cast(id AS string), 256) AS s",
           "xxhash64(cast(id AS string)) AS h")
         df.write.mode("overwrite").parquet(s"$wdir/p")
-        val back = spark.read.parquet(s"$wdir/p")
+        val back = Formats.readParquet(spark, s"$wdir/p")
         back.groupBy("k").agg(count(lit(1)).as("n"), sum("h").as("sh"),
           approx_count_distinct("s").as("d")).count()
         back.withColumn("rn", row_number().over(

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Formats
+
 /** Loaders for the driver-provided parquet fixtures (TESTDATA.md / FIXTURES.md).
   *
   * All tables are plain parquet files; reads go through the vectorized parquet
@@ -28,7 +30,7 @@ object Tables {
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
             .contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = Formats.readParquet(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       raw.schema("ts").dataType match {
@@ -53,7 +55,7 @@ object Tables {
             s"events.ts: unexpected parquet type $other — fixture schema drift")
       }
     case _ =>
-      spark.read.parquet(s"$dir/$name.parquet")
+      Formats.readParquet(spark, s"$dir/$name.parquet")
   }
 
   /** Register every fixture as a temp view so `spark.sql(...)` works (SQL

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.RollupRouting
+import graft.sources.Formats
 
 /** Read-side API for the meter store (the reference's stated use cases,
   * setup_and_notes.txt:46): raw extraction for analysis, and aggregated
@@ -19,10 +20,10 @@ import graft.plans.RollupRouting
   */
 final case class MeterStore(baseDir: String) {
   def table(spark: SparkSession, grain: String): DataFrame =
-    spark.read.parquet(s"$baseDir/${MeterStore.grainTable(grain)}")
+    Formats.readParquet(spark, s"$baseDir/${MeterStore.grainTable(grain)}")
 
   def raw(spark: SparkSession): DataFrame =
-    spark.read.parquet(s"$baseDir/${MeterStore.RawTable}")
+    Formats.readParquet(spark, s"$baseDir/${MeterStore.RawTable}")
 
   /** Q1: all raw values for meters in a time range — prunes on the
     * dt/said_bucket layout [[MeterStore.writeSlice]] writes in every slice. */

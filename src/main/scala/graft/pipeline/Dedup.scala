@@ -745,7 +745,7 @@ object Dedup {
       maxDf: Int = 100): DataFrame = {
     val updDocs = DeltaUpdate.touchedDocs(sp, artDir, upTo)
     val latest = DeltaUpdate.latestRows(sp, artDir, upTo)
-    val curSizes = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/sizes"))
+    val curSizes = graft.sources.Formats.readParquet(sp, s"$artDir/$initName/sizes")
       .join(updDocs, col("id") === col("rid"), "left_anti")
       .unionByName(latest.groupBy(col("id")).agg(count(lit(1)).as("n_c")))
     DeltaUpdate.servingView(sp, artDir, initName, upTo,

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Formats
+
 /** Shared face I/O and base-snapshot helpers of the O(delta) chain
   * ([[DeltaUpdate]] — takedowns included, as updates to an empty
   * version), the recount retract sinks and `Rollups.writeAll`:
@@ -12,11 +14,9 @@ import org.apache.spark.sql.functions._
   *   baseDir/index    the capped serving view at build — written once
   *   baseDir/meta     the family's build parameters ([[writeMeta]])
   *
-  * ([[initBase]] writes them), plus the footer-schema face reads
-  * ([[readFace]], which refuses faces of one kind whose schemas
-  * disagree), footer row counts, the broadcast-size guard, the
-  * batch-dir existence check and the concurrent face-write legs
-  * ([[inParallel]]). */
+  * ([[initBase]] writes them), plus footer row counts, the
+  * broadcast-size guard, the batch-dir existence check and the
+  * concurrent face-write legs ([[inParallel]]). */
 object DeltaRetract {
 
   /** Persist the family's build parameters (cap values, shingle k, …)
@@ -47,7 +47,7 @@ object DeltaRetract {
       try p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p)
       catch { case scala.util.control.NonFatal(_) => false }
     if (exists) {
-      val persisted = readFace(sp, Seq(s"$baseDir/meta")).collect()
+      val persisted = Formats.readParquet(sp, s"$baseDir/meta").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       params.foreach { case (k, v) =>
         persisted.get(k).foreach(pv => require(pv == v,
@@ -71,7 +71,7 @@ object DeltaRetract {
     val prior =
       try {
         if (p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p))
-          readFace(sp, Seq(s"$fromBaseDir/meta")).collect()
+          Formats.readParquet(sp, s"$fromBaseDir/meta").collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap
         else Map.empty[String, Long]
       } catch {
@@ -93,7 +93,7 @@ object DeltaRetract {
       keyCols: Seq[String], extraFaces: Seq[DataFrame => Unit] = Nil)(
       serveIndex: DataFrame => DataFrame): DataFrame = {
     sketch.write.mode("overwrite").parquet(s"$baseDir/sketch")
-    val sk = readFace(sp, Seq(s"$baseDir/sketch"))
+    val sk = Formats.readParquet(sp, s"$baseDir/sketch")
     // stats, index, and the family's extra faces (shingle `sizes`,
     // video `counts`, the `meta` params — each handed the persisted
     // sketch) are INDEPENDENT derivations of it (disjoint output
@@ -180,87 +180,11 @@ object DeltaRetract {
     * one), sized to sit inside any external harness budget. */
   private[graft] val legTimeoutS: Long = 600L
 
-  /** Schema of an ENGINE-WRITTEN parquet face, read DRIVER-SIDE from
-    * one part file's footer — no Spark job. `sp.read.parquet(path)`
-    * schedules a footer-inference job on EVERY call (Spark merges
-    * footers distributedly even for one file), which the round-20
-    * census showed charging one ~20–80 ms job per face read across the
-    * chain machinery — ~10 per serving probe, ~2 per prior-batch face
-    * in the per-batch read loops. Spark persists the exact StructType
-    * (nullability included) in the footer's `row.metadata` key at
-    * write time, so reading it back driver-side is lossless for every
-    * face this engine writes; a face written without the key (foreign
-    * writer) falls back to converting the parquet MessageType. NEVER
-    * use this for fixture tables (their reads go through
-    * [[graft.Tables.load]], which owns the nanos handling). */
-  private[graft] def faceSchema(sp: SparkSession,
-      path: String): org.apache.spark.sql.types.StructType = {
-    val conf = sp.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val file = fs.listStatus(p).iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .toSeq.headOption.getOrElse(throw new IllegalArgumentException(
-        s"no .parquet data files directly under $path — cannot read a " +
-          "face schema from an empty or foreign-layout dir"))
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromStatus(file, conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val md = r.getFooter.getFileMetaData
-      Option(md.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(conf).convert(md.getSchema))
-    } finally r.close()
-  }
-
-  /** Read engine-written face(s) with the schema taken from the
-    * footers ([[facesSchema]]) — skips the scheduled footer-inference
-    * job `sp.read.parquet` pays per call. */
-  private[graft] def readFace(sp: SparkSession,
-      paths: Seq[String]): DataFrame =
-    sp.read.schema(facesSchema(sp, paths)).parquet(paths: _*)
-
-  /** The one schema of several faces of one kind, checked against
-    * EVERY path's footer: a multi-path read applies one schema to all
-    * paths, so a drifted face (say an empty takedown version shaped
-    * unlike the tokenizer's rows) would read as nulls or fail deep in
-    * a task. Names, order and types must agree; nullability is
-    * ignored (file reads are nullable anyway). */
-  private[graft] def facesSchema(sp: SparkSession,
-      paths: Seq[String]): org.apache.spark.sql.types.StructType = {
-    val first = faceSchema(sp, paths.head)
-    paths.tail.foreach { p =>
-      val s = faceSchema(sp, p)
-      require(nullable(s) == nullable(first),
-        s"face $p has schema ${s.simpleString}, but ${paths.head} has " +
-          s"${first.simpleString} — faces of one kind must agree on " +
-          "column names, order and types")
-    }
-    first
-  }
-
-  private def nullable(t: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    t match {
-      case s: StructType => StructType(s.fields.map(f =>
-        StructField(f.name, nullable(f.dataType))))
-      case a: ArrayType => ArrayType(nullable(a.elementType))
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
-      case o => o
-    }
-  }
-
   /** A zero-row no-scan frame shaped like the face at `path` —
-    * [[emptyLike]] without the footer-inference job of reading the
-    * face first. */
+    * [[emptyLike]] without a scan of the face. */
   private[graft] def emptyFace(sp: SparkSession, path: String): DataFrame =
     sp.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      faceSchema(sp, path))
+      Formats.parquetSchema(sp, path))
 
   /** Driver-side row count of a just-written parquet face — summed
     * from the part-file footers, no Spark job. Used for the per-batch

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Formats
+
 /** O(delta) maintenance of a CAPPED serving index under continuous
   * re-crawl UPDATES and TAKEDOWNS — the engine's one maintenance
   * chain, replacing the per-batch full-sketch rewrite (VERDICT r16
@@ -102,10 +104,8 @@ object DeltaUpdate {
         .write.mode("overwrite").parquet(s"$artDir/$batchId/updids"),
       () => newRows.write.mode("overwrite")
         .parquet(s"$artDir/$batchId/newrows"))
-    // face reads pass the footer schema (DeltaRetract.readFace) — no
-    // per-call footer-inference job
-    val rids = DeltaRetract.readFace(sp, Seq(s"$artDir/$batchId/updids"))
-    val rows = DeltaRetract.readFace(sp, Seq(s"$artDir/$batchId/newrows"))
+    val rids = Formats.readParquet(sp, s"$artDir/$batchId/updids")
+    val rows = Formats.readParquet(sp, s"$artDir/$batchId/newrows")
     // at most ONE pinned frame survives the refactor: the batch>0
     // lastBid checkpoint (faces are persisted parquet now)
     var pinnedLastBid: Option[DataFrame] = None
@@ -149,7 +149,7 @@ object DeltaUpdate {
               pinnedLastBid = Some(lb)
               lb
             }
-          val fromBase = DeltaRetract.readFace(sp, Seq(s"$base/sketch"))
+          val fromBase = Formats.readParquet(sp, s"$base/sketch")
             .join(DeltaRetract.broadcastIfSmall(
               lastBid.filter(col("lb").isNull).select("rid"), ridsN),
               docId === col("rid"))
@@ -216,7 +216,7 @@ object DeltaUpdate {
       latest: Option[DataFrame] = None)(
       decorate: DataFrame => DataFrame): DataFrame = {
     val base = s"$artDir/$initName"
-    val idx = DeltaRetract.readFace(sp, Seq(s"$base/index"))
+    val idx = Formats.readParquet(sp, s"$base/index")
     val idxCols = idx.columns.toSeq
     val keyCs = keyCols.map(col)
     val updDocs = touched.getOrElse(touchedDocs(sp, artDir, upTo))
@@ -244,7 +244,7 @@ object DeltaUpdate {
     val b =
       if (readmitN == 0L)
         DeltaRetract.emptyFace(sp, s"$base/sketch")
-      else DeltaRetract.readFace(sp, Seq(s"$base/sketch"))
+      else Formats.readParquet(sp, s"$base/sketch")
         .join(broadcast(readmit), keyCols)
         .join(updDocs, docId === col("rid"), "left_anti")
     val c = latest.getOrElse(latestRows(sp, artDir, upTo, docId))
@@ -262,11 +262,11 @@ object DeltaUpdate {
   private def currentCounts(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, keyCols: Seq[String]): DataFrame = {
     val keyCs = keyCols.map(col)
-    val dd = DeltaRetract.readFace(sp,
-        DeltaRetract.facePaths(sp, artDir, "statsdelta", 0L to upTo))
+    val dd = Formats.readParquet(sp,
+        DeltaRetract.facePaths(sp, artDir, "statsdelta", 0L to upTo): _*)
       .groupBy(keyCs: _*).agg(sum("delta").as("dd"))
     val known = broadcast(dd)
-      .join(DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/stats")),
+      .join(Formats.readParquet(sp, s"$artDir/$initName/stats"),
         keyCols)
     // keys with no build count (introduced by a new version): cnt 0 —
     // the anti-join's right side is the already-small `known`
@@ -304,7 +304,7 @@ object DeltaUpdate {
       docId: Column = col("id"),
       extraFaces: Seq[DataFrame => Unit] = Nil)(
       serveIndex: DataFrame => DataFrame): DataFrame = {
-    val cur = DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/sketch"))
+    val cur = Formats.readParquet(sp, s"$artDir/$initName/sketch")
       .join(updatedDocs(sp, artDir, upTo), docId === col("rid"),
         "left_anti")
       .unionByName(latestRows(sp, artDir, upTo, docId))
@@ -365,8 +365,8 @@ object DeltaUpdate {
     * — the set whose BASE rows are superseded. */
   def updatedDocs(sp: SparkSession, artDir: String,
       upTo: Long): DataFrame =
-    DeltaRetract.readFace(sp,
-        DeltaRetract.facePaths(sp, artDir, "updids", 0L to upTo))
+    Formats.readParquet(sp,
+        DeltaRetract.facePaths(sp, artDir, "updids", 0L to upTo): _*)
       .distinct()
 
   /** [[updatedDocs]] materialized once (an eager localCheckpoint): the
@@ -388,7 +388,7 @@ object DeltaUpdate {
     val paths = DeltaRetract.facePaths(sp, artDir, "newrows", 0L to upTo)
     if (paths.forall(DeltaRetract.faceRowCount(sp, _) == 0L))
       sp.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        DeltaRetract.facesSchema(sp, paths))
+        Formats.parquetSchema(sp, paths: _*))
     else {
       val last = priorUpdatedWithBid(sp, artDir, upTo + 1L)
         .groupBy(col("prid").as("rid")).agg(max(col("pbid")).as("lb"))
@@ -404,17 +404,15 @@ object DeltaUpdate {
   // "latest version per doc" needs it). Callers guarantee before >= 1;
   // step's batch-0 path never reads prior faces.
   // The schema comes from the footers, checked across every path
-  // (DeltaRetract.facesSchema: a takedown's empty newrows face sits
-  // next to tokenizer-written ones, and drift must fail loudly here):
-  // the per-batch `sp.read.parquet` calls here each paid a
-  // footer-inference job, ×2 face kinds × every serving-view consumer
-  // — the single largest scheduled-job source the round-20 census
-  // found in the chains.
+  // (Formats.parquetSchema: a takedown's empty newrows face sits
+  // next to tokenizer-written ones, and drift must fail loudly here);
+  // each path is read with it, so no per-batch read runs an
+  // inference job.
   private def priorUpdatedWithBid(sp: SparkSession, artDir: String,
       before: Long): DataFrame = {
     val paths = DeltaRetract.facePaths(sp, artDir, "updids",
       0L until before)
-    val schema = DeltaRetract.facesSchema(sp, paths)
+    val schema = Formats.parquetSchema(sp, paths: _*)
     paths.zipWithIndex.map { case (p, i) =>
       sp.read.schema(schema).parquet(p)
         .select(col("rid").as("prid"), lit(i.toLong).as("pbid"))
@@ -425,7 +423,7 @@ object DeltaUpdate {
       before: Long): DataFrame = {
     val paths = DeltaRetract.facePaths(sp, artDir, "newrows",
       0L until before)
-    val schema = DeltaRetract.facesSchema(sp, paths)
+    val schema = Formats.parquetSchema(sp, paths: _*)
     paths.zipWithIndex.map { case (p, i) =>
       sp.read.schema(schema).parquet(p).withColumn("nbid", lit(i.toLong))
     }.reduce(_ unionByName _)

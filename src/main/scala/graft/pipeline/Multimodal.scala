@@ -668,7 +668,7 @@ object Multimodal {
     val docHalf = expr("id div 65536")
     val updDocs = DeltaUpdate.touchedDocs(sp, artDir, upTo)
     val latest = DeltaUpdate.latestRows(sp, artDir, upTo, docHalf)
-    val curCounts = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$artDir/$initName/counts"))
+    val curCounts = graft.sources.Formats.readParquet(sp, s"$artDir/$initName/counts")
       .join(updDocs, col("doc_id") === col("rid"), "left_anti")
       .unionByName(sceneCounts(latest))
     VideoIndex(

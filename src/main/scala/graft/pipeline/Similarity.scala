@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
   IntegerType, StructField, StructType}
 
+import graft.sources.Formats
+
 /** Similarity search over an embedding column (ARRAY<FLOAT>).
   *
   * Baseline: brute-force cosine top-k — a broadcast of the (small) query set
@@ -365,7 +367,7 @@ object Similarity {
 
     /** Restore a [[Centroids.write]] face. */
     def read(spark: SparkSession, path: String): Centroids = {
-      val rows = DeltaRetract.readFace(spark, Seq(path)).orderBy("ord")
+      val rows = Formats.readParquet(spark, path).orderBy("ord")
         .collect()
       Centroids(rows.map(_.get(1)), rows.map(_.getSeq[Double](2).toArray))
     }
@@ -748,13 +750,13 @@ object Similarity {
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfPqIndex = {
     val cents = Centroids.read(spark, s"$path/centroids")
-    val cbRows = graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/codebook")).collect()
+    val cbRows = Formats.readParquet(spark, s"$path/codebook").collect()
     val m = cbRows.map(_.getInt(0)).max + 1
     val ksub = cbRows.map(_.getInt(1)).max + 1
     val cb = Array.ofDim[Array[Double]](m, ksub)
     cbRows.foreach(r => cb(r.getInt(0))(r.getInt(1)) =
       r.getSeq[Double](2).toArray)
-    val raw = spark.read.parquet(s"$path/listed")
+    val raw = Formats.readParquet(spark, s"$path/listed")
     // partition-directory type inference narrows the cell column (e.g.
     // BIGINT ids read back as INT) — restore the id column's type so
     // the serving join keys match the probe side. (Ids whose STRING
@@ -1458,10 +1460,10 @@ object Similarity {
   def loadNndIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): NndIndex = {
     val quant = NndQuantizer(Centroids.read(spark, s"$path/centroids"),
-      graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/reps")))
-    NndIndex(quant, graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/seed")),
-      graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/refined")),
-      graft.pipeline.DeltaRetract.readFace(spark, Seq(s"$path/meta")).head.getInt(0))
+      Formats.readParquet(spark, s"$path/reps"))
+    NndIndex(quant, Formats.readParquet(spark, s"$path/seed"),
+      Formats.readParquet(spark, s"$path/refined"),
+      Formats.readParquet(spark, s"$path/meta").head.getInt(0))
   }
 
   /** [[nnDescentAppend]] at the artifact level: returns the index for

@@ -207,7 +207,7 @@ object InfraQueries {
   // runs the identical join on the original parquet. ----
   def q49(s: SparkSession, dir: String): DataFrame = {
     writePartitionedEvents(s, dir)
-    val fact = s.read.parquet(q49Path(dir))
+    val fact = Formats.readParquet(s, q49Path(dir))
     val dim = t(s, dir, "events")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_type"))
       .filter(col("n_type") > 2000)

@@ -170,7 +170,7 @@ object CurationStream {
       serveIndex: DataFrame => DataFrame): DataStreamWriter[Row] =
     retractChainCore(takedowns, artDir, initName, checkpoint) {
       (sp, batch, prevDir, outDir) =>
-        val prevSketch = graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$prevDir/sketch"))
+        val prevSketch = graft.sources.Formats.readParquet(sp, s"$prevDir/sketch")
         // two consumers (persisted sketch + derived index) of one
         // anti-join — materialize once, release after the writes
         val surv = retractSketch(prevSketch, batch).localCheckpoint(false)
@@ -537,8 +537,8 @@ object CurationStream {
       (sp, batch, prevDir, outDir) =>
         import graft.pipeline.Multimodal
         val prev = Multimodal.VideoIndex(
-          graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$prevDir/chunks")),
-          graft.pipeline.DeltaRetract.readFace(sp, Seq(s"$prevDir/counts")))
+          graft.sources.Formats.readParquet(sp, s"$prevDir/chunks"),
+          graft.sources.Formats.readParquet(sp, s"$prevDir/counts"))
         val surv = Multimodal.videoSketchRetract(prev, batch)
         // chunks feed two writes (sketch + derived capped index);
         // counts feed one and stay lazy

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
+import graft.sources.Formats
 
 /** Batch-verifiable forms of the streaming operator surface. The same
   * expressions run in the streaming path (MeterStream / EventStreams);
@@ -321,7 +322,7 @@ object StreamQueries {
     try {
       feedInTerciles(input, q, incr.toSeq, (r: (Long, String)) => r._1)
     } finally q.stop()
-    val result = s.read.parquet(s"$out/pairs")
+    val result = Formats.readParquet(s, s"$out/pairs")
       .select(col("new_id"), col("corpus_id"), col("inter"), col("jaccard"))
       .orderBy("new_id", "corpus_id")
       .localCheckpoint(true)
@@ -813,7 +814,7 @@ object StreamQueries {
     try {
       feedInTerciles(input, q, rows.toSeq, (r: (Long, Seq[Double])) => r._1)
     } finally q.stop()
-    val result = s.read.parquet(s"$out/idx")
+    val result = Formats.readParquet(s, s"$out/idx")
       .drop("batch")
       .orderBy("vec_id")
       .localCheckpoint(true)
@@ -885,7 +886,7 @@ object StreamQueries {
     val q = input.toDF().toDF("vec_id", "v").writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/vec/batch=$batchId")
-        val seen = s.read.parquet(s"$out/vec").drop("batch")
+        val seen = Formats.readParquet(s, s"$out/vec").drop("batch")
         val lohi = batch.agg(min("vec_id"), max("vec_id")).head
         val next =
           if (batchId == 0L)
@@ -902,7 +903,7 @@ object StreamQueries {
       feedInTerciles(input, q, rows.toSeq, (r: (Long, Seq[Double])) => r._1)
     } finally q.stop()
     val last = lastBatchId(s"$out/idx")
-    val result = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/idx/$last/refined"))
+    val result = Formats.readParquet(s, s"$out/idx/$last/refined")
       .filter(col("node") < 25)
       .orderBy("node", "rank")
       .localCheckpoint(true)
@@ -964,7 +965,7 @@ object StreamQueries {
       feedInTerciles(input, q, incr.toSeq,
         (r: (Long, Array[Byte], String)) => r._1)
     } finally q.stop()
-    val result = s.read.parquet(s"$out/pairs")
+    val result = Formats.readParquet(s, s"$out/pairs")
       .select(resultCols.map(col): _*)
       .orderBy(resultCols.take(2).map(col): _*)
       .localCheckpoint(true)
@@ -1081,7 +1082,7 @@ object StreamQueries {
     try {
       feedInTerciles(input, q, incr.toSeq, (r: (Long, String)) => r._1)
     } finally q.stop()
-    val result = s.read.parquet(s"$out/pairs")
+    val result = Formats.readParquet(s, s"$out/pairs")
       .select(col("new_id"), col("corpus_id"), col("shared"))
       .orderBy("new_id", "corpus_id")
       .localCheckpoint(true)
@@ -1167,7 +1168,7 @@ object StreamQueries {
       input.addData(replay ++ fed(2): _*)
       q2.processAllAvailable()
     } finally q2.stop()
-    val result = s.read.parquet(s"$out/rows")
+    val result = Formats.readParquet(s, s"$out/rows")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("cents")).as("cents"))
       .orderBy("event_type")
@@ -1217,8 +1218,8 @@ object StreamQueries {
     val q = input.toDF().toDF("doc_id").writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val prev = if (batchId == 0L) "init" else (batchId - 1).toString
-        val labelsPrev = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$prev/labels"))
-        val pairsPrev = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$prev/pairs"))
+        val labelsPrev = Formats.readParquet(s, s"$out/art/$prev/labels")
+        val pairsPrev = Formats.readParquet(s, s"$out/art/$prev/pairs")
         val rem = batch.select(col("doc_id").as("rid"))
         // both faces read only the PREDECESSOR's persisted faces plus
         // the batch, and write disjoint paths — concurrent jobs
@@ -1239,7 +1240,7 @@ object StreamQueries {
       feedInChunks(input, q, takedowns.toSeq, identity[Long], 2)
     } finally q.stop()
     val last = lastBatchId(s"$out/art")
-    val result = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/labels"))
+    val result = Formats.readParquet(s, s"$out/art/$last/labels")
       .select(col("id").as("doc_id"), col("component"))
       .orderBy("doc_id")
       .localCheckpoint(true)
@@ -1288,7 +1289,7 @@ object StreamQueries {
       feedInChunks(input, q, takedowns.toSeq, identity[Long], 2)
     } finally q.stop()
     val last = lastBatchId(s"$out/art")
-    val idx = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/index"))
+    val idx = Formats.readParquet(s, s"$out/art/$last/index")
     Multimodal.phashProbePairs(
         Multimodal.dHash(media.filter(isNew)), idx, maxHamming = 3)
       .orderBy("new_id", "corpus_id")
@@ -1333,7 +1334,7 @@ object StreamQueries {
       feedInChunks(input, q, takedowns.toSeq, identity[Long], 2)
     } finally q.stop()
     val last = lastBatchId(s"$out/art")
-    val idx = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/index"))
+    val idx = Formats.readParquet(s, s"$out/art/$last/index")
     Dedup.incrementalPairsFromIndex(idx, d.filter(isNew),
         "text", "doc_id", k = 5, threshold = 0.6)
       .orderBy("new_id", "corpus_id")
@@ -1376,7 +1377,7 @@ object StreamQueries {
       feedInChunks(input, q, takedowns.toSeq, identity[Long], 2)
     } finally q.stop()
     val last = lastBatchId(s"$out/art")
-    val idx = graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/index"))
+    val idx = Formats.readParquet(s, s"$out/art/$last/index")
     TextAnalysis.winnowProbeMatches(d.filter(isNew), idx, "text",
         "doc_id", k = 5, w = 4, minShared = 2)
       .orderBy("new_id", "corpus_id")
@@ -1821,8 +1822,8 @@ object StreamQueries {
     } finally q.stop()
     val last = lastBatchId(s"$out/art")
     val idx = Multimodal.VideoIndex(
-      graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/index")),
-      graft.pipeline.DeltaRetract.readFace(s, Seq(s"$out/art/$last/counts")))
+      Formats.readParquet(s, s"$out/art/$last/index"),
+      Formats.readParquet(s, s"$out/art/$last/counts"))
     Multimodal.videoProbePairs(
         Multimodal.keyframeHashes(media.filter(isNew),
           frameBytes = 72, cutPm = 8L).toDF(),

@@ -9,6 +9,7 @@ import org.scalatest.concurrent.Eventually.{eventually, timeout}
 import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
+import graft.sources.Formats
 
 /** The O(delta) UPDATE chain's equivalence contract: after every
   * re-crawl batch, [[DeltaUpdate.servingView]] is row-identical to the
@@ -568,12 +569,12 @@ class DeltaUpdateSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains(drifted), e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      DeltaRetract.readFace(spark, Seq(s"$bad/0/newrows", drifted))
+      Formats.readParquet(spark, s"$bad/0/newrows", drifted)
     }
     assert(e2.getMessage.contains(drifted), e2.getMessage)
     // nullability alone is not drift: the empty version's footer says
     // what the base sketch's says, the tokenizer's may differ
-    DeltaRetract.readFace(spark, Seq(s"$art/0/newrows", s"$art/1/newrows",
-      s"$art/2/newrows")).collect()
+    Formats.readParquet(spark, s"$art/0/newrows", s"$art/1/newrows",
+      s"$art/2/newrows").collect()
   }
 }

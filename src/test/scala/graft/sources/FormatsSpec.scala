@@ -1,12 +1,22 @@
 package graft.sources
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.scalatest.concurrent.Eventually.{eventually, timeout}
+import org.scalatest.time.SpanSugar._
 
-import graft.{SparkSpec, Tables}
+import graft.{Main, SparkSpec, Tables}
+import graft.meter.{GenConfig, MeterGen, MeterStore}
+import graft.plans.RollupRouting
 
 /** CSV / JSONL round-trips against the parquet fixtures: same rows, schema
-  * stated up front (never inferred), corrupt rows surfaced not dropped. */
+  * stated up front (never inferred), corrupt rows surfaced not dropped.
+  * The job-free parquet reader reads the schema `spark.read.parquet`
+  * infers, for foreign-written fixtures and partitioned meter stores
+  * alike, without scheduling a job, and names the path it cannot read. */
 class FormatsSpec extends SparkSpec {
 
   private lazy val nation = Tables.load(spark, sf(), "nation")
@@ -57,5 +67,113 @@ class FormatsSpec extends SparkSpec {
     got.count()
     assert(got.filter(col("_corrupt_record").isNotNull).count() == 1)
     assert(got.filter(col("k").isNotNull).count() == 2)
+  }
+
+  /** `body`'s result and the Spark jobs it started, bracketed by two
+    * marker jobs: the listener bus delivers in order, so the count
+    * starts at the first marker and is complete once the second has
+    * been seen. */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val (open, closed) = ("graft-formats-open", "graft-formats-closed")
+    val (started, done) = (new AtomicBoolean, new AtomicBoolean)
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description"))
+          .orNull match {
+          case `open` => started.set(true)
+          case `closed` => done.set(true)
+          case _ => if (started.get && !done.get) n.incrementAndGet()
+        }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      ()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(open)
+      val out = body
+      marker(closed)
+      eventually(timeout(30.seconds))(assert(done.get))
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  test("readParquet reads every fixture with spark.read.parquet's schema " +
+      "(pyarrow footers carry no Spark row metadata)") {
+    val prior = spark.conf.getOption(nanosAsLong)
+    spark.conf.set(nanosAsLong, "true") // events.ts may be TIMESTAMP(NANOS)
+    try Tables.names.foreach { n =>
+      val path = s"${sf()}/$n.parquet"
+      assert(Formats.readParquet(spark, path).schema ===
+        spark.read.parquet(path).schema, n)
+    } finally prior match {
+      case Some(v) => spark.conf.set(nanosAsLong, v)
+      case None => spark.conf.unset(nanosAsLong)
+    }
+  }
+
+  test("a partitioned meter store reads back with spark.read.parquet's " +
+      "columns, order and types at every table, and the golden chain holds") {
+    val dir = tmpDir("graft_readstore")
+    // two slices of 30 s: each table holds two batch= dirs, raw nests
+    // dt=/said_bucket= leaves inside each
+    val cfg = GenConfig(numMeters = 2, ticks = 30)
+    Seq(cfg, cfg.copy(startEpochSec = cfg.startEpochSec + 30)).foreach { c =>
+      MeterStore.writeSlice(MeterGen.transmissions(spark, c), dir,
+        c.startEpochSec)
+    }
+    val store = MeterStore(dir)
+    val reads = (MeterStore.RawTable -> store.raw(spark)) +:
+      RollupRouting.storedGrains.map(g =>
+        MeterStore.grainTable(g) -> store.table(spark, g))
+    reads.foreach { case (table, df) =>
+      assert(df.schema === spark.read.parquet(s"$dir/$table").schema, table)
+    }
+    assert(store.raw(spark).columns.toSeq.takeRight(3) ===
+      Seq("batch", "dt", "said_bucket"))
+    assert(Main.goldenChain(spark, dir, cfg.numMeters, 60),
+      "60x59 J/meter must hold at every grain")
+  }
+
+  test("resolving a fixture or a meter store table schedules no job; an " +
+      "hour report runs two") {
+    val dir = tmpDir("graft_readjobs")
+    MeterStore.writeSlice(MeterGen.transmissions(spark, GenConfig()), dir, 0L)
+    val store = MeterStore(dir)
+    val (_, resolveJobs) = withJobs {
+      Tables.names.foreach(n => Tables.load(spark, sf(), n))
+      RollupRouting.storedGrains.foreach(g => store.table(spark, g))
+      store.raw(spark)
+    }
+    assert(resolveJobs === 0)
+    val (_, reportJobs) = withJobs {
+      store.energyReport(spark, "hour").write.format("noop")
+        .mode("overwrite").save()
+    }
+    assert(reportJobs === 2)
+  }
+
+  test("readParquet names the path it cannot read: missing, empty, or " +
+      "holding only _SUCCESS/.crc files") {
+    val missing = s"${tmpDir("graft_readmissing")}/absent"
+    val e1 = intercept[java.io.FileNotFoundException](
+      Formats.readParquet(spark, missing))
+    assert(e1.getMessage.contains(missing), e1.getMessage)
+    val empty = tmpDir("graft_readempty")
+    val e2 = intercept[IllegalArgumentException](
+      Formats.readParquet(spark, empty))
+    assert(e2.getMessage.contains(empty), e2.getMessage)
+    val marks = tmpDir("graft_readmarks")
+    Seq("_SUCCESS", ".part-00000.parquet.crc").foreach(f =>
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(marks, f)))
+    val e3 = intercept[IllegalArgumentException](
+      Formats.readParquet(spark, marks))
+    assert(e3.getMessage.contains(marks), e3.getMessage)
   }
 }
