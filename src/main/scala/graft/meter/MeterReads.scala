@@ -70,19 +70,22 @@ object MeterStore {
     * (a repeated backfill range, a replayed micro-batch, a retry after a
     * crash between two writes) replaces it. Raw is laid out for Q1
     * (setup_and_notes.txt:46): by date, so time predicates prune, then by
-    * said bucket. */
-  def writeSlice(raw: DataFrame, baseDir: String, slice: Long): Unit = {
-    raw.withColumn("dt", to_date(col("datetime")))
-      .withColumn("said_bucket", pmod(col("said"), lit(SaidBuckets)))
-      .write.mode("overwrite").partitionBy("dt", "said_bucket")
-      .parquet(s"$baseDir/$RawTable/batch=$slice")
-    writeGrains(MeterGen.reduceToSecond(raw), baseDir, slice)
-  }
+    * said bucket. The raw write is a fifth concurrent leg beside the four
+    * grain legs of [[Rollups.writeAll]], so no table waits for another. */
+  def writeSlice(raw: DataFrame, baseDir: String, slice: Long): Unit =
+    Rollups.writeAll(MeterGen.reduceToSecond(raw), () =>
+      raw.withColumn("dt", to_date(col("datetime")))
+        .withColumn("said_bucket", pmod(col("said"), lit(SaidBuckets)))
+        .write.mode("overwrite").partitionBy("dt", "said_bucket")
+        .parquet(s"$baseDir/$RawTable/batch=$slice"))(writeGrain(baseDir, slice))
 
   /** Write the per-second rows `second` as slice `slice` of the four
-    * joules tables, through [[Rollups.writeAll]]. */
+    * joules tables: [[Rollups.writeAll]]'s four concurrent grain legs, one
+    * file per grain for a small slice. */
   def writeGrains(second: DataFrame, baseDir: String, slice: Long): Unit =
-    Rollups.writeAll(second) { (grain, df) =>
-      df.write.mode("overwrite").parquet(s"$baseDir/${grainTable(grain)}/batch=$slice")
-    }
+    Rollups.writeAll(second)(writeGrain(baseDir, slice))
+
+  private def writeGrain(baseDir: String, slice: Long)(
+      grain: String, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(s"$baseDir/${grainTable(grain)}/batch=$slice")
 }

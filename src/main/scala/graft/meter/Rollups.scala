@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   * from minute, day from hour) exploiting sum associativity — the same trick
   * the reference plays with counters. [[dedupe]] hash-partitions on the
   * tables' partition key `said`, and every grain's grouping key contains
-  * `said`, so one shuffle on `said` serves the dedupe and every grain: each
-  * step is a partition-local hash aggregate. `joules` is LongType because a
-  * day of 59 J/s sums to ~5.1M and coarser grains would overflow Int
-  * (SURVEY §7.4).
+  * `said`, so within one plan the shuffle on `said` serves the dedupe and
+  * the whole chain above it: each step is a partition-local hash aggregate.
+  * [[writeAll]] plans each grain on its own, so each grain's write runs
+  * exactly one shuffle, which AQE coalesces to that grain's size.
+  * `joules` is LongType because a day of 59 J/s sums to ~5.1M and coarser
+  * grains would overflow Int (SURVEY §7.4).
   */
 object Rollups {
 
@@ -44,19 +46,22 @@ object Rollups {
     Map("second" -> second, "minute" -> m, "hour" -> h, "day" -> d)
   }
 
-  /** Write all four grains of `second` through `write(grain, table)` from
-    * one cached, deduped frame: "second" first, which fills the cache, then
-    * minute, hour and day (each coalesced to one file) as concurrent jobs
-    * off that cache. The cache is released even when a write fails; the
-    * first failing grain's error is rethrown after every other grain has
-    * been written. */
-  def writeAll(second: DataFrame)(write: (String, DataFrame) => Unit): Unit = {
-    val deduped = dedupe(second).persist()
-    try {
-      val grains = all(deduped)
-      write("second", grains("second"))
-      graft.pipeline.DeltaRetract.inParallel(Seq("minute", "hour", "day")
-        .map(g => () => write(g, grains(g).coalesce(1))): _*)
-    } finally { deduped.unpersist(); () }
+  /** Write all four grains of `second` through `write(grain, table)`, and
+    * the caller's `alongside` writes, as concurrent legs
+    * ([[graft.Graft.inParallel]]). Each grain leg plans its own
+    * [[dedupe]] of `second`, so its critical path is one shuffle on `said`
+    * and one write, and AQE coalesces that shuffle to the slice's size: a
+    * slice whose shuffle is under AQE's 1 MB minimum partition (tens of
+    * thousands of per-second rows) is one file per grain. Nothing is
+    * cached, so every grain leg evaluates `second` again; callers pass a
+    * plan that is cheap to re-run (generated rows, one micro-batch). Every
+    * leg runs to its end; the first failing leg's error, in leg order
+    * (`alongside`, then second, minute, hour, day), is rethrown with the
+    * others suppressed. */
+  def writeAll(second: DataFrame, alongside: (() => Unit)*)(
+      write: (String, DataFrame) => Unit): Unit = {
+    val grains = all(dedupe(second))
+    graft.Graft.inParallel(alongside ++
+      Seq("second", "minute", "hour", "day").map(g => () => write(g, grains(g))): _*)
   }
 }

@@ -7,7 +7,7 @@ import graft.sources.Formats
 
 /** Shared face I/O and base-snapshot helpers of the O(delta) chain
   * ([[DeltaUpdate]] — takedowns included, as updates to an empty
-  * version), the recount retract sinks and `Rollups.writeAll`:
+  * version) and the recount retract sinks:
   *
   *   baseDir/sketch   uncapped (id, key…) postings — written once
   *   baseDir/stats    (key…, cnt) build counts — written once
@@ -15,8 +15,7 @@ import graft.sources.Formats
   *   baseDir/meta     the family's build parameters ([[writeMeta]])
   *
   * ([[initBase]] writes them), plus footer row counts, the
-  * broadcast-size guard, the batch-dir existence check and the
-  * concurrent face-write legs ([[inParallel]]). */
+  * broadcast-size guard and the batch-dir existence check. */
 object DeltaRetract {
 
   /** Persist the family's build parameters (cap values, shingle k, …)
@@ -101,7 +100,7 @@ object DeltaRetract {
     // (guide §2.6) so each write's tasks back-fill cores another's
     // tail leaves idle; chain walls are job-latency-bound, not
     // byte-bound, at every scale the probes measured
-    inParallel(Seq(
+    graft.Graft.inParallel(Seq(
       () => sk.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$baseDir/stats"),
       () => serveIndex(sk).write.mode("overwrite")
@@ -109,76 +108,6 @@ object DeltaRetract {
       extraFaces.map(f => () => f(sk)): _*)
     sk
   }
-
-  /** Run independent write legs as CONCURRENT Spark jobs (guide §2.6:
-    * actions are only sequential because driver code calls them
-    * sequentially). Callers guarantee the legs touch disjoint output
-    * paths and read only inputs persisted before the call.
-    *
-    * Threading contract (ADVICE r19): legs run on FRESH threads created
-    * by the calling thread, never a shared pool — SparkContext local
-    * properties (job group, scheduler pool, streaming-query group) are
-    * an InheritableThreadLocal, so a thread created here inherits the
-    * caller's properties and leg jobs stay cancellable with their
-    * parent query, where a reused pool thread carries whatever
-    * properties the thread that lazily created it had. Each leg also
-    * tags its own jobs (`SparkContext.addJobTag`), which, unlike a job
-    * group, leaves the inherited group in place.
-    *
-    * Await contract: all legs are awaited before returning, but the
-    * wait is BOUNDED ([[legTimeoutS]]) — a leg wedged in a
-    * hung job surfaces as a named TimeoutException instead of blocking
-    * a streaming micro-batch forever. Before that error is thrown, every
-    * still-running leg's jobs are cancelled by tag, so no zombie write
-    * races the replay that overwrites every face.
-    * On failure the FIRST leg's error (leg order, deterministic) is
-    * rethrown with the others attached as suppressed. */
-  private[graft] def inParallel(legs: (() => Unit)*): Unit =
-    inParallelTimed(legTimeoutS, legs: _*)
-
-  /** [[inParallel]] with the await bound injectable (spec hook — the
-    * production path always passes [[legTimeoutS]]). */
-  private[graft] def inParallelTimed(timeoutS: Long,
-      legs: (() => Unit)*): Unit =
-    if (legs.sizeIs <= 1) legs.foreach(_.apply())
-    else {
-      val sc = SparkSession.getActiveSession
-        .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
-      val call = java.util.UUID.randomUUID()
-      val errs = new java.util.concurrent.atomic.AtomicReferenceArray[Throwable](legs.size)
-      val ts = legs.zipWithIndex.map { case (l, i) =>
-        val tag = s"graft-face-leg-$call-$i"
-        val t = new Thread(() => {
-          try { sc.foreach(_.addJobTag(tag)); l() }
-          catch { case e: Throwable => errs.set(i, e) }
-        }, s"graft-face-leg-$i")
-        t.setDaemon(true)
-        t.start()
-        (t, tag)
-      }
-      val deadlineNs = System.nanoTime() + timeoutS * 1000000000L
-      ts.foreach { case (t, _) =>
-        t.join(math.max(1L, (deadlineNs - System.nanoTime()) / 1000000L))
-      }
-      val hung = ts.filter(_._1.isAlive)
-      hung.foreach { case (_, tag) => sc.foreach(_.cancelJobsWithTag(tag,
-        s"face-write leg still running after ${timeoutS}s")) }
-      val all = (0 until legs.size).flatMap(i => Option(errs.get(i))) ++
-        (if (hung.isEmpty) Nil
-        else Seq(new java.util.concurrent.TimeoutException(
-          s"face-write legs still running after ${timeoutS}s: " +
-            hung.map(_._1.getName).mkString(", ") + " — their jobs are " +
-            "cancelled, failing the batch; replay overwrites every face")))
-      all.headOption.foreach { first =>
-        all.drop(1).foreach(first.addSuppressed)
-        throw first
-      }
-    }
-
-  /** Bounded await for [[inParallel]] legs — generous (a leg is one
-    * delta-sized face write; minutes mean a wedged job, not a slow
-    * one), sized to sit inside any external harness budget. */
-  private[graft] val legTimeoutS: Long = 600L
 
   /** A zero-row no-scan frame shaped like the face at `path` —
     * [[emptyLike]] without a scan of the face. */

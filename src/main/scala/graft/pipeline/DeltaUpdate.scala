@@ -99,7 +99,7 @@ object DeltaUpdate {
     // faces are independent (disjoint paths, neither reads the other)
     // and overlap as concurrent jobs (guide §2.6); both are persisted
     // before anything reads either back.
-    DeltaRetract.inParallel(
+    graft.Graft.inParallel(
       () => Dedup.normalizeRemovedIds(updatedIds)
         .write.mode("overwrite").parquet(s"$artDir/$batchId/updids"),
       () => newRows.write.mode("overwrite")

@@ -732,7 +732,7 @@ object Similarity {
     import spark.implicits._
     // three independent faces (disjoint subdirs; the two small ones
     // are driver-local rows) — concurrent jobs per guide §2.6
-    graft.pipeline.DeltaRetract.inParallel(
+    graft.Graft.inParallel(
       () => index.listed.write.mode("overwrite")
         .partitionBy("cell").parquet(s"$path/listed"),
       () => index.centroids.write(spark,
@@ -1442,7 +1442,7 @@ object Similarity {
     // lineage, exactly as they did written sequentially) — concurrent
     // jobs per guide §2.6; the streaming maintain gate saves once per
     // micro-batch, so the save's sequential latency was per-batch floor
-    graft.pipeline.DeltaRetract.inParallel(
+    graft.Graft.inParallel(
       () => index.refined.write.mode("overwrite")
         .parquet(s"$path/refined"),
       () => index.seed.write.mode("overwrite").parquet(s"$path/seed"),

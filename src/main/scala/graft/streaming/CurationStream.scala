@@ -177,7 +177,7 @@ object CurationStream {
         try {
           // both faces consume the one checkpointed frame and write
           // disjoint paths — concurrent jobs (guide §2.6)
-          graft.pipeline.DeltaRetract.inParallel(
+          graft.Graft.inParallel(
             () => surv.write.mode("overwrite")
               .parquet(s"$outDir/sketch"),
             () => serveIndex(surv)
@@ -547,7 +547,7 @@ object CurationStream {
           // three independent faces: two consume the checkpointed
           // chunks, counts stays lazy off the predecessor's counts —
           // disjoint output paths, concurrent jobs (guide §2.6)
-          graft.pipeline.DeltaRetract.inParallel(
+          graft.Graft.inParallel(
             () => chunks.write.mode("overwrite")
               .parquet(s"$outDir/chunks"),
             () => surv.counts.write.mode("overwrite")

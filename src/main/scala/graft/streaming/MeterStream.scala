@@ -42,6 +42,8 @@ object MeterStream {
     * slice `id` of the four joules tables ([[MeterStore.writeGrains]]), so
     * a replay rewrites identical files instead of double-appending — the
     * idempotence the reference's counter adds lack (core.clj:121-153).
+    * The four grains are written as concurrent legs, each reading the
+    * micro-batch again, one file per grain per batch.
     * Readers sum the slices' partials (MeterStore.energyReport does). */
   def writeRollups(second: DataFrame, outDir: String,
       checkpoint: String): DataStreamWriter[Row] =

@@ -1224,7 +1224,7 @@ object StreamQueries {
         // both faces read only the PREDECESSOR's persisted faces plus
         // the batch, and write disjoint paths — concurrent jobs
         // (guide §2.6)
-        graft.pipeline.DeltaRetract.inParallel(
+        graft.Graft.inParallel(
           () => Dedup.componentsRetract(labelsPrev, pairsPrev, batch,
               "doc_a", "doc_b")
             .write.mode("overwrite")

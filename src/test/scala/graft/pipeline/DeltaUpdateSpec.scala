@@ -1,12 +1,7 @@
 package graft.pipeline
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, expr, lit}
-import org.scalatest.concurrent.Eventually.{eventually, timeout}
-import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpec
 import graft.sources.Formats
@@ -445,38 +440,6 @@ class DeltaUpdateSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started by `body`, bracketed by two marker jobs: the
-    * listener bus delivers in order, so the count starts at the first
-    * marker and is complete once the second has been seen. */
-  private def jobsRun(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (open, closed) = ("graft-jobs-open", "graft-jobs-closed")
-    val (started, done) = (new AtomicBoolean, new AtomicBoolean)
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description"))
-          .orNull match {
-          case `open` => started.set(true)
-          case `closed` => done.set(true)
-          case _ => if (started.get && !done.get) n.incrementAndGet()
-        }
-    }
-    def marker(d: String): Unit = {
-      sc.setJobDescription(d)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      ()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(open)
-      body
-      marker(closed)
-      eventually(timeout(30.seconds))(assert(done.get))
-    } finally sc.removeSparkListener(listener)
-    n.get
-  }
-
   test("a takedown-chain serving probe derives the touched-doc set once " +
       "(shingle and video decorations share the view's checkpoint)") {
     import spark.implicits._
@@ -491,10 +454,10 @@ class DeltaUpdateSpec extends SparkSpec {
       DeltaUpdate.step(spark, art, "init", b.toLong, Seq(id).toDF("doc_id"),
         DeltaUpdate.emptyVersion(spark, s"$art/init"), Seq("shingle_k5"))
     }
-    val shingleJobs = jobsRun {
+    val shingleJobs = jobsStarted {
       Dedup.shingleUpdateServing(spark, art, "init", 1L, k = 5, maxDf = 2)
         .collect(); ()
-    }
+    }._2.size
 
     val kf = MM.keyframeHashes(MM.withPayload(
         Seq((1L, ("v " * 300).trim), (2L, ("w " * 300).trim))
@@ -506,11 +469,11 @@ class DeltaUpdateSpec extends SparkSpec {
     DeltaUpdate.step(spark, vart, "init", 0L, Seq(1L).toDF("doc_id"),
       DeltaUpdate.emptyVersion(spark, s"$vart/init"),
       Seq("chunk", "chunk_val"), expr("id div 65536"))
-    val videoJobs = jobsRun {
+    val videoJobs = jobsStarted {
       val v = MM.videoUpdateServing(spark, vart, "init", 0L, maxBucket = 100)
       v.chunks.collect()
       v.counts.collect(); ()
-    }
+    }._2.size
     // the video probe's scene counts re-derived the set beside the
     // view's checkpoint for one more job (15); the shingle sizes'
     // anti-join already planned its copy without a job of its own

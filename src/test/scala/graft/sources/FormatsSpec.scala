@@ -1,12 +1,7 @@
 package graft.sources
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.scalatest.concurrent.Eventually.{eventually, timeout}
-import org.scalatest.time.SpanSugar._
 
 import graft.{Main, SparkSpec, Tables}
 import graft.meter.{GenConfig, MeterGen, MeterStore}
@@ -69,39 +64,6 @@ class FormatsSpec extends SparkSpec {
     assert(got.filter(col("k").isNotNull).count() == 2)
   }
 
-  /** `body`'s result and the Spark jobs it started, bracketed by two
-    * marker jobs: the listener bus delivers in order, so the count
-    * starts at the first marker and is complete once the second has
-    * been seen. */
-  private def withJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val (open, closed) = ("graft-formats-open", "graft-formats-closed")
-    val (started, done) = (new AtomicBoolean, new AtomicBoolean)
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.job.description"))
-          .orNull match {
-          case `open` => started.set(true)
-          case `closed` => done.set(true)
-          case _ => if (started.get && !done.get) n.incrementAndGet()
-        }
-    }
-    def marker(d: String): Unit = {
-      sc.setJobDescription(d)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      ()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker(open)
-      val out = body
-      marker(closed)
-      eventually(timeout(30.seconds))(assert(done.get))
-      (out, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   test("readParquet reads every fixture with spark.read.parquet's schema " +
@@ -146,17 +108,17 @@ class FormatsSpec extends SparkSpec {
     val dir = tmpDir("graft_readjobs")
     MeterStore.writeSlice(MeterGen.transmissions(spark, GenConfig()), dir, 0L)
     val store = MeterStore(dir)
-    val (_, resolveJobs) = withJobs {
+    val (_, resolveJobs) = jobsStarted {
       Tables.names.foreach(n => Tables.load(spark, sf(), n))
       RollupRouting.storedGrains.foreach(g => store.table(spark, g))
       store.raw(spark)
     }
-    assert(resolveJobs === 0)
-    val (_, reportJobs) = withJobs {
+    assert(resolveJobs.size === 0)
+    val (_, reportJobs) = jobsStarted {
       store.energyReport(spark, "hour").write.format("noop")
         .mode("overwrite").save()
     }
-    assert(reportJobs === 2)
+    assert(reportJobs.size === 2)
   }
 
   test("readParquet names the path it cannot read: missing, empty, or " +

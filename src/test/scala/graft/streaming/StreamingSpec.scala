@@ -2,11 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually.{eventually, timeout}
-import org.scalatest.time.SpanSugar._
 
 import scala.jdk.CollectionConverters._
 
@@ -125,56 +122,63 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch rollup sink: idempotent multi-grain write, golden totals") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = tmpDir("graft_fb")
     val cfg = GenConfig(numMeters = 2, ticks = 120)
-    val input = MemoryStream[Long]
-    val sec = MeterStream.toSecond(
-      MeterGen.fromRowIndex(input.toDF(), "value", cfg))
-    // jobs per micro-batch, keyed by the batch id the stream sets on
-    // every job it runs (write legs inherit it); the listener bus is in
-    // order, so seeing a marker job run after the query proves it has
-    // seen every earlier job
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
-    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val markerDesc = "graft-streaming-spec-marker"
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        p.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobs.merge(b, 1, Integer.sum))
-        if (p.exists(_.getProperty("spark.job.description") == markerDesc))
-          marker.set(true)
+    val parts = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(parts)
+    // the file pin holds at the suite's 4 shuffle partitions and at the
+    // live program's 32: AQE coalesces each grain's shuffle, whatever its
+    // width
+    for (n <- Seq(4, 32)) try {
+      spark.conf.set(parts, n.toString)
+      val out = tmpDir("graft_fb")
+      val input = MemoryStream[Long]
+      val sec = MeterStream.toSecond(
+        MeterGen.fromRowIndex(input.toDF(), "value", cfg))
+      val (_, jobs) = jobsStarted {
+        val q = MeterStream.writeRollups(sec, out, s"$out/_cp").start()
+        // two micro-batches so grain buckets span batch boundaries — the
+        // stored partials must re-compose exactly on read
+        try {
+          input.addData(0L until 150L: _*)
+          q.processAllAvailable()
+          input.addData(150L until (cfg.ticks * cfg.numMeters): _*)
+          q.processAllAvailable()
+        } finally q.stop()
       }
-    }
-    val q = MeterStream.writeRollups(sec, out, s"$out/_cp").start()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // two micro-batches so grain buckets span batch boundaries — the
-      // stored partials must re-compose exactly on read
-      input.addData(0L until 150L: _*)
-      q.processAllAvailable()
-      input.addData(150L until (cfg.ticks * cfg.numMeters): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    try {
-      spark.sparkContext.setJobDescription(markerDesc)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      eventually(timeout(30.seconds))(assert(marker.get))
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // one shuffle on said and one cached frame per batch: six jobs, where
-    // re-shuffling the batch at every grain took twelve
-    assert(jobs.asScala.toMap === Map("0" -> 6, "1" -> 6))
-    // round trip through the read API: partials re-aggregate to goldens
-    val store = MeterStore(out)
-    val minute = store.energyReport(spark, "minute")
-    assert(minute.count() === 4) // 2 meters × 2 minutes
-    assert(minute.collect().forall(_.getAs[Long]("joules") === 3540L))
-    val day = store.energyReport(spark, "day")
-    assert(day.agg(sum("joules")).collect()(0).getLong(0) === 2L * 120 * 59)
-    // raw per-second layout is batch-partitioned but complete
-    assert(spark.read.parquet(s"$out/meter_samples_second").count() ===
-      cfg.ticks * cfg.numMeters)
+      // jobs per micro-batch, keyed by the batch id the stream sets on
+      // every job it runs, and per write leg, by the job tag each leg
+      // adds (legs inherit the batch id): four concurrent grain legs of
+      // one shuffle and one write each, so eight jobs, of which no more
+      // than two run in sequence
+      val census = jobs.flatMap(p =>
+          Option(p.getProperty("streaming.sql.batchId")).map(_ -> p))
+        .groupMap(_._1) { case (_, p) =>
+          Option(p.getProperty("spark.job.tags")).toSeq
+            .flatMap(_.split(",")).find(_.startsWith("graft-face-leg-"))
+        }
+      assert(census.keySet === Set("0", "1"), s"at $n partitions")
+      census.foreach { case (b, legs) =>
+        assert(legs.size === 8, s"batch $b at $n partitions")
+        assert(legs.groupBy(identity).values.map(_.size).toSeq ===
+          Seq(2, 2, 2, 2), s"batch $b at $n partitions: jobs by leg $legs")
+      }
+      // one file per grain per micro-batch
+      for (g <- Seq("second", "minute", "hour", "day"); b <- Seq(0, 1)) {
+        val files = new java.io.File(s"$out/${MeterStore.grainTable(g)}/batch=$b")
+          .list().count(_.endsWith(".parquet"))
+        assert(files === 1, s"$g batch=$b at $n partitions")
+      }
+      // round trip through the read API: partials re-aggregate to goldens
+      val store = MeterStore(out)
+      val minute = store.energyReport(spark, "minute")
+      assert(minute.count() === 4) // 2 meters × 2 minutes
+      assert(minute.collect().forall(_.getAs[Long]("joules") === 3540L))
+      val day = store.energyReport(spark, "day")
+      assert(day.agg(sum("joules")).collect()(0).getLong(0) === 2L * 120 * 59)
+      // raw per-second layout is batch-partitioned but complete
+      assert(spark.read.parquet(s"$out/meter_samples_second").count() ===
+        cfg.ticks * cfg.numMeters)
+    } finally spark.conf.set(parts, before)
   }
 
   test("file stream source: parquet directory drives the same rollup") {

@@ -12,7 +12,8 @@
 #                           re-run replaced the slice; non-zero exit on
 #                           failure. Then the live program, `2 3 <dir>
 #                           --stream`, three 1 s micro-batches of all five
-#                           tables. Each JVM runs under a JFR recording, and
+#                           tables, which must hold one .parquet file per
+#                           grain per slice. Each JVM runs under a JFR recording, and
 #                           the stage fails if it started any chmod or
 #                           readlink process: a Hadoop conf built outside
 #                           Graft.sessionBuilder would bring the stock
@@ -68,6 +69,16 @@ run_main() {
 run_main demo demo "$DEMO_DIR"
 run_main demo-rerun demo "$DEMO_DIR"
 run_main stream 2 3 "$STREAM_DIR" --stream
+# one .parquet file per grain per slice: each grain's write leg coalesces
+# its own shuffle, so a micro-batch this small is one file per grain
+for d in "$STREAM_DIR"/meter_samples_{second,minute,hour,day}/batch=*; do
+  n="$(find "$d" -maxdepth 1 -name '*.parquet' | wc -l)"
+  if [ "$n" -gt 1 ]; then
+    echo "$d holds $n .parquet files; expected one per grain per slice"
+    exit 1
+  fi
+done
+echo "stream wrote one .parquet file per grain per slice"
 
 echo "== [4/7] graft.Verify $SF_DIR =="
 env SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
