@@ -717,18 +717,19 @@ object Dedup {
   def shingleDeltaBase(sp: SparkSession, corpus: DataFrame,
       textCol: String, idCol: String, baseDir: String, k: Int = 5,
       maxDf: Int = 100): Unit = {
-    // sizes and meta ride initBase's concurrent face batch (guide
-    // §2.6): both derive from the persisted sketch / constants only
-    DeltaRetract.initBase(sp, baseDir,
+    // sizes rides initBase's concurrent face batch (guide §2.6): it
+    // derives from the persisted sketch only
+    DeltaUpdate.initBase(sp, baseDir,
       hashedShingleSketch(corpus, textCol, idCol, k),
-      Seq(s"shingle_k$k"), extraFaces = Seq(
+      Seq(s"shingle_k$k"), shingleParams(k, maxDf), Seq(
         sk => sk.groupBy(col("id")).agg(count(lit(1)).as("n_c"))
-          .write.mode("overwrite").parquet(s"$baseDir/sizes"),
-        _ => DeltaRetract.writeMeta(sp, baseDir,
-          Map("k" -> k.toLong, "max_df" -> maxDf.toLong))))(
+          .write.mode("overwrite").parquet(s"$baseDir/sizes")))(
       shingleServingIndex(_, k, maxDf))
-    ()
   }
+
+  // the build params a shingle base records and every fold checks
+  private def shingleParams(k: Int, maxDf: Int): Map[String, Long] =
+    Map("k" -> k.toLong, "max_df" -> maxDf.toLong)
 
   /** The shingle family's serving view over the delta chain
     * ([[DeltaUpdate]]) after batch `upTo` — the O(delta) successor of
@@ -760,19 +761,16 @@ object Dedup {
     * compacted sketch (one aggregate over rows already being
     * rewritten; taken-down docs are absent from it). The
     * compacted base ≡ [[shingleDeltaBase]] over the corpus with every
-    * doc's latest version (spec-pinned, DeltaUpdateSpec). */
+    * doc's latest version (spec-pinned, DeltaUpdateSpec). Refuses a
+    * `k` or `maxDf` other than the base was built at. */
   def shingleUpdateCompact(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, newBaseDir: String, k: Int = 5,
-      maxDf: Int = 100): Unit = {
+      maxDf: Int = 100): Unit =
     DeltaUpdate.compact(sp, artDir, initName, upTo, newBaseDir,
-      Seq(s"shingle_k$k"), extraFaces = Seq(
+      Seq(s"shingle_k$k"), shingleParams(k, maxDf), extraFaces = Seq(
         sk => sk.groupBy(col("id")).agg(count(lit(1)).as("n_c"))
-          .write.mode("overwrite").parquet(s"$newBaseDir/sizes"),
-        _ => DeltaRetract.writeMeta(sp, newBaseDir,
-          Map("k" -> k.toLong, "max_df" -> maxDf.toLong))))(
+          .write.mode("overwrite").parquet(s"$newBaseDir/sizes")))(
       shingleServingIndex(_, k, maxDf))
-    ()
-  }
 
   /** The capped SERVING view of an uncapped [[hashedShingleSketch]] —
     * the same cap+size tail [[hashedShingleIndex]] bakes at build

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Formats
 
@@ -29,8 +31,16 @@ import graft.sources.Formats
   * decisions from stale counts. Pure takedowns are gate-certified in
   * s27–s30 and d61/d62, interleavings in d64/s35.
   *
-  * The artifact is the [[DeltaRetract.initBase]] snapshot plus
-  * PER-BATCH faces, each delta-sized:
+  * The artifact is the [[initBase]] snapshot:
+  *
+  *   baseDir/sketch   uncapped (id, key…) postings
+  *   baseDir/stats    (key…, cnt) build counts
+  *   baseDir/index    the capped serving view at build
+  *   baseDir/meta     (param, value) build parameters — the values the
+  *                    index was capped at; [[compact]] refuses to fold
+  *                    at others and carries them into the next base
+  *
+  * plus PER-BATCH faces, each delta-sized:
   *
   *   artDir/<b>/updids     this batch's updated or taken-down ids (rid)
   *   artDir/<b>/newrows    the new versions' uncapped sketch rows —
@@ -68,7 +78,13 @@ object DeltaUpdate {
     * base sketch at `baseDir`, so a takedown is an update to an empty
     * version (header). No scan is planned behind it. */
   def emptyVersion(sp: SparkSession, baseDir: String): DataFrame =
-    DeltaRetract.emptyFace(sp, s"$baseDir/sketch")
+    emptyFrame(sp, Formats.parquetSchema(sp, s"$baseDir/sketch"))
+
+  /** A zero-row frame of `schema` that plans NO scan — `df.limit(0)`
+    * still carries its source in the plan, and a write of it can launch
+    * the whole scan job just to emit nothing. */
+  private def emptyFrame(sp: SparkSession, schema: StructType): DataFrame =
+    sp.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** One batch of the delta chain (re-crawls, takedowns or both):
     * write this batch's three delta faces from the base faces, batches
@@ -113,15 +129,14 @@ object DeltaUpdate {
 
       // a fully-empty (replayed upstream) batch moves nothing: write a
       // schema-only delta face without touching either base scan
-      val deltaSchema = DeltaRetract.emptyLike(sp,
-        rows.groupBy(keyCs: _*).agg(lit(0L).as("delta")))
+      val deltaSchema = emptyFrame(sp,
+        rows.groupBy(keyCs: _*).agg(lit(0L).as("delta")).schema)
       // footer-count guard (round 19): the persisted updids face's
       // parquet footers already record the row count — reading them
       // driver-side replaces the `rids.isEmpty` job every step paid.
       // The count also feeds the broadcast-size guard below (lastBid
       // has at most one row per updated id).
-      val ridsN = DeltaRetract.faceRowCount(sp,
-        s"$artDir/$batchId/updids")
+      val ridsN = faceRowCount(sp, s"$artDir/$batchId/updids")
       val delta =
         if (ridsN == 0L) deltaSchema
         else {
@@ -150,13 +165,13 @@ object DeltaUpdate {
               lb
             }
           val fromBase = Formats.readParquet(sp, s"$base/sketch")
-            .join(DeltaRetract.broadcastIfSmall(
+            .join(broadcastIfSmall(
               lastBid.filter(col("lb").isNull).select("rid"), ridsN),
               docId === col("rid"))
           val fromPrior =
-            if (batchId == 0L) DeltaRetract.emptyLike(sp, rows)
+            if (batchId == 0L) emptyFrame(sp, rows.schema)
             else priorNewWithBid(sp, artDir, batchId)
-              .join(DeltaRetract.broadcastIfSmall(
+              .join(broadcastIfSmall(
                 lastBid.filter(col("lb").isNotNull), ridsN),
                 docId === col("rid") && col("nbid") === col("lb"))
           val dec = fromBase.select(keyCs: _*)
@@ -243,7 +258,7 @@ object DeltaUpdate {
     // observed readmit cardinality above — no probe job
     val b =
       if (readmitN == 0L)
-        DeltaRetract.emptyFace(sp, s"$base/sketch")
+        emptyFrame(sp, Formats.parquetSchema(sp, s"$base/sketch"))
       else Formats.readParquet(sp, s"$base/sketch")
         .join(broadcast(readmit), keyCols)
         .join(updDocs, docId === col("rid"), "left_anti")
@@ -263,7 +278,7 @@ object DeltaUpdate {
       initName: String, upTo: Long, keyCols: Seq[String]): DataFrame = {
     val keyCs = keyCols.map(col)
     val dd = Formats.readParquet(sp,
-        DeltaRetract.facePaths(sp, artDir, "statsdelta", 0L to upTo): _*)
+        facePaths(sp, artDir, "statsdelta", 0L to upTo): _*)
       .groupBy(keyCs: _*).agg(sum("delta").as("dd"))
     val known = broadcast(dd)
       .join(Formats.readParquet(sp, s"$artDir/$initName/stats"),
@@ -277,6 +292,39 @@ object DeltaUpdate {
         (col("cnt") + col("dd")).as("curCnt"): _*)
   }
 
+  /** Write a base snapshot (header): the uncapped sketch, its per-key
+    * build counts, the capped serving view — through the FAMILY's own
+    * serving function, so delta maintenance cannot drift from the batch
+    * faces on cap semantics — and `params`, the build parameters the
+    * view was derived at (cap values, shingle k, …) as the `meta` face.
+    * The sketch is persisted first and every other face derives from the
+    * re-read persisted rows (one upstream materialization, and what the
+    * chain later reads is byte-identical to what the derivations saw).
+    * `extraFaces` are the family's own faces (shingle `sizes`, video
+    * `counts`), each handed the persisted sketch. */
+  def initBase(sp: SparkSession, baseDir: String, sketch: DataFrame,
+      keyCols: Seq[String], params: Map[String, Long],
+      extraFaces: Seq[DataFrame => Unit] = Nil)(
+      serveIndex: DataFrame => DataFrame): Unit = {
+    import sp.implicits._
+    sketch.write.mode("overwrite").parquet(s"$baseDir/sketch")
+    val sk = Formats.readParquet(sp, s"$baseDir/sketch")
+    // every face after the sketch is an INDEPENDENT derivation of it or
+    // of constants (disjoint output paths, none reads another) — run
+    // them as concurrent jobs (guide §2.6) so each write's tasks
+    // back-fill cores another's tail leaves idle; chain walls are
+    // job-latency-bound, not byte-bound, at every scale the probes
+    // measured
+    graft.Graft.inParallel(Seq(
+      () => sk.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt"))
+        .write.mode("overwrite").parquet(s"$baseDir/stats"),
+      () => serveIndex(sk).write.mode("overwrite")
+        .parquet(s"$baseDir/index"),
+      () => params.toSeq.sortBy(_._1).toDF("param", "value")
+        .coalesce(1).write.mode("overwrite").parquet(s"$baseDir/meta")) ++
+      extraFaces.map(f => () => f(sk)): _*)
+  }
+
   /** COMPACTION of a delta chain into a fresh base snapshot — the LSM
     * fold: every probe
     * of [[servingView]] pays the accumulated updids/newrows/statsdelta
@@ -285,7 +333,7 @@ object DeltaUpdate {
     * becomes the cost. The current corpus sketch is assembled ONCE —
     * base rows of never-updated docs plus every updated doc's latest
     * version rows — and the base faces re-derive over it through
-    * [[DeltaRetract.initBase]] (the one amortized archive-proportional
+    * [[initBase]] (the one amortized archive-proportional
     * recount the per-batch algebra saves); the chain restarts from
     * batch 0 against the new base dir (fresh artifact dir +
     * checkpoint, the refuse-stale-chain lifetime contract). By
@@ -298,18 +346,37 @@ object DeltaUpdate {
     * (shingle) and d62 (video). Family faces beyond the generic three
     * compact in the family wrappers ([[Dedup.shingleUpdateCompact]] re-derives
     * `sizes`, [[Multimodal.videoUpdateCompact]] re-derives `counts` —
-    * both from the returned compacted sketch, one aggregate each). */
+    * both from the compacted sketch, one aggregate each).
+    *
+    * `params` are the values the caller folds at. Each must equal the
+    * source base's recorded value, or the fold refuses before writing
+    * anything: the serving index was capped at the recorded value, and
+    * compacting at another would silently diverge from pre-fold serving.
+    * The new base records the source's params merged with the caller's,
+    * so a caller that knows only its cap (the winnow takedown sink does
+    * not see k/w) carries the rest forward. A base with no `meta` face
+    * records nothing and checks nothing. */
   def compact(sp: SparkSession, artDir: String, initName: String,
       upTo: Long, newBaseDir: String, keyCols: Seq[String],
-      docId: Column = col("id"),
+      params: Map[String, Long], docId: Column = col("id"),
       extraFaces: Seq[DataFrame => Unit] = Nil)(
-      serveIndex: DataFrame => DataFrame): DataFrame = {
-    val cur = Formats.readParquet(sp, s"$artDir/$initName/sketch")
+      serveIndex: DataFrame => DataFrame): Unit = {
+    val base = s"$artDir/$initName"
+    val recorded = recordedParams(sp, base)
+    params.foreach { case (k, v) =>
+      recorded.get(k).foreach(rv => require(rv == v,
+        s"chain parameter $k=$v does not match the base artifact at " +
+          s"$base (built with $k=$rv) — folding or serving at a " +
+          "different value would silently diverge the compacted " +
+          "index from pre-fold serving; rebuild the base or pass " +
+          "the recorded value"))
+    }
+    val cur = Formats.readParquet(sp, s"$base/sketch")
       .join(updatedDocs(sp, artDir, upTo), docId === col("rid"),
         "left_anti")
       .unionByName(latestRows(sp, artDir, upTo, docId))
-    DeltaRetract.initBase(sp, newBaseDir, cur, keyCols, extraFaces)(
-      serveIndex)
+    initBase(sp, newBaseDir, cur, keyCols, recorded ++ params,
+      extraFaces)(serveIndex)
   }
 
   /** Generation dir of an AUTO-compacted chain ([[autoStep]]). */
@@ -366,7 +433,7 @@ object DeltaUpdate {
   def updatedDocs(sp: SparkSession, artDir: String,
       upTo: Long): DataFrame =
     Formats.readParquet(sp,
-        DeltaRetract.facePaths(sp, artDir, "updids", 0L to upTo): _*)
+        facePaths(sp, artDir, "updids", 0L to upTo): _*)
       .distinct()
 
   /** [[updatedDocs]] materialized once (an eager localCheckpoint): the
@@ -385,10 +452,9 @@ object DeltaUpdate {
     * latest-batch aggregate and its broadcast are skipped. */
   def latestRows(sp: SparkSession, artDir: String, upTo: Long,
       docId: Column = col("id")): DataFrame = {
-    val paths = DeltaRetract.facePaths(sp, artDir, "newrows", 0L to upTo)
-    if (paths.forall(DeltaRetract.faceRowCount(sp, _) == 0L))
-      sp.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        Formats.parquetSchema(sp, paths: _*))
+    val paths = facePaths(sp, artDir, "newrows", 0L to upTo)
+    if (paths.forall(faceRowCount(sp, _) == 0L))
+      emptyFrame(sp, Formats.parquetSchema(sp, paths: _*))
     else {
       val last = priorUpdatedWithBid(sp, artDir, upTo + 1L)
         .groupBy(col("prid").as("rid")).agg(max(col("pbid")).as("lb"))
@@ -410,8 +476,7 @@ object DeltaUpdate {
   // inference job.
   private def priorUpdatedWithBid(sp: SparkSession, artDir: String,
       before: Long): DataFrame = {
-    val paths = DeltaRetract.facePaths(sp, artDir, "updids",
-      0L until before)
+    val paths = facePaths(sp, artDir, "updids", 0L until before)
     val schema = Formats.parquetSchema(sp, paths: _*)
     paths.zipWithIndex.map { case (p, i) =>
       sp.read.schema(schema).parquet(p)
@@ -421,11 +486,94 @@ object DeltaUpdate {
 
   private def priorNewWithBid(sp: SparkSession, artDir: String,
       before: Long): DataFrame = {
-    val paths = DeltaRetract.facePaths(sp, artDir, "newrows",
-      0L until before)
+    val paths = facePaths(sp, artDir, "newrows", 0L until before)
     val schema = Formats.parquetSchema(sp, paths: _*)
     paths.zipWithIndex.map { case (p, i) =>
       sp.read.schema(schema).parquet(p).withColumn("nbid", lit(i.toLong))
     }.reduce(_ unionByName _)
   }
+
+  /** The (param → value) pairs recorded in the `meta` face of the base
+    * at `baseDir`, empty when the base has none. */
+  private def recordedParams(sp: SparkSession,
+      baseDir: String): Map[String, Long] = {
+    val p = new Path(s"$baseDir/meta")
+    if (!p.getFileSystem(hadoopConf(sp)).exists(p)) Map.empty
+    else Formats.readParquet(sp, p.toString).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  /** Driver-side row count of a just-written parquet face — summed
+    * from the part-file footers, no Spark job. Used for the per-batch
+    * empty-batch guards, which previously paid a scheduled job
+    * (`read.parquet(face).isEmpty`) per chain step to learn a number
+    * the write already recorded in its own footers. */
+  private[pipeline] def faceRowCount(sp: SparkSession,
+      path: String): Long = {
+    val conf = hadoopConf(sp)
+    val p = new Path(path)
+    val files = p.getFileSystem(conf).listStatus(p).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .toSeq
+    // a successfully written face always carries ≥ 1 schema-bearing
+    // part file (spec-pinned, DeltaRetractSpec) — zero matches means a
+    // partitioned/renamed layout this reader does not understand, and
+    // silently summing to 0 would flip the empty-batch guard into a
+    // fail-OPEN takedown (ADVICE r19); fail loudly instead
+    require(files.nonEmpty,
+      s"no .parquet data files directly under $path — the face was " +
+        "written with an unexpected layout (partitioned dirs or a " +
+        "committer that names files differently); the footer-count " +
+        "guard cannot read it and must not default to 0")
+    files.map { st =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromStatus(st, conf)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** Broadcast-size guard for the chain delta joins (VERDICT r19 item
+    * 6): every base-face lookup broadcasts the DELTA side, which is
+    * correct while takedown/update batches are delta-sized — but an
+    * adversarially large batch (a bulk takedown of half the corpus)
+    * must not be forced through a driver-collected broadcast toward
+    * the hard 8 GB / 512M-row caps. `rows` is the already-known footer
+    * count of the persisted face (free — no job), so the guard costs
+    * nothing: at or under the threshold the plan keeps its broadcast
+    * hint; above it the hint is dropped and the planner (AQE at
+    * runtime) picks the strategy for a genuinely large side. The
+    * threshold is rows, not bytes, because the delta faces are
+    * narrow (an 8-byte id, or a ≤16-byte key tuple): 4M rows is tens
+    * of MB framed — two orders of magnitude inside the caps. */
+  private[pipeline] val maxBroadcastRows: Long = 4000000L
+
+  private[pipeline] def broadcastIfSmall(df: DataFrame,
+      rows: Long): DataFrame =
+    if (rows <= maxBroadcastRows) broadcast(df) else df
+
+  /** The per-batch face paths for a contiguous id range,
+    * existence-checked UP FRONT through the same Hadoop FileSystem
+    * resolver the reads use: the chain contract assumes contiguous
+    * batch dirs, and a trigger that commits a batch id without
+    * invoking the sink (or a manually deleted id) would otherwise
+    * surface as an unhelpful mid-read parquet error naming one shard —
+    * this names the missing batch and the dir instead (ADVICE r16,
+    * mirroring `lastBatchId`'s message discipline). */
+  private def facePaths(sp: SparkSession, artDir: String,
+      face: String, ids: Seq[Long]): Seq[String] = {
+    val conf = hadoopConf(sp)
+    ids.map { i =>
+      val p = new Path(s"$artDir/$i/$face")
+      require(p.getFileSystem(conf).exists(p),
+        s"missing batch $i face '$face' under $artDir — the delta " +
+          "chain has a gap (a batch id was skipped or its artifacts " +
+          "deleted); recover the missing batch or restart the chain " +
+          "from a fresh compacted base")
+      p.toString
+    }
+  }
+
+  // the session's Hadoop conf, as Formats' footer reads take it
+  private def hadoopConf(sp: SparkSession) = sp.sessionState.newHadoopConf()
 }

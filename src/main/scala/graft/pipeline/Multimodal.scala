@@ -363,12 +363,9 @@ object Multimodal {
     * (both emit the two-word PHashRow face). */
   def phashDeltaBase(sp: SparkSession, hashes: DataFrame,
       baseDir: String, maxBucket: Int = 100): Unit = {
-    DeltaRetract.initBase(sp, baseDir, phashChunkSketch(hashes),
-      Seq("chunk", "chunk_val"), extraFaces = Seq(
-        _ => DeltaRetract.writeMeta(sp, baseDir,
-          Map("max_bucket" -> maxBucket.toLong))))(
+    DeltaUpdate.initBase(sp, baseDir, phashChunkSketch(hashes),
+      Seq("chunk", "chunk_val"), Map("max_bucket" -> maxBucket.toLong))(
       phashServingIndex(_, maxBucket))
-    ()
   }
 
   /** UPDATE face of the image/audio hash-sketch artifact — the
@@ -631,16 +628,13 @@ object Multimodal {
     val kf = keyframes.localCheckpoint(false)
     try {
       // counts derive from the checkpointed keyframes (not the
-      // sketch), meta from constants — both independent of the
-      // stats/index legs, so they ride the same concurrent batch
-      DeltaRetract.initBase(sp, baseDir, phashChunks(packKids(kf)),
-        Seq("chunk", "chunk_val"), extraFaces = Seq(
-          _ => kf.groupBy("doc_id").agg(count(lit(1)).as("n_scenes"))
-            .write.mode("overwrite").parquet(s"$baseDir/counts"),
-          _ => DeltaRetract.writeMeta(sp, baseDir,
-            Map("max_bucket" -> maxBucket.toLong))))(
+      // sketch) — independent of the stats/index legs, so they ride
+      // the same concurrent batch
+      DeltaUpdate.initBase(sp, baseDir, phashChunks(packKids(kf)),
+        Seq("chunk", "chunk_val"), Map("max_bucket" -> maxBucket.toLong),
+        Seq(_ => kf.groupBy("doc_id").agg(count(lit(1)).as("n_scenes"))
+          .write.mode("overwrite").parquet(s"$baseDir/counts")))(
         phashServingIndex(_, maxBucket))
-      ()
     } finally { kf.unpersist(blocking = false); () }
   }
 
@@ -686,20 +680,16 @@ object Multimodal {
     * aggregate over rows already being rewritten; taken-down videos
     * are absent from it). Compacted base ≡
     * [[videoDeltaBase]] over the corpus with every video's latest cut
-    * (spec-pinned, DeltaUpdateSpec). */
+    * (spec-pinned, DeltaUpdateSpec). Refuses a `maxBucket` other than
+    * the base was built at. */
   def videoUpdateCompact(sp: SparkSession, artDir: String,
       initName: String, upTo: Long, newBaseDir: String,
-      maxBucket: Int = 100): Unit = {
-    val docHalf = expr("id div 65536")
+      maxBucket: Int = 100): Unit =
     DeltaUpdate.compact(sp, artDir, initName, upTo, newBaseDir,
-      Seq("chunk", "chunk_val"), docHalf, extraFaces = Seq(
-        sk => sceneCounts(sk)
-          .write.mode("overwrite").parquet(s"$newBaseDir/counts"),
-        _ => DeltaRetract.writeMeta(sp, newBaseDir,
-          Map("max_bucket" -> maxBucket.toLong))))(
+      Seq("chunk", "chunk_val"), Map("max_bucket" -> maxBucket.toLong),
+      expr("id div 65536"), Seq(sk => sceneCounts(sk)
+        .write.mode("overwrite").parquet(s"$newBaseDir/counts")))(
       phashServingIndex(_, maxBucket))
-    ()
-  }
 
   /** (doc_id, n_scenes) of packed chunk rows: one distinct packed id
     * is one scene. */

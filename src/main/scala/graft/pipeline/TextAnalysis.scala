@@ -393,13 +393,10 @@ object TextAnalysis {
   def winnowDeltaBase(sp: SparkSession, corpus: DataFrame,
       textCol: String, idCol: String, baseDir: String, k: Int = 5,
       w: Int = 4, maxDf: Int = 100): Unit = {
-    DeltaRetract.initBase(sp, baseDir,
-      winnowSketch(corpus, textCol, idCol, k, w),
-      Seq("fp"), extraFaces = Seq(
-        _ => DeltaRetract.writeMeta(sp, baseDir, Map("k" -> k.toLong,
-          "w" -> w.toLong, "max_df" -> maxDf.toLong))))(
+    DeltaUpdate.initBase(sp, baseDir,
+      winnowSketch(corpus, textCol, idCol, k, w), Seq("fp"),
+      Map("k" -> k.toLong, "w" -> w.toLong, "max_df" -> maxDf.toLong))(
       winnowServingIndex(_, maxDf))
-    ()
   }
 
   /** The capped SERVING view of an uncapped [[winnowSketch]] — the

@@ -388,18 +388,16 @@ object CurationStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         val (ids, rows) = faces(sp, batch)
-        if (compactEvery > 0) {
+        refuseStaleChain(sp, artDir, batchId)
+        if (compactEvery > 0)
           // AUTO-COMPACTED chain (VERDICT r17 item 6): the chain-length
           // bound is the sink's mechanism, not operator discipline
-          refuseStaleAutoChain(sp, artDir, batchId)
           graft.pipeline.DeltaUpdate.autoStep(sp, artDir, initName,
             batchId, ids, rows, keyCols, compactEvery, docId)(
             compactFn(sp, _, _, _))
-        } else {
-          refuseStaleChain(sp, artDir, batchId)
+        else
           graft.pipeline.DeltaUpdate.step(sp, artDir, initName, batchId,
             ids, rows, keyCols, docId)
-        }
       }
 
   /** A takedown sink: each batch of ids is an update to an EMPTY
@@ -422,58 +420,37 @@ object CurationStream {
   }
 
   /** The family generation folds, shared by update and takedown sinks.
-    * Each first checks its params against the base's recorded build
-    * params (ADVICE r18: a cap consumed only by the fold must not
-    * silently compact at another value than the base was built at). */
+    * Each is its family's compact, which refuses params other than the
+    * base recorded (ADVICE r18: a cap consumed only by the fold must
+    * not silently compact at another value than the base was built
+    * at) and carries the recorded ones into the next generation. */
   private def shingleCompact(initName: String, k: Int, maxDf: Int)
       : (SparkSession, String, Long, String) => Unit =
-    (sp, genDir, upTo, newBase) => {
-      graft.pipeline.DeltaRetract.assertMeta(sp, s"$genDir/$initName",
-        Map("k" -> k.toLong, "max_df" -> maxDf.toLong))
-      graft.pipeline.Dedup.shingleUpdateCompact(sp, genDir, initName,
-        upTo, newBase, k, maxDf)
-    }
+    graft.pipeline.Dedup.shingleUpdateCompact(_, _, initName, _, _, k,
+      maxDf)
 
   // chunk rows are serving-shaped: the generic fold, no extra face
   private def phashCompact(initName: String, maxBucket: Int)
       : (SparkSession, String, Long, String) => Unit =
-    (sp, genDir, upTo, newBase) => {
-      val params = Map("max_bucket" -> maxBucket.toLong)
-      graft.pipeline.DeltaRetract.assertMeta(sp, s"$genDir/$initName",
-        params)
+    (sp, genDir, upTo, newBase) =>
       graft.pipeline.DeltaUpdate.compact(sp, genDir, initName, upTo,
-        newBase, Seq("chunk", "chunk_val"), extraFaces = Seq(
-          _ => graft.pipeline.DeltaRetract.writeMeta(sp, newBase,
-            params)))(
+        newBase, Seq("chunk", "chunk_val"),
+        Map("max_bucket" -> maxBucket.toLong))(
         graft.pipeline.Multimodal.phashServingIndex(_, maxBucket))
-      ()
-    }
 
   // the generic fold; the takedown sink knows maxDf but not the k/w
-  // the sketch was built with, so the new meta carries the source
-  // base's recorded params forward (propagateMeta)
+  // the sketch was built with — compact carries the recorded ones
   private def winnowCompact(initName: String, build: Map[String, Long],
       maxDf: Int): (SparkSession, String, Long, String) => Unit =
-    (sp, genDir, upTo, newBase) => {
-      val params = build + ("max_df" -> maxDf.toLong)
-      graft.pipeline.DeltaRetract.assertMeta(sp, s"$genDir/$initName",
-        params)
+    (sp, genDir, upTo, newBase) =>
       graft.pipeline.DeltaUpdate.compact(sp, genDir, initName, upTo,
-        newBase, Seq("fp"), extraFaces = Seq(
-          _ => graft.pipeline.DeltaRetract.propagateMeta(sp,
-            s"$genDir/$initName", newBase, params)))(
+        newBase, Seq("fp"), build + ("max_df" -> maxDf.toLong))(
         graft.pipeline.TextAnalysis.winnowServingIndex(_, maxDf))
-      ()
-    }
 
   private def videoCompact(initName: String, maxBucket: Int)
       : (SparkSession, String, Long, String) => Unit =
-    (sp, genDir, upTo, newBase) => {
-      graft.pipeline.DeltaRetract.assertMeta(sp, s"$genDir/$initName",
-        Map("max_bucket" -> maxBucket.toLong))
-      graft.pipeline.Multimodal.videoUpdateCompact(sp, genDir,
-        initName, upTo, newBase, maxBucket)
-    }
+    graft.pipeline.Multimodal.videoUpdateCompact(_, _, initName, _, _,
+      maxBucket)
 
   // video chunk ids are PACKED doc·65536+scene
   private val videoDocId = org.apache.spark.sql.functions.expr("id div 65536")
@@ -557,69 +534,48 @@ object CurationStream {
         } finally { chunks.unpersist(blocking = false); () }
     }
 
-  /** The chain-misbinding refusal shared by every retract sink: a
+  /** The chain-misbinding refusal shared by every chain sink: a
     * restart at batch 0 against an artifact dir that already holds
-    * LATER batch artifacts means the checkpoint was lost or cleared —
-    * re-deriving from the init sketch would RESURRECT every previously
-    * retracted document into the serving index, and a takedown
-    * pipeline must never fail open. Two deliberate subtleties:
+    * LATER batch artifacts or generations means the checkpoint was lost
+    * or cleared — re-deriving from the init snapshot would RESURRECT
+    * every previously retracted document into the serving index and
+    * re-serve every superseded version, and a takedown pipeline must
+    * never fail open. The rule covers both layouts: batch dirs sit
+    * under `artDir` for a plain chain and under `artDir/gen0` for an
+    * auto-compacted one, whose later generations are `artDir/gen<g>`.
+    * Two deliberate subtleties:
     *
-    *  - batch 0's OWN artifact is tolerated: a crash after writing
-    *    `artDir/0/...` but before the checkpoint commit replays
+    *  - batch 0's OWN artifact (`0`, `gen0`) is tolerated: a crash
+    *    after writing it but before the checkpoint commit replays
     *    batchId 0, and the per-batch overwrite is exactly the
     *    idempotent-replay contract — refusing it would brick a
-    *    legitimate recovery (ADVICE r15). Only names OTHER than "0"
-    *    prove a longer chain existed.
+    *    legitimate recovery (ADVICE r15). Only later names prove a
+    *    longer chain existed.
     *  - the listing goes through the Hadoop FileSystem API (the same
-    *    resolver the parquet reads below use), not `java.io.File`: on
-    *    an object-store/HDFS artifact dir a local-file listing returns
+    *    resolver the parquet reads use), not `java.io.File`: on an
+    *    object-store/HDFS artifact dir a local-file listing returns
     *    null and the guard would pass vacuously — exactly the
     *    fail-open case it exists to refuse (VERDICT r15). */
   private def refuseStaleChain(sp: SparkSession, artDir: String,
       batchId: Long): Unit =
     if (batchId == 0L) {
-      val p = new org.apache.hadoop.fs.Path(artDir)
-      val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-      val stale =
-        if (!fs.exists(p)) Array.empty[String]
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit) && n != "0")
+      val root = new org.apache.hadoop.fs.Path(artDir)
+      val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
+      val stale = Seq(root, new org.apache.hadoop.fs.Path(root, "gen0"))
+        .filter(fs.exists)
+        .flatMap(fs.listStatus(_).map(_.getPath.getName))
+        .filter { n =>
+          val num = n.stripPrefix("gen")
+          num.nonEmpty && num.forall(_.isDigit) && num != "0"
+        }
       require(stale.isEmpty,
-        s"retractChainSink: artifact dir $artDir already holds batch " +
-          s"artifacts (${stale.sorted.mkString(", ")}) but the " +
-          "checkpoint restarted at batch 0 — retracting from the " +
-          "init sketch would RESURRECT previously retracted docs; " +
-          "restore the matching checkpoint or rebuild the init " +
-          "snapshot in a fresh artifact dir")
-    }
-
-  /** [[refuseStaleChain]] for AUTO-compacted chains (gen-addressed
-    * layout): a fresh checkpoint restarting at batch 0 against an
-    * artifact dir that already holds a later generation, or batches
-    * beyond 0 inside gen0, would re-serve every superseded version /
-    * resurrect every takedown — same fail-open, generation-aware
-    * listing. */
-  private def refuseStaleAutoChain(sp: SparkSession, artDir: String,
-      batchId: Long): Unit =
-    if (batchId == 0L) {
-      val p = new org.apache.hadoop.fs.Path(artDir)
-      val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-      val names =
-        if (!fs.exists(p)) Array.empty[String]
-        else fs.listStatus(p).map(_.getPath.getName)
-      val staleGens = names.filter(n => n.startsWith("gen") &&
-        n.drop(3).nonEmpty && n.drop(3).forall(_.isDigit) && n != "gen0")
-      val gen0 = new org.apache.hadoop.fs.Path(s"$artDir/gen0")
-      val staleBatches =
-        if (!fs.exists(gen0)) Array.empty[String]
-        else fs.listStatus(gen0).map(_.getPath.getName)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit) && n != "0")
-      require(staleGens.isEmpty && staleBatches.isEmpty,
-        s"auto-compacted chain: artifact dir $artDir already holds " +
-          s"later artifacts (${(staleGens ++ staleBatches).sorted
-            .mkString(", ")}) but the checkpoint restarted at batch 0 " +
-          "— recover the matching checkpoint or start a fresh artifact " +
-          "dir from a fresh snapshot")
+        s"chain sink: artifact dir $artDir already holds later " +
+          s"batches or generations (${stale.sorted.mkString(", ")}) " +
+          "but the checkpoint restarted at batch 0 — re-deriving from " +
+          "the init snapshot would RESURRECT previously retracted docs " +
+          "and re-serve superseded versions, of a plain or an " +
+          "auto-compacted chain alike; restore the matching checkpoint " +
+          "or rebuild the init snapshot in a fresh artifact dir")
     }
 
   /** Streaming incremental VIDEO dedup — the streaming face of

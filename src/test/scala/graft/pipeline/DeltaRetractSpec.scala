@@ -13,8 +13,8 @@ import graft.SparkSpec
   * … — the round-15 implementation, which stays on as the oracle), cap
   * re-admission included. The recount shuffles the whole sketch per
   * batch; the delta chain writes only delta faces — same rows, by
-  * construction here, not by luck. Also pins the shared face helpers
-  * (`faceRowCount`, `broadcastIfSmall`). */
+  * construction here, not by luck. Also pins [[DeltaUpdate]]'s face
+  * helpers (`faceRowCount`, `broadcastIfSmall`). */
 class DeltaRetractSpec extends SparkSpec {
 
   private def shingleRows(d: DataFrame) = d.collect()
@@ -253,7 +253,8 @@ class DeltaRetractSpec extends SparkSpec {
     Multimodal.phashDeltaBase(spark, hashes, s"$art/a/init", maxBucket)
     takedown(s"$art/a", 0L, Seq(4L), chunkKey)
     DeltaUpdate.compact(spark, s"$art/a", "init", 0L, s"$art/b/init",
-      chunkKey)(Multimodal.phashServingIndex(_, maxBucket))
+      chunkKey, Map("max_bucket" -> 2L))(
+      Multimodal.phashServingIndex(_, maxBucket))
     takedown(s"$art/b", 0L, Seq(3L), chunkKey)
     val gotPh = chunkRows(DeltaUpdate.servingView(spark, s"$art/b",
       "init", 0L, chunkKey, maxBucket)(identity))
@@ -280,7 +281,8 @@ class DeltaRetractSpec extends SparkSpec {
       s"$wart/a/init", k = 5, w = 4, maxDf = maxDf)
     takedown(s"$wart/a", 0L, Seq(4L), Seq("fp"))
     DeltaUpdate.compact(spark, s"$wart/a", "init", 0L, s"$wart/b/init",
-      Seq("fp"))(TextAnalysis.winnowServingIndex(_, maxDf))
+      Seq("fp"), Map("max_df" -> 2L))(
+      TextAnalysis.winnowServingIndex(_, maxDf))
     takedown(s"$wart/b", 0L, Seq(3L), Seq("fp"))
     val gotWn = fpRows(DeltaUpdate.servingView(spark, s"$wart/b", "init",
       0L, Seq("fp"), maxDf)(identity))
@@ -372,13 +374,13 @@ class DeltaRetractSpec extends SparkSpec {
     val dir = tmpDir("graft_facecount")
     Seq.empty[Long].toDF("rid")
       .write.mode("overwrite").parquet(s"$dir/empty")
-    assert(DeltaRetract.faceRowCount(spark, s"$dir/empty") === 0L)
+    assert(DeltaUpdate.faceRowCount(spark, s"$dir/empty") === 0L)
     Seq(1L, 2L, 3L).toDF("rid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/one")
-    assert(DeltaRetract.faceRowCount(spark, s"$dir/one") === 3L)
+    assert(DeltaUpdate.faceRowCount(spark, s"$dir/one") === 3L)
     spark.range(0, 100, 1, 7).select(col("id").as("rid"))
       .write.mode("overwrite").parquet(s"$dir/many")
-    assert(DeltaRetract.faceRowCount(spark, s"$dir/many") === 100L)
+    assert(DeltaUpdate.faceRowCount(spark, s"$dir/many") === 100L)
   }
 
   // round-20 hardening (ADVICE r19): zero matching data files must fail
@@ -390,7 +392,7 @@ class DeltaRetractSpec extends SparkSpec {
     val dir = tmpDir("graft_facecount_refuse")
     new java.io.File(s"$dir/noface").mkdirs()
     val e = intercept[IllegalArgumentException] {
-      DeltaRetract.faceRowCount(spark, s"$dir/noface")
+      DeltaUpdate.faceRowCount(spark, s"$dir/noface")
     }
     assert(e.getMessage.contains("no .parquet data files"))
   }
@@ -410,8 +412,8 @@ class DeltaRetractSpec extends SparkSpec {
         case j: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
           => j
       }.nonEmpty
-    assert(hinted(DeltaRetract.broadcastIfSmall(df, 2L)))
+    assert(hinted(DeltaUpdate.broadcastIfSmall(df, 2L)))
     assert(!hinted(
-      DeltaRetract.broadcastIfSmall(df, DeltaRetract.maxBroadcastRows + 1)))
+      DeltaUpdate.broadcastIfSmall(df, DeltaUpdate.maxBroadcastRows + 1)))
   }
 }

@@ -304,6 +304,45 @@ class DeltaUpdateSpec extends SparkSpec {
       "video compacted counts diverged from the rebuild")
   }
 
+  test("batch folds refuse a cap other than the base was built at, " +
+      "before writing any face (shingle maxDf, video maxBucket)") {
+    import spark.implicits._
+    import graft.pipeline.{Multimodal => MM}
+    def refused(base: String)(fold: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](fold)
+      assert(e.getMessage.contains("=7 does not match") &&
+        e.getMessage.contains("=100)"), e.getMessage)
+      assert(!new java.io.File(s"$base/meta").exists,
+        s"a refused fold wrote $base/meta")
+    }
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"),
+      (2L, "one two three four five")).toDF("doc_id", "text")
+    val art = tmpDir("graft_foldcap")
+    Dedup.shingleDeltaBase(spark, docs, "text", "doc_id", s"$art/a/init",
+      k = 5, maxDf = 100)
+    DeltaUpdate.step(spark, s"$art/a", "init", 0L, Seq(1L).toDF("doc_id"),
+      DeltaUpdate.emptyVersion(spark, s"$art/a/init"), Seq("shingle_k5"))
+    refused(s"$art/b/init") {
+      Dedup.shingleUpdateCompact(spark, s"$art/a", "init", 0L,
+        s"$art/b/init", k = 5, maxDf = 7)
+    }
+
+    val kf = MM.keyframeHashes(MM.withPayload(
+        Seq((1L, ("v " * 300).trim), (2L, ("w " * 300).trim))
+          .toDF("doc_id", "text"), "text")
+        .select(col("doc_id"), col("payload"), col("media_type"))
+        .as[MM.MediaRow], frameBytes = 72, cutPm = 8L).toDF()
+    val vart = tmpDir("graft_foldcap_video")
+    MM.videoDeltaBase(spark, kf, s"$vart/a/init", maxBucket = 100)
+    DeltaUpdate.step(spark, s"$vart/a", "init", 0L, Seq(1L).toDF("doc_id"),
+      DeltaUpdate.emptyVersion(spark, s"$vart/a/init"),
+      Seq("chunk", "chunk_val"), expr("id div 65536"))
+    refused(s"$vart/b/init") {
+      MM.videoUpdateCompact(spark, s"$vart/a", "init", 0L, s"$vart/b/init",
+        maxBucket = 7)
+    }
+  }
+
   test("AUTO-compacted chains (update + retract): the threshold batch " +
       "folds the previous generation as MECHANISM, serving stays ≡ " +
       "recount across generations, and a replayed threshold batch is " +

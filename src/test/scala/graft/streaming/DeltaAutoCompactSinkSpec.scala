@@ -91,13 +91,37 @@ class DeltaAutoCompactSinkSpec extends SparkSpec {
         TextAnalysis.winnowSketch(survivors, "text", "doc_id", 5, 4),
         100)),
       "winnow auto-compacted retract serving diverged from the rebuild")
-    // propagateMeta must carry k/w (which the retract sink never sees)
-    // through the fold, merged with the cap it asserted
+    // the fold must carry k/w (which the retract sink never sees)
+    // into gen 1, merged with the cap it checked
     val meta = spark.read
       .parquet(s"${DeltaUpdate.genDir(art, 1L)}/init/meta")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(meta === Map("k" -> 5L, "w" -> 4L, "max_df" -> 100L),
       s"fold dropped base build params: $meta")
+  }
+
+  test("winnow RETRACT sink: the threshold batch reads the base's " +
+      "build params once for the check and the carry") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val docs = Seq((1L, texts(0)), (2L, texts(1)), (3L, texts(2)),
+      (9L, texts(3))).toDF("doc_id", "text")
+    val art = tmpDir("graft_wretcensus")
+    TextAnalysis.winnowDeltaBase(spark, docs, "text", "doc_id",
+      s"${DeltaUpdate.genDir(art, 0L)}/init", k = 5, w = 4, maxDf = 100)
+    val input = MemoryStream[Long]
+    val q = CurationStream.winnowDeltaRetractSink(
+      input.toDF().toDF("doc_id"), art, "init", s"$art/_cp",
+      compactEvery = 2).start()
+    val foldJobs = try {
+      Seq(1L, 2L).foreach { id => input.addData(id); q.processAllAvailable() }
+      jobsStarted { input.addData(3L); q.processAllAvailable() }._2.size
+    } finally q.stop()
+    assert(gen1Exists(art), "threshold batch must fold gen 0 into gen 1")
+    // batch 2 = the gen-0 fold plus gen 1's local batch 0; the fold
+    // reads the base's meta face once (18 jobs when the check and the
+    // carry each read it)
+    assert(foldJobs === 17, s"jobs in the threshold batch: $foldJobs")
   }
 
   test("phash UPDATE sink folds generations; serving == rebuild over " +
