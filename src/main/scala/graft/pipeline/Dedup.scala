@@ -3,6 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ObservedProbe
+import graft.ObservedProbe.NoneChanged
+
 /** Deduplication operators for a 100 TB training-data pipeline.
   *
   * Exact dedup is a hash-groupBy (one shuffle on the content hash — at scale
@@ -29,16 +32,6 @@ object Dedup {
         min(col(idCol)).as("keep_id"),
         count(lit(1)).as("n_copies"))
 
-  /** Distinct word-k-shingle inverted index: (id, shingle). */
-  def shingleIndex(df: DataFrame, textCol: String, idCol: String,
-      k: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        array_distinct(
-          TextAnalysis.wordShingles(TextAnalysis.words(col(textCol)), k))
-          .as("shingles"))
-      .select(col("id"), size(col("shingles")).as("n_shingles"),
-        explode(col("shingles")).as("shingle"))
-
   /** Connected components over an undirected near-dup pair list — the step
     * that turns pairwise matches into dedup GROUPS. Iterative min-label
     * propagation: every node adopts the smallest label among itself and its
@@ -46,85 +39,49 @@ object Dedup {
     * hash aggregate; rounds needed = component diameter (near-dup clusters
     * are shallow — copies of one document form diameter ≤ 2), so this
     * converges in a handful of rounds even at 100 TB. The driver loop is
-    * coordination only (one `count()` per round); all data work is
-    * distributed. Returns (id, component) with component = min id reachable.
-    */
-  /** Lazy localCheckpoint plus the ids of the RDD blocks it registered —
-    * captured by a before/after snapshot around THIS call only. Frees
-    * against these ids touch exactly the blocks this checkpoint created;
-    * blocks persisted by anything else on the session are never in the
-    * set unless another thread persists inside this call's microsecond
-    * snapshot window (the residual race; callers needing hard isolation
-    * run on their own session). */
-  private def checkpointOwning(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val ck = df.localCheckpoint(false)
-    (ck, sc.getPersistentRDDs.keySet.toSet -- before)
-  }
-
-  private def free(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-  }
-
+    * coordination only (one checkpoint job per round, its changed-row
+    * probe observed in that job — [[graft.ObservedProbe.fixpoint]]); all
+    * data work is distributed. Returns (id, component) with component =
+    * min id reachable; `maxIter` (>= 1) caps the rounds. */
   def components(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
-    // Lazy localCheckpoint (materialized by each round's single count()
-    // action) rather than persist: same recompute-avoidance, but it also
-    // TRUNCATES the logical plan, so per-round analysis/optimization cost
-    // stays constant instead of growing with the upstream (pair-mining)
-    // lineage times the round number.
-    // Checkpoint LIFECYCLE (r2 lesson): blocks a round pins are dead the
-    // moment the next round materializes — left pinned they accumulate in
-    // the block manager for the life of the session. Each round therefore
-    // frees the previous round's blocks, and the loop exit frees the edge
-    // list; only the RETURNED labels' blocks stay (the caller's action
-    // reads them; localCheckpoint data is unrecoverable once dropped, so
-    // releasing those too would make the result unreadable).
-    // Ownership: every checkpoint's block ids are captured at its own
-    // call site ([[checkpointOwning]]), so frees are scoped to blocks
-    // this invocation created — concurrent persists elsewhere on the
-    // session are untouched outside the snapshot windows.
+    // Each round's localCheckpoint TRUNCATES the logical plan, so
+    // per-round analysis/optimization cost stays constant instead of
+    // growing with the upstream (pair-mining) lineage times the round
+    // number. The edge list and the seed labels are LAZY checkpoints,
+    // materialized by the first round's job. Checkpoint LIFECYCLE (r2
+    // lesson): each round releases its predecessor and the exit
+    // releases the edge list, so only the RETURNED labels' blocks stay
+    // (the caller's action reads them).
     // No distinct(): min-label propagation is idempotent to duplicate
     // edges (min over a bag = min over its set), so deduplicating the
     // doubled edge list would be a pure-overhead shuffle of the largest
     // intermediate in the query.
-    val (edges, edgeIds) = checkpointOwning(pairs
+    val edges = pairs
       .select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
+      .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+      .localCheckpoint(false)
     // Init folds the first propagation round in: label = min(self, direct
     // neighbors) from one aggregate over edges (also yields the node set,
     // no separate distinct). Duplicate-clique components — the common case
     // in near-dup graphs — are final immediately.
-    var (labels, prevRound) = checkpointOwning(
-      edges.groupBy(col("src").as("id"))
-        .agg(min(col("dst")).as("nbr_min"))
-        .select(col("id"), least(col("id"), col("nbr_min")).as("component")))
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+    val fp = ObservedProbe.fixpoint(
+        edges.groupBy(col("src").as("id"))
+          .agg(min(col("dst")).as("nbr_min"))
+          .select(col("id"), least(col("id"), col("nbr_min")).as("component")),
+        NoneChanged(col("component") < col("old")), maxIter,
+        lazySeed = true)({ (labels, _) =>
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(min(col("component")).as("nbr_min"))
-      // One action per round: the convergence count doubles as the job
-      // that materializes the round's checkpoint.
-      val (next, nextIds) = checkpointOwning(
-        labels.join(viaNeighbors, Seq("id"), "left")
-          .select(col("id"), col("component").as("old"),
-            least(col("component"),
-              coalesce(col("nbr_min"), col("component"))).as("component")))
-      changed = next.filter(col("component") < col("old")).count()
-      labels = next.select("id", "component")
-      // next is materialized; the previous round's labels are dead.
-      free(labels, prevRound)
-      prevRound = nextIds
-      iter += 1
-    }
-    free(labels, edgeIds)
-    labels
+      labels.join(viaNeighbors, Seq("id"), "left")
+        .select(col("id"), col("component").as("old"),
+          least(col("component"),
+            coalesce(col("nbr_min"), col("component"))).as("component"))
+    }, _.select("id", "component"))
+    ObservedProbe.release(edges)
+    fp.state
   }
 
   /** Connected components by alternating Large-Star / Small-Star edge
@@ -180,21 +137,20 @@ object Dedup {
           .union(m.select(col("u"), col("m").as("v"))))
     }
     val rawPairs = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-    var (edges, prevIds) = checkpointOwning(canon(rawPairs))
+    var edges = canon(rawPairs).localCheckpoint(false)
     var iter = 0
     var stable = false
     var prevCount = edges.count()
     while (!stable && iter < maxIter) {
-      val (next, nextIds) = checkpointOwning(smallStar(largeStar(edges)))
+      val next = smallStar(largeStar(edges)).localCheckpoint(false)
       // exact fixpoint test on canonical distinct sets: same cardinality
       // and no row of next outside edges ⟺ equal (the previous round's
       // count is carried, so each round pays two actions, not three)
       val nextCount = next.count()
       stable = nextCount == prevCount &&
         next.exceptAll(edges).limit(1).count() == 0
-      free(next, prevIds)
+      ObservedProbe.release(edges)
       edges = next
-      prevIds = nextIds
       prevCount = nextCount
       iter += 1
     }
@@ -206,7 +162,7 @@ object Dedup {
     // closed well inside it. The throw releases this call's blocks first
     // (the r2 checkpoint-lifecycle contract holds on the error path).
     if (!stable) {
-      free(edges, prevIds)
+      ObservedProbe.release(edges)
       throw new IllegalStateException(
         s"componentsAltStar did not reach the star fixpoint in $maxIter " +
           "alternating rounds — raise maxIter")
@@ -444,10 +400,9 @@ object Dedup {
     // which the candidate blocks are dead — freed in the finally; the
     // returned DataFrame reads only the corpus scan and the components
     // labels checkpoint.
-    val (cands, candIds0) = checkpointOwning(
-      MinHashLSH.candidatePairs(df, textCol, idCol, k, numHashes,
+    val cands = MinHashLSH.candidatePairs(df, textCol, idCol, k, numHashes,
         bands, estThreshold, maxBucket, shingleRows)
-        .select(col("doc_a"), col("doc_b")))
+      .select(col("doc_a"), col("doc_b")).localCheckpoint(false)
     try {
       val candIds = cands
         .select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
@@ -456,7 +411,7 @@ object Dedup {
       val verified = jaccardPairs(flagged, textCol, idCol, k, threshold, maxDf)
         .join(cands, Seq("doc_a", "doc_b"))
       survivors(df, verified, idCol)
-    } finally free(cands, candIds0)
+    } finally ObservedProbe.release(cands)
   }
 
   /** Exact n-gram Jaccard similar pairs: J(a,b) >= threshold, a < b.
@@ -591,8 +546,8 @@ object Dedup {
     * (parquet, bucketed by shingle if joins should co-locate); because
     * the df-cap and the sizes are baked in at build time, an increment
     * never triggers an archive-wide aggregate — its cost is the join
-    * alone. (Distinct from [[shingleIndex]], the string-shingle form —
-    * this one carries 8-byte hashes, the shape every join keys on.) */
+    * alone. Rows carry 8-byte shingle hashes, the shape every join
+    * keys on. */
   def hashedShingleIndex(corpus: DataFrame, textCol: String,
       idCol: String, k: Int = 5, maxDf: Int = 100): DataFrame =
     // BY CONSTRUCTION the capped view of the uncapped sketch — the

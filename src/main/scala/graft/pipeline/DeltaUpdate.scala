@@ -191,7 +191,7 @@ object DeltaUpdate {
       delta.write.mode("overwrite")
         .parquet(s"$artDir/$batchId/statsdelta")
     } finally {
-      pinnedLastBid.foreach(_.unpersist(blocking = false))
+      pinnedLastBid.foreach(graft.ObservedProbe.release)
     }
     ()
   }
@@ -215,10 +215,11 @@ object DeltaUpdate {
     * ~44 of s31's 106 jobs were this one probe. The readmit
     * cardinality now rides the counts checkpoint via
     * [[graft.ObservedProbe]], so the leg-B skip decision costs no job
-    * at all. Pinned footprint: two delta-sized frames per probe,
-    * released by the caller's session sweep (the Verify/Bench
-    * contract) — a long-running serving process issuing unbounded
-    * probes should unpersist between probes the same way.
+    * at all. Pinned footprint: two delta-sized frames per probe, which
+    * stay stored until the caller's session sweep (the Verify/Bench
+    * contract: unpersist every persistent RDD) — a long-running serving
+    * process issuing unbounded probes must sweep between probes, since
+    * the view does not release them per probe yet.
     *
     * A family whose decoration also reads the updated-doc set and the
     * updated docs' latest rows (the shingle sizes, the video scene

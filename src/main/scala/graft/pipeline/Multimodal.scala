@@ -635,7 +635,7 @@ object Multimodal {
         Seq(_ => kf.groupBy("doc_id").agg(count(lit(1)).as("n_scenes"))
           .write.mode("overwrite").parquet(s"$baseDir/counts")))(
         phashServingIndex(_, maxBucket))
-    } finally { kf.unpersist(blocking = false); () }
+    } finally graft.ObservedProbe.release(kf)
   }
 
   /** The uncapped PACKED chunk rows of a keyframe table — the video

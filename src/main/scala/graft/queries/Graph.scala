@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{ObservedProbe, QueryDef, Tables}
+import graft.ObservedProbe.{NoneChanged, SameCount}
 
 /** Graph analytics over fixture-derived graphs: integer-exact PageRank.
   * Complements the distributed connected components in
@@ -53,9 +54,12 @@ object Graph {
   /** One integer power-iteration step (the [[pageRankInt]] recurrence):
     * src-keyed equi-join of the edges against the rank table, dst-keyed
     * exact BIGINT contribution sum, dyadic 7/8 damping with truncating
-    * div. Input ranks in `prevCol`; output appends `outCol`. */
+    * div. Input ranks in `prevCol`; output appends `outCol`. `base` is
+    * the teleport mass a node receives each step (125000 everywhere;
+    * [[pageRankSeeded]] gives it to seeds only). */
   private def prRound(e: DataFrame, deg: DataFrame, r: DataFrame,
-      prevCol: String, outCol: String): DataFrame = {
+      prevCol: String, outCol: String,
+      base: Column = lit(125000L)): DataFrame = {
     val contrib = e
       .join(r.select(col("id").as("src"), col(prevCol).as("pr")), "src")
       .join(deg, "src")
@@ -63,7 +67,7 @@ object Graph {
         expr("(pr * 7) div (8 * dg)").as("c"))
       .groupBy("dst").agg(sum(col("c")).as("m"))
     r.join(contrib, r("id") === contrib("dst"), "left")
-      .withColumn(outCol, lit(125000L) + coalesce(col("m"), lit(0L)))
+      .withColumn(outCol, base + coalesce(col("m"), lit(0L)))
       .drop("dst", "m")
   }
 
@@ -140,11 +144,13 @@ object Graph {
     * lineage truncation so round N's plan doesn't replay rounds 1..N−1
     * (on a cluster: `checkpoint` to reliable storage) — and the
     * convergence probe (changed-row count) rides THAT job via
-    * `Dataset.observe` ([[graft.ObservedProbe]], round 20): the
+    * `Dataset.observe` ([[graft.ObservedProbe.fixpoint]]): the
     * checkpoint scan sees every row anyway, so the probe costs no
-    * scheduled job of its own. Production runs amortize further by
-    * probing every few rounds (pass the budget via `maxIters` and
-    * re-enter). The node universe is `nodes` ∪ edge endpoints, the
+    * scheduled job of its own. The superseded round is released as the
+    * next one lands and the edge list at exit, leaving pinned only the
+    * rank and degree tables the result reads. Production runs amortize
+    * further by probing every few rounds (pass the budget via
+    * `maxIters` and re-enter). The node universe is `nodes` ∪ edge endpoints, the
     * [[labelPropagate]] closure contract. */
   def pageRankFixpoint(edges: DataFrame, nodes: DataFrame,
       maxIters: Int): DataFrame = {
@@ -153,8 +159,7 @@ object Graph {
     // materialize the edge list ONCE: every iteration re-reads it, and
     // without this a derived edge plan (userCoEdges et al.) would be
     // recomputed per round — the same reason a cluster run persists its
-    // edge RDD before power iteration. Freed by the session's
-    // persistent-RDD sweep (Verify/Bench contract), like d52's pairs.
+    // edge RDD before power iteration. Released once the loop is done.
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val seed = labelSeed(e, nodes).select(col("id"))
       .withColumn("pr", lit(1000000L))
@@ -183,31 +188,24 @@ object Graph {
     prLoopResult(e, seed, maxIters)
   }
 
-  private def prLoopResult(e: DataFrame, seed: DataFrame,
-      maxIters: Int): DataFrame = {
+  /** The power-iteration fixpoint shared by the PageRank faces: `seed`
+    * is (id, [is_seed,] pr), each round steps every rank with teleport
+    * mass `base`, and the result is (id, [is_seed,] deg_out, pr,
+    * iters_run, converged). Releases the edge list `e` at exit. */
+  private def prLoopResult(e: DataFrame, seed: DataFrame, maxIters: Int,
+      base: Column = lit(125000L)): DataFrame = {
     val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
       .localCheckpoint(true)
-    var r = seed.localCheckpoint(true)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val prev = r
-      // convergence probe FUSED into the round's one materialization job
-      // (round 20, ObservedProbe): the changed-row count is observed
-      // during the checkpoint scan instead of a second scheduled job per
-      // round — same decision (count == 0 ⇔ the old limit(1).isEmpty)
-      val (next, changed) = ObservedProbe.checkpointWithCount(
-        prRound(e, deg, r, "pr", "nxt"),
-        count(when(col("nxt") =!= col("pr"), lit(1))))(cp =>
-        if (cp.filter(col("nxt") =!= col("pr")).limit(1).isEmpty) 0L else 1L)
-      converged = changed == 0L
-      iters += 1
-      r = next.select(col("id"), col("nxt").as("pr"))
-      prev.unpersist(blocking = false)
-    }
-    r.join(deg, r("id") === deg("src"), "left")
-      .select(r("id"), coalesce(col("dg"), lit(0L)).as("deg_out"),
-        col("pr"), lit(iters).as("iters_run"), lit(converged).as("converged"))
+    val fp = ObservedProbe.fixpoint(seed,
+        NoneChanged(col("nxt") =!= col("pr")), maxIters)(
+      (r, _) => prRound(e, deg, r, "pr", "nxt", base),
+      _.drop("pr").withColumnRenamed("nxt", "pr"))
+    ObservedProbe.release(e)
+    val r = fp.state
+    val keys = r.columns.filter(_ != "pr").map(r(_))
+    fp.report(r.join(deg, r("id") === deg("src"), "left")
+      .select(keys ++ Seq(coalesce(col("dg"), lit(0L)).as("deg_out"),
+        col("pr")): _*), "iters_run")
   }
 
   /** PERSONALIZED (seeded) integer PageRank — authority relative to a
@@ -231,44 +229,14 @@ object Graph {
     require(maxIters >= 1 && maxIters <= 128,
       s"fixpoint iteration wants 1..128 max iterations, got $maxIters")
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      .localCheckpoint(true)
     val sd = seeds.select(col("id")).distinct()
       .withColumn("sb", lit(true))
     val seeded = labelSeed(e, nodes).select(col("id"))
       .join(sd, Seq("id"), "left")
       .select(col("id"), coalesce(col("sb"), lit(false)).as("is_seed"))
-    var r = seeded
-      .withColumn("pr",
-        when(col("is_seed"), lit(1000000L)).otherwise(lit(0L)))
-      .localCheckpoint(true)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val prev = r
-      val contrib = e
-        .join(r.select(col("id").as("src"), col("pr")), "src")
-        .join(deg, "src")
-        .select(col("dst"), expr("(pr * 7) div (8 * dg)").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("m"))
-      // probe fused into the checkpoint job — see prLoopResult
-      val (next, changed) = ObservedProbe.checkpointWithCount(
-        r.join(contrib, r("id") === contrib("dst"), "left")
-          .withColumn("nxt",
-            when(col("is_seed"), lit(125000L)).otherwise(lit(0L)) +
-              coalesce(col("m"), lit(0L)))
-          .drop("dst", "m"),
-        count(when(col("nxt") =!= col("pr"), lit(1))))(cp =>
-        if (cp.filter(col("nxt") =!= col("pr")).limit(1).isEmpty) 0L else 1L)
-      converged = changed == 0L
-      iters += 1
-      r = next.select(col("id"), col("is_seed"), col("nxt").as("pr"))
-      prev.unpersist(blocking = false)
-    }
-    r.join(deg, r("id") === deg("src"), "left")
-      .select(r("id"), col("is_seed"),
-        coalesce(col("dg"), lit(0L)).as("deg_out"), col("pr"),
-        lit(iters).as("iters_run"), lit(converged).as("converged"))
+    prLoopResult(e, seeded.withColumn("pr",
+        when(col("is_seed"), lit(1000000L)).otherwise(lit(0L))), maxIters,
+      base = when(col("is_seed"), lit(125000L)).otherwise(lit(0L)))
   }
 
   /** CONVERGENCE-DRIVEN label propagation — [[labelPropagate]]'s
@@ -312,25 +280,16 @@ object Graph {
     lpaLoopResult(e, seed, maxRounds)
   }
 
+  /** The LPA fixpoint shared by both faces; releases the edge list `e`
+    * at exit. */
   private def lpaLoopResult(e: DataFrame, seed: DataFrame,
       maxRounds: Int): DataFrame = {
-    var lab = seed.localCheckpoint(true)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val prev = lab
-      // probe fused into the checkpoint job — see prLoopResult
-      val (next, changed) = ObservedProbe.checkpointWithCount(
-        lpaRound(e, lab, "lbl", "nxt"),
-        count(when(col("nxt") =!= col("lbl"), lit(1))))(cp =>
-        if (cp.filter(col("nxt") =!= col("lbl")).limit(1).isEmpty) 0L else 1L)
-      converged = changed == 0L
-      rounds += 1
-      lab = next.select(col("id"), col("nxt").as("lbl"))
-      prev.unpersist(blocking = false)
-    }
-    lab.select(col("id"), col("lbl").as("community"),
-      lit(rounds).as("rounds_run"), lit(converged).as("converged"))
+    val fp = ObservedProbe.fixpoint(seed,
+        NoneChanged(col("nxt") =!= col("lbl")), maxRounds)(
+      (lab, _) => lpaRound(e, lab, "lbl", "nxt"),
+      _.select(col("id"), col("nxt").as("lbl")))
+    ObservedProbe.release(e)
+    fp.report(fp.state.select(col("id"), col("lbl").as("community")))
   }
 
   /** Co-occurrence edge derivation over the events fixture: users active
@@ -576,36 +535,19 @@ object Graph {
     require(k >= 1, s"k-core wants k >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 128,
       s"fixpoint peeling wants 1..128 max rounds, got $maxRounds")
-    // edge-count probes FUSED into the checkpoint jobs (round 20,
-    // ObservedProbe): the cardinality compare is observed during each
-    // round's one materialization scan instead of a count() job after it
-    val (e0, n0) = ObservedProbe.checkpointWithCount(
-      edges.select(col("src"), col("dst")), count(lit(1)))(_.count())
-    var e = e0
-    var nEdges = n0
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val prev = e
-      val deg = e.groupBy("src").agg(count(lit(1)).as("dg"))
-      val survivors = deg.filter(col("dg") >= k).select("src")
-      val (next, nNext) = ObservedProbe.checkpointWithCount(
-        e.join(survivors, Seq("src"), "left_semi")
-          .join(survivors.withColumnRenamed("src", "dst"), Seq("dst"),
-            "left_semi")
-          .select(col("src"), col("dst")),
-        count(lit(1)))(_.count())
-      rounds += 1
-      // monotone peel: nested edge sets, so unchanged edge COUNT ⇔
-      // unchanged edge set ⇔ unchanged degrees ⇔ fixpoint
-      converged = nNext == nEdges
-      nEdges = nNext
-      e = next
-      prev.unpersist(blocking = false)
+    // monotone peel: nested edge sets, so unchanged edge COUNT ⇔
+    // unchanged edge set ⇔ unchanged degrees ⇔ fixpoint
+    val fp = ObservedProbe.fixpoint(edges.select(col("src"), col("dst")),
+        SameCount, maxRounds) { (e, _) =>
+      val survivors = e.groupBy("src").agg(count(lit(1)).as("dg"))
+        .filter(col("dg") >= k).select("src")
+      e.join(survivors, Seq("src"), "left_semi")
+        .join(survivors.withColumnRenamed("src", "dst"), Seq("dst"),
+          "left_semi")
+        .select(col("src"), col("dst"))
     }
-    e.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_deg"))
-      .select(col("id"), col("core_deg"),
-        lit(rounds).as("rounds_run"), lit(converged).as("converged"))
+    fp.report(fp.state.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("core_deg")))
   }
   /** k-truss decomposition (Cohen 2008) — [[kCore]]'s EDGE analogue and
     * the stricter community filter: repeatedly delete edges supported by
@@ -637,42 +579,20 @@ object Graph {
     * 100 TB shape: each round is the census's wedge join + one
     * support aggregation + one semi-join filter, all keyed on edge/node
     * ids; the surviving (edge, support) list is the loop state — ONE
-    * localCheckpoint per round, superseded rounds unpersisted — and
+    * localCheckpoint per round, each superseded round released — and
     * only shrinks. */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 3, s"k-truss wants k >= 3, got $k")
     require(maxRounds >= 1 && maxRounds <= 128,
       s"fixpoint peeling wants 1..128 max rounds, got $maxRounds")
-    // count probes fused into the checkpoint jobs — see kCore
-    val (e0, n0) = ObservedProbe.checkpointWithCount(
-      edges.select(col("src"), col("dst"))
-        .filter(col("src") < col("dst")).distinct(),
-      count(lit(1)))(_.count())
-    var e = e0
-    var nEdges = n0
-    var rounds = 0
-    var converged = false
-    // `pinned` tracks the one checkpointed DataFrame backing the loop
-    // state; each round supersedes (and unpersists) the previous one
-    var pinned = e
-    var support = e.select(col("src"), col("dst"), lit(0L).as("support"))
-    while (!converged && rounds < maxRounds) {
-      val prev = pinned
-      val (sup, nNext) = ObservedProbe.checkpointWithCount(
-        edgeSupport(e).filter(col("support") >= k - 2),
-        count(lit(1)))(_.count())
-      support = sup
-      rounds += 1
-      // monotone peel: nested edge sets, so unchanged edge COUNT ⇔
-      // unchanged edge set ⇔ unchanged supports ⇔ fixpoint
-      converged = nNext == nEdges
-      nEdges = nNext
-      pinned = support
-      e = support.select(col("src"), col("dst"))
-      prev.unpersist(blocking = false)
-    }
-    support.select(col("src"), col("dst"), col("support"),
-      lit(rounds).as("rounds_run"), lit(converged).as("converged"))
+    // monotone peel: nested edge sets, so unchanged edge COUNT ⇔
+    // unchanged edge set ⇔ unchanged supports ⇔ fixpoint. The seed is
+    // the canonical edge list; every round's state carries `support`.
+    val fp = ObservedProbe.fixpoint(edges.select(col("src"), col("dst"))
+        .filter(col("src") < col("dst")).distinct(), SameCount, maxRounds)(
+      (s, _) => edgeSupport(s.select(col("src"), col("dst")))
+        .filter(col("support") >= k - 2))
+    fp.report(fp.state)
   }
 
   /** One k-truss support round: triangles of the canonical (src < dst)
@@ -725,42 +645,28 @@ object Graph {
     * list against the CURRENT FRONTIER (shrinks to the BFS ring, ≪
     * nodes — AQE broadcasts it when it fits) plus one anti-join against
     * the visited set — both keyed on node ids, nothing wider than an id
-    * pair shuffles; the edge list is checkpointed once, the visited set
-    * per round (it is the loop state). */
+    * pair shuffles; the edge list is checkpointed once (released at
+    * exit), the visited set per round (it is the loop state). */
   def bfsLevels(edges: DataFrame, seeds: DataFrame,
       maxRounds: Int): DataFrame = {
     require(maxRounds >= 1 && maxRounds <= 128,
       s"fixpoint expansion wants 1..128 max rounds, got $maxRounds")
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    // count probes fused into the checkpoint jobs — see kCore
-    val (v0, n0) = ObservedProbe.checkpointWithCount(
-      seeds.select(col("id")).distinct().withColumn("level", lit(0)),
-      count(lit(1)))(_.count())
-    var visited = v0
-    var frontier = visited.select(col("id"))
-    var nVisited = n0
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val prev = visited
-      val next = e
+    // monotone growth: unchanged visited COUNT ⇔ empty frontier ⇔
+    // fixpoint (an empty frontier can never repopulate). Round i
+    // expands the frontier of the nodes at level i.
+    val fp = ObservedProbe.fixpoint(
+        seeds.select(col("id")).distinct().withColumn("level", lit(0)),
+        SameCount, maxRounds) { (visited, i) =>
+      val frontier = visited.filter(col("level") === i)
+      visited.unionAll(e
         .join(frontier.select(col("id").as("src")), "src")
         .select(col("dst").as("id")).distinct()
         .join(visited.select(col("id")), Seq("id"), "left_anti")
-        .withColumn("level", lit(rounds + 1))
-      val (vNext, nNext) = ObservedProbe.checkpointWithCount(
-        visited.unionAll(next), count(lit(1)))(_.count())
-      visited = vNext
-      rounds += 1
-      // monotone growth: unchanged visited COUNT ⇔ empty frontier ⇔
-      // fixpoint (an empty frontier can never repopulate)
-      converged = nNext == nVisited
-      nVisited = nNext
-      frontier = visited.filter(col("level") === rounds).select(col("id"))
-      prev.unpersist(blocking = false)
+        .withColumn("level", lit(i + 1)))
     }
-    visited.select(col("id"), col("level"),
-      lit(rounds).as("rounds_run"), lit(converged).as("converged"))
+    ObservedProbe.release(e)
+    fp.report(fp.state)
   }
 
   /** Common-neighbor link prediction: for every non-adjacent unordered

@@ -60,33 +60,21 @@ object CurationStream {
           .parquet(s"$outDir/pairs/batch=$batchId")
       }
 
-  /** The IMAGE-family twin of [[incrementalDedupSink]]: incoming image
-    * payloads are perceptually hashed per micro-batch
-    * ([[graft.pipeline.Multimodal.dHash]] — the only stage that touches
-    * payload bytes, map-side) and matched against a PERSISTED archive
-    * chunk index ([[graft.pipeline.Multimodal.phashChunkIndex]], built
-    * once per snapshot with the df-cap baked in — the d21
+  /** The hash-family twin of [[incrementalDedupSink]]: incoming media
+    * payloads are fingerprinted per micro-batch by `hashFn` (image
+    * [[graft.pipeline.Multimodal.dHash]], audio
+    * [[graft.pipeline.Multimodal.audioFingerprints]] — the only stage
+    * touching payload bytes, map-side) and matched against a PERSISTED
+    * archive chunk index ([[graft.pipeline.Multimodal.phashChunkIndex]],
+    * built once per snapshot with the df-cap baked in — the d21
     * persisted-index contract): no micro-batch ever re-decodes,
     * re-hashes, re-caps, or re-pairs the archive, so per-batch cost is
     * batch size × bounded archive fan-out regardless of archive size.
-    * Per-batch `batch=<id>` overwrite gives the same exactly-once
-    * layout as the text sink above. `archIndex` is typically
-    * `spark.read.parquet` of the persisted index, NOT a live
-    * derivation. */
-  def phashDedupSink(newMedia: DataFrame, archIndex: DataFrame,
-      outDir: String, checkpoint: String,
-      maxHamming: Int = 3): DataStreamWriter[Row] =
-    hashDedupSink(newMedia, graft.pipeline.Multimodal.dHash(_),
-      archIndex, outDir, checkpoint, maxHamming)
-
-  /** [[phashDedupSink]] with the per-batch fingerprint stage supplied
-    * by the caller — the two-word (doc_id, ph_lo, ph_hi) layout is the
-    * only contract between the hash and the probe machinery, so any
-    * modality's fingerprint (image dHash, audio
-    * [[graft.pipeline.Multimodal.audioFingerprints]]) streams through
-    * the SAME archive-capped chunk index probe. The fingerprint is the
-    * only stage touching payload bytes, and it runs map-side inside
-    * the micro-batch. */
+    * The two-word (doc_id, ph_lo, ph_hi) layout is the only contract
+    * between the hash and the probe machinery. Per-batch `batch=<id>`
+    * overwrite gives the same exactly-once layout as the text sink
+    * above. `archIndex` is typically `spark.read.parquet` of the
+    * persisted index, NOT a live derivation. */
   def hashDedupSink(newMedia: DataFrame,
       hashFn: org.apache.spark.sql.Dataset[graft.pipeline.Multimodal.MediaRow]
         => DataFrame,
@@ -182,7 +170,7 @@ object CurationStream {
               .parquet(s"$outDir/sketch"),
             () => serveIndex(surv)
               .write.mode("overwrite").parquet(s"$outDir/index"))
-        } finally { surv.unpersist(blocking = false); () }
+        } finally graft.ObservedProbe.release(surv)
     }
 
   /** The chain DISCIPLINE shared by every takedown sink, independent of
@@ -531,7 +519,7 @@ object CurationStream {
               .parquet(s"$outDir/counts"),
             () => Multimodal.phashServingIndex(chunks, maxBucket)
               .write.mode("overwrite").parquet(s"$outDir/index"))
-        } finally { chunks.unpersist(blocking = false); () }
+        } finally graft.ObservedProbe.release(chunks)
     }
 
   /** The chain-misbinding refusal shared by every chain sink: a
@@ -589,8 +577,8 @@ object CurationStream {
     * result. Same idempotent `batch=<id>` overwrite layout as the
     * other dedup sinks. The per-batch keyframe checkpoint (the probe
     * has multiple consumers and decoding is the expensive stage) is
-    * released after each write, so a long-running stream holds at
-    * most one batch's keyframe blocks at a time. */
+    * released once the batch's write is done, so no batch's keyframe
+    * blocks outlive it. */
   def videoDedupSink(newMedia: DataFrame,
       index: graft.pipeline.Multimodal.VideoIndex,
       outDir: String, checkpoint: String,
@@ -610,6 +598,6 @@ object CurationStream {
             .videoProbePairsOn(kf, index, maxHamming)
             .write.mode("overwrite")
             .parquet(s"$outDir/pairs/batch=$batchId")
-        } finally { kf.unpersist(blocking = false); () }
+        } finally graft.ObservedProbe.release(kf)
       }
 }

@@ -326,7 +326,7 @@ object StreamQueries {
       .select(col("new_id"), col("corpus_id"), col("inter"), col("jaccard"))
       .orderBy("new_id", "corpus_id")
       .localCheckpoint(true)
-    idx.unpersist(blocking = false)
+    graft.ObservedProbe.release(idx)
     rmTree(out)
     result
   }
@@ -990,7 +990,7 @@ object StreamQueries {
             hashFn(arch), maxBucket = 100)
           .localCheckpoint(true)
         (CurationStream.hashDedupSink(stream, hashFn, archIdx, out, cp),
-          () => { archIdx.unpersist(blocking = false); () })
+          () => graft.ObservedProbe.release(archIdx))
       })
 
   private def s17(s: SparkSession, dir: String): DataFrame =
@@ -1041,9 +1041,8 @@ object StreamQueries {
           idx0.counts.localCheckpoint(true))
         (CurationStream.videoDedupSink(stream, idx, out, cp),
           () => {
-            idx.chunks.unpersist(blocking = false)
-            idx.counts.unpersist(blocking = false)
-            ()
+            graft.ObservedProbe.release(idx.chunks)
+            graft.ObservedProbe.release(idx.counts)
           })
       })
 
@@ -1086,7 +1085,7 @@ object StreamQueries {
       .select(col("new_id"), col("corpus_id"), col("shared"))
       .orderBy("new_id", "corpus_id")
       .localCheckpoint(true)
-    idx.unpersist(blocking = false)
+    graft.ObservedProbe.release(idx)
     rmTree(out)
     result
   }

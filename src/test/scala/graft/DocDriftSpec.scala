@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `QueryDef` registrations, expands README/SURVEY id ranges, and fails
   * on a registry id README never mentions, an id either doc mentions
   * that the registry doesn't have, a backticked `Object.member` in
-  * README that names no member in `src/main`, or a scaladoc link in
-  * `src/main` that names no declaration there. */
+  * README or SURVEY that names no member in `src/main`, or a scaladoc
+  * link in `src/main` that names no declaration there. */
 class DocDriftSpec extends AnyFunSuite {
 
   /** Exit code and output of `tools/doc_drift.py` over `root`. */
@@ -40,12 +40,16 @@ class DocDriftSpec extends AnyFunSuite {
       Files.writeString(root.resolve("README.md"),
         Files.readString(Paths.get("README.md")) +
           "\nLayout: `Rollups.writeRawPhantom`.\n")
-      Files.copy(Paths.get("SURVEY.md"), root.resolve("SURVEY.md"))
+      Files.writeString(root.resolve("SURVEY.md"),
+        Files.readString(Paths.get("SURVEY.md")) +
+          "\nSink: `CurationStream.phantomSink`.\n")
       Files.createSymbolicLink(root.resolve("src"), Paths.get("src").toAbsolutePath)
       val (rc, out) = docDrift(root.toString)
       assert(rc === 1, out)
-      assert(out.contains("references members not in src/main") &&
+      assert(out.contains("README.md references members not in src/main") &&
         out.contains("Rollups.writeRawPhantom"), out)
+      assert(out.contains("SURVEY.md references members not in src/main") &&
+        out.contains("CurationStream.phantomSink"), out)
     } finally graft.TmpHygiene.rmTree(root.toString)
   }
 

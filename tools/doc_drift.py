@@ -13,10 +13,10 @@ and fails (exit 1) when:
   1. a registry id is never mentioned in README.md (coverage gap),
   2. README.md or SURVEY.md mentions an id that is not in the registry
      (phantom id -- a typo or a renamed/removed query), or
-  3. a backticked `Object.member` in README.md names no `def`/`val`/`var`
-     `member` in a src/main/scala file that declares `object`/`class`/
-     `trait` `Object` (phantom reference -- a renamed or deleted member).
-     `NAME.md`-style file names are not references.
+  3. a backticked `Object.member` in README.md or SURVEY.md names no
+     `def`/`val`/`var` `member` in a src/main/scala file that declares
+     `object`/`class`/`trait` `Object` (phantom reference -- a renamed
+     or deleted member). `NAME.md`-style file names are not references.
   4. a scaladoc link `[[name]]` / `[[a.b.Name]]` in src/main/scala names
      no `def`/`val`/`class`/`object`/`trait`/`type` in src/main/scala
      (dangling link -- a renamed or deleted member). A dotted link whose
@@ -24,8 +24,9 @@ and fails (exit 1) when:
      that owner.
 
 SURVEY.md is phantom-checked only: it is the design blueprint, and its
-§2 tables cite ids as evidence -- citing a nonexistent id is drift, but
-it is not required to enumerate every id the registry later grew.
+§2 tables cite ids and members as evidence -- citing a nonexistent id
+or member is drift, but it is not required to enumerate every id the
+registry later grew.
 
 Usage: python3 tools/doc_drift.py [repo_root]
 """
@@ -64,7 +65,7 @@ def doc_ids(path: Path) -> set:
 
 
 REF_RE = re.compile(r"`([A-Z][A-Za-z0-9]*)\.([a-z][A-Za-z0-9_]*)`")
-FILE_EXTS = {"md", "scala", "py", "json", "jsonl", "sh", "sbt", "txt"}
+FILE_EXTS = {"md", "rst", "scala", "py", "json", "jsonl", "sh", "sbt", "txt"}
 
 
 def phantom_refs(root: Path, path: Path) -> list:
@@ -138,9 +139,10 @@ def main() -> int:
         if phantoms:
             failures.append(f"{name} mentions ids not in the registry: {', '.join(phantoms)}")
 
-    refs = phantom_refs(root, root / "README.md")
-    if refs:
-        failures.append(f"README.md references members not in src/main: {', '.join(refs)}")
+    for name in ("README.md", "SURVEY.md"):
+        refs = phantom_refs(root, root / name)
+        if refs:
+            failures.append(f"{name} references members not in src/main: {', '.join(refs)}")
 
     links = dangling_links(root)
     if links:
@@ -152,7 +154,7 @@ def main() -> int:
             print("  " + f)
         return 1
     print(f"doc drift: ok ({len(reg)} registry ids; README mentions all; "
-          f"no phantoms in README/SURVEY; README member references and "
+          f"no phantoms in README/SURVEY; their member references and "
           f"scaladoc links resolve)")
     return 0
 
